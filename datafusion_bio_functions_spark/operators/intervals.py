@@ -14,8 +14,9 @@ bio-function-ranges/src/``) in idiomatic PySpark:
 * ``complement`` — ``complement.rs:27-478``.
 * ``subtract`` — ``subtract.rs:28-668``.
 * ``nearest`` — ``nearest.rs:29-547`` + ``nearest_index.rs:24-291``
-  (COITree + sorted arrays → here: cogrouped Arrow batches + numpy
-  searchsorted, same binary-search math).
+  (COITree + sorted arrays → here: a broadcast per-contig index for small
+  left sides, else cogrouped Arrow batches; numpy searchsorted either way,
+  same binary-search math).
 
 Coordinate semantics (reference ``filter_op.rs:1-10``, applied at
 ``interval_tree.rs:184-188``): intervals are 1-based **closed** by default
@@ -40,11 +41,23 @@ Scale notes (local[32] tests, 1000-executor target):
 
 from __future__ import annotations
 
+import sys
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# The Arrow kernels call module-level helpers (the shared k=1 nearest
+# kernel).  Ship them by value (see functions/alleles.py): by reference,
+# every Python worker would import this package (~17 MB of RSS per worker)
+# and the kernels would fail wherever the package is not importable.
+try:
+    from pyspark import cloudpickle as _cp
+
+    _cp.register_pickle_by_value(sys.modules[__name__])
+except Exception:  # pragma: no cover - best effort
+    pass
 
 DEFAULT_COLS = ("contig", "pos_start", "pos_end")
 #: Reference default for complement's implicit view bounds
@@ -169,8 +182,9 @@ def _plan_key(df: DataFrame):
 
 def clear_probe_caches() -> None:
     """Drop every memoized probe verdict (bin width, chunk width, nearest
-    radius, broadcast-fit).  Call after overwriting input files in place —
-    the memo keys fingerprint the file LISTING, not file contents."""
+    radius, broadcast-fit, CollectLeft indexes, depth's alignment probe).
+    Call after overwriting input files in place — the memo keys
+    fingerprint the file LISTING, not file contents."""
     _BIN_WIDTH_MEMO.clear()
     _RADIUS_MEMO.clear()
     _NEAREST_FB_MEMO.clear()
@@ -180,9 +194,11 @@ def clear_probe_caches() -> None:
     from .dedup import _COLLAPSE_MEMO
 
     _COLLAPSE_MEMO.clear()
+    from .pileup import _GROUPED_FIT_MEMO
     from .similarity import _SEM_COUNT_MEMO
     from .vep import _CHROM_FORM_MEMO, _VCF_GUARD_MEMO
 
+    _GROUPED_FIT_MEMO.clear()
     _CHROM_FORM_MEMO.clear()
     _VCF_GUARD_MEMO.clear()
     _SEM_COUNT_MEMO.clear()
@@ -1536,7 +1552,23 @@ def nearest(
     (``nearest.rs:57-78``).  Distance semantics (``nearest_index.rs:252-260``):
     0 when overlapping, else the gap between the closest boundaries.
     Deterministic tie-break by (distance, left start, left end)
-    (``nearest_index.rs:245-291``).
+    (``nearest_index.rs:245-291``), then left input order.
+
+    ``algorithm='auto'`` (default) picks, in order:
+
+    1. the CollectLeft index, for ``k=1`` with no ``radius`` argument and
+       no ``spark.bio.nearest.algorithm`` / ``spark.bio.nearest.radius``
+       set, when the left side is under both broadcast bounds (its plan
+       size estimate within ``spark.sql.autoBroadcastJoinThreshold``, its
+       row count within ``BROADCAST_GUARD_ROWS``).  The left side is
+       collected once through Arrow, broadcast as per-contig
+       (start, end)-sorted coordinate arrays plus its payload columns, and
+       every probe batch is answered in one ``mapInArrow`` — the
+       reference's own CollectLeft shape (``nearest.rs:29-547``), with no
+       exchange and no fallback;
+    2. otherwise the chunked radius path (``'radius'`` below);
+    3. inside it, the exact cogroup fallback for every probe the radius
+       window could not settle.
 
     ``algorithm='cogroup'``: cogrouped Arrow exchange per contig +
     numpy binary searches — ``searchsorted`` on (start-sorted, end-sorted,
@@ -1546,9 +1578,8 @@ def nearest(
     (distance, sorted-index) key.  One Arrow group per contig — skewed
     contigs serialize; kept as the exact oracle/fallback path.
 
-    ``algorithm='radius'`` (default via ``'auto'``): the 100 TB path — a
-    chunked cogroup.  Each contig is range-partitioned into fixed-width
-    chunks; left rows replicate into every chunk their ±radius margin
+    ``algorithm='radius'``: the 100 TB path — a chunked cogroup.  Each
+    contig is range-partitioned into fixed-width chunks; left rows replicate into every chunk their ±radius margin
     touches, probes into every chunk their padded span touches, and the
     same searchsorted kernel answers each (contig, chunk) cell in
     O((n+q) log n) — parallelism is #chunks (no per-contig skew ceiling)
@@ -1577,11 +1608,18 @@ def nearest(
 
         conf = left.sparkSession.conf
         configured = conf.get(NEAREST_ALGORITHM_KEY, None)
-        # default to the shuffle-parallel radius path (VERDICT r2: the
+        r = conf.get(NEAREST_RADIUS_KEY, None)
+        if k == 1 and radius is None and not r and configured in (None, "", "auto"):
+            out = _nearest_collect_left(
+                left, right, cols_left, cols_right, include_overlaps,
+                compute_distance, filter_op,
+            )
+            if out is not None:
+                return out
+        # otherwise the shuffle-parallel radius path (VERDICT r2: the
         # cogroup default ships each contig as ONE Arrow group — a single
         # task per contig and a quadratic k>1 kernel do not scale)
         algorithm = configured if configured and configured != "auto" else "radius"
-        r = conf.get(NEAREST_RADIUS_KEY, None)
         if r:
             radius = int(r)
     if algorithm not in ("cogroup", "radius"):
@@ -1619,81 +1657,47 @@ def nearest(
         lpdf = lpdf.sort_values([ls, le], kind="mergesort").reset_index(drop=True)
         starts = lpdf[ls].to_numpy(dtype=np.int64)
         ends = lpdf[le].to_numpy(dtype=np.int64)
-        pmax_end = np.maximum.accumulate(ends)
-        end_order = np.lexsort((starts, ends))  # sort by (end, start)
-        ends_sorted = ends[end_order]
         n = len(lpdf)
 
         qs = rpdf[rs].to_numpy(dtype=np.int64) + shrink
         qe = rpdf[re_].to_numpy(dtype=np.int64) - shrink
         nq = len(rpdf)
 
-        def emit(idx_matrix: list[np.ndarray], dist_matrix: list[np.ndarray]) -> pd.DataFrame:
+        def emit(rows_r: np.ndarray, rows_l: np.ndarray, dists: np.ndarray) -> pd.DataFrame:
+            """One output row per (probe row, left row); ``rows_l < 0`` marks
+            a probe without a neighbour (NULL left columns and distance)."""
+            res = out_r.iloc[rows_r].reset_index(drop=True)
+            none = rows_l < 0
+            lpart = lpdf.iloc[np.where(none, 0, rows_l)].reset_index(drop=True)
+            for c in lcols_all:
+                vals = lpart[c].astype(object)
+                vals[none] = None
+                res[_LEFT + c] = vals.to_numpy()
+            if compute_distance:
+                d = pd.array(dists, dtype="Int64")
+                d[none] = pd.NA
+                res["distance"] = d
+            return res[[f.name for f in out_schema.fields]]
+
+        def emit_lists(idx_matrix: list[np.ndarray], dist_matrix: list[np.ndarray]) -> pd.DataFrame:
             rows_r, rows_l, dists = [], [], []
             for i in range(nq):
                 idxs = idx_matrix[i]
                 if len(idxs) == 0:
                     rows_r.append(i)
                     rows_l.append(-1)
-                    dists.append(None)
+                    dists.append(0)
                 else:
                     for j, d in zip(idxs, dist_matrix[i]):
                         rows_r.append(i)
                         rows_l.append(int(j))
                         dists.append(int(d))
-            res = out_r.iloc[rows_r].reset_index(drop=True)
-            lidx = np.asarray(rows_l)
-            lpart = lpdf.iloc[np.where(lidx < 0, 0, lidx)].reset_index(drop=True)
-            for c in lcols_all:
-                vals = lpart[c].astype(object)
-                vals[lidx < 0] = None
-                res[_LEFT + c] = vals.to_numpy()
-            if compute_distance:
-                res["distance"] = pd.array(dists, dtype="Int64")
-            return res[[f.name for f in out_schema.fields]]
+            return emit(np.asarray(rows_r), np.asarray(rows_l, dtype=np.int64), np.asarray(dists))
 
         if k == 1:
             # vectorized reference hot path (nearest.rs:330-390)
-            j_last = np.searchsorted(starts, qe, "right") - 1  # last start <= qe
-            i0 = np.searchsorted(pmax_end, qs, "left")  # first iv with end >= qs
-            has_ov = include_overlaps & (i0 <= j_last) & (i0 < n) & (qs <= qe + 1)
-            # left-side candidate: largest end < qs, among ties smallest start
-            pos_l = np.searchsorted(ends_sorted, qs, "left") - 1
-            has_l = pos_l >= 0
-            pl = np.maximum(pos_l, 0)
-            best_end = ends_sorted[pl]
-            first_of_block = np.searchsorted(ends_sorted, best_end, "left")
-            lcand = end_order[first_of_block]
-            ldist = qs - best_end
-            # right-side candidate: smallest start > qe (lex order gives tie)
-            pos_r = np.searchsorted(starts, qe, "right")
-            has_r = pos_r < n
-            pr = np.minimum(pos_r, n - 1)
-            rcand = pr
-            rdist = starts[pr] - qe
-            idxm, distm = [], []
-            for i in range(nq):
-                if has_ov[i]:
-                    idxm.append(np.array([i0[i]]))
-                    distm.append(np.array([0]))
-                    continue
-                cands = []
-                if has_l[i]:
-                    cands.append((int(ldist[i]), int(starts[lcand[i]]), int(ends[lcand[i]]), int(lcand[i])))
-                if has_r[i]:
-                    cands.append((int(rdist[i]), int(starts[rcand[i]]), int(ends[rcand[i]]), int(rcand[i])))
-                if not include_overlaps and not cands:
-                    idxm.append(np.array([], dtype=np.int64))
-                    distm.append(np.array([], dtype=np.int64))
-                    continue
-                if not cands:
-                    idxm.append(np.array([], dtype=np.int64))
-                    distm.append(np.array([], dtype=np.int64))
-                    continue
-                cands.sort()
-                idxm.append(np.array([cands[0][3]]))
-                distm.append(np.array([cands[0][0]]))
-            return emit(idxm, distm)
+            idx, dist = _nearest_k1(_k1_index(starts, ends), qs, qe, include_overlaps)
+            return emit(np.arange(nq), idx, dist)
 
         # k > 1: blocked vectorized top-k.  lpdf is (start, end)-sorted, so
         # the composite key d * P + row_index realizes the exact
@@ -1729,7 +1733,7 @@ def nearest(
                     ids = sel[i][valid]
                     idxm.append(ids)
                     distm.append(d[i][ids])
-            return emit(idxm, distm)
+            return emit_lists(idxm, distm)
 
         # overflow-proof fallback (astronomical coordinates): per-row lexsort
         for i in range(nq):
@@ -1747,7 +1751,7 @@ def nearest(
             order = np.lexsort((ends[im], starts[im], dm))[:kk]
             idxm.append(im[order])
             distm.append(dm[order])
-        return emit(idxm, distm)
+        return emit_lists(idxm, distm)
 
     out = (
         left.groupBy(lc)
@@ -1775,6 +1779,167 @@ def _rawify_strict_distance(out: DataFrame, shrink: int, compute_distance: bool)
             ),
         )
     return out
+
+
+def _k1_index(starts, ends) -> tuple:
+    """Lookup structures over one ``(start, end)``-sorted left run — the
+    reference's CoitreesNearest index (``nearest_index.rs:24-120``): the
+    sorted starts and ends, the prefix-max end, and the (end, start) order
+    with the ends in that order."""
+    import numpy as np
+
+    end_order = np.lexsort((starts, ends))  # stable: ties keep run order
+    return starts, ends, np.maximum.accumulate(ends), end_order, ends[end_order]
+
+
+def _nearest_k1(index: tuple, qs, qe, include_overlaps: bool) -> tuple:
+    """k=1 nearest left row of every probe ``[qs, qe]`` (already shrunk in
+    strict mode) within one :func:`_k1_index` run, vectorized over the
+    probes (reference hot path, ``nearest.rs:330-390``).  Returns
+    ``(idx, dist)``: the run index of each winner, ``-1`` when the probe has
+    no candidate, and its distance.  Ties break by (distance, start, end,
+    run order) — comparing run indices does exactly that, because the run
+    is (start, end)-sorted."""
+    import numpy as np
+
+    starts, ends, pmax, end_order, ends_sorted = index
+    n = len(starts)
+    if n == 0:
+        return np.full(len(qs), -1, np.int64), np.zeros(len(qs), np.int64)
+    # overlap: the first row whose prefix-max end reaches qs ends at or
+    # after qs itself; it overlaps when it also starts at or before qe
+    i0 = np.searchsorted(pmax, qs, "left")
+    j_last = np.searchsorted(starts, qe, "right") - 1  # last start <= qe
+    has_ov = include_overlaps & (i0 <= j_last) & (i0 < n) & (qs <= qe + 1)
+    # left-side candidate: largest end < qs, among ties smallest start
+    pos_l = np.searchsorted(ends_sorted, qs, "left") - 1
+    has_l = pos_l >= 0
+    best_end = ends_sorted[np.maximum(pos_l, 0)]
+    lcand = end_order[np.searchsorted(ends_sorted, best_end, "left")]
+    ldist = qs - best_end
+    # right-side candidate: smallest start > qe (run order breaks end ties)
+    pos_r = np.searchsorted(starts, qe, "right")
+    has_r = pos_r < n
+    rcand = np.minimum(pos_r, n - 1)
+    rdist = starts[rcand] - qe
+    use_l = has_l & (~has_r | (ldist < rdist) | ((ldist == rdist) & (lcand <= rcand)))
+    idx = np.where(has_ov, i0, np.where(use_l, lcand, np.where(has_r, rcand, -1)))
+    dist = np.where(has_ov, 0, np.where(use_l, ldist, rdist))
+    return idx, dist
+
+
+def _nearest_collect_left(
+    left: DataFrame,
+    right: DataFrame,
+    cols_left: Sequence[str] | None,
+    cols_right: Sequence[str] | None,
+    include_overlaps: bool,
+    compute_distance: bool,
+    filter_op: str,
+) -> DataFrame | None:
+    """CollectLeft path for k=1 :func:`nearest` — see its docstring.
+    Returns None when the left side is over a broadcast bound; the caller
+    then takes the radius path."""
+    left, (lc, ls, le) = _normalize(left, cols_left)
+    right, (rc, rs, re_) = _normalize(right, cols_right)
+    # Spark's own broadcast rule first: it reads the optimizer's size
+    # estimate and runs no job (an unknown size is Long.MaxValue and never
+    # fits).  It bounds the payload columns, which are collected too.
+    threshold = left.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(left._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if threshold < 0 or size > threshold or not _fits_broadcast(left):
+        return None
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    memo_key = None
+    bidx = None
+    try:
+        memo_key = (_plan_key(left), lc, ls, le, "nearest")
+        bidx = _COLLECT_INDEX_MEMO.get(memo_key)
+    except Exception:
+        memo_key = None
+    if bidx is None:
+        # toArrow, not toPandas: pandas turns a nullable long payload column
+        # into float64, which is not exact above 2^53.  Arrow keeps every
+        # Spark type as the probe's mapInArrow writes it back.
+        tbl = left.toArrow()
+        # a NULL contig, start or end never matches (SQL equi-join rules)
+        tbl = tbl.filter(
+            pc.and_(
+                pc.is_valid(tbl.column(lc)),
+                pc.and_(pc.is_valid(tbl.column(ls)), pc.is_valid(tbl.column(le))),
+            )
+        )
+        codes, contigs = pd.factorize(tbl.column(lc).to_numpy(zero_copy_only=False))
+        starts = tbl.column(ls).to_numpy().astype(np.int64, copy=False)
+        ends = tbl.column(le).to_numpy().astype(np.int64, copy=False)
+        # one (contig, start, end)-sorted run per contig; lexsort is stable,
+        # so equal intervals keep left input order (the last tie-break)
+        order = np.lexsort((ends, starts, codes))
+        cuts = np.searchsorted(codes[order], np.arange(len(contigs) + 1))
+        bounds = {c: (int(cuts[j]), int(cuts[j + 1])) for j, c in enumerate(contigs)}
+        payload = {
+            c: tbl.column(c).take(order).combine_chunks()
+            for c in tbl.column_names
+            if c not in (ls, le)
+        }
+        # pmax, end_order and ends_sorted are derived worker-side: shipping
+        # them would only grow every worker's copy of the broadcast
+        index = (bounds, starts[order], ends[order], payload)
+        bidx = right.sparkSession.sparkContext.broadcast(index)
+        if memo_key is not None:
+            if len(_COLLECT_INDEX_MEMO) >= 4:  # small LRU: entries can be large
+                _COLLECT_INDEX_MEMO.clear()
+            _COLLECT_INDEX_MEMO[memo_key] = bidx
+
+    shrink = 0 if filter_op == "weak" else 1
+    lnames, rnames = list(left.columns), list(right.columns)
+    out_fields = [T.StructField(_LEFT + f.name, f.dataType, True) for f in left.schema.fields]
+    out_fields += [T.StructField(_RIGHT + f.name, f.dataType, f.nullable) for f in right.schema.fields]
+    if compute_distance:
+        out_fields.append(T.StructField("distance", T.LongType(), True))
+    out_schema = T.StructType(out_fields)
+    out_names = out_schema.fieldNames()
+
+    def probe(batches):
+        bounds, starts, ends, payload = bidx.value
+        lcols = dict(payload, **{ls: pa.array(starts), le: pa.array(ends)})
+        runs: dict = {}  # per-task cache of each contig's derived structures
+        for batch in batches:
+            contigs = batch.column(rc).to_numpy(zero_copy_only=False)
+            s_col, e_col = batch.column(rs), batch.column(re_)
+            valid = pc.and_(pc.is_valid(s_col), pc.is_valid(e_col)).to_numpy(
+                zero_copy_only=False
+            )
+            qs = pc.fill_null(s_col, 0).to_numpy() + shrink
+            qe = pc.fill_null(e_col, 0).to_numpy() - shrink
+            gidx = np.full(batch.num_rows, -1, np.int64)
+            dist = np.zeros(batch.num_rows, np.int64)
+            for contig in pd.unique(contigs):
+                b = bounds.get(contig)
+                if b is None:  # contig absent from the left side
+                    continue
+                m = (contigs == contig) & valid
+                run = runs.get(contig)
+                if run is None:
+                    run = runs[contig] = _k1_index(starts[b[0] : b[1]], ends[b[0] : b[1]])
+                idx, d = _nearest_k1(run, qs[m], qe[m], include_overlaps)
+                gidx[m] = np.where(idx >= 0, idx + b[0], -1)
+                dist[m] = d
+            none = gidx < 0
+            take = pa.array(gidx, mask=none)
+            arrays = [lcols[c].take(take) for c in lnames]
+            arrays += [batch.column(c) for c in rnames]
+            if compute_distance:
+                arrays.append(pa.array(dist, mask=none))
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+
+    out = right.mapInArrow(probe, out_schema)
+    return _rawify_strict_distance(out, shrink, compute_distance)
 
 
 def _nearest_radius(
@@ -1883,41 +2048,15 @@ def _nearest_radius(
         ends = lpdf[le].to_numpy(np.int64)
         lids = lpdf["__lid"].to_numpy(np.int64)
         n = len(starts)
-        pmax = np.maximum.accumulate(ends)
-        end_order = np.lexsort((starts, ends))
-        ends_sorted = ends[end_order]
         qs = rpdf[rs].to_numpy(np.int64) + shr
         qe = rpdf[re_].to_numpy(np.int64) - shr
         pids = rpdf["__pid"].to_numpy(np.int64)
         nq = len(qs)
-        P = 1 << int(n + 1).bit_length()
-        big = np.iinfo(np.int64).max
 
         if kk == 1:
-            # same three-structure vectorized lookup as the cogroup kernel
-            j_last = np.searchsorted(starts, qe, "right") - 1
-            i0 = np.searchsorted(pmax, qs, "left")
-            has_ov = inc & (i0 <= j_last) & (i0 < n) & (qs <= qe + 1)
-            pos_l = np.searchsorted(ends_sorted, qs, "left") - 1
-            has_l = pos_l >= 0
-            pl = np.maximum(pos_l, 0)
-            best_end = ends_sorted[pl]
-            lcand = end_order[np.searchsorted(ends_sorted, best_end, "left")]
-            ldist = qs - best_end
-            pos_r = np.searchsorted(starts, qe, "right")
-            has_r = pos_r < n
-            pr = np.minimum(pos_r, n - 1)
-            rdist = starts[pr] - qe
-            # side choice by composite (dist, (start,end)-sorted index) key
-            keyl = np.where(has_l, ldist * P + lcand, big)
-            keyr = np.where(has_r, rdist * P + pr, big)
-            use_l = keyl <= keyr
-            side_idx = np.where(use_l, lcand, pr)
-            side_dist = np.where(use_l, ldist, rdist)
-            i0c = np.minimum(i0, n - 1)
-            sel_idx = np.where(has_ov, i0c, side_idx)
-            sel_dist = np.where(has_ov, 0, side_dist)
-            m = has_ov | has_l | has_r
+            # the k=1 kernel shared with the cogroup and CollectLeft paths
+            sel_idx, sel_dist = _nearest_k1(_k1_index(starts, ends), qs, qe, inc)
+            m = sel_idx >= 0
             si = sel_idx[m]
             return pd.DataFrame(
                 {
@@ -1928,6 +2067,10 @@ def _nearest_radius(
                     "e": ends[si],
                 }
             )
+
+        pmax = np.maximum.accumulate(ends)
+        P = 1 << int(n + 1).bit_length()
+        big = np.iinfo(np.int64).max
 
         # k > 1: per-probe top-k over the bounded candidate window.  Only
         # results with dist <= radius are used downstream (the rest go to

@@ -224,6 +224,7 @@ def local_frame(spark: SparkSession, rows, schema):
     as one record batch straight into the JVM: 0.05 s / 0.28 s for the
     same frames, zero Python-worker tasks.  Falls back to the classic
     path for empty input or types pandas cannot round-trip."""
+    rows = list(rows)  # a generator would be spent by the probe below
     if rows:
         try:
             from pyspark.sql import types as T

@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
-"""Dump `.explain("formatted")` for benched queries into plans/<tag>/.
+"""Dump `.explain("formatted")` for benched queries into plans/r<N>/.
 
-Usage: PYTHONPATH=. python scripts/dump_plans_r11.py <suffix> [query ...]
-Writes plans/r11/<query>_<suffix>.txt (suffix: before/after).
+Usage: PYTHONPATH=. python scripts/dump_plans.py --round N <suffix> [query ...]
+Writes plans/r<N>/<query>_<suffix>.txt (suffix: before/after).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -18,10 +19,15 @@ import __spark_entry__ as entrymod
 from bench import BENCH_QUERIES
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:] or BENCH_QUERIES
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("suffix")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    names = args.queries or BENCH_QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outdir = os.path.join(root, "plans", f"r{args.round}")
     os.makedirs(outdir, exist_ok=True)
     spark = get_or_create_session(app_name="plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
@@ -34,7 +40,7 @@ def main() -> None:
         txt = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
-        with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(outdir, f"{name}_{args.suffix}.txt"), "w") as f:
             f.write(txt)
         print("wrote", name)
 

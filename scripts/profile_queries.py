@@ -53,60 +53,13 @@ def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(EVDIR, exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-
-    from pyspark.sql import SparkSession
-
-    cpus = int(os.environ["SPARK_GRAFT_CPUS"])
-    spark = (
-        SparkSession.builder.appName("bio-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .getOrCreate()
+    # The event log is launch conf, so the session is exactly the one
+    # get_or_create_session() builds for bench.py (no conf of our own).
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir=file://{EVDIR} "
+        "--conf spark.eventLog.compress=false pyspark-shell"
     )
-    # mirror bench session settings on top
-    spark.stop()
-    os.environ["SPARK_EVLOG"] = "1"
-    from pyspark import SparkConf  # noqa: F401
-
-    # rebuild through the canonical session factory with event log injected
-    import datafusion_bio_functions_spark.session as sessmod
-
-    orig = sessmod.get_or_create_session
-
-    def patched(app_name="bio-profile", master=None, shuffle_partitions=None):
-        from pyspark.sql import SparkSession as S
-
-        cpus = sessmod.default_parallelism()
-        b = (
-            S.builder.appName(app_name)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-            .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-            .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-            .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-            .config("spark.ui.enabled", "false")
-            .config("spark.ui.showConsoleProgress", "false")
-            .config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", EVDIR)
-            .config("spark.eventLog.compress", "false")
-            .config(
-                "spark.driver.extraJavaOptions",
-                "-XX:+UseG1GC -XX:MaxGCPauseMillis=500",
-            )
-            .master(f"local[{cpus}]")
-        )
-        return b.getOrCreate()
-
-    sessmod.get_or_create_session = patched
-    spark = patched()
+    spark = get_or_create_session(app_name="bio-profile")
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
@@ -238,7 +191,6 @@ def main() -> None:
                 f" fetchwait={tt.get('fetch', 0):>5.2f}  {si['scopes'] or si['name']}"
             )
     print("\nJSON:", json.dumps(results))
-    sessmod.get_or_create_session = orig
 
 
 if __name__ == "__main__":

@@ -524,7 +524,8 @@ def test_nearest_radius_auto_density(spark, reads, targets):
     want = sorted(map(repr, bio.nearest(reads, r_extra, algorithm="cogroup").collect()))
     got = sorted(map(repr, bio.nearest(reads, r_extra, algorithm="radius").collect()))
     assert got == want
-    # 'auto' (the default) now resolves to the shuffle-parallel radius path
+    # 'auto' on list-built frames (no size estimate, so no CollectLeft
+    # index) resolves to the shuffle-parallel radius path
     assert sorted(map(repr, bio.nearest(reads, r_extra).collect())) == want
 
 

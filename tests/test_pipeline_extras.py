@@ -930,6 +930,41 @@ def test_local_frame_exact_long_with_nulls(spark):
     assert got == sorted(rows, key=key)
 
 
+def test_local_frame_generator_input(spark):
+    """A generator is a valid ``rows`` argument: the frame holds every row,
+    on the exact (null plus >2^53) route as well as the pandas route."""
+    from datafusion_bio_functions_spark.session import local_frame
+
+    small = [("a", 1), ("b", None)]
+    big = [("a", (1 << 60) + 1), ("b", None)]
+    for rows in (small, big):
+        got = local_frame(spark, (r for r in rows), "k string, v long").collect()
+        assert sorted(map(tuple, got)) == sorted(rows)
+
+
+def test_clear_probe_caches_empties_every_memo():
+    """Every module-level ``_*_MEMO`` dict in the package is registered in
+    ``clear_probe_caches()`` — a memo added later cannot be missed."""
+    import importlib
+    import pkgutil
+    import re
+
+    import datafusion_bio_functions_spark as pkg
+    from datafusion_bio_functions_spark import clear_probe_caches
+
+    memos = {}
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        mod = importlib.import_module(info.name)
+        for name, val in vars(mod).items():
+            if re.fullmatch(r"_[A-Z0-9_]+_MEMO", name) and isinstance(val, dict):
+                memos[id(val)] = (f"{info.name}.{name}", val)
+    assert len(memos) >= 11
+    for _, memo in memos.values():
+        memo[("sentinel",)] = None
+    clear_probe_caches()
+    assert [name for name, memo in memos.values() if memo] == []
+
+
 def test_py4j_reflection_cache_installed():
     """The validated py4j version family must have the reflection cache
     installed (the r12 version guard skips silently on anything else —

@@ -119,6 +119,15 @@ def test_nearest_radius_no_cartesian(pq):
     assert "FlatMapCoGroupsInPandas" in plan
 
 
+def test_nearest_default_collect_left_has_no_exchange(pq):
+    # k=1 on a left side under the broadcast bounds: one Arrow map over
+    # the probes against the broadcast index, no shuffle at all
+    l, r = pq
+    plan = _plan(bio.nearest(l, r))
+    assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1
+
+
 def test_depth_chunked_no_join(spark):
     aln = spark.createDataFrame(
         [("chr1", 100 + i, 0, "50M", 60) for i in range(500)],

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint
+from ._probe_memo import ProbeMemo, plan_key
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
     """Spread a narrow input across the cluster before a compute-heavy
@@ -470,7 +471,7 @@ def minhash_lsh_candidates(
 #: vs 4-7x wins at sf1/sf10 (90-99 % dups).
 _COLLAPSE_PROBE_ROWS = 100_000
 _COLLAPSE_MIN_DUP = 0.50
-_COLLAPSE_MEMO: dict = {}
+_COLLAPSE_MEMO = ProbeMemo()
 
 
 def _should_collapse(df: DataFrame, text_col: str) -> bool:
@@ -479,27 +480,18 @@ def _should_collapse(df: DataFrame, text_col: str) -> bool:
     memoized by semantic plan + file fingerprint like the interval-join
     probes.  Collapse only when the sampled duplicate fraction clears
     ``_COLLAPSE_MIN_DUP``."""
-    try:
-        from .intervals import _plan_key
 
-        key = (_plan_key(df), text_col)
-        if key in _COLLAPSE_MEMO:
-            return _COLLAPSE_MEMO[key]
-    except Exception:  # semanticHash unavailable (connect-mode frame)
-        key = None
-    samp = df.select(
-        F.md5(F.coalesce(F.col(text_col).cast("string"), F.lit(""))).alias("__fp")
-    ).limit(_COLLAPSE_PROBE_ROWS)
-    row = samp.agg(
-        F.count(F.lit(1)).alias("n"), F.count_distinct("__fp").alias("u")
-    ).collect()[0]
-    dup = 1.0 - row["u"] / row["n"] if row["n"] else 0.0
-    should = dup >= _COLLAPSE_MIN_DUP
-    if key is not None:
-        if len(_COLLAPSE_MEMO) > 1024:
-            _COLLAPSE_MEMO.clear()
-        _COLLAPSE_MEMO[key] = should
-    return should
+    def probe() -> bool:
+        samp = df.select(
+            F.md5(F.coalesce(F.col(text_col).cast("string"), F.lit(""))).alias("__fp")
+        ).limit(_COLLAPSE_PROBE_ROWS)
+        row = samp.agg(
+            F.count(F.lit(1)).alias("n"), F.count_distinct("__fp").alias("u")
+        ).collect()[0]
+        dup = 1.0 - row["u"] / row["n"] if row["n"] else 0.0
+        return dup >= _COLLAPSE_MIN_DUP
+
+    return _COLLAPSE_MEMO.get_or_probe(lambda: (plan_key(df), text_col), probe)
 
 
 def _exact_collapse(df: DataFrame, text_col: str, id_col: str):

@@ -48,6 +48,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._probe_memo import ProbeMemo, clear_probe_caches, plan_key  # noqa: F401
+
 # The Arrow kernels call module-level helpers (the shared k=1 nearest
 # kernel).  Ship them by value (see functions/alleles.py): by reference,
 # every Python worker would import this package (~17 MB of RSS per worker)
@@ -151,57 +153,16 @@ def _coverage_len(ls: str, le: str, rs: str, re_: str, filter_op: str) -> Column
 # ---------------------------------------------------------------------------
 
 
-_BIN_WIDTH_MEMO: dict[tuple, int] = {}
+_BIN_WIDTH_MEMO = ProbeMemo()
 #: per-session memo of nearest's density-derived max radius (the one eager
 #: aggregate in _nearest_radius construction) — same semantic-plan keying
 #: as the bin-width memo
-_RADIUS_MEMO: dict[tuple, int] = {}
+_RADIUS_MEMO = ProbeMemo()
 #: nearest-radius fallback-emptiness verdicts: did every probe find k
 #: in-radius candidates?  A deterministic property of (left, right, k,
 #: radius params) — same standard as the other probe memos.  On a hit the
 #: rebuild skips the kernel materialization the emptiness check costs.
-_NEAREST_FB_MEMO: dict[tuple, bool] = {}
-
-
-def _plan_key(df: DataFrame):
-    """Memo key for the bounded probes: semantic plan hash + a fingerprint
-    of the scanned files (ADVICE r4: semanticHash alone hashes the PLAN, so
-    a path whose files are replaced mid-session would reuse a stale probe
-    verdict).  ``inputFiles()`` is a driver-side listing — no Spark job.
-    Residual assumption (documented): an in-place overwrite that keeps the
-    exact same file names is NOT detected; call
-    :func:`clear_probe_caches` after rewriting inputs in place."""
-    h = df.semanticHash()  # raises on connect-mode frames; caller catches
-    try:
-        files = df.inputFiles()
-        fp = hash(tuple(sorted(files))) if files else 0
-    except Exception:
-        fp = 0
-    return (h, fp)
-
-
-def clear_probe_caches() -> None:
-    """Drop every memoized probe verdict (bin width, chunk width, nearest
-    radius, broadcast-fit, CollectLeft indexes, depth's alignment probe).
-    Call after overwriting input files in place — the memo keys
-    fingerprint the file LISTING, not file contents."""
-    _BIN_WIDTH_MEMO.clear()
-    _RADIUS_MEMO.clear()
-    _NEAREST_FB_MEMO.clear()
-    _CHUNK_WIDTH_MEMO.clear()
-    _FITS_BROADCAST_MEMO.clear()
-    _COLLECT_INDEX_MEMO.clear()
-    from .dedup import _COLLAPSE_MEMO
-
-    _COLLAPSE_MEMO.clear()
-    from .pileup import _GROUPED_FIT_MEMO
-    from .similarity import _SEM_COUNT_MEMO
-    from .vep import _CHROM_FORM_MEMO, _VCF_GUARD_MEMO
-
-    _GROUPED_FIT_MEMO.clear()
-    _CHROM_FORM_MEMO.clear()
-    _VCF_GUARD_MEMO.clear()
-    _SEM_COUNT_MEMO.clear()
+_NEAREST_FB_MEMO = ProbeMemo()
 
 
 def _auto_bin_width(l: DataFrame, ls: str, le: str, r: DataFrame, rs: str, re_: str) -> int:
@@ -210,24 +171,19 @@ def _auto_bin_width(l: DataFrame, ls: str, le: str, r: DataFrame, rs: str, re_: 
     ``limit`` keeps the stats job O(100k rows) regardless of table size;
     the per-session memo (semantic plan hash) keeps repeated joins over
     the same frames from re-running the stats job."""
-    try:
-        key = (_plan_key(l), ls, le, _plan_key(r), rs, re_)
-        if key in _BIN_WIDTH_MEMO:
-            return _BIN_WIDTH_MEMO[key]
-    except Exception:  # semanticHash unavailable (e.g. connect-mode frame)
-        key = None
-    samp = (
-        l.select((F.col(le) - F.col(ls)).alias("w")).limit(100_000)
-        .unionByName(r.select((F.col(re_) - F.col(rs)).alias("w")).limit(100_000))
+
+    def probe() -> int:
+        samp = (
+            l.select((F.col(le) - F.col(ls)).alias("w")).limit(100_000)
+            .unionByName(r.select((F.col(re_) - F.col(rs)).alias("w")).limit(100_000))
+        )
+        row = samp.agg(F.expr("percentile_approx(w, 0.95)").alias("p")).collect()[0]
+        p95 = int(row["p"] or 0)
+        return max(128, min(1 << max(2 * p95 - 1, 1).bit_length(), 1 << 20))
+
+    return _BIN_WIDTH_MEMO.get_or_probe(
+        lambda: (plan_key(l), ls, le, plan_key(r), rs, re_), probe
     )
-    row = samp.agg(F.expr("percentile_approx(w, 0.95)").alias("p")).collect()[0]
-    p95 = int(row["p"] or 0)
-    bw = max(128, min(1 << max(2 * p95 - 1, 1).bit_length(), 1 << 20))
-    if key is not None:
-        if len(_BIN_WIDTH_MEMO) > 1024:  # bound driver-side growth
-            _BIN_WIDTH_MEMO.clear()
-        _BIN_WIDTH_MEMO[key] = bw
-    return bw
 
 
 def interval_join(
@@ -551,7 +507,7 @@ def coverage(
 BROADCAST_GUARD_ROWS = 8_000_000
 
 
-_FITS_BROADCAST_MEMO: dict[tuple, bool] = {}
+_FITS_BROADCAST_MEMO = ProbeMemo()
 
 
 def _fits_broadcast(left: DataFrame, guard: int = BROADCAST_GUARD_ROWS) -> bool:
@@ -561,18 +517,9 @@ def _fits_broadcast(left: DataFrame, guard: int = BROADCAST_GUARD_ROWS) -> bool:
     plan instead of collecting data-scale rows onto the driver (VERDICT r2
     scale-killer #4).  Memoized per semantic plan so repeated probes over
     the same frame skip the job."""
-    try:
-        key = (_plan_key(left), guard)
-        if key in _FITS_BROADCAST_MEMO:
-            return _FITS_BROADCAST_MEMO[key]
-    except Exception:
-        key = None
-    fits = left.limit(guard + 1).count() <= guard
-    if key is not None:
-        if len(_FITS_BROADCAST_MEMO) > 1024:
-            _FITS_BROADCAST_MEMO.clear()
-        _FITS_BROADCAST_MEMO[key] = fits
-    return fits
+    return _FITS_BROADCAST_MEMO.get_or_probe(
+        lambda: (plan_key(left), guard), lambda: left.limit(guard + 1).count() <= guard
+    )
 
 
 def _count_or_cover_broadcast(
@@ -603,70 +550,59 @@ def _count_or_cover_broadcast(
     # the strict/weak twins (and repeated queries over the same inputs)
     # collect and index the IDENTICAL left frame — memoize the broadcast
     # handle by plan+file fingerprint so the toPandas + numpy build + ship
-    # happen once per (input, mode).  Small LRU: count-mode entries hold
-    # all left rows (guard-bounded); clear_probe_caches() drops them.
-    memo_key = None
-    try:
-        memo_key = (_plan_key(left), lc, ls, le, mode)
-        cached = _COLLECT_INDEX_MEMO.get(memo_key)
-        if cached is not None:
-            return _probe_with_index(
-                cached, right, (rc, rs, re_), filter_op, mode
-            )
-    except Exception:
-        memo_key = None
-    lpdf = left.select(lc, ls, le).toPandas()
-    index: dict[str, tuple] = {}
-    all_contigs = lpdf[lc].to_numpy()
-    all_s = lpdf[ls].to_numpy(dtype=np.int64)
-    all_e = lpdf[le].to_numpy(dtype=np.int64)
-    if mode == "count":
+    # happen once per (input, mode).  Small bound: count-mode entries hold
+    # all left rows (guard-bounded).
+    def build():
+        lpdf = left.select(lc, ls, le).toPandas()
+        index: dict[str, tuple] = {}
+        all_contigs = lpdf[lc].to_numpy()
+        all_s = lpdf[ls].to_numpy(dtype=np.int64)
+        all_e = lpdf[le].to_numpy(dtype=np.int64)
         for contig in pd.unique(all_contigs):
             m = all_contigs == contig
-            # pts: sorted positions of degenerate (point) intervals — the
-            # strict-mode correction term below needs them (see probe)
-            pm = m & (all_s == all_e)
-            index[contig] = (np.sort(all_s[m]), np.sort(all_e[m]), np.sort(all_s[pm]))
-    else:
-        for contig in pd.unique(all_contigs):
-            m = all_contigs == contig
-            order = np.lexsort((all_e[m], all_s[m]))
-            cs, ce = all_s[m][order], all_e[m][order]
-            # vectorized merge of touching intervals: a row starts a new
-            # island iff its start exceeds the running max end of all
-            # previous rows (touching merges are harmless for coverage
-            # sums; only true overlap must collapse so lengths don't
-            # double-count)
-            run_max = np.maximum.accumulate(ce)
-            new_island = np.ones(len(cs), dtype=bool)
-            if len(cs) > 1:
-                new_island[1:] = cs[1:] > run_max[:-1]
-            island = np.cumsum(new_island) - 1
-            n_isl = int(island[-1]) + 1 if len(island) else 0
-            # island starts are the rows that began one (sorted ascending);
-            # island ends are the running max at each island's last row
-            ms_a = cs[new_island]
-            last_of_island = np.ones(len(cs), dtype=bool)
-            if len(cs) > 1:
-                last_of_island[:-1] = new_island[1:]
-            me_a = run_max[last_of_island]
-            assert len(ms_a) == n_isl and len(me_a) == n_isl
-            # reference per-interval contribution floors at 1 (point
-            # intervals fully inside the probe still count one base)
-            lens = np.maximum(me_a - ms_a, 1).cumsum()
-            index[contig] = (ms_a, me_a, lens)
+            if mode == "count":
+                # pts: sorted positions of degenerate (point) intervals —
+                # the strict-mode correction term below needs them (see probe)
+                pm = m & (all_s == all_e)
+                index[contig] = (np.sort(all_s[m]), np.sort(all_e[m]), np.sort(all_s[pm]))
+            else:
+                # touching merges are harmless for coverage sums; only true
+                # overlap must collapse so lengths don't double-count
+                ms_a, me_a = _merge_islands(all_s[m], all_e[m], strict=False)
+                # reference per-interval contribution floors at 1 (point
+                # intervals fully inside the probe still count one base)
+                lens = np.maximum(me_a - ms_a, 1).cumsum()
+                index[contig] = (ms_a, me_a, lens)
+        return right.sparkSession.sparkContext.broadcast(index)
 
-    sc = right.sparkSession.sparkContext
-    bidx = sc.broadcast(index)
-    if memo_key is not None:
-        if len(_COLLECT_INDEX_MEMO) >= 4:  # small LRU: entries can be large
-            _COLLECT_INDEX_MEMO.clear()
-        _COLLECT_INDEX_MEMO[memo_key] = bidx
+    bidx = _COLLECT_INDEX_MEMO.get_or_probe(
+        lambda: (plan_key(left), lc, ls, le, mode), build, bound=4
+    )
     return _probe_with_index(bidx, right, (rc, rs, re_), filter_op, mode)
 
 
 #: memoized CollectLeft index broadcasts, keyed (plan+files, cols, mode)
-_COLLECT_INDEX_MEMO: dict = {}
+_COLLECT_INDEX_MEMO = ProbeMemo()
+
+
+def _merge_islands(starts, ends, strict: bool):
+    """Merge one contig's intervals into sorted disjoint islands:
+    ``(island_starts, island_ends)``.  A row starts a new island iff its
+    start exceeds (``strict``: reaches) the running max end of all previous
+    rows — weak merges touching intervals, strict only true overlap
+    (merge.rs:290-297)."""
+    import numpy as np
+
+    order = np.lexsort((ends, starts))
+    cs, ce = starts[order], ends[order]
+    run_max = np.maximum.accumulate(ce)
+    new_island = np.ones(len(cs), dtype=bool)
+    if len(cs) > 1:
+        new_island[1:] = (cs[1:] >= run_max[:-1]) if strict else (cs[1:] > run_max[:-1])
+    # island ends are the running max at each island's last row
+    last_of_island = np.ones(len(cs), dtype=bool)
+    last_of_island[:-1] = new_island[1:]
+    return cs[new_island], run_max[last_of_island]
 
 
 def _probe_with_index(
@@ -781,7 +717,7 @@ def _with_island(
 
 #: per-session memo of the density-derived chunk width (same semantic-plan
 #: keying as the bin-width memo)
-_CHUNK_WIDTH_MEMO: dict[tuple, int] = {}
+_CHUNK_WIDTH_MEMO = ProbeMemo()
 
 
 def _auto_chunk_width(df: DataFrame, s: str, e: str) -> int:
@@ -792,27 +728,19 @@ def _auto_chunk_width(df: DataFrame, s: str, e: str) -> int:
     narrow coordinate spaces, serializing the sweep; sizing from a bounded
     sample keeps ~4 buckets per core regardless of the space.  Memoized per
     semantic plan so repeated sweeps skip the stats job."""
-    try:
-        key = (_plan_key(df), s, e, "cw")
-        if key in _CHUNK_WIDTH_MEMO:
-            return _CHUNK_WIDTH_MEMO[key]
-    except Exception:  # semanticHash unavailable
-        key = None
-    samp = df.select(F.col(s).alias("a"), F.col(e).alias("b")).limit(200_000)
-    row = samp.agg(
-        F.min("a").alias("lo"), F.expr("percentile_approx(b, 0.99)").alias("hi")
-    ).collect()[0]
-    lo, hi = row["lo"], row["hi"]
-    if lo is None or hi is None:
-        cw = 10_000_000
-    else:
+
+    def probe() -> int:
+        samp = df.select(F.col(s).alias("a"), F.col(e).alias("b")).limit(200_000)
+        row = samp.agg(
+            F.min("a").alias("lo"), F.expr("percentile_approx(b, 0.99)").alias("hi")
+        ).collect()[0]
+        lo, hi = row["lo"], row["hi"]
+        if lo is None or hi is None:
+            return 10_000_000
         par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-        cw = max(1024, min(int(max(hi - lo, 1)) // (4 * par) or 1, 10_000_000))
-    if key is not None:
-        if len(_CHUNK_WIDTH_MEMO) > 1024:
-            _CHUNK_WIDTH_MEMO.clear()
-        _CHUNK_WIDTH_MEMO[key] = cw
-    return cw
+        return max(1024, min(int(max(hi - lo, 1)) // (4 * par) or 1, 10_000_000))
+
+    return _CHUNK_WIDTH_MEMO.get_or_probe(lambda: (plan_key(df), s, e, "cw"), probe)
 
 
 #: auto-sweep size cutoff: below this the per-contig window sort is cheaper
@@ -820,10 +748,6 @@ def _auto_chunk_width(df: DataFrame, s: str, e: str) -> int:
 #: stages) — measured crossover ~1-2 M rows on local[32] (sf0.1 merge: 1.2 s
 #: window vs 3.7 s chunked; sf1: 6.6 s window vs 2.6 s chunked).
 SWEEP_WINDOW_MAX_ROWS = 2_000_000
-
-#: cluster(window): materialize the islands checkpoint eagerly (see the
-#: in-function comment; module-level so tests/A-B harnesses can flip it)
-_CLUSTER_WINDOW_EAGER_CKPT = True
 
 
 def _resolve_sweep_algorithm(df: DataFrame, algorithm: str) -> str:
@@ -1195,7 +1119,7 @@ def cluster(
     # any block is published — measured three identical 1.55 s-CPU window
     # stages per run at sf0.1 (the same race 01dd774 fixed for minhash).
     # The eager barrier runs the islands window exactly once.
-    isl = isl.localCheckpoint(eager=_CLUSTER_WINDOW_EAGER_CKPT)
+    isl = isl.localCheckpoint(eager=True)
     # one aggregation yields extents AND the per-cluster row for id ranking —
     # replaces two (c, island)-partitioned windows plus a distinct (3
     # shuffles) with one agg + one join
@@ -1322,32 +1246,17 @@ def _subtract_broadcast(
 
     lc, ls, le = lcols
     rc, rs, re_ = rcols
-    strict_merge = filter_op != "weak"
-    index: dict[str, tuple] = {}
+    strict = filter_op != "weak"
     mc = right_pdf[rc].to_numpy()
     msa = right_pdf[rs].to_numpy(dtype=np.int64)
     mea = right_pdf[re_].to_numpy(dtype=np.int64)
+    index: dict[str, tuple] = {}
     for contig in pd.unique(mc):
         sel = mc == contig
-        order = np.lexsort((mea[sel], msa[sel]))
-        cs, ce = msa[sel][order], mea[sel][order]
-        run_max = np.maximum.accumulate(ce)
-        new_island = np.ones(len(cs), dtype=bool)
-        if len(cs) > 1:
-            # weak merges touching (start <= prev max end); strict only
-            # true overlap (start < prev max end) — merge.rs:290-297
-            if strict_merge:
-                new_island[1:] = cs[1:] >= run_max[:-1]
-            else:
-                new_island[1:] = cs[1:] > run_max[:-1]
-        last_of_island = np.ones(len(cs), dtype=bool)
-        if len(cs) > 1:
-            last_of_island[:-1] = new_island[1:]
-        index[contig] = (cs[new_island], run_max[last_of_island])
+        index[contig] = _merge_islands(msa[sel], mea[sel], strict)
 
     sc = left.sparkSession.sparkContext
     bidx = sc.broadcast(index)
-    strict = filter_op != "weak"
     fields = []
     for f in left.schema.fields:
         if f.name in (ls, le):
@@ -1855,14 +1764,7 @@ def _nearest_collect_left(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    memo_key = None
-    bidx = None
-    try:
-        memo_key = (_plan_key(left), lc, ls, le, "nearest")
-        bidx = _COLLECT_INDEX_MEMO.get(memo_key)
-    except Exception:
-        memo_key = None
-    if bidx is None:
+    def build():
         # toArrow, not toPandas: pandas turns a nullable long payload column
         # into float64, which is not exact above 2^53.  Arrow keeps every
         # Spark type as the probe's mapInArrow writes it back.
@@ -1890,11 +1792,11 @@ def _nearest_collect_left(
         # pmax, end_order and ends_sorted are derived worker-side: shipping
         # them would only grow every worker's copy of the broadcast
         index = (bounds, starts[order], ends[order], payload)
-        bidx = right.sparkSession.sparkContext.broadcast(index)
-        if memo_key is not None:
-            if len(_COLLECT_INDEX_MEMO) >= 4:  # small LRU: entries can be large
-                _COLLECT_INDEX_MEMO.clear()
-            _COLLECT_INDEX_MEMO[memo_key] = bidx
+        return right.sparkSession.sparkContext.broadcast(index)
+
+    bidx = _COLLECT_INDEX_MEMO.get_or_probe(
+        lambda: (plan_key(left), lc, ls, le, "nearest"), build, bound=4
+    )
 
     shrink = 0 if filter_op == "weak" else 1
     lnames, rnames = list(left.columns), list(right.columns)
@@ -1981,19 +1883,14 @@ def _nearest_radius(
                 ),
             ).cast(T.LongType()).alias("__rad"),
         )
-        try:
-            memo_key = (_plan_key(left), lc, ls, le, k, shrink)
-        except Exception:  # pragma: no cover - connect-mode frame
-            memo_key = None
-        if memo_key is not None and memo_key in _RADIUS_MEMO:
-            max_rad = _RADIUS_MEMO[memo_key]
-        else:
+
+        def probe_radius() -> int:
             mx = stats.agg(F.max("__rad")).collect()[0][0]
-            max_rad = int(mx) if mx is not None else 1
-            if memo_key is not None:
-                if len(_RADIUS_MEMO) > 1024:
-                    _RADIUS_MEMO.clear()
-                _RADIUS_MEMO[memo_key] = max_rad
+            return int(mx) if mx is not None else 1
+
+        max_rad = _RADIUS_MEMO.get_or_probe(
+            lambda: (plan_key(left), lc, ls, le, k, shrink), probe_radius
+        )
         padded = (
             rid.join(F.broadcast(stats), F.col(rc) == F.col("__sc"), "left")
             .drop("__sc")
@@ -2135,13 +2032,13 @@ def _nearest_radius(
     # provably complete across chunks; farther results go to the fallback
     prad = padded.select(F.col("__pid").alias("pid"), "__rad")
     res = res.join(prad, "pid").filter(F.col("dist") <= F.col("__rad"))
-    try:
-        fb_key = (
-            _plan_key(left), lc, ls, le, _plan_key(right), rc, rs, re_,
+
+    def fb_key():
+        return (
+            plan_key(left), lc, ls, le, plan_key(right), rc, rs, re_,
             k, include_overlaps, filter_op, radius, shrink,
         )
-    except Exception:  # pragma: no cover - connect-mode frame
-        fb_key = None
+
     # persist only when the bounded fallback probe below will actually run
     # (memo miss) — on a memoized fb_empty=True replay the probe is
     # skipped, the fallback branch is dead, and the only duplicate work
@@ -2149,7 +2046,7 @@ def _nearest_radius(
     # result set (the expensive kernel sits above the distinct exchange,
     # which IS reused).  The unconditional persist cost a CacheManager
     # registration per build plus a cache write of every partition per run.
-    fb_known_empty = fb_key is not None and _NEAREST_FB_MEMO.get(fb_key) is True
+    fb_known_empty = _NEAREST_FB_MEMO.peek(fb_key) is True
     wk = Window.partitionBy("pid").orderBy("dist", "s", "e", "lid")
     topk = res.withColumn("__rk", F.row_number().over(wk)).filter(F.col("__rk") <= k)
     if not fb_known_empty:
@@ -2183,15 +2080,7 @@ def _nearest_radius(
     # the radius kernel emits shrunk-coordinate distances; the cogroup
     # fallback already rawifies its own, so adjust only the solved side
     solved = _rawify_strict_distance(solved, shrink, compute_distance)
-    if fb_key is not None and fb_key in _NEAREST_FB_MEMO:
-        fb_empty = _NEAREST_FB_MEMO[fb_key]
-    else:
-        fb_empty = fb_probes.limit(1).count() == 0
-        if fb_key is not None:
-            if len(_NEAREST_FB_MEMO) > 1024:
-                _NEAREST_FB_MEMO.clear()
-            _NEAREST_FB_MEMO[fb_key] = fb_empty
-    if fb_empty:
+    if _NEAREST_FB_MEMO.get_or_probe(fb_key, lambda: fb_probes.limit(1).count() == 0):
         out = solved
     else:
         fallback = nearest(

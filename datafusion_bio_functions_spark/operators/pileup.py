@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._probe_memo import ProbeMemo, plan_key
+
 #: SAM flag filter: UNMAP(4) | SECONDARY(256) | QCFAIL(512) | DUP(1024)
 DEFAULT_FLAG_MASK = 1796
 DEFAULT_ALN_COLS = ("chrom", "start", "flags", "cigar", "mapping_quality")
@@ -211,22 +213,15 @@ def depth(
             one_based.alias("s"),
             (one_based + n_m - 1).alias("e"),
         )
+        all_simple = False
         if algorithm == "auto":
             fits, all_simple, n_contigs = _probe_alignments(df, simple, c)
             algorithm = "grouped" if fits else _over_cap_algorithm(df, n_contigs)
-            if all_simple:
-                # every CIGAR in the (bounded-probed, fully seen) input is
-                # a single '<n>M' run — drop the slow branch and its
-                # second source scan from the plan entirely
-                segments = fast_segments
-            else:
-                segments = fast_segments.unionByName(
-                    _explode_segs(
-                        df.filter(~simple).withColumn(
-                            "__segs", F.expr(_cigar_segments_sql(start_1b, cg))
-                        )
-                    )
-                )
+        if all_simple:
+            # every CIGAR in the (bounded-probed, fully seen) input is a
+            # single '<n>M' run — drop the slow branch and its second
+            # source scan from the plan entirely
+            segments = fast_segments
         else:
             segments = fast_segments.unionByName(
                 _explode_segs(
@@ -319,7 +314,7 @@ def depth(
 #: #contigs task ceiling overtake the JVM pipeline well before memory
 #: does, so the guard is a PERFORMANCE crossover, not just a memory cap.
 GROUPED_MAX_ROWS = 8_000_000
-_GROUPED_FIT_MEMO: dict = {}
+_GROUPED_FIT_MEMO = ProbeMemo()
 
 
 def _over_cap_algorithm(df: DataFrame, n_contigs: int) -> str:
@@ -340,17 +335,15 @@ def _probe_alignments(df: DataFrame, simple, contig_col: str) -> tuple[bool, boo
     branch is provably empty), and how many distinct contigs the sample
     carries (drives the window-vs-chunked choice above the guard: a
     per-contig window on few contigs starves the cluster).  Memoized by
-    plan+input fingerprint (``_plan_key``); never scans more than
+    plan+input fingerprint (``plan_key``); never scans more than
     guard+1 rows."""
-    key = None
-    try:
-        from .intervals import _plan_key
+    return _GROUPED_FIT_MEMO.get_or_probe(
+        lambda: (plan_key(df), simple is not None, "depth-grouped-v2"),
+        lambda: _alignment_probe(df, simple, contig_col),
+    )
 
-        key = (_plan_key(df), simple is not None, "depth-grouped-v2")
-        if key in _GROUPED_FIT_MEMO:
-            return _GROUPED_FIT_MEMO[key]
-    except Exception:
-        pass
+
+def _alignment_probe(df: DataFrame, simple, contig_col: str) -> tuple[bool, bool, int]:
     conf = df.sparkSession.conf
     limit = int(
         conf.get(
@@ -382,12 +375,7 @@ def _probe_alignments(df: DataFrame, simple, contig_col: str) -> tuple[bool, boo
             df.agg(F.approx_count_distinct(contig_col).alias("nc")).collect()[0]["nc"]
             or 0
         )
-    res = (fits, all_simple, n_contigs)
-    if key is not None:
-        if len(_GROUPED_FIT_MEMO) > 1024:
-            _GROUPED_FIT_MEMO.clear()
-        _GROUPED_FIT_MEMO[key] = res
-    return res
+    return (fits, all_simple, n_contigs)
 
 
 def _grouped_blocks(segments: DataFrame) -> DataFrame:

@@ -23,6 +23,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._probe_memo import ProbeMemo, plan_key
+
 
 def dot(a: Column, b: Column) -> Column:
     """Strict sequential double dot product (deterministic summation order)."""
@@ -61,9 +63,8 @@ def _stack_vectors(s: pd.Series) -> np.ndarray:
 
 
 #: per-session memo of semantic_dedup's auto-knob count probe (same
-#: semantic-plan + file-listing keying as the interval guards; cleared by
-#: intervals.clear_probe_caches)
-_SEM_COUNT_MEMO: dict = {}
+#: semantic-plan + file-listing keying as the interval guards)
+_SEM_COUNT_MEMO = ProbeMemo()
 
 #: Per-worker grow-only scratch buffers for the hot-path batch kernels.
 #: Fresh large allocations are pathologically expensive in sandboxed hosts
@@ -250,17 +251,14 @@ def lsh_cosine_topk(
     corpus_id: str = "vec_id",
     query_vec: str = "embedding",
     corpus_vec: str = "embedding",
-    rerank: str = "cogroup",
 ) -> DataFrame:
     """Approximate top-k: ``n_tables`` independent random-hyperplane tables
     of ``n_planes`` sign bits each; equi-join on (table, bucket) — queries
     additionally probe all Hamming-1 buckets per table when ``multiprobe`` —
-    then exact cosine rerank over the unioned candidates.
-
-    ``rerank='cogroup'`` (default): per-(table, bucket) GEMM search inside a
-    cogrouped Arrow task, candidates deduped on their bit-identical
-    similarity afterwards; ``'join'`` keeps the candidate-pair formulation
-    (differential-test twin) — both produce identical rows.
+    then exact cosine rerank over the unioned candidates: a per-(table,
+    bucket) GEMM search inside a cogrouped Arrow task, candidates deduped
+    on their bit-identical similarity afterwards.  The tests hold the
+    candidate-pair join formulation, which produces identical rows.
 
     Recall ≈ 1-(1-p^k)^L for per-plane agreement p = 1-θ/π; tune
     (n_planes, n_tables) to the similarity regime.  The exact
@@ -335,64 +333,44 @@ def lsh_cosine_topk(
     qp = qb.select(
         "query_id", "__qv", "table", F.explode(F.array(*probes)).alias("bucket")
     )
-    # candidate dedupe carries ids only — vectors re-attach after the
-    # distinct so the 64-dim payloads never shuffle through it
-    if rerank == "cogroup":
-        # r12: cogrouped per-(table, bucket) GEMM rerank — the ivf_cosine_topk
-        # recipe (guide §8/§4) applied to the LSH bucket join.  One Arrow task
-        # per probed bucket computes every probing query's similarities
-        # against the bucket's corpus slice plus a bucket-local top-k; a
-        # candidate seen in several tables/probes is deduped AFTER the kernel
-        # on its (bit-identical) similarity.  vs the join formulation: each
-        # corpus vector crosses the Python boundary once per (table, bucket)
-        # membership (n_tables replicas, bounded and explicit) instead of
-        # once per matching candidate pair, and each query vector once per
-        # probe instead of once per surviving candidate — at 100 TB the
-        # candidate-pair attach joins were the dominant payload shuffle.
-        # Correctness: the kernel's local top-k provably contains every
-        # global top-k row (a bucket's candidate set is a subset of the
-        # query's candidate union, so global winners rank at least as high
-        # locally); similarities are bit-identical float64 column sweeps
-        # (same contract as _pair_cosine_kernel, pinned by the cogroup≡join
-        # differential test), so the min() dedup is exact.  The explicit
-        # repartitions pin the cogroup exchanges (user repartitions are
-        # exempt from AQE byte-coalescing, which folded this sub-MB shuffle
-        # to one serial task at bench scale) and satisfy the cogroup's
-        # clustering requirement, so no extra exchange is added.
-        from pyspark.sql import types as T  # noqa: PLC0415
-
-        p = queries.sparkSession.sparkContext.defaultParallelism
-        qk = qp.repartition(p, "table", "bucket")
-        ck = c.repartition(p, "table", "bucket")
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qp.schema["query_id"].dataType, True),
-                T.StructField("neighbor_id", c.schema["neighbor_id"].dataType, True),
-                T.StructField("__sim", T.DoubleType(), True),
-            ]
-        )
-        sim = (
-            qk.groupBy("table", "bucket")
-            .cogroup(ck.groupBy("table", "bucket"))
-            .applyInArrow(_ivf_list_search_kernel(k), schema=out_schema)
-            .groupBy("query_id", "neighbor_id")
-            .agg(F.min("__sim").alias("__sim"))
-        )
-    elif rerank == "join":
-        # candidate-pair formulation (kept as the differential-test twin)
-        cand_ids = (
-            qp.select("query_id", "table", "bucket")
-            .join(c.select("neighbor_id", "table", "bucket"), ["table", "bucket"])
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
-        )
-        cand = cand_ids.join(q0, "query_id").join(c0, "neighbor_id")
-        sim = cand.withColumn(
-            "__sim", _pair_cosine_kernel()(F.col("__qv"), F.col("__cv"))
-        )
-    else:
-        raise ValueError(f"rerank must be 'cogroup' or 'join', got {rerank!r}")
+    # r12: cogrouped per-(table, bucket) GEMM rerank — the ivf_cosine_topk
+    # recipe (guide §8/§4) applied to the LSH bucket join.  One Arrow task
+    # per probed bucket computes every probing query's similarities
+    # against the bucket's corpus slice plus a bucket-local top-k; a
+    # candidate seen in several tables/probes is deduped AFTER the kernel
+    # on its (bit-identical) similarity.  vs the join formulation: each
+    # corpus vector crosses the Python boundary once per (table, bucket)
+    # membership (n_tables replicas, bounded and explicit) instead of
+    # once per matching candidate pair, and each query vector once per
+    # probe instead of once per surviving candidate — at 100 TB the
+    # candidate-pair attach joins were the dominant payload shuffle.
+    # Correctness: the kernel's local top-k provably contains every
+    # global top-k row (a bucket's candidate set is a subset of the
+    # query's candidate union, so global winners rank at least as high
+    # locally); similarities are bit-identical float64 column sweeps
+    # (same contract as _pair_cosine_kernel, pinned by the cogroup≡join
+    # differential test), so the min() dedup is exact.  The explicit
+    # repartitions pin the cogroup exchanges (user repartitions are
+    # exempt from AQE byte-coalescing, which folded this sub-MB shuffle
+    # to one serial task at bench scale) and satisfy the cogroup's
+    # clustering requirement, so no extra exchange is added.
+    p = queries.sparkSession.sparkContext.defaultParallelism
+    qk = qp.repartition(p, "table", "bucket")
+    ck = c.repartition(p, "table", "bucket")
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", qp.schema["query_id"].dataType, True),
+            T.StructField("neighbor_id", c.schema["neighbor_id"].dataType, True),
+            T.StructField("__sim", T.DoubleType(), True),
+        ]
+    )
+    sim = (
+        qk.groupBy("table", "bucket")
+        .cogroup(ck.groupBy("table", "bucket"))
+        .applyInArrow(_ivf_list_search_kernel(k), schema=out_schema)
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.min("__sim").alias("__sim"))
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("neighbor_id"))
     return (
         sim.withColumn("rank", F.row_number().over(w))
@@ -1110,22 +1088,9 @@ def semantic_dedup(
         # stage) — reuses the scan's aggregate pushdown on parquet, one
         # upstream execution otherwise.  Memoized per semantic plan +
         # file listing (r12; the same key discipline as the interval
-        # guards — cleared by clear_probe_caches), so repeated builds
-        # over the same corpus skip the job entirely.
-        try:
-            from .intervals import _plan_key
-
-            memo_key = _plan_key(v)
-        except Exception:  # connect-mode frame — probe fresh
-            memo_key = None
-        if memo_key is not None and memo_key in _SEM_COUNT_MEMO:
-            cnt = _SEM_COUNT_MEMO[memo_key]
-        else:
-            cnt = v.count()
-            if memo_key is not None:
-                if len(_SEM_COUNT_MEMO) > 1024:
-                    _SEM_COUNT_MEMO.clear()
-                _SEM_COUNT_MEMO[memo_key] = cnt
+        # guards), so repeated builds over the same corpus skip the job
+        # entirely.
+        cnt = _SEM_COUNT_MEMO.get_or_probe(lambda: plan_key(v), v.count)
     if n_clusters == "auto":
         # Capped at 4096 lists so the trainer's bounded sample stays
         # >= ~40 vectors per centroid (the standard IVF training floor) —

@@ -45,6 +45,7 @@ from ..functions.alleles import (
     vep_norm_end_udf,
     vep_norm_start_udf,
 )
+from ._probe_memo import ProbeMemo, plan_key
 
 #: cache columns never projected by default (reference vep
 #: table_function.rs:86-93 excludes source_* columns)
@@ -87,53 +88,40 @@ def _check_contract(df: DataFrame, required: Sequence[str], what: str) -> None:
             )
 
 
-def csq_escape_col(c: "F.Column") -> "F.Column":
-    """VEP CSQ field escaping (reference ``csq_escape``,
-    ``annotate_provider.rs`` test_csq_escape_*): the CSQ string's own
-    delimiters inside a field VALUE are rewritten — ``,`` and ``|`` become
-    ``&``, ``;`` percent-encodes to ``%3B``, whitespace becomes ``_``
-    (per-char, like the reference's ``ch.is_whitespace()`` arm), and a field
-    that is exactly ``-`` empties (VEP's missing-value dash); NULL renders
-    empty."""
-    s = F.coalesce(c.cast("string"), F.lit(""))
-    escaped = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.regexp_replace(s, ",", "&"), r"\|", "&"), ";", "%3B"
-        ),
-        r"\s",
-        "_",
-    )
-    return F.when(s == "-", F.lit("")).otherwise(escaped)
-
-
-# ── SQL-text twins of the CSQ slot builders (r12) ──────────────────────────
+# ── SQL-text CSQ slot builders (r12) ───────────────────────────────────────
 # The CSQ entry assembly is ~850 Column-API calls per build, each costing a
 # py4j round trip (~0.7 ms measured) — ~0.6 s of pure DRIVER socket wait per
 # annotate_vep build (guide §5: the driver should do almost no work).  The
 # mechanical concat_ws spans are therefore assembled as SQL TEXT and parsed
-# with ONE F.expr call per span.  Each helper mirrors its Column twin
-# operator-for-operator (same functions, same argument order), so the
-# resulting Catalyst tree — and every rendered byte — is identical; the CSQ
-# grid parity batteries (grids 1-7) pin that.
+# with ONE F.expr call per span; the CSQ grid parity batteries (grids 1-7)
+# pin every rendered byte.
 
 
 def _sql_e(x: str) -> str:
-    """SQL twin of the ``_e`` slot coalesce: render NULL as ''."""
+    """A CSQ slot: the value as a string, NULL rendered as ''."""
     return f"coalesce(cast({x} as string), '')"
 
 
 def _sql_m(key: str) -> str:
-    """SQL twin of the ``_m`` __t_meta map slot."""
+    """A CSQ slot from the ``__t_meta`` map (a NULL map yields '')."""
     return f"coalesce(__t_meta['{key}'], '')"
 
 
+#: the whitespace class CSQ escaping rewrites to ``_`` (Java regex ``\s``)
+_CSQ_WHITESPACE = " \t\n\x0b\x0c\r"
+
+
 def _sql_esc(x: str) -> str:
-    """SQL twin of :func:`csq_escape_col` (same regexp chain, '-' empties)."""
+    """VEP CSQ field escaping as SQL text (reference ``csq_escape``,
+    ``annotate_provider.rs`` test_csq_escape_*): the CSQ string's own
+    delimiters inside a field VALUE are rewritten — ``,`` and ``|`` become
+    ``&``, ``;`` percent-encodes to ``%3B``, whitespace becomes ``_``
+    (per-char, like the reference's ``ch.is_whitespace()`` arm), and a
+    field that is exactly ``-`` empties (VEP's missing-value dash); NULL
+    renders empty.  The text holds no backslash, so it parses the same
+    under either ``spark.sql.parser.escapedStringLiterals`` setting."""
     s = f"coalesce(cast({x} as string), '')"
-    esc = (
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-        f"{s}, ',', '&'), '\\\\|', '&'), ';', '%3B'), '\\\\s', '_')"
-    )
+    esc = f"translate(replace({s}, ';', '%3B'), ',|{_CSQ_WHITESPACE}', '&&______')"
     return f"(case when {s} = '-' then '' else {esc} end)"
 
 
@@ -324,24 +312,11 @@ def lookup_variants(
     # then restore unmatched VCF rows by left-joining hits back on a row id.
     v = v.withColumn("__vid", F.monotonically_increasing_id())
     if broadcast_vcf is None:
-        # memoized like _chrom_forms: the bounded guard count is a Spark
-        # job on the driver's critical path and every annotate_vep build
-        # re-runs it for the same VCF plan (measured r11: 0.16 s per build)
-        try:
-            from .intervals import _plan_key
+        # the memoized bounded row probe: every annotate_vep build re-asks
+        # it for the same VCF plan (measured r11: 0.16 s per unmemoized job)
+        from . import intervals
 
-            gkey = _plan_key(vcf)
-        except Exception:
-            gkey = None
-        if gkey is not None and gkey in _VCF_GUARD_MEMO:
-            broadcast_vcf = _VCF_GUARD_MEMO[gkey]
-        else:
-            broadcast_vcf = (
-                vcf.limit(VCF_BROADCAST_GUARD_ROWS + 1).count()
-                <= VCF_BROADCAST_GUARD_ROWS
-            )
-            if gkey is not None:
-                _VCF_GUARD_MEMO[gkey] = broadcast_vcf
+        broadcast_vcf = intervals._fits_broadcast(vcf, VCF_BROADCAST_GUARD_ROWS)
     probe = F.broadcast(v) if broadcast_vcf else v
     hits = (
         probe.join(c, chrom_eq & coord, "inner")
@@ -707,10 +682,7 @@ class HgvsFlags:
 
 #: memoized contig-prefix form sets, keyed like the interval-probe memos
 #: (semantic plan hash + input-file fingerprint)
-_CHROM_FORM_MEMO: dict = {}
-
-#: lookup_variants broadcast-guard verdicts, keyed like _CHROM_FORM_MEMO
-_VCF_GUARD_MEMO: dict = {}
+_CHROM_FORM_MEMO = ProbeMemo()
 
 
 def _chrom_forms(df: DataFrame) -> frozenset:
@@ -723,27 +695,20 @@ def _chrom_forms(df: DataFrame) -> frozenset:
     sample can miss the minority form and is partition-order dependent.
     Memoized by semantic plan key so repeated pipeline builds over the
     same frame pay once."""
-    try:
-        from .intervals import _plan_key
 
-        key = _plan_key(df)
-    except Exception:
-        key = None
-    if key is not None and key in _CHROM_FORM_MEMO:
-        return _CHROM_FORM_MEMO[key]
-    rows = (
-        df.select(
-            F.col("chrom").cast("string").startswith("chr").alias("f")
+    def probe() -> frozenset:
+        rows = (
+            df.select(
+                F.col("chrom").cast("string").startswith("chr").alias("f")
+            )
+            .filter(F.col("f").isNotNull())
+            .distinct()
+            .limit(3)
+            .collect()
         )
-        .filter(F.col("f").isNotNull())
-        .distinct()
-        .limit(3)
-        .collect()
-    )
-    out = frozenset(bool(r.f) for r in rows)
-    if key is not None:
-        _CHROM_FORM_MEMO[key] = out
-    return out
+        return frozenset(bool(r.f) for r in rows)
+
+    return _CHROM_FORM_MEMO.get_or_probe(lambda: plan_key(df), probe)
 
 
 def _chrom_forms_differ(a: DataFrame, b: DataFrame) -> bool:
@@ -2070,13 +2035,6 @@ def _annotate_codon(
     # spliced in after the rollup joins back to the looked rows; the entry
     # carries the two per-transcript spans around them.  concat_ws drops
     # NULL args (shifting fields), so every slot coalesces to ''. ──
-    def _e(c: "F.Column") -> "F.Column":
-        return F.coalesce(c.cast("string"), F.lit(""))
-
-    def _m(key: str) -> "F.Column":
-        # indexing a NULL map yields NULL → ''
-        return F.coalesce(F.col("__t_meta")[F.lit(key)], F.lit(""))
-
     # ENSP = the transcript's translation stable id (reference writer reads
     # tx.translation_stable_id, annotate_provider.rs:4297-4299): the
     # transcripts table's own `ensp` column when present, else the

@@ -226,8 +226,12 @@ def test_lsh_cogroup_rerank_equals_join_formulation(spark):
     import warnings
 
     import pyspark.sql.functions as SF
+    from pyspark.sql import Window as W
 
     from datafusion_bio_functions_spark.operators.similarity import (
+        _bucket_expr,
+        _hyperplanes,
+        _pair_cosine_kernel,
         lsh_cosine_topk,
     )
 
@@ -245,15 +249,59 @@ def test_lsh_cogroup_rerank_equals_join_formulation(spark):
     # small n_planes + several tables + multiprobe maximizes candidates
     # seen through MULTIPLE cells — the dedup the cogroup must reproduce
     common = dict(k=4, dim=8, n_planes=3, n_tables=3, multiprobe=True, seed=5)
+
+    def join_formulation():
+        # sign-bit buckets from the JVM expression (the bucket kernel is
+        # sign-exact against it), every (query, candidate) pair sharing a
+        # probed (table, bucket) deduped on ids, then one pair cosine each
+        n_planes, seed = common["n_planes"], common["seed"]
+        tables = [
+            _hyperplanes(common["dim"], n_planes, seed + 1000 * t)
+            for t in range(common["n_tables"])
+        ]
+
+        def buckets(vec):
+            return SF.posexplode(SF.array(*[_bucket_expr(SF.col(vec), p) for p in tables]))
+
+        c0 = df.select(SF.col("vec_id").alias("neighbor_id"), SF.col("embedding").alias("__cv"))
+        c = c0.select("neighbor_id", buckets("__cv").alias("table", "bucket"))
+        q0 = q.select(SF.col("vec_id").alias("query_id"), SF.col("embedding").alias("__qv"))
+        qb = q0.select("query_id", buckets("__qv").alias("table", "__b0"))
+        probes = [SF.col("__b0")] + [
+            SF.col("__b0").bitwiseXOR(SF.lit(1 << i)) for i in range(n_planes)
+        ]
+        qp = qb.select("query_id", "table", SF.explode(SF.array(*probes)).alias("bucket"))
+        cand_ids = (
+            qp.join(c, ["table", "bucket"])
+            .filter(SF.col("query_id") != SF.col("neighbor_id"))
+            .select("query_id", "neighbor_id")
+            .distinct()
+        )
+        sim = (
+            cand_ids.join(q0, "query_id")
+            .join(c0, "neighbor_id")
+            .withColumn("__sim", _pair_cosine_kernel()(SF.col("__qv"), SF.col("__cv")))
+        )
+        w = W.partitionBy("query_id").orderBy(SF.desc("__sim"), SF.asc("neighbor_id"))
+        return (
+            sim.withColumn("rank", SF.row_number().over(w))
+            .filter(SF.col("rank") <= common["k"])
+            .select(
+                "query_id", "neighbor_id",
+                SF.col("__sim").alias("cosine_sim"),
+                SF.col("rank").cast("long").alias("rank"),
+            )
+        )
+
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")  # zero-vector 0/0 RuntimeWarnings
         expected = sorted(
             (r.query_id, r.rank, r.neighbor_id, repr(r.cosine_sim))
-            for r in lsh_cosine_topk(q, df, rerank="join", **common).collect()
+            for r in join_formulation().collect()
         )
         got = sorted(
             (r.query_id, r.rank, r.neighbor_id, repr(r.cosine_sim))
-            for r in lsh_cosine_topk(q, df, rerank="cogroup", **common).collect()
+            for r in lsh_cosine_topk(q, df, **common).collect()
         )
     assert got == expected
     nan_rows = [t for t in got if t[0] >= 5000]
@@ -943,14 +991,17 @@ def test_local_frame_generator_input(spark):
 
 
 def test_clear_probe_caches_empties_every_memo():
-    """Every module-level ``_*_MEMO`` dict in the package is registered in
-    ``clear_probe_caches()`` — a memo added later cannot be missed."""
+    """Every module-level ``_*_MEMO`` dict in the package is a
+    ``ProbeMemo``, the set of them IS the ``ProbeMemo`` registry, and
+    ``clear_probe_caches()`` empties each — a memo added later cannot be
+    missed."""
     import importlib
     import pkgutil
     import re
 
     import datafusion_bio_functions_spark as pkg
     from datafusion_bio_functions_spark import clear_probe_caches
+    from datafusion_bio_functions_spark.operators import _probe_memo
 
     memos = {}
     for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
@@ -958,7 +1009,8 @@ def test_clear_probe_caches_empties_every_memo():
         for name, val in vars(mod).items():
             if re.fullmatch(r"_[A-Z0-9_]+_MEMO", name) and isinstance(val, dict):
                 memos[id(val)] = (f"{info.name}.{name}", val)
-    assert len(memos) >= 11
+    assert [n for n, m in memos.values() if not isinstance(m, _probe_memo.ProbeMemo)] == []
+    assert set(memos) == set(_probe_memo._REGISTRY)
     for _, memo in memos.values():
         memo[("sentinel",)] = None
     clear_probe_caches()

@@ -630,24 +630,32 @@ def test_schema_contract_type_validation(spark):
 def test_csq_escape_reference_cases(spark):
     """annotate_provider.rs test_csq_escape_*: CSQ delimiters inside field
     values rewrite (','/'|' → '&', ';' → '%3B'), a bare '-' empties, and
-    ordinary values (including internal dashes) pass through."""
-    from datafusion_bio_functions_spark.operators.vep import csq_escape_col
+    ordinary values (including internal dashes) pass through — under
+    either ``spark.sql.parser.escapedStringLiterals`` setting."""
+    from datafusion_bio_functions_spark.operators.vep import _sql_esc
     from pyspark.sql import functions as F
 
     rows = [("A0A0J9YXY3.52,P0DPF7.28",), ("a|b",), ("a;b",), ("-",),
             ("ENST00000684052",), ("c.11-3_11-2del",), (None,),
             ("gene symbol",), ("a\tb c",)]
-    out = [
-        r["e"]
-        for r in spark.createDataFrame(rows, ["v"])
-        .select(csq_escape_col(F.col("v")).alias("e"))
-        .collect()
-    ]
-    assert out == [
-        "A0A0J9YXY3.52&P0DPF7.28", "a&b", "a%3Bb", "",
-        "ENST00000684052", "c.11-3_11-2del", "",
-        "gene_symbol", "a_b_c",
-    ]
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    for escaped_literals in ("false", "true"):
+        spark.conf.set(key, escaped_literals)
+        try:
+            out = [
+                r["e"]
+                for r in spark.createDataFrame(rows, ["v"])
+                .select(F.expr(_sql_esc("v")).alias("e"))
+                .collect()
+            ]
+        finally:
+            spark.conf.set(key, prev)
+        assert out == [
+            "A0A0J9YXY3.52&P0DPF7.28", "a&b", "a%3Bb", "",
+            "ENST00000684052", "c.11-3_11-2del", "",
+            "gene_symbol", "a_b_c",
+        ], escaped_literals
 
 
 def test_annotate_vep_domains_table(spark):

@@ -18,6 +18,16 @@ bio-function-ranges/src/``) in idiomatic PySpark:
   left sides, else cogrouped Arrow batches; numpy searchsorted either way,
   same binary-search math).
 
+count_overlaps, coverage, subtract and k=1 nearest share ONE CollectLeft
+index (:func:`_collect_index`, the reference's collected build side,
+``count_overlaps.rs:122-141`` / ``nearest_index.rs:24-120``): the build side
+gathered through Arrow, NULL rows dropped, per-contig (start, end)-sorted
+int64 runs plus the other columns, broadcast once per input.  Each operator
+derives its own per-contig structure from a run on the worker and answers
+every probe batch in one ``mapInArrow`` (:func:`_probe_batches`).  Arrow end
+to end, so a NULL coordinate never matches — the join paths' rule — and
+a long column comes back exact, as it does from the join paths.
+
 Coordinate semantics (reference ``filter_op.rs:1-10``, applied at
 ``interval_tree.rs:184-188``): intervals are 1-based **closed** by default
 (``filter_op="weak"``); ``filter_op="strict"`` shrinks the probe interval by
@@ -42,7 +52,7 @@ Scale notes (local[32] tests, 1000-executor target):
 from __future__ import annotations
 
 import sys
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -400,30 +410,30 @@ def count_overlaps(
     ``count = #(l.start <= r.end) - #(l.end < r.start)`` via two binary
     searches, ``interval_tree.rs:20-50``).
 
-    ``algorithm='broadcast'`` (default via ``auto``) collects the left side
-    into two sorted int arrays per contig and probes them with vectorized
-    ``np.searchsorted`` inside an Arrow-batched pandas UDF — the exact
-    reference algorithm (the reference *always* collects left eagerly:
-    ``count_overlaps.rs:122-141``).  Size-guarded: a left side above
-    ``BROADCAST_GUARD_ROWS`` silently falls back to the join plan instead
-    of collecting data-scale rows onto the driver, so ``auto`` is the
-    CollectLeft fast path with a shuffle-parallel escape hatch.
+    ``algorithm='broadcast'`` (default via ``auto``) collects the left
+    coordinates through Arrow into the shared per-contig sorted-array index
+    (:func:`_collect_index`, the one nearest and coverage use too) and
+    probes it with vectorized ``np.searchsorted`` in one ``mapInArrow`` —
+    the exact reference algorithm (the reference *always* collects left
+    eagerly: ``count_overlaps.rs:122-141``).  Size-guarded: a left side
+    above ``BROADCAST_GUARD_ROWS`` silently falls back to the join plan
+    instead of collecting data-scale rows onto the driver, so ``auto`` is
+    the CollectLeft fast path with a shuffle-parallel escape hatch.
     ``algorithm='join'`` computes the same thing as a shuffle-parallel
-    binned join + groupBy — no size limit on either side.
+    binned join + groupBy — no size limit on either side.  Either way a
+    row with a NULL contig, start or end never matches (a right row
+    counts 0) and every other column comes back exactly as it went in.
     """
     _check_filter_op(filter_op)
     left, (lc, ls, le) = _normalize(left, cols_left)
     right, (rc, rs, re_) = _normalize(right, cols_right)
-    if algorithm == "auto":
-        algorithm = "broadcast"
-
+    algorithm = _collect_left_algorithm("count_overlaps", algorithm)
     if algorithm == "broadcast":
         out = _count_or_cover_broadcast(
             left, right, (lc, ls, le), (rc, rs, re_), filter_op, mode="count"
         )
         if out is not None:
             return out
-        algorithm = "join"  # over-guard: shuffle-parallel fallback
 
     r = _with_rid(right)
     pairs = interval_join(
@@ -433,7 +443,7 @@ def count_overlaps(
         (rc, rs, re_),
         filter_op,
         "inner",
-        "binned" if algorithm in ("join", "binned") else algorithm,
+        "binned",
         bin_width,
     )
     counts = pairs.groupBy(F.col(_RIGHT + "__rid").alias("__rid")).agg(
@@ -459,26 +469,31 @@ def coverage(
     the count_overlaps provider, ``count_overlaps.rs:128-141`` +
     ``interval_tree.rs:52-73,145-152``).  Appends ``coverage``.
 
-    ``auto`` = the guarded CollectLeft searchsorted path (the reference
-    always collects left), falling back to the shuffle-parallel
-    merge+binned-join plan when the left side exceeds the broadcast
-    guard."""
+    ``auto`` = ``'broadcast'``: the guarded CollectLeft searchsorted path
+    (the reference always collects left) over the same shared Arrow index
+    as :func:`count_overlaps`, so both over one left frame collect it once.
+    It falls back to ``'join'``, the shuffle-parallel merge+binned-join
+    plan, when the left side exceeds the broadcast guard.  Either way a row
+    with a NULL contig, start or end never matches (a right row covers 0)
+    and every other column comes back exactly as it went in."""
     _check_filter_op(filter_op)
     left, (lc, ls, le) = _normalize(left, cols_left)
     right, (rc, rs, re_) = _normalize(right, cols_right)
-    if algorithm == "auto":
-        algorithm = "broadcast"
+    algorithm = _collect_left_algorithm("coverage", algorithm)
     if algorithm == "broadcast":
         out = _count_or_cover_broadcast(
             left, right, (lc, ls, le), (rc, rs, re_), filter_op, mode="coverage"
         )
         if out is not None:
             return out
-        algorithm = "join"  # over-guard: shuffle-parallel fallback
 
     # the reference pre-merges with the touching (weak) condition regardless
-    # of filter_op (merge_intervals, interval_tree.rs:52-73: first <= last)
-    merged = merge(left.select(lc, ls, le), cols=(lc, ls, le), filter_op="weak").select(
+    # of filter_op (merge_intervals, interval_tree.rs:52-73: first <= last);
+    # NULL rows are dropped first, as they match nothing (inside merge's
+    # sweep a NULL start would swallow its neighbours into one island)
+    merged = merge(
+        left.select(lc, ls, le).na.drop(), cols=(lc, ls, le), filter_op="weak"
+    ).select(
         F.col("contig").alias(lc), F.col("pos_start").alias(ls), F.col("pos_end").alias(le)
     )
     r = _with_rid(right)
@@ -489,7 +504,7 @@ def coverage(
         (rc, rs, re_),
         filter_op,
         "inner",
-        "binned" if algorithm in ("join", "binned") else algorithm,
+        "binned",
         bin_width,
     )
     ov = _coverage_len(_LEFT + ls, _LEFT + le, _RIGHT + rs, _RIGHT + re_, filter_op)
@@ -500,6 +515,14 @@ def coverage(
         "coverage", F.coalesce(F.col("coverage"), F.lit(0)).cast(T.LongType())
     )
     return out.drop("__rid")
+
+
+def _collect_left_algorithm(op: str, algorithm: str) -> str:
+    """Resolve the ``algorithm`` argument of the CollectLeft operators
+    (count_overlaps, coverage, subtract): ``auto`` is ``broadcast``."""
+    if algorithm not in ("auto", "broadcast", "join"):
+        raise ValueError(f"{op} algorithm must be auto|broadcast|join, got {algorithm!r}")
+    return "broadcast" if algorithm == "auto" else algorithm
 
 
 #: row guard for driver-collect broadcast paths: three int64 columns per row
@@ -530,166 +553,183 @@ def _count_or_cover_broadcast(
     filter_op: str,
     mode: str,
 ) -> DataFrame | None:
-    """CollectLeft path: per-contig sorted arrays broadcast to executors,
+    """CollectLeft path: the :func:`_collect_index` of the left coordinates,
     probed batch-wise with numpy searchsorted (reference
     ``interval_tree.rs:20-73,145-152``).  Returns None when the left side
     exceeds the broadcast guard (caller falls back to the join plan)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    lc, ls, le = lcols
-    rc, rs, re_ = rcols
-    # Arrow-path collect: orders of magnitude faster than Row-object
-    # .collect() at millions of rows (the reference's CollectLeft is a
-    # columnar RecordBatch gather too, count_overlaps.rs:122-141).  The
-    # guard is the memoized bounded count probe — a limit().toPandas()
-    # single-gather looks cheaper but CollectLimitExec de-parallelizes the
-    # scan (measured slower at sf1); None → caller falls back to join.
     if not _fits_broadcast(left):
         return None
-    # the strict/weak twins (and repeated queries over the same inputs)
-    # collect and index the IDENTICAL left frame — memoize the broadcast
-    # handle by plan+file fingerprint so the toPandas + numpy build + ship
-    # happen once per (input, mode).  Small bound: count-mode entries hold
-    # all left rows (guard-bounded).
-    def build():
-        lpdf = left.select(lc, ls, le).toPandas()
-        index: dict[str, tuple] = {}
-        all_contigs = lpdf[lc].to_numpy()
-        all_s = lpdf[ls].to_numpy(dtype=np.int64)
-        all_e = lpdf[le].to_numpy(dtype=np.int64)
-        for contig in pd.unique(all_contigs):
-            m = all_contigs == contig
-            if mode == "count":
-                # pts: sorted positions of degenerate (point) intervals —
-                # the strict-mode correction term below needs them (see probe)
-                pm = m & (all_s == all_e)
-                index[contig] = (np.sort(all_s[m]), np.sort(all_e[m]), np.sort(all_s[pm]))
-            else:
-                # touching merges are harmless for coverage sums; only true
-                # overlap must collapse so lengths don't double-count
-                ms_a, me_a = _merge_islands(all_s[m], all_e[m], strict=False)
-                # reference per-interval contribution floors at 1 (point
-                # intervals fully inside the probe still count one base)
-                lens = np.maximum(me_a - ms_a, 1).cumsum()
-                index[contig] = (ms_a, me_a, lens)
-        return right.sparkSession.sparkContext.broadcast(index)
-
-    bidx = _COLLECT_INDEX_MEMO.get_or_probe(
-        lambda: (plan_key(left), lc, ls, le, mode), build, bound=4
-    )
-    return _probe_with_index(bidx, right, (rc, rs, re_), filter_op, mode)
-
-
-#: memoized CollectLeft index broadcasts, keyed (plan+files, cols, mode)
-_COLLECT_INDEX_MEMO = ProbeMemo()
-
-
-def _merge_islands(starts, ends, strict: bool):
-    """Merge one contig's intervals into sorted disjoint islands:
-    ``(island_starts, island_ends)``.  A row starts a new island iff its
-    start exceeds (``strict``: reaches) the running max end of all previous
-    rows — weak merges touching intervals, strict only true overlap
-    (merge.rs:290-297)."""
-    import numpy as np
-
-    order = np.lexsort((ends, starts))
-    cs, ce = starts[order], ends[order]
-    run_max = np.maximum.accumulate(ce)
-    new_island = np.ones(len(cs), dtype=bool)
-    if len(cs) > 1:
-        new_island[1:] = (cs[1:] >= run_max[:-1]) if strict else (cs[1:] > run_max[:-1])
-    # island ends are the running max at each island's last row
-    last_of_island = np.ones(len(cs), dtype=bool)
-    last_of_island[:-1] = new_island[1:]
-    return cs[new_island], run_max[last_of_island]
-
-
-def _probe_with_index(
-    bidx, right: DataFrame, rcols: tuple[str, str, str], filter_op: str, mode: str
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    rc, rs, re_ = rcols
+    bidx = _collect_index(left.select(*lcols), *lcols)
     shrink = 0 if filter_op == "weak" else 1
     out_col = "count" if mode == "count" else "coverage"
     out_schema = T.StructType(right.schema.fields + [T.StructField(out_col, T.LongType())])
 
-    def probe(batches: Iterable[pd.DataFrame]):
-        idx = bidx.value
-        for pdf in batches:
-            res = np.zeros(len(pdf), dtype=np.int64)
-            contigs = pdf[rc].to_numpy()
-            qs = pdf[rs].to_numpy(dtype=np.int64) + shrink
-            qe = pdf[re_].to_numpy(dtype=np.int64) - shrink
-            for contig in pd.unique(contigs):
-                m = contigs == contig
-                entry = idx.get(contig)
-                if entry is None:
-                    continue
-                if mode == "count":
-                    starts, ends, pts = entry
-                    if shrink == 0:
-                        # weak: #(ls <= re) - #(le < rs); every le<rs
-                        # interval has ls <= le < rs <= re, so the
-                        # subtraction identity is exact
-                        res[m] = np.searchsorted(
-                            starts, qe[m], "right"
-                        ) - np.searchsorted(ends, qs[m], "left")
-                    else:
-                        # strict: #(ls < re) - #(le <= rs) is exact for
-                        # re > rs, but POINT queries (re == rs) wrongly
-                        # subtract point intervals at exactly rs (they have
-                        # le <= rs but not ls < re) — add them back.
-                        # qs/qe are already shrunk: rs = qs-1, re = qe+1.
-                        rrs, rre = qs[m] - 1, qe[m] + 1
-                        a = np.searchsorted(starts, rre, "left")
-                        b = np.searchsorted(ends, rrs, "right")
-                        corr = np.where(
-                            rre == rrs,
-                            np.searchsorted(pts, rrs, "right")
-                            - np.searchsorted(pts, rrs, "left"),
-                            0,
-                        )
-                        res[m] = a - b + corr
-                else:
-                    ms_a, me_a, lens = entry
-                    cqs, cqe = qs[m], qe[m]
-                    lo = np.searchsorted(me_a, cqs, "left")  # first merged iv ending >= qs
-                    hi = np.searchsorted(ms_a, cqe, "right")  # first merged iv starting > qe
-                    tot = np.zeros(len(cqs), dtype=np.int64)
-                    # lo is clipped because np.where evaluates both branches
-                    # eagerly: a query right of every interval has lo == n
-                    # (masked out by the hi-lo>2 condition, but still indexed)
-                    inner = np.where(
-                        hi - lo > 2,
-                        lens[np.maximum(hi - 2, 0)] - lens[np.minimum(lo, len(lens) - 1)],
-                        0,
-                    )
-                    # clip first and last overlapping merged interval
-                    has = hi > lo
-                    f = np.minimum(lo, len(ms_a) - 1)
-                    l_ = np.maximum(hi - 1, 0)
-                    # reference formula on the (shrink-adjusted) query:
-                    # max(1, min(qe+1, me) - max(qs-1, ms)) per interval
-                    first_len = np.maximum(
-                        np.minimum(me_a[f], cqe + 1) - np.maximum(ms_a[f], cqs - 1), 1
-                    )
-                    last_len = np.where(
-                        l_ != f,
-                        np.maximum(
-                            np.minimum(me_a[l_], cqe + 1) - np.maximum(ms_a[l_], cqs - 1), 1
-                        ),
-                        0,
-                    )
-                    tot = np.where(has, inner + first_len + last_len, 0)
-                    res[m] = tot
-            pdf = pdf.copy()
-            pdf[out_col] = res
-            yield pdf
+    def count_run(starts, ends):
+        # the run is (start, end)-sorted: starts and the point starts already
+        # are; pts feeds the strict-mode correction below
+        return starts, np.sort(ends), starts[starts == ends]
 
-    return right.mapInPandas(probe, schema=out_schema)
+    def cover_run(starts, ends):
+        # touching merges are harmless for coverage sums; only true
+        # overlap must collapse so lengths don't double-count.  The
+        # reference per-interval contribution floors at 1 (point intervals
+        # fully inside the probe still count one base).
+        ms_a, me_a = _merge_islands(starts, ends, strict=False)
+        return ms_a, me_a, np.maximum(me_a - ms_a, 1).cumsum()
+
+    def count(run, rrs, rre):
+        starts, ends, pts = run
+        if not shrink:
+            # weak: #(ls <= re) - #(le < rs); every le<rs interval has
+            # ls <= le < rs <= re, so the subtraction identity is exact
+            return np.searchsorted(starts, rre, "right") - np.searchsorted(ends, rrs, "left")
+        # strict: #(ls < re) - #(le <= rs) is exact for re > rs, but POINT
+        # queries (re == rs) wrongly subtract point intervals at exactly rs
+        # (they have le <= rs but not ls < re) — add them back
+        corr = np.where(
+            rre == rrs,
+            np.searchsorted(pts, rrs, "right") - np.searchsorted(pts, rrs, "left"),
+            0,
+        )
+        return np.searchsorted(starts, rre, "left") - np.searchsorted(ends, rrs, "right") + corr
+
+    def cover(run, rrs, rre):
+        ms_a, me_a, lens = run
+        cqs, cqe = rrs + shrink, rre - shrink
+        lo = np.searchsorted(me_a, cqs, "left")  # first merged iv ending >= qs
+        hi = np.searchsorted(ms_a, cqe, "right")  # first merged iv starting > qe
+        # lo is clipped because np.where evaluates both branches eagerly: a
+        # query right of every interval has lo == n (masked out by the
+        # hi-lo>2 condition, but still indexed)
+        inner = np.where(
+            hi - lo > 2, lens[np.maximum(hi - 2, 0)] - lens[np.minimum(lo, len(lens) - 1)], 0
+        )
+        # clip first and last overlapping merged interval with the
+        # reference formula on the (shrink-adjusted) query:
+        # max(1, min(qe+1, me) - max(qs-1, ms)) per interval
+        f = np.minimum(lo, len(ms_a) - 1)
+        l_ = np.maximum(hi - 1, 0)
+        first_len = np.maximum(np.minimum(me_a[f], cqe + 1) - np.maximum(ms_a[f], cqs - 1), 1)
+        last_len = np.where(
+            l_ != f,
+            np.maximum(np.minimum(me_a[l_], cqe + 1) - np.maximum(ms_a[l_], cqs - 1), 1),
+            0,
+        )
+        return np.where(hi > lo, inner + first_len + last_len, 0)
+
+    derive, kernel = (count_run, count) if mode == "count" else (cover_run, cover)
+
+    def probe(batches):
+        for batch, qs, qe, _, groups in _probe_batches(bidx, batches, rcols, derive):
+            res = np.zeros(batch.num_rows, np.int64)
+            for m, run, _ in groups:
+                res[m] = kernel(run, qs[m], qe[m])
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(res)], names=out_schema.fieldNames()
+            )
+
+    return right.mapInArrow(probe, out_schema)
+
+
+#: memoized CollectLeft index broadcasts, keyed (plan+files, cols)
+_COLLECT_INDEX_MEMO = ProbeMemo()
+
+
+def _collect_index(df: DataFrame, c: str, s: str, e: str):
+    """The one CollectLeft index (reference ``count_overlaps.rs:122-141``,
+    ``nearest_index.rs:24-120``), built once per input and broadcast:
+    ``(bounds, starts, ends, payload)`` — per contig the ``[lo, hi)`` slice
+    of the int64 ``starts``/``ends`` holding its (start, end)-sorted run,
+    and every other column of ``df`` taken in that order.  Rows with a NULL
+    contig, start or end are dropped: they never match.  Operators derive
+    their own per-contig structures from a run on the worker (see
+    :func:`_probe_batches`); shipping them would only grow every worker's
+    copy of the broadcast.  Memoized per (plan+files, cols); small bound,
+    since an entry holds up to ``BROADCAST_GUARD_ROWS`` rows."""
+
+    def build():
+        import numpy as np
+        import pandas as pd
+        import pyarrow.compute as pc
+
+        # toArrow, not toPandas: pandas turns a nullable long column into
+        # float64, which is not exact above 2^53 and casts NULL to garbage.
+        # Arrow keeps every Spark type as a mapInArrow probe writes it back.
+        tbl = df.toArrow()
+        tbl = tbl.filter(
+            pc.and_(
+                pc.is_valid(tbl.column(c)),
+                pc.and_(pc.is_valid(tbl.column(s)), pc.is_valid(tbl.column(e))),
+            )
+        )
+        codes, contigs = pd.factorize(tbl.column(c).to_numpy(zero_copy_only=False))
+        starts = tbl.column(s).to_numpy().astype(np.int64, copy=False)
+        ends = tbl.column(e).to_numpy().astype(np.int64, copy=False)
+        # one (contig, start, end)-sorted run per contig; lexsort is stable,
+        # so equal intervals keep input order (nearest's last tie-break)
+        order = np.lexsort((ends, starts, codes))
+        cuts = np.searchsorted(codes[order], np.arange(len(contigs) + 1))
+        bounds = {k: (int(cuts[j]), int(cuts[j + 1])) for j, k in enumerate(contigs)}
+        payload = {
+            n: tbl.column(n).take(order).combine_chunks()
+            for n in tbl.column_names
+            if n not in (s, e)
+        }
+        return df.sparkSession.sparkContext.broadcast((bounds, starts[order], ends[order], payload))
+
+    return _COLLECT_INDEX_MEMO.get_or_probe(lambda: (plan_key(df), c, s, e), build, bound=4)
+
+
+def _probe_batches(bidx, batches, rcols: tuple[str, str, str], derive):
+    """The probe loop every :func:`_collect_index` user runs in its
+    ``mapInArrow``.  Yields ``(batch, starts, ends, valid, groups)`` per
+    Arrow batch: the probe coordinates as int64 (NULL read as 0), ``valid``
+    where both are non-NULL, and one ``(mask, run, lo)`` per contig the
+    index holds — the valid batch rows on it, ``derive(starts, ends)`` over
+    its sorted run (computed once per task) and the run's offset into the
+    index.  A NULL or absent contig is in no group, so it matches nothing."""
+    import pandas as pd
+    import pyarrow.compute as pc
+
+    bounds, starts, ends, _ = bidx.value
+    rc, rs, re_ = rcols
+    runs: dict = {}
+    for batch in batches:
+        contigs = batch.column(rc).to_numpy(zero_copy_only=False)
+        s_col, e_col = batch.column(rs), batch.column(re_)
+        valid = pc.and_(pc.is_valid(s_col), pc.is_valid(e_col)).to_numpy(zero_copy_only=False)
+        groups = []
+        for contig in pd.unique(contigs):
+            b = bounds.get(contig)
+            if b is None:
+                continue
+            run = runs.get(contig)
+            if run is None:
+                run = runs[contig] = derive(starts[b[0] : b[1]], ends[b[0] : b[1]])
+            groups.append(((contigs == contig) & valid, run, b[0]))
+        qs = pc.fill_null(s_col, 0).to_numpy()
+        yield batch, qs, pc.fill_null(e_col, 0).to_numpy(), valid, groups
+
+
+def _merge_islands(starts, ends, strict: bool):
+    """Merge one contig's (start, end)-sorted intervals into sorted disjoint
+    islands: ``(island_starts, island_ends)``.  A row starts a new island
+    iff its start exceeds (``strict``: reaches) the running max end of all
+    previous rows — weak merges touching intervals, strict only true
+    overlap (merge.rs:290-297)."""
+    import numpy as np
+
+    run_max = np.maximum.accumulate(ends)
+    new_island = np.ones(len(starts), dtype=bool)
+    if len(starts) > 1:
+        new_island[1:] = (starts[1:] >= run_max[:-1]) if strict else (starts[1:] > run_max[:-1])
+    # island ends are the running max at each island's last row
+    last_of_island = np.ones(len(starts), dtype=bool)
+    last_of_island[:-1] = new_island[1:]
+    return starts[new_island], run_max[last_of_island]
 
 
 # ---------------------------------------------------------------------------
@@ -1230,101 +1270,75 @@ def complement(
 
 def _subtract_broadcast(
     left: DataFrame,
-    right_pdf,
+    right: DataFrame,
     lcols: tuple[str, str, str],
     rcols: tuple[str, str, str],
     filter_op: str,
 ) -> DataFrame:
-    """CollectRight subtract: the raw right side gathered Arrow-side, merged
-    per contig in a vectorized island reduction (same sweep the chunked
-    merge runs distributed), broadcast as sorted disjoint arrays; every
-    left batch fragments in one vectorized sweep (reference cursor
-    semantics, subtract.rs:414-438 — end-exclusive, no ±1, rows with
-    ls >= le emit nothing)."""
+    """CollectRight subtract: the right coordinates' :func:`_collect_index`,
+    merged per contig on the worker in a vectorized island reduction (same
+    sweep the chunked merge runs distributed); every left batch fragments
+    in one vectorized sweep (reference cursor semantics, subtract.rs:414-438
+    — end-exclusive, no ±1, rows with ls >= le or a NULL start or end emit
+    nothing)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    lc, ls, le = lcols
-    rc, rs, re_ = rcols
+    _, ls, le = lcols
     strict = filter_op != "weak"
-    mc = right_pdf[rc].to_numpy()
-    msa = right_pdf[rs].to_numpy(dtype=np.int64)
-    mea = right_pdf[re_].to_numpy(dtype=np.int64)
-    index: dict[str, tuple] = {}
-    for contig in pd.unique(mc):
-        sel = mc == contig
-        index[contig] = _merge_islands(msa[sel], mea[sel], strict)
+    bidx = _collect_index(right.select(*rcols), *rcols)
+    names = left.columns
 
-    sc = left.sparkSession.sparkContext
-    bidx = sc.broadcast(index)
-    fields = []
-    for f in left.schema.fields:
-        if f.name in (ls, le):
-            fields.append(T.StructField(f.name, T.LongType(), f.nullable))
-        else:
-            fields.append(f)
-    out_schema = T.StructType(fields)
-
-    def frag(batches: Iterable[pd.DataFrame]):
-        idx = bidx.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            contigs = pdf[lc].to_numpy()
-            outs = []
-            for contig in pd.unique(contigs):
-                m = contigs == contig
-                sub = pdf[m]
-                ls_a = sub[ls].to_numpy(dtype=np.int64)
-                le_a = sub[le].to_numpy(dtype=np.int64)
-                valid = ls_a < le_a
-                entry = idx.get(contig)
-                if entry is None or len(entry[0]) == 0:
-                    keep = sub[valid]
-                    if len(keep):
-                        keep = keep.copy()
-                        keep[ls] = ls_a[valid]
-                        keep[le] = le_a[valid]
-                        outs.append(keep)
-                    continue
-                ms_arr, me_arr = entry
+    def frag(batches):
+        for batch, ls_a, le_a, valid, groups in _probe_batches(
+            bidx, batches, lcols, lambda s, e: _merge_islands(s, e, strict)
+        ):
+            ok = valid & (ls_a < le_a)
+            # rows on no indexed contig (absent or NULL) pass through whole
+            rest = ok.copy()
+            rows, starts, ends = [], [], []
+            for m, (ms_arr, me_arr), _ in groups:
+                rest &= ~m
+                sub = np.flatnonzero(m & ok)
+                s_a, e_a = ls_a[sub], le_a[sub]
                 if strict:
                     # overlap iff ms < le AND me > ls
-                    lo = np.searchsorted(me_arr, ls_a, "right")
-                    hi = np.searchsorted(ms_arr, le_a, "left")
+                    lo = np.searchsorted(me_arr, s_a, "right")
+                    hi = np.searchsorted(ms_arr, e_a, "left")
                 else:
                     # overlap iff ms <= le AND me >= ls
-                    lo = np.searchsorted(me_arr, ls_a, "left")
-                    hi = np.searchsorted(ms_arr, le_a, "right")
+                    lo = np.searchsorted(me_arr, s_a, "left")
+                    hi = np.searchsorted(ms_arr, e_a, "right")
                 k = np.maximum(hi - lo, 0)
-                slots = np.where(valid, k + 1, 0)
-                total = int(slots.sum())
-                if total == 0:
-                    continue
-                rep = np.repeat(np.arange(len(sub)), slots)
-                off = np.concatenate(([0], np.cumsum(slots)[:-1]))
-                t = np.arange(total) - off[rep]
-                klo, kk = lo[rep], k[rep]
+                rep = np.repeat(np.arange(len(sub)), k + 1)
+                off = np.concatenate(([0], np.cumsum(k + 1)[:-1]))
+                t = np.arange(len(rep)) - off[rep]
+                klo = lo[rep]
                 n_m = len(ms_arr)
-                prev_i = np.clip(klo + t - 1, 0, n_m - 1)
-                next_i = np.clip(klo + t, 0, n_m - 1)
                 # cursor sweep: slot t gap runs from max(prev overlap end,
                 # ls) to the next overlap start; the final slot (t == k)
                 # is the tail ending at le
-                start = np.where(t == 0, ls_a[rep], np.maximum(me_arr[prev_i], ls_a[rep]))
-                end = np.where(t == kk, le_a[rep], ms_arr[next_i])
-                keep_m = start < end
-                if not keep_m.any():
-                    continue
-                out = sub.iloc[rep[keep_m]].copy()
-                out[ls] = start[keep_m]
-                out[le] = end[keep_m]
-                outs.append(out)
-            if outs:
-                res = pd.concat(outs, ignore_index=True)
-                yield res[[f.name for f in out_schema.fields]]
+                prev_end = me_arr[np.clip(klo + t - 1, 0, n_m - 1)]
+                start = np.where(t == 0, s_a[rep], np.maximum(prev_end, s_a[rep]))
+                end = np.where(t == k[rep], e_a[rep], ms_arr[np.clip(klo + t, 0, n_m - 1)])
+                keep = start < end
+                rows.append(sub[rep[keep]])
+                starts.append(start[keep])
+                ends.append(end[keep])
+            whole = np.flatnonzero(rest)
+            rows.append(whole)
+            starts.append(ls_a[whole])
+            ends.append(le_a[whole])
+            rows, starts, ends = (np.concatenate(x) for x in (rows, starts, ends))
+            order = np.argsort(rows, kind="stable")  # input row order
+            take = pa.array(rows[order])
+            cols = {ls: pa.array(starts[order]), le: pa.array(ends[order])}
+            yield pa.RecordBatch.from_arrays(
+                [cols[n] if n in cols else batch.column(n).take(take) for n in names],
+                names=names,
+            )
 
-    return left.mapInPandas(frag, schema=out_schema)
+    return left.mapInArrow(frag, left.schema)
 
 
 def subtract(
@@ -1334,7 +1348,6 @@ def subtract(
     cols_right: Sequence[str] | None = None,
     filter_op: str = "weak",
     algorithm: str = "auto",
-    bin_width: int | None = None,
     merge_algorithm: str = "auto",
     chunk_width: int | None = None,
 ) -> DataFrame:
@@ -1343,36 +1356,33 @@ def subtract(
     are preserved on each fragment (reference ``subtract.rs:28-668``; output =
     left schema with start/end retyped Int64, ``subtract.rs:50-77``).
 
-    ``algorithm='broadcast'`` (default via ``auto``): the merged right side
-    — bounded by genome span / gap structure, not input size — is gathered
-    Arrow-side and broadcast as per-contig sorted arrays; left rows
-    fragment in a vectorized ``mapInPandas`` sweep with NO shuffle at all.
-    Size-guarded: a merged right above ``BROADCAST_GUARD_ROWS`` falls back
-    to ``'join'`` — merge(right) → left-outer interval join → per-left-row
-    window walk over the (disjoint, sorted) overlaps emitting the gaps in
-    one explode pass.  ``merge_algorithm='chunked'`` makes the right-side
-    pre-merge shuffle-parallel for huge right tables.
+    ``algorithm='broadcast'`` (default via ``auto``): the right coordinates
+    are collected through Arrow into the shared per-contig sorted-array
+    index (:func:`_collect_index`, the one count_overlaps, coverage and
+    nearest use), merged per contig on the worker; left rows fragment in a
+    vectorized ``mapInArrow`` sweep with NO shuffle at all.  Size-guarded:
+    a right side above ``BROADCAST_GUARD_ROWS`` falls back to ``'join'`` —
+    merge(right) → left-outer interval join → per-left-row window walk over
+    the (disjoint, sorted) overlaps emitting the gaps in one explode pass.
+    ``merge_algorithm='chunked'`` makes the right-side pre-merge
+    shuffle-parallel for huge right tables.  Either way a right row with a
+    NULL contig, start or end removes nothing, a left row with a NULL start
+    or end emits no fragment (a NULL-contig one is kept whole) and every
+    other column comes back exactly as it went in.
     """
     _check_filter_op(filter_op)
     left, (lc, ls, le) = _normalize(left, cols_left)
     right, (rc, rs, re_) = _normalize(right, cols_right)
+    algorithm = _collect_left_algorithm("subtract", algorithm)
+    # guard on the RAW right side (memoized bounded count probe) — merging
+    # happens in the workers' vectorized island reduction, so no Spark
+    # merge DAG runs at all
+    if algorithm == "broadcast" and _fits_broadcast(right):
+        return _subtract_broadcast(left, right, (lc, ls, le), (rc, rs, re_), filter_op)
 
-    if algorithm == "auto":
-        algorithm = "broadcast"
-    if algorithm not in ("broadcast", "join"):
-        raise ValueError(f"subtract algorithm must be auto|broadcast|join, got {algorithm!r}")
-    if algorithm == "broadcast":
-        # guard on the RAW right side (memoized bounded count probe) —
-        # merging happens in the driver's vectorized island reduction, so
-        # no Spark merge DAG runs at all
-        if _fits_broadcast(right):
-            rp = right.select(rc, rs, re_).toPandas()
-            return _subtract_broadcast(
-                left, rp, (lc, ls, le), (rc, rs, re_), filter_op
-            )
-        algorithm = "join"  # over-guard: shuffle-parallel fallback
-
-    m = merge(right.select(rc, rs, re_), cols=(rc, rs, re_), filter_op=filter_op,
+    # NULL rows match nothing: drop them before merge's sweep, where a NULL
+    # start would swallow its neighbours into one island
+    m = merge(right.select(rc, rs, re_).na.drop(), cols=(rc, rs, re_), filter_op=filter_op,
               algorithm=merge_algorithm, chunk_width=chunk_width).select(
         F.col("contig").alias("__mc"), F.col("pos_start").alias("__ms"), F.col("pos_end").alias("__me")
     )
@@ -1760,44 +1770,9 @@ def _nearest_collect_left(
         return None
 
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    def build():
-        # toArrow, not toPandas: pandas turns a nullable long payload column
-        # into float64, which is not exact above 2^53.  Arrow keeps every
-        # Spark type as the probe's mapInArrow writes it back.
-        tbl = left.toArrow()
-        # a NULL contig, start or end never matches (SQL equi-join rules)
-        tbl = tbl.filter(
-            pc.and_(
-                pc.is_valid(tbl.column(lc)),
-                pc.and_(pc.is_valid(tbl.column(ls)), pc.is_valid(tbl.column(le))),
-            )
-        )
-        codes, contigs = pd.factorize(tbl.column(lc).to_numpy(zero_copy_only=False))
-        starts = tbl.column(ls).to_numpy().astype(np.int64, copy=False)
-        ends = tbl.column(le).to_numpy().astype(np.int64, copy=False)
-        # one (contig, start, end)-sorted run per contig; lexsort is stable,
-        # so equal intervals keep left input order (the last tie-break)
-        order = np.lexsort((ends, starts, codes))
-        cuts = np.searchsorted(codes[order], np.arange(len(contigs) + 1))
-        bounds = {c: (int(cuts[j]), int(cuts[j + 1])) for j, c in enumerate(contigs)}
-        payload = {
-            c: tbl.column(c).take(order).combine_chunks()
-            for c in tbl.column_names
-            if c not in (ls, le)
-        }
-        # pmax, end_order and ends_sorted are derived worker-side: shipping
-        # them would only grow every worker's copy of the broadcast
-        index = (bounds, starts[order], ends[order], payload)
-        return right.sparkSession.sparkContext.broadcast(index)
-
-    bidx = _COLLECT_INDEX_MEMO.get_or_probe(
-        lambda: (plan_key(left), lc, ls, le, "nearest"), build, bound=4
-    )
-
+    bidx = _collect_index(left, lc, ls, le)
     shrink = 0 if filter_op == "weak" else 1
     lnames, rnames = list(left.columns), list(right.columns)
     out_fields = [T.StructField(_LEFT + f.name, f.dataType, True) for f in left.schema.fields]
@@ -1808,29 +1783,14 @@ def _nearest_collect_left(
     out_names = out_schema.fieldNames()
 
     def probe(batches):
-        bounds, starts, ends, payload = bidx.value
+        _, starts, ends, payload = bidx.value
         lcols = dict(payload, **{ls: pa.array(starts), le: pa.array(ends)})
-        runs: dict = {}  # per-task cache of each contig's derived structures
-        for batch in batches:
-            contigs = batch.column(rc).to_numpy(zero_copy_only=False)
-            s_col, e_col = batch.column(rs), batch.column(re_)
-            valid = pc.and_(pc.is_valid(s_col), pc.is_valid(e_col)).to_numpy(
-                zero_copy_only=False
-            )
-            qs = pc.fill_null(s_col, 0).to_numpy() + shrink
-            qe = pc.fill_null(e_col, 0).to_numpy() - shrink
+        for batch, qs, qe, _, groups in _probe_batches(bidx, batches, (rc, rs, re_), _k1_index):
             gidx = np.full(batch.num_rows, -1, np.int64)
             dist = np.zeros(batch.num_rows, np.int64)
-            for contig in pd.unique(contigs):
-                b = bounds.get(contig)
-                if b is None:  # contig absent from the left side
-                    continue
-                m = (contigs == contig) & valid
-                run = runs.get(contig)
-                if run is None:
-                    run = runs[contig] = _k1_index(starts[b[0] : b[1]], ends[b[0] : b[1]])
-                idx, d = _nearest_k1(run, qs[m], qe[m], include_overlaps)
-                gidx[m] = np.where(idx >= 0, idx + b[0], -1)
+            for m, run, lo in groups:
+                idx, d = _nearest_k1(run, qs[m] + shrink, qe[m] - shrink, include_overlaps)
+                gidx[m] = np.where(idx >= 0, idx + lo, -1)
                 dist[m] = d
             none = gidx < 0
             take = pa.array(gidx, mask=none)

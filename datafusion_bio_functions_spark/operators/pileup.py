@@ -103,6 +103,36 @@ def _binary_cigar_segments_udf():
     return decode
 
 
+def _explode_segs(contig: str, segsrc: DataFrame) -> DataFrame:
+    """``(contig, s, e)`` rows, one per reference segment of ``segsrc``'s
+    ``__segs`` array (its ``contig`` column renamed ``contig``)."""
+    # explode_outer, not explode: for a plain explode Catalyst infers a
+    # ``size(__segs) > 0 AND __segs IS NOT NULL`` filter below the Generate
+    # and predicate pushdown substitutes the alias into it — the whole
+    # CIGAR-walk expression then runs three times per alignment (twice in
+    # the filter, once in the projection).  The outer form skips that rule;
+    # the cheap null-check on the exploded struct drops segment-free reads.
+    return (
+        segsrc.select(F.col(contig).alias("contig"), F.explode_outer("__segs").alias("__seg"))
+        .filter(F.col("__seg").isNotNull())
+        .select("contig", F.col("__seg.s").alias("s"), F.col("__seg.e").alias("e"))
+    )
+
+
+def _depth_events(segments: DataFrame) -> DataFrame:
+    """Closed ``(contig, s, e)`` segments → ``(contig, pos, delta)`` coverage
+    events: ``+1`` at each start, ``-1`` one past each end."""
+    return segments.select(
+        "contig",
+        F.explode(
+            F.array(
+                F.struct(F.col("s").alias("pos"), F.lit(1).alias("delta")),
+                F.struct((F.col("e") + 1).alias("pos"), F.lit(-1).alias("delta")),
+            )
+        ).alias("ev"),
+    ).select("contig", F.col("ev.pos").alias("pos"), F.col("ev.delta").alias("delta"))
+
+
 def depth(
     alignments: DataFrame,
     zero_based: bool = False,
@@ -168,30 +198,13 @@ def depth(
     )
     start_1b = f"{s} + 1" if zero_based else s
 
-    def _explode_segs(segsrc: DataFrame) -> DataFrame:
-        # explode_outer, not explode: for a plain explode Catalyst infers a
-        # ``size(__segs) > 0 AND __segs IS NOT NULL`` filter below the
-        # Generate and predicate pushdown substitutes the alias into it —
-        # the whole CIGAR-walk expression then runs three times per
-        # alignment (twice in the filter, once in the projection).  The
-        # outer form skips that rule; the cheap null-check on the exploded
-        # struct drops segment-free reads.
-        return (
-            segsrc.select(F.col(c).alias("contig"), F.explode_outer("__segs").alias("__seg"))
-            .filter(F.col("__seg").isNotNull())
-            .select(
-                "contig",
-                F.col("__seg.s").alias("s"),
-                F.col("__seg.e").alias("e"),
-            )
-        )
-
     # common intermediate: one row per M/=/X reference segment, closed
     # coordinates ``(contig, s, e)`` — every algorithm derives from it
     cigar_type = dict(df.dtypes).get(cg, "string")
     if cigar_type == "binary":
         one_based = (F.col(s) + 1) if zero_based else F.col(s)
         segments = _explode_segs(
+            c,
             df.withColumn(
                 "__segs",
                 _binary_cigar_segments_udf()(one_based.cast("long"), F.col(cg)),
@@ -225,9 +238,10 @@ def depth(
         else:
             segments = fast_segments.unionByName(
                 _explode_segs(
+                    c,
                     df.filter(~simple).withColumn(
                         "__segs", F.expr(_cigar_segments_sql(start_1b, cg))
-                    )
+                    ),
                 )
             )
 
@@ -242,15 +256,7 @@ def depth(
             blocks, zero_based, per_base, contig_lengths
         )
 
-    events = segments.select(
-        "contig",
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("pos"), F.lit(1).alias("delta")),
-                F.struct((F.col("e") + 1).alias("pos"), F.lit(-1).alias("delta")),
-            )
-        ).alias("ev"),
-    ).select("contig", F.col("ev.pos").alias("pos"), F.col("ev.delta").alias("delta"))
+    events = _depth_events(segments)
 
     # partial aggregation is map-side combined by Catalyst; the running sum
     # then sees one row per breakpoint per contig

@@ -126,7 +126,8 @@ def _sql_esc(x: str) -> str:
 
 
 def _sql_variant_class(ref: str = "ref", alt: str = "alt") -> str:
-    """SQL twin of :func:`variant_class_col`."""
+    """SQL text of VEP's ``VARIANT_CLASS`` over the ``ref``/``alt`` columns
+    (mirrors ``functions.consequence.variant_class``)."""
     r = f"(case when {ref} in ('-') then '' else coalesce({ref}, '') end)"
     a = f"(case when {alt} in ('-') then '' else coalesce({alt}, '') end)"
     return (
@@ -939,21 +940,6 @@ def resolve_csq_mode(csq_mode: str, transcript_selection) -> str:
         if sm != "ensembl":
             return sm
     return csq_mode
-
-
-def variant_class_col(ref, alt) -> "F.Column":
-    """SQL-expressible VEP ``VARIANT_CLASS`` (mirrors
-    ``functions.consequence.variant_class``)."""
-    r = F.when(ref.isin("-"), F.lit("")).otherwise(F.coalesce(ref, F.lit("")))
-    a = F.when(alt.isin("-"), F.lit("")).otherwise(F.coalesce(alt, F.lit("")))
-    rl, al = F.length(r), F.length(a)
-    return (
-        F.when((rl == 1) & (al == 1), "SNV")
-        .when((rl == 0) | ((al > rl) & a.startswith(r)), "insertion")
-        .when((al == 0) | ((rl > al) & r.startswith(a)), "deletion")
-        .when(rl == al, "substitution")
-        .otherwise("indel")
-    )
 
 
 def annotate_vep(
@@ -3005,7 +2991,7 @@ def _annotate_codon(
         _ev_typed.alias("Existing_variation"),
         F.col("__best.distance").alias("DISTANCE"),
         F.col("__best.strand").alias("STRAND"),
-        variant_class_col(F.col("ref"), F.col("alt")).alias("VARIANT_CLASS"),
+        F.expr(_sql_variant_class()).alias("VARIANT_CLASS"),
         F.coalesce(F.col("__best.meta")["CANONICAL"], _cache("canonical")).alias("CANONICAL"),
         F.lit(None).cast("long").alias("HGVS_OFFSET"),
         # transcript-level columns needing unmodeled external sources

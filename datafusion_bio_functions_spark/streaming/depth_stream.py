@@ -26,7 +26,7 @@ from typing import Iterable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.pileup import _cigar_segments_sql
+from ..operators.pileup import _cigar_segments_sql, _depth_events, _explode_segs
 
 
 def streaming_depth_events(alignments: DataFrame, zero_based: bool = False) -> DataFrame:
@@ -39,23 +39,7 @@ def streaming_depth_events(alignments: DataFrame, zero_based: bool = False) -> D
         F.col("chrom").isNotNull() & F.col("start").isNotNull()
     )
     seg = alignments.withColumn("__segs", F.expr(_cigar_segments_sql(start_1b, "cigar")))
-    return (
-        # explode_outer + null filter: a plain explode makes Catalyst infer
-        # a size()>0 filter that duplicates the CIGAR-walk expression (see
-        # operators/pileup.py — same fix, batch twin)
-        seg.select(F.col("chrom").alias("contig"), F.explode_outer("__segs").alias("__seg"))
-        .filter(F.col("__seg").isNotNull())
-        .select(
-            "contig",
-            F.explode(
-                F.array(
-                    F.struct(F.col("__seg.s").alias("pos"), F.lit(1).alias("delta")),
-                    F.struct((F.col("__seg.e") + 1).alias("pos"), F.lit(-1).alias("delta")),
-                )
-            ).alias("ev"),
-        )
-        .select("contig", F.col("ev.pos").alias("pos"), F.col("ev.delta").alias("delta"))
-    )
+    return _depth_events(_explode_segs("chrom", seg))
 
 
 def streaming_event_counts(

@@ -6,11 +6,12 @@ extension for the continuously-ingesting case: a stream of intervals
 (alignments landing from a sequencer, live variant calls) annotated
 against a STATIC interval table (genes, regulatory features, targets).
 
-Design — the same binned equi-join as the batch ``interval_join`` (
-``operators/intervals.py``), restricted to stateless operations so it
-runs under Structured Streaming without watermarks or state stores:
+Design — it IS the batch binned ``interval_join`` (
+``operators/intervals.py``) with the static side hinted for broadcast.
+That plan uses only stateless operations, so it runs under Structured
+Streaming without watermarks or state stores:
 
-* the static side is binned once and **broadcast** (stream-static join);
+* the static side is binned and **broadcast** (stream-static join);
 * the stream side bins via ``explode(sequence(...))`` — stateless,
   per-row;
 * bin replication de-duplicates with the canonical-bin rule (keep a pair
@@ -33,15 +34,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.intervals import (
-    _LEFT,
-    _RIGHT,
-    _auto_bin_width,
-    _check_filter_op,
-    _normalize,
-    _overlap_cond,
-    _prefixed,
-)
+from ..operators.intervals import _auto_bin_width, _check_filter_op, _normalize, interval_join
 
 
 def streaming_overlap(
@@ -73,51 +66,14 @@ def streaming_overlap(
             "the annotations side must be a static (batch) frame — "
             "stream-stream interval joins need watermarks; see interval_join"
         )
-    left, (lc0, ls0, le0) = _normalize(stream, cols_left)
-    right, (rc0, rs0, re0) = _normalize(annotations, cols_right)
-    l = _prefixed(left, _LEFT)
-    r = _prefixed(right, _RIGHT)
-    lc, ls, le = _LEFT + lc0, _LEFT + ls0, _LEFT + le0
-    rc, rs, re_ = _RIGHT + rc0, _RIGHT + rs0, _RIGHT + re0
-    cond = _overlap_cond(lc, ls, le, rc, rs, re_, filter_op)
-
     if bin_width is None:
         # sample the STATIC side for the width heuristic (twice — the
         # helper expects two frames; the stream side is unprobeable)
-        bin_width = _auto_bin_width(r, rs, re_, r, rs, re_)
-
-    def binned(df: DataFrame, s: str, e: str, bcol: str) -> DataFrame:
-        return df.withColumn(
-            bcol,
-            F.explode(
-                F.sequence(
-                    (F.col(s) / bin_width).cast("long"),
-                    (F.col(e) / bin_width).cast("long"),
-                )
-            ),
-        )
-
-    bin_eq = (F.col(lc) == F.col(rc)) & (F.col("__lbin") == F.col("__rbin"))
-    dedupe = (F.greatest(F.col(ls), F.col(rs)) / bin_width).cast("long") == F.col(
-        "__lbin"
+        right, (_, rs, re_) = _normalize(annotations, cols_right)
+        bin_width = _auto_bin_width(right, rs, re_, right, rs, re_)
+    # the broadcast hint rides through the projections, filters and bin
+    # explode to every join the binned plan builds
+    return interval_join(
+        stream, F.broadcast(annotations), cols_left, cols_right, filter_op,
+        "inner", "binned", bin_width, long_interval_factor,
     )
-    exact = cond & dedupe
-
-    if long_interval_factor:
-        limit = bin_width * long_interval_factor
-        l_short = l.filter(F.col(le) - F.col(ls) <= limit)
-        l_long = l.filter(F.col(le) - F.col(ls) > limit)
-        r_short = r.filter(F.col(re_) - F.col(rs) <= limit)
-        r_long = r.filter(F.col(re_) - F.col(rs) > limit)
-        lb = binned(l_short, ls, le, "__lbin")
-        rb = F.broadcast(binned(r_short, rs, re_, "__rbin"))
-        short = lb.join(rb, bin_eq, "inner").filter(exact).drop("__lbin", "__rbin")
-        # rare long rows: plain stateless broadcast range joins
-        long_pairs = l_long.join(F.broadcast(r), cond, "inner").unionByName(
-            l_short.join(F.broadcast(r_long), cond, "inner")
-        )
-        return short.unionByName(long_pairs)
-
-    lb = binned(l, ls, le, "__lbin")
-    rb = F.broadcast(binned(r, rs, re_, "__rbin"))
-    return lb.join(rb, bin_eq, "inner").filter(exact).drop("__lbin", "__rbin")

@@ -17,6 +17,15 @@ import datafusion_bio_functions_spark as bio
 from datafusion_bio_functions_spark.plans import oracle as osql
 from tests.conftest import COLS, assert_frames_match
 
+#: a long above 2^53: float64 (pandas' nullable-long form) cannot hold it
+BIG = 2**53 + 1
+PAYLOAD = "contig string, pos_start long, pos_end long, pay long"
+
+
+def _canon(df):
+    """Collected rows in a NULL-safe canonical order."""
+    return sorted(map(tuple, df.collect()), key=repr)
+
 
 @pytest.mark.parametrize("algorithm", ["binned", "sql", "broadcast"])
 @pytest.mark.parametrize("filter_op", ["weak", "strict"])
@@ -116,19 +125,44 @@ def test_count_cover_broadcast_point_boundaries(spark, filter_op):
     the strict-mode searchsorted subtraction identity wrongly subtracts
     point intervals at exactly the query position unless corrected (found
     by the r4 gate on count_overlaps_strict) — broadcast must equal the
-    join plan row-for-row on this adversarial geometry."""
+    join plan row-for-row on this adversarial geometry.  NULL contigs,
+    starts and ends on either side never match, and a long payload above
+    2^53 comes back exact."""
     left = spark.createDataFrame(
-        [("chr1", 10, 10), ("chr1", 10, 10), ("chr1", 5, 15), ("chr1", 10, 20),
-         ("chr1", 1, 9), ("chr1", 11, 11), ("chr2", 3, 3)], COLS)
+        [("chr1", 10, 10, 1), ("chr1", 10, 10, None), ("chr1", 5, 15, BIG),
+         ("chr1", 10, 20, 2), ("chr1", 1, 9, 3), ("chr1", 11, 11, 4), ("chr2", 3, 3, 5),
+         ("chr1", None, 50, 6), ("chr1", 40, None, 7), (None, 10, 20, 8)], PAYLOAD)
     right = spark.createDataFrame(
-        [("chr1", 10, 10), ("chr1", 11, 11), ("chr1", 9, 11), ("chr1", 2, 2),
-         ("chr1", 10, 11), ("chr2", 3, 3), ("chr3", 1, 5)], COLS)
+        [("chr1", 10, 10, BIG), ("chr1", 11, 11, None), ("chr1", 9, 11, 1),
+         ("chr1", 2, 2, 2), ("chr1", 10, 11, 3), ("chr2", 3, 3, 4), ("chr3", 1, 5, 5),
+         ("chr1", 30, 45, 6), ("chr1", None, 12, 7), ("chr1", 12, None, BIG),
+         (None, 10, 20, 8)], PAYLOAD)
     for op in (bio.count_overlaps, bio.coverage):
-        a = sorted(map(tuple, op(left, right, filter_op=filter_op,
-                                 algorithm="broadcast").collect()))
-        b = sorted(map(tuple, op(left, right, filter_op=filter_op,
-                                 algorithm="join").collect()))
+        a = _canon(op(left, right, filter_op=filter_op, algorithm="broadcast"))
+        b = _canon(op(left, right, filter_op=filter_op, algorithm="join"))
         assert a == b, f"{op.__name__} broadcast != join under {filter_op}"
+        assert (None, 10, 20, 8, 0) in a and ("chr1", 30, 45, 6, 0) in a
+        assert ("chr1", 10, 10, BIG) in [t[:4] for t in a]
+
+
+def test_count_and_coverage_share_one_index(spark, reads, targets):
+    """count_overlaps and coverage over one left frame collect and broadcast
+    one CollectLeft index between them."""
+    from datafusion_bio_functions_spark.operators import intervals as iv
+
+    iv.clear_probe_caches()
+    bio.count_overlaps(reads, targets)
+    bio.coverage(reads, targets, filter_op="strict")
+    assert len(iv._COLLECT_INDEX_MEMO) == 1
+
+
+def test_collect_left_operators_reject_other_algorithms(reads, targets):
+    for op in (bio.count_overlaps, bio.coverage, bio.subtract):
+        for algorithm in ("sql", "binned"):
+            with pytest.raises(ValueError, match="algorithm must be auto|broadcast|join"):
+                op(reads, targets, algorithm=algorithm)
+    with pytest.raises(TypeError):
+        bio.subtract(reads, targets, bin_width=64)
 
 
 def test_coverage_merges_left_first(spark):
@@ -237,19 +271,24 @@ def test_subtract_broadcast_matches_join(spark, filter_op):
     """The CollectRight sweep must equal the join+window plan row-for-row:
     duplicate left rows fragment independently, extra columns ride along,
     degenerate (ls >= le) rows emit nothing, touching rights stay split
-    under strict merge, and one-sided contigs pass through."""
+    under strict merge, and one-sided contigs pass through.  NULL right
+    rows remove nothing, NULL left coordinates emit nothing, a NULL-contig
+    left row passes through, and a long payload above 2^53 comes back
+    exact."""
     left = spark.createDataFrame(
-        [("chr1", 100, 400, "a"), ("chr1", 100, 400, "a"), ("chr1", 250, 250, "pt"),
-         ("chr1", 500, 400, "inverted"), ("chr2", 1, 50, "b"), ("chr3", 5, 9, "c")],
-        "contig string, pos_start long, pos_end long, tag string")
+        [("chr1", 100, 400, "a", BIG), ("chr1", 100, 400, "a", None),
+         ("chr1", 250, 250, "pt", 1), ("chr1", 500, 400, "inverted", 2),
+         ("chr2", 1, 50, "b", 3), ("chr3", 5, 9, "c", 4), ("chr1", 700, 720, "d", BIG),
+         ("chr1", None, 5, "ns", 5), ("chr1", 5, None, "ne", 6), (None, 10, 20, "nc", BIG)],
+        "contig string, pos_start long, pos_end long, tag string, pay long")
     right = spark.createDataFrame(
-        [("chr1", 200, 300), ("chr1", 300, 350), ("chr1", 380, 600),
-         ("chr2", 10, 20), ("chr2", 30, 30)], COLS)
-    a = sorted(map(tuple, bio.subtract(left, right, filter_op=filter_op,
-                                       algorithm="broadcast").collect()))
-    b = sorted(map(tuple, bio.subtract(left, right, filter_op=filter_op,
-                                       algorithm="join").collect()))
+        [("chr1", 200, 300, 1), ("chr1", 300, 350, 2), ("chr1", 380, 600, None),
+         ("chr2", 10, 20, BIG), ("chr2", 30, 30, 3),
+         ("chr1", None, 800, 4), ("chr1", 650, None, 5), (None, 1, 900, 6)], PAYLOAD)
+    a = _canon(bio.subtract(left, right, filter_op=filter_op, algorithm="broadcast"))
+    b = _canon(bio.subtract(left, right, filter_op=filter_op, algorithm="join"))
     assert a == b
+    assert ("chr1", 700, 720, "d", BIG) in a and (None, 10, 20, "nc", BIG) in a
 
 
 def test_subtract_boundary_weak_vs_strict(spark):
@@ -548,14 +587,14 @@ def test_broadcast_guard_falls_back_to_join(spark, reads, targets, monkeypatch):
     from pyspark.sql import DataFrame as SparkDF
 
     gathers = []
-    real_topandas = SparkDF.toPandas
+    real_toarrow = SparkDF.toArrow
     monkeypatch.setattr(
-        SparkDF, "toPandas", lambda self: gathers.append(1) or real_topandas(self)
+        SparkDF, "toArrow", lambda self: gathers.append(1) or real_toarrow(self)
     )
     got_cnt = bio.count_overlaps(reads, targets, algorithm="broadcast")
     got_cov = bio.coverage(reads, targets, algorithm="broadcast")
     assert gathers == []  # over-guard: no driver gather during planning
-    monkeypatch.setattr(SparkDF, "toPandas", real_topandas)
+    monkeypatch.setattr(SparkDF, "toArrow", real_toarrow)
     assert canon(got_cnt) == want_cnt
     assert canon(got_cov) == want_cov
 

@@ -156,6 +156,8 @@ def test_clear_probe_caches_drops_nearest_index(frames):
     l, r = frames
     iv.clear_probe_caches()
     bio.nearest(l, r)
-    assert [key for key in iv._COLLECT_INDEX_MEMO if key[-1] == "nearest"]
+    # the index is keyed by the (position-normalized) left frame's plan
+    lkey = iv.plan_key(iv._normalize(l, None)[0])
+    assert [key for key in iv._COLLECT_INDEX_MEMO if key[0] == lkey]
     iv.clear_probe_caches()
     assert not iv._COLLECT_INDEX_MEMO

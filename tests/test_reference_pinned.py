@@ -191,11 +191,18 @@ def test_coverage_udtf_expected_values(spark):
 
 
 def test_coverage_broadcast_matches_join(spark):
-    """The CollectLeft kernel computes the identical contribution."""
-    l, r = _df(spark, RANGES_READS), _df(spark, RANGES_TARGETS)
-    a = rows(bio.coverage(l, r))
-    b = rows(bio.coverage(l, r, algorithm="broadcast"))
+    """The CollectLeft kernel computes the identical contribution — also
+    with NULL contigs, starts and ends on both sides (they never match) and
+    a long payload above 2^53 (it comes back exact)."""
+    big = 2**53 + 1
+    nulls = [("chr1", None, 16000), ("chr1", 400, None), (None, 100, 700)]
+    schema = "contig string, pos_start long, pos_end long, pay long"
+    l = spark.createDataFrame([t + (i,) for i, t in enumerate(RANGES_READS + nulls)], schema)
+    r = spark.createDataFrame([t + (big,) for t in RANGES_TARGETS + nulls], schema)
+    a = sorted(map(tuple, bio.coverage(l, r).collect()), key=repr)
+    b = sorted(map(tuple, bio.coverage(l, r, algorithm="join").collect()), key=repr)
     assert a == b
+    assert {t[3] for t in a} == {big}
 
 
 # ── merge / cluster ────────────────────────────────────────────────────────

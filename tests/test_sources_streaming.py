@@ -427,6 +427,11 @@ def test_streaming_overlap_matches_batch_join(spark, tmp_path):
     q.awaitTermination(120)
     got = sorted(map(tuple, spark.sql("SELECT * FROM ovl_stream").collect()))
     assert got == want and len(got) >= 10
+    # the batch binned join with the annotation side broadcast to all three
+    # joins: no shuffle Exchange anywhere in the micro-batch plan
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange")
     # strict twin agrees with the batch strict join
     want_s = sorted(
         map(tuple, interval_join(reads, anno, filter_op="strict", bin_width=64).collect())

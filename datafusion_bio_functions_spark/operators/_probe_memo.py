@@ -5,9 +5,10 @@ CollectLeft index, exact collapse, depth's alignment probe, ...) decides
 from a bounded eager probe and memoizes the verdict per input plan, so
 repeated builds over the same frames skip the job.  The policy lives here
 once: the key is :func:`plan_key`, a key that cannot be computed means
-"probe, do not memoize", each memo clears at its size bound (driver-side
-growth stays bounded), and every memo registers itself so
-:func:`clear_probe_caches` cannot miss one.
+"probe, do not memoize", each memo evicts its least recently used entry at
+its size bound (driver-side growth stays bounded, and a frame hit on every
+build outlives a stream of one-off inputs), and every memo registers itself
+so :func:`clear_probe_caches` cannot miss one.
 """
 
 from __future__ import annotations
@@ -51,18 +52,20 @@ class ProbeMemo(dict):
     ) -> Any:
         """The memoized verdict for ``key_fn()``, else ``probe()`` stored
         under it.  A ``key_fn`` that raises (``semanticHash`` is unavailable
-        on connect-mode frames) runs the probe with no memo.  At ``bound``
-        entries the memo clears before the new one is stored; memos whose
-        entries are large (broadcast indexes) pass a small bound."""
+        on connect-mode frames) runs the probe with no memo.  A hit becomes
+        the most recently used entry; at ``bound`` entries the least
+        recently used one is evicted before the new one is stored.  Memos
+        whose entries are large (broadcast indexes) pass a small bound."""
         try:
             key = key_fn()
         except Exception:
             return probe()
         if key in self:
-            return self[key]
+            value = self[key] = self.pop(key)  # re-insert: dicts keep insertion order
+            return value
         value = probe()
         if len(self) >= bound:
-            self.clear()
+            del self[next(iter(self))]  # the first key is the least recently used
         self[key] = value
         return value
 

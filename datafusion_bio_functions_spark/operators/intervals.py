@@ -18,15 +18,17 @@ bio-function-ranges/src/``) in idiomatic PySpark:
   left sides, else cogrouped Arrow batches; numpy searchsorted either way,
   same binary-search math).
 
-count_overlaps, coverage, subtract and k=1 nearest share ONE CollectLeft
-index (:func:`_collect_index`, the reference's collected build side,
-``count_overlaps.rs:122-141`` / ``nearest_index.rs:24-120``): the build side
+count_overlaps, coverage, subtract, k=1 nearest and the inner overlap join
+share ONE CollectLeft index (:func:`_collect_index`, the reference's
+collected build side, ``count_overlaps.rs:122-141`` /
+``nearest_index.rs:24-120``, ``interval_join.rs:394-413``): the build side
 gathered through Arrow, NULL rows dropped, per-contig (start, end)-sorted
 int64 runs plus the other columns, broadcast once per input.  Each operator
 derives its own per-contig structure from a run on the worker and answers
-every probe batch in one ``mapInArrow`` (:func:`_probe_batches`).  Arrow end
-to end, so a NULL coordinate never matches — the join paths' rule — and
-a long column comes back exact, as it does from the join paths.
+every probe batch in one ``mapInArrow`` or Arrow UDF
+(:func:`_probe_batches`).  Arrow end to end, so a NULL coordinate never
+matches — the join paths' rule — and a long column comes back exact, as it
+does from the join paths.
 
 Coordinate semantics (reference ``filter_op.rs:1-10``, applied at
 ``interval_tree.rs:184-188``): intervals are 1-based **closed** by default
@@ -36,7 +38,9 @@ reference uses for 0-based half-open data.
 
 Scale notes (local[32] tests, 1000-executor target):
 
-* The join strategies: ``binned`` explodes intervals onto fixed-width genome
+* The join strategies: ``auto`` answers an inner join from the CollectLeft
+  index when one side fits the broadcast bounds, else runs ``binned``.
+  ``binned`` explodes intervals onto fixed-width genome
   bins and equi-joins on ``(contig, bin)`` — fully shuffle-parallel, no
   per-contig hotspot, survives 100 TB.  ``sql`` emits the plain range-join
   condition (Catalyst picks SMJ/BHJ on the contig equi-key); correct always,
@@ -52,7 +56,7 @@ Scale notes (local[32] tests, 1000-executor target):
 from __future__ import annotations
 
 import sys
-from typing import Sequence
+from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -108,7 +112,13 @@ def _normalize(df: DataFrame, cols: Sequence[str] | None) -> tuple[DataFrame, tu
     for col in (c, s, e):
         if col not in df.columns:
             raise ValueError(f"column {col!r} not found in {df.columns}")
-    df = df.withColumn(s, F.col(s).cast(T.LongType())).withColumn(e, F.col(e).cast(T.LongType()))
+    casts = {
+        x: F.col(x).cast(T.LongType())
+        for x in (s, e)
+        if not isinstance(df.schema[x].dataType, T.LongType)
+    }
+    if casts:  # a no-op projection would still cost an analysis round trip
+        df = df.withColumns(casts)
     return df, (c, s, e)
 
 
@@ -216,8 +226,30 @@ def interval_join(
     218-221``); we expose the symmetric left_* forms since DataFrame callers
     can swap arguments freely.
 
+    ``algorithm='auto'`` (default) picks, in order:
+
+    1. the CollectLeft index, for ``how='inner'`` with no ``bin_width``
+       argument and neither ``spark.bio.intervalJoin.algorithm`` nor
+       ``spark.bio.intervalJoin.binWidth`` set, when the side with the
+       smaller plan size estimate is under both broadcast bounds (the
+       estimate within ``spark.sql.autoBroadcastJoinThreshold``, its row
+       count within ``BROADCAST_GUARD_ROWS``; a streaming side is never
+       indexed).  That side is collected once through Arrow into the
+       shared per-contig (start, end)-sorted index (:func:`_collect_index`,
+       the one count_overlaps, coverage, subtract and nearest use) and the
+       other side streams past it through one Arrow UDF — the reference's
+       ``IntervalJoinExec`` shape, with no exchange, and a projection after
+       the join still prunes the streamed side's scan.  On the worker each
+       sorted run splits into short intervals (width at most
+       ``long_interval_factor`` times the run's median width) and long
+       ones; each part answers a probe from the window
+       ``[searchsorted(prefix-max end, qs), searchsorted(starts, qe))``
+       filtered on the end, so the short part's window holds little more
+       than the true matches;
+    2. otherwise ``binned``.
+
     ``algorithm``:
-      * ``binned`` (default via ``auto``) — explode each interval onto
+      * ``binned`` — explode each interval onto
         fixed-width genome bins, equi-join on ``(contig, bin)``, keep exact
         overlaps, and de-duplicate *without a distinct* by keeping only the
         pair whose overlap starts in the current bin.  Shuffle-parallel on
@@ -233,16 +265,13 @@ def interval_join(
       * ``sql`` — emit the raw range-join condition and let Catalyst plan it
         (SMJ/BHJ keyed on contig + range post-filter).
       * ``broadcast`` — broadcast the left side (reference CollectLeft).
+
+    On every path a row with a NULL contig, start or end matches nothing,
+    and every other column comes back exactly as it went in.
     """
     _check_filter_op(filter_op)
     left, (lc0, ls0, le0) = _normalize(left, cols_left)
     right, (rc0, rs0, re0) = _normalize(right, cols_right)
-    l = _prefixed(left, _LEFT)
-    r = _prefixed(right, _RIGHT)
-    lc, ls, le = _LEFT + lc0, _LEFT + ls0, _LEFT + le0
-    rc, rs, re_ = _RIGHT + rc0, _RIGHT + rs0, _RIGHT + re0
-    cond = _overlap_cond(lc, ls, le, rc, rs, re_, filter_op)
-
     if algorithm == "auto":
         # session-level override, mirror of the reference's
         # ``SET bio.interval_join_algorithm`` (session_context.rs:48-70)
@@ -250,6 +279,13 @@ def interval_join(
 
         conf = left.sparkSession.conf
         configured = conf.get(INTERVAL_JOIN_ALGORITHM_KEY, None)
+        bw = conf.get(INTERVAL_JOIN_BIN_WIDTH_KEY, None)
+        if how == "inner" and bin_width is None and not bw and configured in (None, "", "auto"):
+            out = _overlap_collect_left(
+                left, right, (lc0, ls0, le0), (rc0, rs0, re0), filter_op, long_interval_factor
+            )
+            if out is not None:
+                return out
         if configured and configured.lower() in ("nearest", "coitreesnearest"):
             # the nearest-join knob changes the semantics of *SQL range
             # joins* only (see plans/range_join.py); for the overlap
@@ -265,16 +301,18 @@ def interval_join(
             algorithm = configured
         else:
             algorithm = "binned"
-        bw = conf.get(INTERVAL_JOIN_BIN_WIDTH_KEY, None)
         if bw:
             bin_width = int(bw)
 
+    l = _prefixed(left, _LEFT)
+    r = _prefixed(right, _RIGHT)
+    lc, ls, le = _LEFT + lc0, _LEFT + ls0, _LEFT + le0
+    rc, rs, re_ = _RIGHT + rc0, _RIGHT + rs0, _RIGHT + re0
+    cond = _overlap_cond(lc, ls, le, rc, rs, re_, filter_op)
+
     if algorithm in ("sql", "broadcast"):
         lj = F.broadcast(l) if algorithm == "broadcast" else l
-        joined = lj.join(r, cond, "inner" if how == "inner" else how)
-        if how in ("left_semi", "left_anti"):
-            return joined  # only left_* columns survive semi/anti
-        return joined
+        return lj.join(r, cond, how)  # semi/anti keep only the left_* columns
 
     if algorithm != "binned":
         raise ValueError(f"unknown interval join algorithm {algorithm!r}")
@@ -367,6 +405,11 @@ def overlap(
     ``table_function.rs:125-129``).  Row-level: value-duplicate left rows
     are preserved (test_overlap_udtf_left_output_preserves_left_rows),
     never collapsed by a value distinct.
+
+    ``algorithm='auto'`` follows :func:`interval_join`'s order: the
+    ``join`` and ``left_all`` outputs are inner joins and answer from the
+    CollectLeft index when a side fits the broadcast bounds (else the
+    binned plan); the ``left`` output is a left-semi join and runs binned.
     """
     if output == "join":
         return interval_join(
@@ -533,16 +576,40 @@ BROADCAST_GUARD_ROWS = 8_000_000
 _FITS_BROADCAST_MEMO = ProbeMemo()
 
 
-def _fits_broadcast(left: DataFrame, guard: int = BROADCAST_GUARD_ROWS) -> bool:
-    """True when ``left`` is provably at or under ``guard`` rows.  Bounded
-    probe — ``limit(guard+1)`` — so the check never scans a 100 TB table; an
+def _fits_broadcast(left: DataFrame, guard: int | None = None) -> bool:
+    """True when ``left`` is provably at or under ``guard`` rows (default
+    ``BROADCAST_GUARD_ROWS``, read at call time).  Bounded probe —
+    ``limit(guard+1)`` — so the check never scans a 100 TB table; an
     over-guard side makes the caller fall back to the shuffle-parallel join
     plan instead of collecting data-scale rows onto the driver (VERDICT r2
     scale-killer #4).  Memoized per semantic plan so repeated probes over
     the same frame skip the job."""
+    if guard is None:
+        guard = BROADCAST_GUARD_ROWS
     return _FITS_BROADCAST_MEMO.get_or_probe(
         lambda: (plan_key(left), guard), lambda: left.limit(guard + 1).count() <= guard
     )
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes; runs no job.  An
+    unknown size (a frame built from a Python list) is Long.MaxValue."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _collect_left_fits(df: DataFrame, size: int | None = None) -> bool:
+    """The two gates of every CollectLeft path that collects a whole frame
+    (nearest, the inner overlap join).  Spark's own broadcast rule first:
+    the size estimate (``size``, else :func:`_plan_bytes`) within
+    ``spark.sql.autoBroadcastJoinThreshold`` — no job, and it bounds the
+    payload columns, which are collected too; then :func:`_fits_broadcast`.
+    A streaming frame cannot be collected and never fits."""
+    if df.isStreaming:
+        return False
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if size is None:
+        size = _plan_bytes(df)
+    return 0 <= size <= threshold and _fits_broadcast(df)
 
 
 def _count_or_cover_broadcast(
@@ -685,12 +752,13 @@ def _collect_index(df: DataFrame, c: str, s: str, e: str):
 
 def _probe_batches(bidx, batches, rcols: tuple[str, str, str], derive):
     """The probe loop every :func:`_collect_index` user runs in its
-    ``mapInArrow``.  Yields ``(batch, starts, ends, valid, groups)`` per
-    Arrow batch: the probe coordinates as int64 (NULL read as 0), ``valid``
-    where both are non-NULL, and one ``(mask, run, lo)`` per contig the
-    index holds — the valid batch rows on it, ``derive(starts, ends)`` over
-    its sorted run (computed once per task) and the run's offset into the
-    index.  A NULL or absent contig is in no group, so it matches nothing."""
+    ``mapInArrow`` or Arrow UDF.  Yields ``(batch, starts, ends, valid,
+    groups)`` per Arrow batch: the probe coordinates as int64 (NULL read as
+    0), ``valid`` where both are non-NULL, and one ``(mask, run, lo)`` per
+    contig the index holds — the valid batch rows on it, ``derive(starts,
+    ends)`` over its sorted run (computed once per task) and the run's
+    offset into the index.  A NULL or absent contig is in no group, so it
+    matches nothing."""
     import pandas as pd
     import pyarrow.compute as pc
 
@@ -702,16 +770,148 @@ def _probe_batches(bidx, batches, rcols: tuple[str, str, str], derive):
         s_col, e_col = batch.column(rs), batch.column(re_)
         valid = pc.and_(pc.is_valid(s_col), pc.is_valid(e_col)).to_numpy(zero_copy_only=False)
         groups = []
-        for contig in pd.unique(contigs):
+        codes, uniques = pd.factorize(contigs)  # NULL contigs get -1
+        for j, contig in enumerate(uniques):
             b = bounds.get(contig)
             if b is None:
                 continue
             run = runs.get(contig)
             if run is None:
                 run = runs[contig] = derive(starts[b[0] : b[1]], ends[b[0] : b[1]])
-            groups.append(((contigs == contig) & valid, run, b[0]))
+            groups.append(((codes == j) & valid, run, b[0]))
         qs = pc.fill_null(s_col, 0).to_numpy()
         yield batch, qs, pc.fill_null(e_col, 0).to_numpy(), valid, groups
+
+
+#: window entries (candidate pairs before the end filter) one overlap-join
+#: probe chunk expands at once; bounds a Python worker's scratch arrays
+_OVERLAP_CHUNK_PAIRS = 1 << 20
+
+
+def _overlap_collect_left(
+    left: DataFrame,
+    right: DataFrame,
+    lcols: tuple[str, str, str],
+    rcols: tuple[str, str, str],
+    filter_op: str,
+    long_interval_factor: int | None,
+) -> DataFrame | None:
+    """CollectLeft path of the inner :func:`interval_join` — see its
+    docstring.  Indexes the side with the smaller size estimate; returns
+    None when that side is over a broadcast bound (or the contig columns
+    differ in type), and the caller takes the binned plan.
+
+    The other side streams past the index through one scalar-iterator Arrow
+    UDF over its (contig, start, end) columns that returns, per probe row,
+    the list of its matching indexed rows; ``inline`` flattens the lists.
+    Unlike a ``mapInArrow`` over whole rows, the rest of the probe row stays
+    in the JVM, so a projection after the join still prunes the probe
+    side's scan.  Output is ``left_*`` then ``right_*`` whichever side is
+    indexed."""
+    if left.schema[lcols[0]].dataType != right.schema[rcols[0]].dataType:
+        return None  # Spark would coerce; the index matches values exactly
+    lsize, rsize = (I64_MAX if d.isStreaming else _plan_bytes(d) for d in (left, right))
+    index_left = lsize <= rsize
+    idf, icols, pdf, pcols = (
+        (left, lcols, right, rcols) if index_left else (right, rcols, left, lcols)
+    )
+    if not _collect_left_fits(idf, min(lsize, rsize)):
+        return None
+
+    import numpy as np
+    import pyarrow as pa
+
+    bidx = _collect_index(idf, *icols)
+    strict = filter_op != "weak"
+    factor = long_interval_factor or 0
+    ipre, ppre = (_LEFT, _RIGHT) if index_left else (_RIGHT, _LEFT)
+    hit_fields = [T.StructField(ipre + f.name, f.dataType, f.nullable) for f in idf.schema.fields]
+    hit_names, nullable = [f.name for f in hit_fields], [f.nullable for f in hit_fields]
+    inames = list(idf.columns)
+
+    def hits(arrays):
+        _, starts, ends, payload = bidx.value
+        by_name = dict(payload, **{icols[1]: pa.array(starts), icols[2]: pa.array(ends)})
+        icol = [by_name[n] for n in inames]
+        batches = (pa.RecordBatch.from_arrays(list(a), names=list(pcols)) for a in arrays)
+        for batch, qs, qe, _, groups in _probe_batches(
+            bidx, batches, pcols, lambda s, e: _overlap_split(s, e, factor)
+        ):
+            prow, irow = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+            for m, parts, lo in groups:
+                rows = np.flatnonzero(m)
+                for part in parts:
+                    for p, i in _overlap_pairs(part, qs[rows], qe[rows], strict):
+                        prow.append(rows[p])
+                        irow.append(i + lo)
+            prow, irow = np.concatenate(prow), np.concatenate(irow)
+            order = np.argsort(prow, kind="stable")
+            offsets = np.zeros(batch.num_rows + 1, np.int32)
+            np.cumsum(np.bincount(prow, minlength=batch.num_rows), out=offsets[1:])
+            take = pa.array(irow[order])
+            cols = [c.take(take) for c in icol]
+            fields = [pa.field(f, c.type, n) for f, c, n in zip(hit_names, cols, nullable)]
+            matched = pa.StructArray.from_arrays(cols, fields=fields)
+            yield pa.ListArray.from_arrays(pa.array(offsets), matched)
+
+    # real objects, not the strings this module's annotations would be:
+    # Spark reads the hints to pick the scalar-iterator UDF type
+    hits.__annotations__ = {"arrays": Iterator[Tuple[pa.Array, ...]], "return": Iterator[pa.Array]}
+    udf = F.arrow_udf(hits, T.ArrayType(T.StructType(hit_fields), False))
+    out = pdf.select(
+        *[F.col(c).alias(ppre + c) for c in pdf.columns], F.inline(udf(*pcols))
+    )
+    if not index_left:
+        return out  # already left_* (the probe side) then right_*
+    return out.select(
+        *[_LEFT + c for c in left.columns], *[_RIGHT + c for c in right.columns]
+    )
+
+
+def _overlap_split(starts, ends, factor: int) -> list:
+    """Split one (start, end)-sorted run for the overlap join: intervals at
+    most ``factor`` times the run's median width (short) and the rest
+    (long); no split when ``factor`` is 0.  Each part is ``(run positions,
+    starts, ends, prefix-max end)``, still sorted by start, and windows its
+    probes separately: a long interval would otherwise hold the prefix-max
+    end up and widen every later short window."""
+    import numpy as np
+
+    w = ends - starts
+    if factor and len(w):
+        short = w <= factor * max(float(np.median(w)), 1.0)
+        parts = [np.flatnonzero(short), np.flatnonzero(~short)]
+    else:
+        parts = [np.arange(len(w))]
+    return [(i, starts[i], ends[i], np.maximum.accumulate(ends[i])) for i in parts if len(i)]
+
+
+def _overlap_pairs(part, qs, qe, strict: bool):
+    """Every overlapping (probe position, run position) pair of one
+    :func:`_overlap_split` part, yielded in chunks of about
+    ``_OVERLAP_CHUNK_PAIRS`` window entries.  A probe's window is
+    ``[first prefix-max end reaching qs, first start past qe)``: rows
+    before it end before qs, rows after it start after qe; inside it only
+    the end still needs checking.  Weak: ``start <= qe and end >= qs``;
+    strict: both comparisons strict."""
+    import numpy as np
+
+    idx, starts, ends, pmax = part
+    lo = np.searchsorted(pmax, qs, "right" if strict else "left")
+    cnt = np.maximum(np.searchsorted(starts, qe, "left" if strict else "right") - lo, 0)
+    csum = np.cumsum(cnt)
+    if not len(csum) or not csum[-1]:
+        return
+    cuts = np.searchsorted(csum, np.arange(_OVERLAP_CHUNK_PAIRS, csum[-1], _OVERLAP_CHUNK_PAIRS))
+    for a, b in zip([0, *cuts], [*cuts, len(qs)]):
+        c = cnt[a:b]
+        n = int(c.sum())
+        if not n:
+            continue
+        rep = np.repeat(np.arange(a, b), c)
+        j = lo[rep] + np.arange(n) - np.repeat(np.cumsum(c) - c, c)
+        keep = (ends[j] > qs[rep]) if strict else (ends[j] >= qs[rep])
+        yield rep[keep], idx[j[keep]]
 
 
 def _merge_islands(starts, ends, strict: bool):
@@ -1761,12 +1961,7 @@ def _nearest_collect_left(
     then takes the radius path."""
     left, (lc, ls, le) = _normalize(left, cols_left)
     right, (rc, rs, re_) = _normalize(right, cols_right)
-    # Spark's own broadcast rule first: it reads the optimizer's size
-    # estimate and runs no job (an unknown size is Long.MaxValue and never
-    # fits).  It bounds the payload columns, which are collected too.
-    threshold = left.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    size = int(left._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if threshold < 0 or size > threshold or not _fits_broadcast(left):
+    if not _collect_left_fits(left):
         return None
 
     import numpy as np

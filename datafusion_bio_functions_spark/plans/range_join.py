@@ -20,9 +20,14 @@ provided one level up: :func:`rewrite_range_joins` detects the canonical
       ON a.contig = b.contig AND <range cmp> AND <range cmp>
 
 shape in the SQL text handled by ``bio_sql``, evaluates it through
-:func:`operators.intervals.interval_join` (the shuffle-parallel binned
-strategy by default — the 100 TB path), binds the pair result to a temp
-view, and rewrites the rest of the statement against that view.  Without
+:func:`operators.intervals.interval_join` with its ``auto`` order, binds
+the pair result to a temp view, and rewrites the rest of the statement
+against that view.  An inner join whose smaller side fits the broadcast
+bounds answers from the shared CollectLeft index — the reference's own
+``IntervalJoinExec`` shape: the small side collected into a per-contig
+sorted index (memoized, so a fixed side is collected once per session),
+the other side streamed past it through one Arrow UDF, no exchange.  Other
+joins run the shuffle-parallel binned strategy, the 100 TB path.  Without
 the rewrite Catalyst plans the contig-keyed sort-merge join with the range
 residual as a post-filter, which is quadratic within a contig — the exact
 pathology the reference's rule exists to remove.
@@ -311,12 +316,14 @@ def rewrite_range_joins(spark: SparkSession, query: str) -> str:
         lkey = rkey = "__bio_key"
         l_df = l_df.withColumn(lkey, F.lit(0))
         r_df = r_df.withColumn(rkey, F.lit(0))
-    l2 = l_df.withColumn("__bio_ls", F.col(b.ls).cast("long")).withColumn(
-        "__bio_le", F.col(b.le).cast("long") - (1 if b.le_minus else 0)
-    )
-    r2 = r_df.withColumn("__bio_rs", F.col(b.rs).cast("long")).withColumn(
-        "__bio_re", F.col(b.re_).cast("long") - (1 if b.re_minus else 0)
-    )
+    l2 = l_df.withColumns({
+        "__bio_ls": F.col(b.ls).cast("long"),
+        "__bio_le": F.col(b.le).cast("long") - (1 if b.le_minus else 0),
+    })
+    r2 = r_df.withColumns({
+        "__bio_rs": F.col(b.rs).cast("long"),
+        "__bio_re": F.col(b.re_).cast("long") - (1 if b.re_minus else 0),
+    })
     how = parsed["how"]
 
     # ``SET bio.interval_join_algorithm TO CoitreesNearest`` turns the same

@@ -6,19 +6,24 @@ extension for the continuously-ingesting case: a stream of intervals
 (alignments landing from a sequencer, live variant calls) annotated
 against a STATIC interval table (genes, regulatory features, targets).
 
-Design — it IS the batch binned ``interval_join`` (
-``operators/intervals.py``) with the static side hinted for broadcast.
-That plan uses only stateless operations, so it runs under Structured
+Design — it IS the batch inner ``interval_join`` (
+``operators/intervals.py``) with the static side as the build side.  Both
+of its plans use only stateless operations, so they run under Structured
 Streaming without watermarks or state stores:
 
-* the static side is binned and **broadcast** (stream-static join);
-* the stream side bins via ``explode(sequence(...))`` — stateless,
-  per-row;
-* bin replication de-duplicates with the canonical-bin rule (keep a pair
-  only in the bin where the intersection starts), so no ``distinct`` —
-  a ``distinct`` would need a state store and an event-time watermark;
-* stream rows longer than ``long_interval_factor * bin_width`` route
-  through a plain broadcast range join (stateless too), unioned in —
+* when the annotations pass the broadcast bounds (and no ``bin_width`` is
+  given), they are collected once, when the query is built, into the
+  shared CollectLeft index, and each micro-batch is one Arrow UDF call
+  against that broadcast: no exchange, no join.  The annotations are read
+  at build time only — rebuild the query after changing them;
+* otherwise the batch binned join with the static side hinted for
+  broadcast: the static side is binned and **broadcast** (stream-static
+  join); the stream side bins via ``explode(sequence(...))`` — stateless,
+  per-row; bin replication de-duplicates with the canonical-bin rule (keep
+  a pair only in the bin where the intersection starts), so no
+  ``distinct`` — a ``distinct`` would need a state store and an event-time
+  watermark; stream rows longer than ``long_interval_factor * bin_width``
+  route through a plain broadcast range join (stateless too), unioned in —
   the same explosion cap as the batch path.
 
 At scale the static side is the small one (annotation tables are MBs
@@ -34,7 +39,13 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.intervals import _auto_bin_width, _check_filter_op, _normalize, interval_join
+from ..operators.intervals import (
+    _auto_bin_width,
+    _check_filter_op,
+    _normalize,
+    _overlap_collect_left,
+    interval_join,
+)
 
 
 def streaming_overlap(
@@ -51,9 +62,12 @@ def streaming_overlap(
     ``right_*`` (annotations) prefixed, matching the batch
     ``interval_join`` inner-join schema exactly.
 
-    ``bin_width=None`` derives the width from the static side only (the
-    stream cannot be sampled at plan time); pass it explicitly when the
-    stream's interval widths differ wildly from the annotations'.
+    ``bin_width=None`` first tries the CollectLeft index of the static
+    side (see the module docstring); when the annotations are over a
+    broadcast bound it derives the bin width from the static side only (the
+    stream cannot be sampled at plan time).  Pass ``bin_width`` explicitly
+    for the binned plan, e.g. when the stream's interval widths differ
+    wildly from the annotations'.
     """
     _check_filter_op(filter_op)
     if not stream.isStreaming:
@@ -67,9 +81,14 @@ def streaming_overlap(
             "stream-stream interval joins need watermarks; see interval_join"
         )
     if bin_width is None:
+        left, lcols = _normalize(stream, cols_left)
+        right, rcols = _normalize(annotations, cols_right)
+        out = _overlap_collect_left(left, right, lcols, rcols, filter_op, long_interval_factor)
+        if out is not None:
+            return out
         # sample the STATIC side for the width heuristic (twice — the
         # helper expects two frames; the stream side is unprobeable)
-        right, (_, rs, re_) = _normalize(annotations, cols_right)
+        _, rs, re_ = rcols
         bin_width = _auto_bin_width(right, rs, re_, right, rs, re_)
     # the broadcast hint rides through the projections, filters and bin
     # explode to every join the binned plan builds

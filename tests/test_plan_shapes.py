@@ -97,8 +97,11 @@ def test_session_algorithm_override(spark, pq):
             bio.overlap(l, r)
     finally:
         spark.conf.set(INTERVAL_JOIN_ALGORITHM_KEY, "auto")
-    # override off again → binned path returns
-    assert "__lbin" in str(bio.overlap(l, r)._jdf.queryExecution().analyzed().toString())
+    # override off again → auto answers from the CollectLeft index, and
+    # the binned path is there when asked for
+    assert "ArrowEvalPython" in _plan(bio.overlap(l, r))
+    binned = bio.overlap(l, r, algorithm="binned")
+    assert "__lbin" in str(binned._jdf.queryExecution().analyzed().toString())
 
 
 def test_cluster_chunked_no_cartesian(pq):
@@ -117,6 +120,16 @@ def test_nearest_radius_no_cartesian(pq):
     assert "BroadcastNestedLoopJoin" not in plan
     # exact fallback rides along as a cogrouped Arrow exchange
     assert "FlatMapCoGroupsInPandas" in plan
+
+
+def test_overlap_default_collect_left_has_no_exchange(pq):
+    # inner overlap with a side under the broadcast bounds: one Arrow UDF
+    # over the probe side's coordinates against the broadcast index
+    l, r = pq
+    plan = _plan(bio.overlap(l, r))
+    assert "Exchange" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Join" not in plan
 
 
 def test_nearest_default_collect_left_has_no_exchange(pq):

@@ -26,16 +26,24 @@ def test_key_failure_probes_without_storing():
     assert memo.peek(bad_key) is None
 
 
-def test_hit_skips_the_probe_and_bound_clears():
+def test_hit_skips_the_probe_and_bound_evicts_lru():
     memo = ProbeMemo()
     assert memo.get_or_probe(lambda: "a", lambda: 1, bound=2) == 1
     assert memo.get_or_probe(lambda: "a", lambda: 99, bound=2) == 1  # hit
     assert memo.peek(lambda: "a") == 1
     memo.get_or_probe(lambda: "b", lambda: 2, bound=2)
     assert memo == {"a": 1, "b": 2}
-    # at the bound the memo clears before storing the new verdict
+    # a hit makes "a" the most recently used entry (peek does not) ...
+    assert memo.get_or_probe(lambda: "a", lambda: 99, bound=2) == 1
+    # ... so at the bound the oldest entry, "b", goes and "a" stays
     assert memo.get_or_probe(lambda: "c", lambda: 3, bound=2) == 3
-    assert memo == {"c": 3}
+    assert memo == {"a": 1, "c": 3}
+    assert list(memo) == ["a", "c"]
+    # a stream of one-off keys never evicts the key hit between them
+    for i in range(5):
+        assert memo.get_or_probe(lambda: "a", lambda: 99, bound=2) == 1
+        memo.get_or_probe(lambda: ("once", i), lambda: i, bound=2)
+        assert memo == {"a": 1, ("once", i): i}
 
 
 def test_registry_sees_every_instance_and_clear_empties_each():

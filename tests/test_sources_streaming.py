@@ -447,8 +447,27 @@ def test_streaming_overlap_matches_batch_join(spark, tmp_path):
     got_s = sorted(map(tuple, spark.sql("SELECT * FROM ovl_stream_s").collect()))
     assert got_s == want_s
     # auto bin width derives from the static side without touching the stream
+    # (a list-built frame has no size estimate, so it stays binned)
     out_auto = streaming_overlap(stream, anno)
     assert out_auto.isStreaming
+    # annotations with a size estimate under the broadcast bounds: every
+    # micro-batch is one Arrow UDF against their CollectLeft index
+    anno_src = str(tmp_path / "anno")
+    anno.coalesce(1).write.parquet(anno_src)
+    anno_pq = spark.read.parquet(anno_src)
+    for fo, want_fo in (("weak", want), ("strict", want_s)):
+        qi = (
+            streaming_overlap(stream, anno_pq, filter_op=fo)
+            .writeStream.format("memory").queryName(f"ovl_stream_idx_{fo}")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_ovl_idx_{fo}"))
+            .trigger(availableNow=True).start()
+        )
+        qi.awaitTermination(120)
+        got_i = sorted(map(tuple, spark.sql(f"SELECT * FROM ovl_stream_idx_{fo}").collect()))
+        assert got_i == want_fo
+        plan_i = qi._jsq.streamingQuery().lastExecution().executedPlan().toString()
+        assert "ArrowEvalPython" in plan_i and "Exchange" not in plan_i
     # contract checks
     with pytest.raises(ValueError, match="streaming left"):
         streaming_overlap(reads, anno)

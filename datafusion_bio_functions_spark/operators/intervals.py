@@ -14,11 +14,12 @@ bio-function-ranges/src/``) in idiomatic PySpark:
 * ``complement`` — ``complement.rs:27-478``.
 * ``subtract`` — ``subtract.rs:28-668``.
 * ``nearest`` — ``nearest.rs:29-547`` + ``nearest_index.rs:24-291``
-  (COITree + sorted arrays → here: a broadcast per-contig index for small
-  left sides, else cogrouped Arrow batches; numpy searchsorted either way,
-  same binary-search math).
+  (COITree + sorted arrays → here: one vectorized k-nearest kernel,
+  :func:`_nearest_k`, over per-contig sorted arrays — from a broadcast
+  index for small left sides, else from cogrouped Arrow groups; same
+  binary-search math).
 
-count_overlaps, coverage, subtract, k=1 nearest and the inner overlap join
+count_overlaps, coverage, subtract, nearest and the inner overlap join
 share ONE CollectLeft index (:func:`_collect_index`, the reference's
 collected build side, ``count_overlaps.rs:122-141`` /
 ``nearest_index.rs:24-120``, ``interval_join.rs:394-413``): the build side
@@ -64,7 +65,7 @@ from pyspark.sql import types as T
 
 from ._probe_memo import ProbeMemo, clear_probe_caches, plan_key  # noqa: F401
 
-# The Arrow kernels call module-level helpers (the shared k=1 nearest
+# The Arrow kernels call module-level helpers (the shared nearest
 # kernel).  Ship them by value (see functions/alleles.py): by reference,
 # every Python worker would import this package (~17 MB of RSS per worker)
 # and the kernels would fail wherever the package is not importable.
@@ -82,6 +83,10 @@ I64_MAX = 9223372036854775807
 
 _LEFT = "left_"
 _RIGHT = "right_"
+
+#: intervals wider than this many times their run's median width are
+#: windowed apart from the rest (see :func:`_overlap_split`)
+LONG_INTERVAL_FACTOR = 64
 
 
 # ---------------------------------------------------------------------------
@@ -215,7 +220,7 @@ def interval_join(
     how: str = "inner",
     algorithm: str = "auto",
     bin_width: int | None = None,
-    long_interval_factor: int | None = 64,
+    long_interval_factor: int | None = LONG_INTERVAL_FACTOR,
 ) -> DataFrame:
     """All-pairs interval overlap join; output columns are ``left_*`` and
     ``right_*`` prefixed (reference join-mode schema, ``overlap.rs:105-130``).
@@ -456,9 +461,9 @@ def count_overlaps(
     ``algorithm='broadcast'`` (default via ``auto``) collects the left
     coordinates through Arrow into the shared per-contig sorted-array index
     (:func:`_collect_index`, the one nearest and coverage use too) and
-    probes it with vectorized ``np.searchsorted`` in one ``mapInArrow`` —
-    the exact reference algorithm (the reference *always* collects left
-    eagerly: ``count_overlaps.rs:122-141``).  Size-guarded: a left side
+    probes it with vectorized ``np.searchsorted`` in one Arrow UDF over the
+    right coordinates — the exact reference algorithm (the reference
+    *always* collects left eagerly: ``count_overlaps.rs:122-141``).  Size-guarded: a left side
     above ``BROADCAST_GUARD_ROWS`` silently falls back to the join plan
     instead of collecting data-scale rows onto the driver, so ``auto`` is
     the CollectLeft fast path with a shuffle-parallel escape hatch.
@@ -622,7 +627,8 @@ def _count_or_cover_broadcast(
 ) -> DataFrame | None:
     """CollectLeft path: the :func:`_collect_index` of the left coordinates,
     probed batch-wise with numpy searchsorted (reference
-    ``interval_tree.rs:20-73,145-152``).  Returns None when the left side
+    ``interval_tree.rs:20-73,145-152``) in one Arrow UDF over the right
+    coordinates (:func:`_probe_column`).  Returns None when the left side
     exceeds the broadcast guard (caller falls back to the join plan)."""
     import numpy as np
     import pyarrow as pa
@@ -632,7 +638,6 @@ def _count_or_cover_broadcast(
     bidx = _collect_index(left.select(*lcols), *lcols)
     shrink = 0 if filter_op == "weak" else 1
     out_col = "count" if mode == "count" else "coverage"
-    out_schema = T.StructType(right.schema.fields + [T.StructField(out_col, T.LongType())])
 
     def count_run(starts, ends):
         # the run is (start, end)-sorted: starts and the point starts already
@@ -690,15 +695,13 @@ def _count_or_cover_broadcast(
     derive, kernel = (count_run, count) if mode == "count" else (cover_run, cover)
 
     def probe(batches):
-        for batch, qs, qe, _, groups in _probe_batches(bidx, batches, rcols, derive):
+        for batch, qs, qe, _, groups in _probe_batches(bidx.value, batches, rcols, derive):
             res = np.zeros(batch.num_rows, np.int64)
             for m, run, _ in groups:
                 res[m] = kernel(run, qs[m], qe[m])
-            yield pa.RecordBatch.from_arrays(
-                batch.columns + [pa.array(res)], names=out_schema.fieldNames()
-            )
+            yield pa.array(res)
 
-    return right.mapInArrow(probe, out_schema)
+    return right.withColumn(out_col, _probe_column(probe, rcols, T.LongType()))
 
 
 #: memoized CollectLeft index broadcasts, keyed (plan+files, cols)
@@ -750,19 +753,39 @@ def _collect_index(df: DataFrame, c: str, s: str, e: str):
     return _COLLECT_INDEX_MEMO.get_or_probe(lambda: (plan_key(df), c, s, e), build, bound=4)
 
 
-def _probe_batches(bidx, batches, rcols: tuple[str, str, str], derive):
+def _probe_column(probe, cols: tuple[str, str, str], return_type) -> Column:
+    """One scalar-iterator Arrow UDF over the probe side's (contig, start,
+    end) ``cols``: ``probe`` maps an iterator of Arrow batches of those
+    columns to one result array per batch.  Unlike a ``mapInArrow`` over
+    whole rows, the rest of the probe row stays in the JVM, so a projection
+    after it still prunes the probe side's scan."""
+    import pyarrow as pa
+
+    names = list(cols)
+
+    def run(arrays):
+        return probe(pa.RecordBatch.from_arrays(list(a), names=names) for a in arrays)
+
+    run.__name__ = probe.__name__  # the name plans show
+    # real objects, not the strings this module's annotations would be:
+    # Spark reads the hints to pick the scalar-iterator UDF type
+    run.__annotations__ = {"arrays": Iterator[Tuple[pa.Array, ...]], "return": Iterator[pa.Array]}
+    return F.arrow_udf(run, return_type)(*cols)
+
+
+def _probe_batches(index, batches, rcols: tuple[str, str, str], derive):
     """The probe loop every :func:`_collect_index` user runs in its
-    ``mapInArrow`` or Arrow UDF.  Yields ``(batch, starts, ends, valid,
-    groups)`` per Arrow batch: the probe coordinates as int64 (NULL read as
-    0), ``valid`` where both are non-NULL, and one ``(mask, run, lo)`` per
-    contig the index holds — the valid batch rows on it, ``derive(starts,
-    ends)`` over its sorted run (computed once per task) and the run's
-    offset into the index.  A NULL or absent contig is in no group, so it
-    matches nothing."""
+    ``mapInArrow`` or Arrow UDF, over ``index``, the broadcast's value.
+    Yields ``(batch, starts, ends, valid, groups)`` per Arrow batch: the
+    probe coordinates as int64 (NULL read as 0), ``valid`` where both are
+    non-NULL, and one ``(mask, run, lo)`` per contig the index holds — the
+    valid batch rows on it, ``derive(starts, ends)`` over its sorted run
+    (computed once per task) and the run's offset into the index.  A NULL
+    or absent contig is in no group, so it matches nothing."""
     import pandas as pd
     import pyarrow.compute as pc
 
-    bounds, starts, ends, _ = bidx.value
+    bounds, starts, ends, _ = index
     rc, rs, re_ = rcols
     runs: dict = {}
     for batch in batches:
@@ -801,13 +824,11 @@ def _overlap_collect_left(
     None when that side is over a broadcast bound (or the contig columns
     differ in type), and the caller takes the binned plan.
 
-    The other side streams past the index through one scalar-iterator Arrow
-    UDF over its (contig, start, end) columns that returns, per probe row,
-    the list of its matching indexed rows; ``inline`` flattens the lists.
-    Unlike a ``mapInArrow`` over whole rows, the rest of the probe row stays
-    in the JVM, so a projection after the join still prunes the probe
-    side's scan.  Output is ``left_*`` then ``right_*`` whichever side is
-    indexed."""
+    The other side streams past the index through :func:`_probe_column`,
+    which returns, per probe row, the list of its matching indexed rows;
+    ``inline`` flattens the lists, and a projection after the join still
+    prunes the probe side's scan.  Output is ``left_*`` then ``right_*``
+    whichever side is indexed."""
     if left.schema[lcols[0]].dataType != right.schema[rcols[0]].dataType:
         return None  # Spark would coerce; the index matches values exactly
     lsize, rsize = (I64_MAX if d.isStreaming else _plan_bytes(d) for d in (left, right))
@@ -829,13 +850,12 @@ def _overlap_collect_left(
     hit_names, nullable = [f.name for f in hit_fields], [f.nullable for f in hit_fields]
     inames = list(idf.columns)
 
-    def hits(arrays):
+    def hits(batches):
         _, starts, ends, payload = bidx.value
         by_name = dict(payload, **{icols[1]: pa.array(starts), icols[2]: pa.array(ends)})
         icol = [by_name[n] for n in inames]
-        batches = (pa.RecordBatch.from_arrays(list(a), names=list(pcols)) for a in arrays)
         for batch, qs, qe, _, groups in _probe_batches(
-            bidx, batches, pcols, lambda s, e: _overlap_split(s, e, factor)
+            bidx.value, batches, pcols, lambda s, e: _overlap_split(s, e, factor)
         ):
             prow, irow = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
             for m, parts, lo in groups:
@@ -854,12 +874,10 @@ def _overlap_collect_left(
             matched = pa.StructArray.from_arrays(cols, fields=fields)
             yield pa.ListArray.from_arrays(pa.array(offsets), matched)
 
-    # real objects, not the strings this module's annotations would be:
-    # Spark reads the hints to pick the scalar-iterator UDF type
-    hits.__annotations__ = {"arrays": Iterator[Tuple[pa.Array, ...]], "return": Iterator[pa.Array]}
-    udf = F.arrow_udf(hits, T.ArrayType(T.StructType(hit_fields), False))
+    hit_type = T.ArrayType(T.StructType(hit_fields), False)
     out = pdf.select(
-        *[F.col(c).alias(ppre + c) for c in pdf.columns], F.inline(udf(*pcols))
+        *[F.col(c).alias(ppre + c) for c in pdf.columns],
+        F.inline(_probe_column(hits, pcols, hit_type)),
     )
     if not index_left:
         return out  # already left_* (the probe side) then right_*
@@ -1491,7 +1509,7 @@ def _subtract_broadcast(
 
     def frag(batches):
         for batch, ls_a, le_a, valid, groups in _probe_batches(
-            bidx, batches, lcols, lambda s, e: _merge_islands(s, e, strict)
+            bidx.value, batches, lcols, lambda s, e: _merge_islands(s, e, strict)
         ):
             ok = valid & (ls_a < le_a)
             # rows on no indexed contig (absent or NULL) pass through whole
@@ -1671,12 +1689,19 @@ def nearest(
     (``nearest.rs:57-78``).  Distance semantics (``nearest_index.rs:252-260``):
     0 when overlapping, else the gap between the closest boundaries.
     Deterministic tie-break by (distance, left start, left end)
-    (``nearest_index.rs:245-291``), then left input order.
+    (``nearest_index.rs:245-291``), then left input order.  A row with a
+    NULL contig, start or end never matches, on either side.  In strict mode
+    a point probe has no overlap candidates, for every ``k``: its neighbours
+    are the nearest rows ending before it or starting after it.
+
+    Every path answers with one kernel, :func:`_nearest_k`, over the same
+    per-contig (start, end)-sorted arrays as the reference's CoitreesNearest
+    index (``nearest_index.rs:24-120``).
 
     ``algorithm='auto'`` (default) picks, in order:
 
-    1. the CollectLeft index, for ``k=1`` with no ``radius`` argument and
-       no ``spark.bio.nearest.algorithm`` / ``spark.bio.nearest.radius``
+    1. the CollectLeft index, for every ``k`` with no ``radius`` argument
+       and no ``spark.bio.nearest.algorithm`` / ``spark.bio.nearest.radius``
        set, when the left side is under both broadcast bounds (its plan
        size estimate within ``spark.sql.autoBroadcastJoinThreshold``, its
        row count within ``BROADCAST_GUARD_ROWS``).  The left side is
@@ -1689,26 +1714,22 @@ def nearest(
     3. inside it, the exact cogroup fallback for every probe the radius
        window could not settle.
 
-    ``algorithm='cogroup'``: cogrouped Arrow exchange per contig +
-    numpy binary searches — ``searchsorted`` on (start-sorted, end-sorted,
-    prefix-max-end) arrays, the same three structures as the reference's
-    CoitreesNearest index (``nearest_index.rs:24-120``).  k=1 is fully
-    vectorized; k>1 is a blocked argpartition over a composite
-    (distance, sorted-index) key.  One Arrow group per contig — skewed
-    contigs serialize; kept as the exact oracle/fallback path.
+    ``algorithm='cogroup'``: one cogrouped Arrow group per contig, indexed
+    and probed like the CollectLeft path.  Skewed contigs serialize; kept as
+    the exact fallback path.
 
     ``algorithm='radius'``: the 100 TB path — a chunked cogroup.  Each
     contig is range-partitioned into fixed-width chunks; left rows replicate into every chunk their ±radius margin
     touches, probes into every chunk their padded span touches, and the
-    same searchsorted kernel answers each (contig, chunk) cell in
-    O((n+q) log n) — parallelism is #chunks (no per-contig skew ceiling)
-    and, unlike a candidate join, dense data does NOT cost one row per
-    overlapping pair.  In-radius results are provably complete across
-    chunks (any candidate at distance ≤ radius shares a chunk with its
-    probe), so probes that find ≥ k in-radius candidates are globally
-    correct; the rest are re-solved exactly through the cogroup path —
-    skipped entirely when the fallback set is provably empty.  Equality
-    with cogroup is property-tested, including forced-fallback radii.
+    same kernel answers each (contig, chunk) cell — parallelism is #chunks
+    (no per-contig skew ceiling) and, unlike a candidate join, dense data
+    does NOT cost one row per overlapping pair.  In-radius results are
+    provably complete across chunks (any candidate at distance ≤ radius
+    shares a chunk with its probe), so probes that find ≥ k in-radius
+    candidates are globally correct; the rest are re-solved exactly through
+    the cogroup path — skipped entirely when the fallback set is provably
+    empty.  Equality with cogroup is property-tested, including
+    forced-fallback radii.
 
     ``radius=None`` (default) sizes the radius to the LEFT side's density
     per contig — ``~4k / (intervals per base)`` — so candidate sets stay
@@ -1716,9 +1737,6 @@ def nearest(
     would otherwise gather huge candidate sets (all-pairs in the limit).
     The per-contig stats are one tiny aggregate (#contigs rows).
     """
-    import numpy as np
-    import pandas as pd
-
     _check_filter_op(filter_op)
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -1728,16 +1746,16 @@ def nearest(
         conf = left.sparkSession.conf
         configured = conf.get(NEAREST_ALGORITHM_KEY, None)
         r = conf.get(NEAREST_RADIUS_KEY, None)
-        if k == 1 and radius is None and not r and configured in (None, "", "auto"):
+        if radius is None and not r and configured in (None, "", "auto"):
             out = _nearest_collect_left(
-                left, right, cols_left, cols_right, include_overlaps,
+                left, right, k, cols_left, cols_right, include_overlaps,
                 compute_distance, filter_op,
             )
             if out is not None:
                 return out
         # otherwise the shuffle-parallel radius path (VERDICT r2: the
         # cogroup default ships each contig as ONE Arrow group — a single
-        # task per contig and a quadratic k>1 kernel do not scale)
+        # task per contig does not scale)
         algorithm = configured if configured and configured != "auto" else "radius"
         if r:
             radius = int(r)
@@ -1748,135 +1766,36 @@ def nearest(
             left, right, k, cols_left, cols_right, include_overlaps,
             compute_distance, filter_op, radius,
         )
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     left, (lc, ls, le) = _normalize(left, cols_left)
     right, (rc, rs, re_) = _normalize(right, cols_right)
-
-    lfields = [T.StructField(_LEFT + f.name, f.dataType, True) for f in left.schema.fields]
-    rfields = [T.StructField(_RIGHT + f.name, f.dataType, f.nullable) for f in right.schema.fields]
-    out_fields = lfields + rfields
-    if compute_distance:
-        out_fields.append(T.StructField("distance", T.LongType(), True))
-    out_schema = T.StructType(out_fields)
-    lcols_all = list(left.columns)
-    rcols_all = list(right.columns)
+    out_schema = _nearest_schema(left, right, compute_distance)
+    names = out_schema.fieldNames()
+    lnames = list(left.columns)
     shrink = 0 if filter_op == "weak" else 1
 
-    def find_nearest(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(rpdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        out_r = rpdf.rename(columns={c: _RIGHT + c for c in rcols_all})
-        if len(lpdf) == 0:
-            res = out_r.copy()
-            for c in lcols_all:
-                res[_LEFT + c] = None
-            if compute_distance:
-                res["distance"] = None
-            return res[[f.name for f in out_schema.fields]]
-
-        lpdf = lpdf.sort_values([ls, le], kind="mergesort").reset_index(drop=True)
-        starts = lpdf[ls].to_numpy(dtype=np.int64)
-        ends = lpdf[le].to_numpy(dtype=np.int64)
-        n = len(lpdf)
-
-        qs = rpdf[rs].to_numpy(dtype=np.int64) + shrink
-        qe = rpdf[re_].to_numpy(dtype=np.int64) - shrink
-        nq = len(rpdf)
-
-        def emit(rows_r: np.ndarray, rows_l: np.ndarray, dists: np.ndarray) -> pd.DataFrame:
-            """One output row per (probe row, left row); ``rows_l < 0`` marks
-            a probe without a neighbour (NULL left columns and distance)."""
-            res = out_r.iloc[rows_r].reset_index(drop=True)
-            none = rows_l < 0
-            lpart = lpdf.iloc[np.where(none, 0, rows_l)].reset_index(drop=True)
-            for c in lcols_all:
-                vals = lpart[c].astype(object)
-                vals[none] = None
-                res[_LEFT + c] = vals.to_numpy()
-            if compute_distance:
-                d = pd.array(dists, dtype="Int64")
-                d[none] = pd.NA
-                res["distance"] = d
-            return res[[f.name for f in out_schema.fields]]
-
-        def emit_lists(idx_matrix: list[np.ndarray], dist_matrix: list[np.ndarray]) -> pd.DataFrame:
-            rows_r, rows_l, dists = [], [], []
-            for i in range(nq):
-                idxs = idx_matrix[i]
-                if len(idxs) == 0:
-                    rows_r.append(i)
-                    rows_l.append(-1)
-                    dists.append(0)
-                else:
-                    for j, d in zip(idxs, dist_matrix[i]):
-                        rows_r.append(i)
-                        rows_l.append(int(j))
-                        dists.append(int(d))
-            return emit(np.asarray(rows_r), np.asarray(rows_l, dtype=np.int64), np.asarray(dists))
-
-        if k == 1:
-            # vectorized reference hot path (nearest.rs:330-390)
-            idx, dist = _nearest_k1(_k1_index(starts, ends), qs, qe, include_overlaps)
-            return emit(np.arange(nq), idx, dist)
-
-        # k > 1: blocked vectorized top-k.  lpdf is (start, end)-sorted, so
-        # the composite key d * P + row_index realizes the exact
-        # (distance, start, end) tie-break with ONE argpartition per block
-        # instead of a per-probe lexsort over all n left rows.
-        P = 1 << int(n + 1).bit_length()
-        d_bound = max(
-            int(qs.max() - ends.min()) if nq and n else 0,
-            int(starts.max() - qe.min()) if nq and n else 0,
-            1,
+    def probe_group(key, ltab, rtab):
+        # this group's own index, built as _collect_index builds the shared one
+        ltab = ltab.filter(pc.and_(pc.is_valid(ltab.column(ls)), pc.is_valid(ltab.column(le))))
+        starts, ends = ltab.column(ls).to_numpy(), ltab.column(le).to_numpy()
+        order = np.lexsort((ends, starts))  # stable: ties keep group order
+        ltab = ltab.take(order)
+        # a NULL key is in no probe group: NULL contigs match nothing
+        index = ({key[0].as_py(): (0, len(order))}, starts[order], ends[order], None)
+        probes = pa.RecordBatch.from_arrays(
+            [c.combine_chunks() for c in rtab.columns], names=rtab.column_names
         )
-        idxm, distm = [], []
-        if d_bound < (1 << 62) // P:
-            blk = max(16, min(4096, 10_000_000 // max(n, 1)))
-            big = np.iinfo(np.int64).max
-            arange_n = np.arange(n, dtype=np.int64)[None, :]
-            kk = min(k, n)
-            for b0 in range(0, nq, blk):
-                qs_b = qs[b0 : b0 + blk, None]
-                qe_b = qe[b0 : b0 + blk, None]
-                d = np.maximum(np.maximum(starts[None, :] - qe_b, qs_b - ends[None, :]), 0)
-                key = d * P + arange_n
-                if not include_overlaps:
-                    key = np.where(d > 0, key, big)
-                part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-                rowar = np.arange(part.shape[0])[:, None]
-                pk = key[rowar, part]
-                order = np.argsort(pk, axis=1, kind="stable")
-                sel = part[rowar, order]
-                selkey = pk[rowar, order]
-                for i in range(part.shape[0]):
-                    valid = selkey[i] != big
-                    ids = sel[i][valid]
-                    idxm.append(ids)
-                    distm.append(d[i][ids])
-            return emit_lists(idxm, distm)
+        (arrays,) = _nearest_probe(
+            index, [ltab.column(c) for c in lnames], [probes], (rc, rs, re_),
+            k, shrink, include_overlaps, compute_distance,
+        )
+        return pa.Table.from_arrays(arrays, names=names)
 
-        # overflow-proof fallback (astronomical coordinates): per-row lexsort
-        for i in range(nq):
-            d = np.maximum(np.maximum(starts - qe[i], qs[i] - ends), 0)
-            mask = np.ones(n, dtype=bool)
-            if not include_overlaps:
-                mask = d > 0
-            dm = d[mask]
-            im = np.arange(n)[mask]
-            if len(dm) == 0:
-                idxm.append(np.array([], dtype=np.int64))
-                distm.append(np.array([], dtype=np.int64))
-                continue
-            kk = min(k, len(dm))
-            order = np.lexsort((ends[im], starts[im], dm))[:kk]
-            idxm.append(im[order])
-            distm.append(dm[order])
-        return emit_lists(idxm, distm)
-
-    out = (
-        left.groupBy(lc)
-        .cogroup(right.groupBy(rc))
-        .applyInPandas(find_nearest, schema=out_schema)
-    )
+    out = left.groupBy(lc).cogroup(right.groupBy(rc)).applyInArrow(probe_group, out_schema)
     return _rawify_strict_distance(out, shrink, compute_distance)
 
 
@@ -1947,53 +1866,151 @@ def _nearest_k1(index: tuple, qs, qe, include_overlaps: bool) -> tuple:
     return idx, dist
 
 
+def _nearest_k(index: tuple, qs, qe, k: int, include_overlaps: bool) -> tuple:
+    """The k nearest left rows of every probe ``[qs, qe]`` (already shrunk
+    in strict mode) within one :func:`_k1_index` run — the one kernel of
+    every :func:`nearest` path.  Returns ``(probe, idx, dist)``: one entry
+    per (probe, neighbour), probes in order and each probe's neighbours
+    ranked by (distance, run index), i.e. by (distance, start, end, run
+    order); a probe with no candidate has no entry.  Candidates are the
+    rows ending before qs, the rows starting after qe and, with
+    ``include_overlaps`` and unless ``qs > qe + 1`` (a strict point probe),
+    the rows overlapping the probe — :func:`_nearest_k1`'s rule, which
+    answers ``k == 1``.
+
+    For ``k > 1`` a per-probe bound prunes before the merge (EDBT 2020
+    incremental top-k): D is the k-th smallest distance among the k rows
+    ending last before qs and the k rows starting first after qe (or the
+    largest, when there are fewer than k); every row within D of the probe
+    overlaps the window ``[qs - D, qe + D]``, which :func:`_overlap_pairs`
+    enumerates in bounded chunks over the run's short and long parts
+    (:func:`_overlap_split`: one long row would otherwise widen every
+    later window), and one lexsort per chunk keeps each probe's first k,
+    then one more over both parts' picks."""
+    import numpy as np
+
+    starts, ends, _, end_order, ends_sorted = index
+    n = len(starts)
+    if k == 1 or n == 0:
+        idx, dist = _nearest_k1(index, qs, qe, include_overlaps)
+        p = np.flatnonzero(idx >= 0)
+        return p, idx[p], dist[p]
+    j = np.arange(k)
+    before = np.searchsorted(ends_sorted, qs, "left")[:, None] - 1 - j
+    after = np.searchsorted(starts, qe, "right")[:, None] + j
+    cand = np.concatenate(
+        [np.where(before >= 0, end_order[np.maximum(before, 0)], n), np.minimum(after, n)], axis=1
+    )
+    cand.sort(axis=1)
+    # n marks no row; a strict point probe can list one point row on both
+    # sides, which counts once
+    ok = cand < n
+    ok[:, 1:] &= cand[:, 1:] != cand[:, :-1]
+    c = np.minimum(cand, n - 1)
+    d = np.maximum(np.maximum(starts[c] - qe[:, None], qs[:, None] - ends[c]), 0)
+    kth = np.sort(np.where(ok, d, I64_MAX), axis=1)[:, k - 1]
+    bound = np.minimum(kth, np.where(ok, d, 0).max(axis=1))
+    overlaps = include_overlaps & (qs <= qe + 1)
+
+    def first_k(p, i, d):
+        o = np.lexsort((i, d, p))
+        p, i, d = p[o], i[o], d[o]
+        top = np.arange(len(p)) - np.searchsorted(p, p, "left") < k
+        return p[top], i[top], d[top]
+
+    out = [(np.zeros(0, np.int64),) * 3]
+    for part in _overlap_split(starts, ends, LONG_INTERVAL_FACTOR):
+        for p, i in _overlap_pairs(part, qs - bound, qe + bound, strict=False):
+            # chunks hold whole probes, so each chunk ranks its probes fully
+            d = np.maximum(np.maximum(starts[i] - qe[p], qs[p] - ends[i]), 0)
+            keep = (d > 0) | overlaps[p]
+            out.append(first_k(p[keep], i[keep], d[keep]))
+    return first_k(*(np.concatenate(x) for x in zip(*out)))
+
+
+def _nearest_schema(left: DataFrame, right: DataFrame, compute_distance: bool) -> T.StructType:
+    """nearest's output: ``left_*`` (nullable), ``right_*``, ``distance``."""
+    fields = [T.StructField(_LEFT + f.name, f.dataType, True) for f in left.schema.fields]
+    fields += [T.StructField(_RIGHT + f.name, f.dataType, f.nullable) for f in right.schema.fields]
+    if compute_distance:
+        fields.append(T.StructField("distance", T.LongType(), True))
+    return T.StructType(fields)
+
+
+def _nearest_probe(
+    index, lcols, batches, rcols: tuple[str, str, str], k: int, shrink: int,
+    include_overlaps: bool, compute_distance: bool,
+):
+    """The probe loop of the CollectLeft and cogroup nearest paths: per
+    probe batch, the output columns of :func:`_nearest_schema` (before the
+    strict distance fix-up).  ``index`` is a :func:`_collect_index` value,
+    ``lcols`` the left columns as Arrow arrays in that index's order.  One
+    row per (probe, neighbour) in probe order, and one with NULL left
+    columns and distance for a probe with no neighbour.  Left values are
+    taken with Arrow, so a long payload comes back exact; when every probe
+    has exactly one row the probe columns pass through untouched."""
+    import numpy as np
+    import pyarrow as pa
+
+    for batch, qs, qe, _, groups in _probe_batches(index, batches, rcols, _k1_index):
+        nq = batch.num_rows
+        parts = [(np.zeros(0, np.int64),) * 3]
+        for m, run, lo in groups:
+            rows = np.flatnonzero(m)
+            p, i, d = _nearest_k(run, qs[rows] + shrink, qe[rows] - shrink, k, include_overlaps)
+            parts.append((rows[p], i + lo, d))
+        prow, lrow, dist = (np.concatenate(x) for x in zip(*parts))
+        lonely = np.flatnonzero(np.bincount(prow, minlength=nq) == 0)
+        prow = np.concatenate([prow, lonely])
+        order = np.argsort(prow, kind="stable")
+        lrow = np.concatenate([lrow, np.full(len(lonely), -1)])[order]
+        none = lrow < 0
+        arrays = [c.take(pa.array(lrow, mask=none)) for c in lcols]
+        if len(prow) == nq:  # one row per probe: already in probe order
+            arrays += batch.columns
+        else:
+            arrays += [c.take(pa.array(prow[order])) for c in batch.columns]
+        if compute_distance:
+            dist = np.concatenate([dist, np.zeros(len(lonely), np.int64)])[order]
+            arrays.append(pa.array(dist, mask=none))
+        yield arrays
+
+
 def _nearest_collect_left(
     left: DataFrame,
     right: DataFrame,
+    k: int,
     cols_left: Sequence[str] | None,
     cols_right: Sequence[str] | None,
     include_overlaps: bool,
     compute_distance: bool,
     filter_op: str,
 ) -> DataFrame | None:
-    """CollectLeft path for k=1 :func:`nearest` — see its docstring.
-    Returns None when the left side is over a broadcast bound; the caller
-    then takes the radius path."""
+    """CollectLeft path of :func:`nearest` — see its docstring.  Returns
+    None when the left side is over a broadcast bound; the caller then
+    takes the radius path."""
     left, (lc, ls, le) = _normalize(left, cols_left)
     right, (rc, rs, re_) = _normalize(right, cols_right)
     if not _collect_left_fits(left):
         return None
 
-    import numpy as np
     import pyarrow as pa
 
     bidx = _collect_index(left, lc, ls, le)
     shrink = 0 if filter_op == "weak" else 1
-    lnames, rnames = list(left.columns), list(right.columns)
-    out_fields = [T.StructField(_LEFT + f.name, f.dataType, True) for f in left.schema.fields]
-    out_fields += [T.StructField(_RIGHT + f.name, f.dataType, f.nullable) for f in right.schema.fields]
-    if compute_distance:
-        out_fields.append(T.StructField("distance", T.LongType(), True))
-    out_schema = T.StructType(out_fields)
-    out_names = out_schema.fieldNames()
+    lnames = list(left.columns)
+    out_schema = _nearest_schema(left, right, compute_distance)
+    names = out_schema.fieldNames()
 
     def probe(batches):
-        _, starts, ends, payload = bidx.value
-        lcols = dict(payload, **{ls: pa.array(starts), le: pa.array(ends)})
-        for batch, qs, qe, _, groups in _probe_batches(bidx, batches, (rc, rs, re_), _k1_index):
-            gidx = np.full(batch.num_rows, -1, np.int64)
-            dist = np.zeros(batch.num_rows, np.int64)
-            for m, run, lo in groups:
-                idx, d = _nearest_k1(run, qs[m] + shrink, qe[m] - shrink, include_overlaps)
-                gidx[m] = np.where(idx >= 0, idx + lo, -1)
-                dist[m] = d
-            none = gidx < 0
-            take = pa.array(gidx, mask=none)
-            arrays = [lcols[c].take(take) for c in lnames]
-            arrays += [batch.column(c) for c in rnames]
-            if compute_distance:
-                arrays.append(pa.array(dist, mask=none))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+        index = bidx.value
+        _, starts, ends, payload = index
+        by_name = dict(payload, **{ls: pa.array(starts), le: pa.array(ends)})
+        for arrays in _nearest_probe(
+            index, [by_name[c] for c in lnames], batches, (rc, rs, re_),
+            k, shrink, include_overlaps, compute_distance,
+        ):
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     out = right.mapInArrow(probe, out_schema)
     return _rawify_strict_distance(out, shrink, compute_distance)
@@ -2018,7 +2035,7 @@ def _nearest_radius(
     shrink = 0 if filter_op == "weak" else 1
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     rid = right.withColumn("__pid", F.monotonically_increasing_id())
     if radius is None:
@@ -2062,9 +2079,9 @@ def _nearest_radius(
 
     # ── chunked cogroup: range-partition each contig into fixed-width
     # chunks, replicate left rows into every chunk their ±radius margin
-    # touches, and run the O((n+q) log n) searchsorted kernel per
-    # (contig, chunk) cell.  Unlike a candidate join, dense data costs
-    # log(n) per probe instead of one row per overlapping pair — and unlike
+    # touches, and run the nearest kernel (_nearest_k) per (contig, chunk)
+    # cell.  Unlike a candidate join, dense data costs binary searches per
+    # probe instead of one row per overlapping pair — and unlike
     # the plain cogroup, parallelism is #chunks, not #contigs. ──
     cw = min(max(20_000, 4 * max_rad), 50_000_000)
     lid = left.withColumn("__lid", F.monotonically_increasing_id())
@@ -2077,7 +2094,8 @@ def _nearest_radius(
             )
         ).alias("__chunk"),
     )
-    pch = padded.filter(F.col("__qs").isNotNull()).select(
+    # a NULL contig matches nothing: such probes go to the exact fallback
+    pch = padded.filter(F.col("__qs").isNotNull() & F.col(rc).isNotNull()).select(
         F.col(rc).alias("__kc"), F.col(rs), F.col(re_), "__pid",
         F.explode(
             F.sequence(
@@ -2087,86 +2105,20 @@ def _nearest_radius(
         ).alias("__chunk"),
     )
 
-    kk, inc, shr = k, include_overlaps, shrink
-
-    def kernel(key, lpdf: "pd.DataFrame", rpdf: "pd.DataFrame") -> "pd.DataFrame":
-        empty = pd.DataFrame(
-            {c: pd.Series(dtype="int64") for c in ("pid", "lid", "dist", "s", "e")}
-        )
-        if len(rpdf) == 0 or len(lpdf) == 0:
-            return empty
-        lpdf = lpdf.sort_values([ls, le], kind="mergesort")
-        starts = lpdf[ls].to_numpy(np.int64)
-        ends = lpdf[le].to_numpy(np.int64)
-        lids = lpdf["__lid"].to_numpy(np.int64)
-        n = len(starts)
-        qs = rpdf[rs].to_numpy(np.int64) + shr
-        qe = rpdf[re_].to_numpy(np.int64) - shr
-        pids = rpdf["__pid"].to_numpy(np.int64)
-        nq = len(qs)
-
-        if kk == 1:
-            # the k=1 kernel shared with the cogroup and CollectLeft paths
-            sel_idx, sel_dist = _nearest_k1(_k1_index(starts, ends), qs, qe, inc)
-            m = sel_idx >= 0
-            si = sel_idx[m]
-            return pd.DataFrame(
-                {
-                    "pid": pids[m],
-                    "lid": lids[si],
-                    "dist": sel_dist[m],
-                    "s": starts[si],
-                    "e": ends[si],
-                }
-            )
-
-        pmax = np.maximum.accumulate(ends)
-        P = 1 << int(n + 1).bit_length()
-        big = np.iinfo(np.int64).max
-
-        # k > 1: per-probe top-k over the bounded candidate window.  Only
-        # results with dist <= radius are used downstream (the rest go to
-        # the exact fallback), and every such candidate satisfies
-        # start <= qe+rad AND lies at/after the first index whose
-        # prefix-max-end >= qs-rad — a contiguous start-sorted window of
-        # O(candidates) size, not an O(n) matrix row.
-        rad_hint = max_rad
-        lo_idx = np.searchsorted(pmax, qs - rad_hint, "left")
-        hi_idx = np.searchsorted(starts, qe + rad_hint, "right")
-        out_pid, out_lid, out_dist, out_s, out_e = [], [], [], [], []
-        for i in range(nq):
-            wlo, whi = int(lo_idx[i]), int(hi_idx[i])
-            if whi <= wlo:
-                continue
-            dw = np.maximum(
-                np.maximum(starts[wlo:whi] - qe[i], qs[i] - ends[wlo:whi]), 0
-            )
-            keyw = dw * P + np.arange(wlo, whi, dtype=np.int64)
-            if not inc:
-                keyw = np.where(dw > 0, keyw, big)
-            kmin = min(kk, whi - wlo)
-            part = np.argpartition(keyw, kmin - 1)[:kmin]
-            order = np.argsort(keyw[part], kind="stable")
-            sel = part[order]
-            sel = sel[keyw[sel] != big]
-            if not len(sel):
-                continue
-            ids = sel + wlo
-            out_pid.extend([int(pids[i])] * len(ids))
-            out_lid.extend(lids[ids].tolist())
-            out_dist.extend(dw[sel].tolist())
-            out_s.extend(starts[ids].tolist())
-            out_e.extend(ends[ids].tolist())
-        if not out_pid:
-            return empty
-        return pd.DataFrame(
-            {"pid": out_pid, "lid": out_lid, "dist": out_dist,
-             "s": out_s, "e": out_e}
+    def kernel(ltab, rtab):
+        starts, ends, lids = (ltab.column(c).to_numpy() for c in (ls, le, "__lid"))
+        # ranked as the top-k window below ranks: (distance, start, end, lid)
+        order = np.lexsort((lids, ends, starts))
+        starts, ends, lids = starts[order], ends[order], lids[order]
+        qs, qe, pids = (rtab.column(c).to_numpy() for c in (rs, re_, "__pid"))
+        p, i, d = _nearest_k(_k1_index(starts, ends), qs + shrink, qe - shrink, k, include_overlaps)
+        return pa.table(
+            {"pid": pids[p], "lid": lids[i], "dist": d, "s": starts[i], "e": ends[i]}
         )
 
     # pin the cogroup exchanges (r12): the (contig, chunk) shuffle carries
     # sub-MB rows at small inputs, so AQE byte-coalescing folds it to ONE
-    # post-shuffle partition and the searchsorted kernel runs serially; a
+    # post-shuffle partition and the kernel runs serially; a
     # user repartition on the cogroup keys satisfies its clustering
     # requirement (no extra exchange) and is exempt from coalescing.
     _p = lch.sparkSession.sparkContext.defaultParallelism
@@ -2174,7 +2126,7 @@ def _nearest_radius(
         lch.repartition(_p, "__kc", "__chunk")
         .groupBy("__kc", "__chunk")
         .cogroup(pch.repartition(_p, "__kc", "__chunk").groupBy("__kc", "__chunk"))
-        .applyInPandas(kernel, "pid long, lid long, dist long, s long, e long")
+        .applyInArrow(kernel, "pid long, lid long, dist long, s long, e long")
     )
     # a pair met in two chunks is emitted twice with identical values.
     # Dedup AND the top-k window share ONE pid-partitioned exchange (r12):

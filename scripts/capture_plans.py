@@ -51,7 +51,8 @@ SHOW = [
 
 KEEP = re.compile(
     r"HashJoin|SortMergeJoin|BroadcastExchange|Exchange|Window|WholeStageCodegen"
-    r"|Scan parquet|FlatMapCoGroupsInPandas|ArrowEvalPython|MapInPandas"
+    r"|Scan parquet|FlatMapCoGroupsInPandas|FlatMapCoGroupsInArrow|ArrowEvalPython"
+    r"|MapInPandas|MapInArrow"
     r"|CartesianProduct|BroadcastNestedLoopJoin|HashAggregate|Generate"
 )
 

@@ -1,6 +1,8 @@
-"""The CollectLeft k=1 ``nearest`` path (what ``algorithm='auto'`` runs when
-the left side fits the broadcast bounds) against the two exchange-based
-paths, plus its guard fallback, its plan shape and its memo entry.
+"""The three ``nearest`` paths — the CollectLeft index ``algorithm='auto'``
+takes when the left side fits the broadcast bounds, the chunked radius path
+and the exact cogroup — against a brute force written here, plus the
+CollectLeft guard fallback, its plan shape and its memo entry.  All three
+paths share one kernel, so only the brute force is independent of it.
 
 Inputs are single-file parquet: a file-backed frame carries a size estimate,
 so it passes Spark's broadcast rule (a frame built from a Python list has an
@@ -19,6 +21,7 @@ from datafusion_bio_functions_spark.operators import intervals as iv
 
 LSCHEMA = "contig string, pos_start long, pos_end long, name string, score long"
 RSCHEMA = "contig string, pos_start long, pos_end long"
+BIG = (1 << 53) + 1  # the first long a float64 cannot hold
 
 
 def _parquet(spark, base, name, rows, schema) -> DataFrame:
@@ -35,9 +38,35 @@ def _canon(df: DataFrame) -> list:
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
+def _brute(lrows, rrows, k, filter_op, include_overlaps, compute_distance) -> list:
+    """nearest by definition: per probe, every same-contig left row at
+    distance ``max(ls - qe, qs - le, 0)`` on the shrunk probe, ranked by
+    (distance, start, end, input order); no overlap candidates for a strict
+    point probe; NULL coordinates never match."""
+    shrink = 1 if filter_op == "strict" else 0
+    out = []
+    for c, s, e in rrows:
+        ranked = []
+        if None not in (c, s, e):
+            qs, qe = s + shrink, e - shrink
+            for j, row in enumerate(lrows):
+                lc, ls, le = row[:3]
+                if lc != c or ls is None or le is None:
+                    continue
+                d = max(ls - qe, qs - le, 0)
+                if d == 0 and not (include_overlaps and qs <= qe + 1):
+                    continue
+                ranked.append((d, ls, le, j))
+        ranked.sort()
+        for d, *_, j in ranked[:k] or [(None, None)]:
+            left = lrows[j] if d is not None else (None,) * len(lrows[0])
+            dist = (None if d is None else max(d - shrink, 0),) if compute_distance else ()
+            out.append(tuple(left) + (c, s, e) + dist)
+    return sorted(out, key=repr)
+
+
 @pytest.fixture(scope="module")
-def frames(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("nearest_cl")
+def rows():
     rnd = random.Random(11)
     lrows = []
     for contig in ("chr1", "chr2"):
@@ -63,6 +92,21 @@ def frames(spark, tmp_path_factory):
     for c, s, e, *_ in lrows[::12] + lrows[-4:]:
         rrows += [(c, e, e), (c, s, s), (c, e + 1, e + 4), (c, s - 4, s - 1)]
     rrows.append(("chr9", 5, 10))  # contig absent from the left side
+    # NULL contig, start and end on both sides: they never match
+    lrows += [(None, 100, 200, "nc", 7), ("chr1", None, 300, "ns", 8), ("chr1", 300, None, "ne", 9)]
+    rrows += [(None, 100, 200), ("chr1", None, 300), ("chr1", 300, None)]
+    # a long payload a float64 cannot hold; a row far longer than the rest
+    # of its contig; a contig with fewer rows than k; a contig with no probe
+    lrows += [("chr2", 36_000, 36_100, "big", BIG), ("chr2", 36_500, 60_000, "span", 6)]
+    lrows += [("chr3", 100, 200, "c3", 3), ("chr3", 300, 300, None, None), ("chr4", 1, 2, "np", 0)]
+    rrows += [("chr2", 36_050, 36_050), ("chr3", 250, 250), ("chr3", 50, 60), ("chr3", 300, 300)]
+    return lrows, rrows
+
+
+@pytest.fixture(scope="module")
+def frames(spark, tmp_path_factory, rows):
+    base = tmp_path_factory.mktemp("nearest_cl")
+    lrows, rrows = rows
     return (
         _parquet(spark, base, "l", lrows, LSCHEMA),
         _parquet(spark, base, "r", rrows, RSCHEMA),
@@ -72,15 +116,58 @@ def frames(spark, tmp_path_factory):
 @pytest.mark.parametrize("compute_distance", [True, False])
 @pytest.mark.parametrize("include_overlaps", [True, False])
 @pytest.mark.parametrize("filter_op", ["weak", "strict"])
-def test_collect_left_matches_exchange_paths(frames, filter_op, include_overlaps, compute_distance):
+def test_collect_left_matches_exchange_paths(frames, rows, filter_op, include_overlaps, compute_distance):
     l, r = frames
-    kw = dict(k=1, filter_op=filter_op, include_overlaps=include_overlaps,
-              compute_distance=compute_distance)
-    got = bio.nearest(l, r, **kw)
-    assert "MapInArrow" in _plan(got)  # the default took the CollectLeft path
-    want = _canon(bio.nearest(l, r, algorithm="cogroup", **kw))
-    assert _canon(got) == want
-    assert _canon(bio.nearest(l, r, algorithm="radius", **kw)) == want
+    for k in (1, 3):
+        kw = dict(k=k, filter_op=filter_op, include_overlaps=include_overlaps,
+                  compute_distance=compute_distance)
+        want = _brute(*rows, **kw)
+        got = bio.nearest(l, r, **kw)
+        assert "MapInArrow" in _plan(got), k  # the default took the CollectLeft path
+        assert _canon(got) == want, k
+        assert _canon(bio.nearest(l, r, algorithm="cogroup", **kw)) == want, k
+        assert _canon(bio.nearest(l, r, algorithm="radius", **kw)) == want, k
+        # a radius this small sends most probes to the exact fallback
+        assert _canon(bio.nearest(l, r, algorithm="radius", radius=20, **kw)) == want, k
+
+
+PATHS = ["auto", "radius", "cogroup"]
+
+
+def _pin(spark, tmp_path, lrows, rrows, **kw) -> list:
+    l = _parquet(spark, tmp_path, "l", lrows, LSCHEMA)
+    r = _parquet(spark, tmp_path, "r", rrows, RSCHEMA)
+    out = bio.nearest(l, r, **kw)
+    if kw.get("algorithm", "auto") == "auto":
+        assert "MapInArrow" in _plan(out)
+    return out.collect()
+
+
+@pytest.mark.parametrize("algorithm", PATHS)
+def test_pin_null_probe_start_has_no_neighbour(spark, tmp_path, algorithm):
+    got = _pin(spark, tmp_path, [("a", 10, 20, "p", 1)], [("a", None, 20)], algorithm=algorithm)
+    assert [(x.left_name, x.distance) for x in got] == [(None, None)]
+
+
+@pytest.mark.parametrize("algorithm", PATHS)
+def test_pin_null_left_start_is_no_neighbour(spark, tmp_path, algorithm):
+    lrows = [("a", 100, 200, "near", 1), ("a", None, 150, "null", 2), ("a", 500, 600, "far", 3)]
+    got = _pin(spark, tmp_path, lrows, [("a", 250, 260)], k=3, algorithm=algorithm)
+    assert sorted((x.distance, x.left_name) for x in got) == [(50, "near"), (240, "far")]
+
+
+@pytest.mark.parametrize("algorithm", PATHS)
+def test_pin_strict_point_probe_same_first_row_for_every_k(spark, tmp_path, algorithm):
+    """A strict point probe has no overlap candidates, whatever k is: (4,
+    143) straddles (26, 26) but neither ends before nor starts after it."""
+    lrows = [("a", 4, 143, "wide", 1), ("a", 26, 71, "next", 2)]
+    firsts = []
+    for k in (1, 2):
+        got = _pin(spark, tmp_path / f"k{k}", lrows, [("a", 26, 26)], k=k,
+                   filter_op="strict", algorithm=algorithm)
+        firsts.append(min((x.distance, x.left_pos_start) for x in got))
+        assert [x.left_name for x in got] == ["next"]
+    assert firsts[0] == firsts[1] == (0, 26)
 
 
 def test_collect_left_ties_and_absent_contig(frames):
@@ -97,15 +184,16 @@ def test_collect_left_ties_and_absent_contig(frames):
 
 
 def test_collect_left_payload_is_exact(spark, tmp_path):
-    """A nullable long payload above 2^53 comes back exact (a pandas gather
-    would turn the column into float64)."""
+    """A nullable long payload above 2^53 comes back exact from every path
+    (a pandas gather would turn the column into float64)."""
     big = (1 << 60) + 1
     l = _parquet(spark, tmp_path, "l", [("a", 10, 20, "p", big), ("a", 50, 60, None, None)], LSCHEMA)
     r = _parquet(spark, tmp_path, "r", [("a", 12, 12), ("a", 58, 70)], RSCHEMA)
-    out = bio.nearest(l, r)
-    assert "MapInArrow" in _plan(out)
-    got = {x.right_pos_start: (x.left_name, x.left_score, x.distance) for x in out.collect()}
-    assert got == {12: ("p", big, 0), 58: (None, None, 0)}
+    for algorithm in PATHS:
+        out = bio.nearest(l, r, algorithm=algorithm)
+        assert ("MapInArrow" in _plan(out)) == (algorithm == "auto")
+        got = {x.right_pos_start: (x.left_name, x.left_score, x.distance) for x in out.collect()}
+        assert got == {12: ("p", big, 0), 58: (None, None, 0)}, algorithm
 
 
 def test_collect_left_empty_left(spark, tmp_path):
@@ -134,15 +222,15 @@ def test_over_guard_takes_radius_plan(frames, monkeypatch):
     out = bio.nearest(l, r)
     plan = _plan(out)
     assert "MapInArrow" not in plan
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
     assert _canon(out) == want
 
 
 def test_other_settings_keep_radius_plan(spark, frames):
-    """Explicit algorithms, a radius, k > 1 and the session knobs keep the
+    """Explicit algorithms, a radius and the session knobs keep the
     exchange-based plans."""
     l, r = frames
-    for kw in (dict(algorithm="radius"), dict(algorithm="cogroup"), dict(radius=5_000), dict(k=2)):
+    for kw in (dict(algorithm="radius"), dict(algorithm="cogroup"), dict(radius=5_000)):
         assert "MapInArrow" not in _plan(bio.nearest(l, r, **kw)), kw
     for key, val in (("spark.bio.nearest.algorithm", "radius"), ("spark.bio.nearest.radius", "5000")):
         spark.conf.set(key, val)

@@ -41,11 +41,15 @@ def test_binned_overlap_is_equi_join(pq):
 
 def test_column_pruning_reaches_scan(pq):
     l, r = pq
-    out = bio.overlap(l, r).select("left_contig", "right_pos_start")
-    plan = _plan(out)
-    # payload is never read from parquet: every ReadSchema omits it
-    for chunk in plan.split("ReadSchema: ")[1:]:
-        assert "payload" not in chunk.split("\n")[0]
+    for out in (
+        bio.overlap(l, r).select("left_contig", "right_pos_start"),
+        bio.count_overlaps(l, r).select("contig", "count"),
+        bio.coverage(l, r).select("contig", "coverage"),
+    ):
+        plan = _plan(out)
+        # payload is never read from parquet: every ReadSchema omits it
+        for chunk in plan.split("ReadSchema: ")[1:]:
+            assert "payload" not in chunk.split("\n")[0], plan
 
 
 def test_merge_has_no_cartesian_or_smj(pq):
@@ -118,8 +122,9 @@ def test_nearest_radius_no_cartesian(pq):
     plan = _plan(bio.nearest(l, r, algorithm="radius", radius=5000))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # exact fallback rides along as a cogrouped Arrow exchange
-    assert "FlatMapCoGroupsInPandas" in plan
+    # the chunk cells and the exact fallback are cogrouped Arrow exchanges
+    assert "FlatMapCoGroupsInArrow" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
 
 
 def test_overlap_default_collect_left_has_no_exchange(pq):
@@ -133,12 +138,13 @@ def test_overlap_default_collect_left_has_no_exchange(pq):
 
 
 def test_nearest_default_collect_left_has_no_exchange(pq):
-    # k=1 on a left side under the broadcast bounds: one Arrow map over
+    # any k on a left side under the broadcast bounds: one Arrow map over
     # the probes against the broadcast index, no shuffle at all
     l, r = pq
-    plan = _plan(bio.nearest(l, r))
-    assert "Exchange" not in plan
-    assert plan.count("MapInArrow") == 1
+    for k in (1, 3):
+        plan = _plan(bio.nearest(l, r, k=k))
+        assert "Exchange" not in plan, k
+        assert plan.count("MapInArrow") == 1, k
 
 
 def test_depth_chunked_no_join(spark):

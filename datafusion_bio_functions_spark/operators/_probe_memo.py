@@ -1,6 +1,6 @@
 """One memo policy for every auto-knob probe.
 
-Each auto-knob (bin width, chunk width, nearest radius, broadcast fit,
+Each auto-knob (bin width, chunk width, broadcast fit,
 CollectLeft index, exact collapse, depth's alignment probe, ...) decides
 from a bounded eager probe and memoizes the verdict per input plan, so
 repeated builds over the same frames skip the job.  The policy lives here
@@ -68,13 +68,6 @@ class ProbeMemo(dict):
             del self[next(iter(self))]  # the first key is the least recently used
         self[key] = value
         return value
-
-    def peek(self, key_fn: Callable[[], Any]) -> Any:
-        """The memoized verdict for ``key_fn()`` or None; never probes."""
-        try:
-            return self.get(key_fn())
-        except Exception:
-            return None
 
 
 def clear_probe_caches() -> None:

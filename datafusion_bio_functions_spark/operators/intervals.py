@@ -179,15 +179,6 @@ def _coverage_len(ls: str, le: str, rs: str, re_: str, filter_op: str) -> Column
 
 
 _BIN_WIDTH_MEMO = ProbeMemo()
-#: per-session memo of nearest's density-derived max radius (the one eager
-#: aggregate in _nearest_radius construction) — same semantic-plan keying
-#: as the bin-width memo
-_RADIUS_MEMO = ProbeMemo()
-#: nearest-radius fallback-emptiness verdicts: did every probe find k
-#: in-radius candidates?  A deterministic property of (left, right, k,
-#: radius params) — same standard as the other probe memos.  On a hit the
-#: rebuild skips the kernel materialization the emptiness check costs.
-_NEAREST_FB_MEMO = ProbeMemo()
 
 
 def _auto_bin_width(l: DataFrame, ls: str, le: str, r: DataFrame, rs: str, re_: str) -> int:
@@ -1498,14 +1489,17 @@ def _subtract_broadcast(
     sweep the chunked merge runs distributed); every left batch fragments
     in one vectorized sweep (reference cursor semantics, subtract.rs:414-438
     — end-exclusive, no ±1, rows with ls >= le or a NULL start or end emit
-    nothing)."""
+    nothing).  The sweep is an Arrow UDF over the left (contig, start, end)
+    (:func:`_probe_column`) returning each row's fragments, flattened by
+    ``inline``, so a projection after it still prunes the left scan."""
     import numpy as np
     import pyarrow as pa
 
     _, ls, le = lcols
     strict = filter_op != "weak"
     bidx = _collect_index(right.select(*rcols), *rcols)
-    names = left.columns
+    fields = [T.StructField(c, T.LongType(), left.schema[c].nullable) for c in (ls, le)]
+    arrow_fields = [pa.field(f.name, pa.int64(), f.nullable) for f in fields]
 
     def frag(batches):
         for batch, ls_a, le_a, valid, groups in _probe_batches(
@@ -1549,14 +1543,19 @@ def _subtract_broadcast(
             ends.append(le_a[whole])
             rows, starts, ends = (np.concatenate(x) for x in (rows, starts, ends))
             order = np.argsort(rows, kind="stable")  # input row order
-            take = pa.array(rows[order])
-            cols = {ls: pa.array(starts[order]), le: pa.array(ends[order])}
-            yield pa.RecordBatch.from_arrays(
-                [cols[n] if n in cols else batch.column(n).take(take) for n in names],
-                names=names,
+            offsets = np.zeros(batch.num_rows + 1, np.int32)
+            np.cumsum(np.bincount(rows, minlength=batch.num_rows), out=offsets[1:])
+            pieces = pa.StructArray.from_arrays(
+                [pa.array(starts[order]), pa.array(ends[order])], fields=arrow_fields
             )
+            yield pa.ListArray.from_arrays(pa.array(offsets), pieces)
 
-    return left.mapInArrow(frag, left.schema)
+    frag_type = T.ArrayType(T.StructType(fields), False)
+    out = left.select(
+        *[c for c in left.columns if c not in (ls, le)],
+        F.inline(_probe_column(frag, lcols, frag_type)),
+    )
+    return out.select(*left.columns)
 
 
 def subtract(
@@ -1578,10 +1577,11 @@ def subtract(
     are collected through Arrow into the shared per-contig sorted-array
     index (:func:`_collect_index`, the one count_overlaps, coverage and
     nearest use), merged per contig on the worker; left rows fragment in a
-    vectorized ``mapInArrow`` sweep with NO shuffle at all.  Size-guarded:
-    a right side above ``BROADCAST_GUARD_ROWS`` falls back to ``'join'`` —
-    merge(right) → left-outer interval join → per-left-row window walk over
-    the (disjoint, sorted) overlaps emitting the gaps in one explode pass.
+    vectorized Arrow UDF sweep over their coordinates with NO shuffle at
+    all.  Size-guarded: a right side above ``BROADCAST_GUARD_ROWS`` falls
+    back to ``'join'`` — merge(right) → left-outer interval join →
+    per-left-row window walk over the (disjoint, sorted) overlaps emitting
+    the gaps in one explode pass.
     ``merge_algorithm='chunked'`` makes the right-side pre-merge
     shuffle-parallel for huge right tables.  Either way a right row with a
     NULL contig, start or end removes nothing, a left row with a NULL start
@@ -1681,7 +1681,6 @@ def nearest(
     compute_distance: bool = True,
     filter_op: str = "weak",
     algorithm: str = "auto",
-    radius: int | None = None,
 ) -> DataFrame:
     """k nearest *left* intervals for every *right* (probe) row — the
     reference's genomic as-of join (``nearest.rs:29-547``).  Emits one row per
@@ -1696,107 +1695,245 @@ def nearest(
 
     Every path answers with one kernel, :func:`_nearest_k`, over the same
     per-contig (start, end)-sorted arrays as the reference's CoitreesNearest
-    index (``nearest_index.rs:24-120``).
+    index (``nearest_index.rs:24-120``), and every path is exact.
 
-    ``algorithm='auto'`` (default) picks, in order:
-
-    1. the CollectLeft index, for every ``k`` with no ``radius`` argument
-       and no ``spark.bio.nearest.algorithm`` / ``spark.bio.nearest.radius``
-       set, when the left side is under both broadcast bounds (its plan
-       size estimate within ``spark.sql.autoBroadcastJoinThreshold``, its
-       row count within ``BROADCAST_GUARD_ROWS``).  The left side is
-       collected once through Arrow, broadcast as per-contig
-       (start, end)-sorted coordinate arrays plus its payload columns, and
-       every probe batch is answered in one ``mapInArrow`` — the
-       reference's own CollectLeft shape (``nearest.rs:29-547``), with no
-       exchange and no fallback;
-    2. otherwise the chunked radius path (``'radius'`` below);
-    3. inside it, the exact cogroup fallback for every probe the radius
-       window could not settle.
+    ``algorithm='auto'`` (default) takes the CollectLeft index, for every
+    ``k`` with no ``spark.bio.nearest.algorithm`` set, when the left side is
+    under both broadcast bounds (its plan size estimate within
+    ``spark.sql.autoBroadcastJoinThreshold``, its row count within
+    ``BROADCAST_GUARD_ROWS``).  The left side is collected once through
+    Arrow, broadcast as per-contig (start, end)-sorted coordinate arrays
+    plus its payload columns, and every probe batch is answered in one
+    ``mapInArrow`` — the reference's own CollectLeft shape
+    (``nearest.rs:29-547``), with no exchange.  Otherwise it takes
+    ``'radius'``.
 
     ``algorithm='cogroup'``: one cogrouped Arrow group per contig, indexed
-    and probed like the CollectLeft path.  Skewed contigs serialize; kept as
-    the exact fallback path.
+    and probed like the CollectLeft path.  Skewed contigs serialize.
 
-    ``algorithm='radius'``: the 100 TB path — a chunked cogroup.  Each
-    contig is range-partitioned into fixed-width chunks; left rows replicate into every chunk their ±radius margin
-    touches, probes into every chunk their padded span touches, and the
-    same kernel answers each (contig, chunk) cell — parallelism is #chunks
-    (no per-contig skew ceiling) and, unlike a candidate join, dense data
-    does NOT cost one row per overlapping pair.  In-radius results are
-    provably complete across chunks (any candidate at distance ≤ radius
-    shares a chunk with its probe), so probes that find ≥ k in-radius
-    candidates are globally correct; the rest are re-solved exactly through
-    the cogroup path — skipped entirely when the fallback set is provably
-    empty.  Equality with cogroup is property-tested, including
-    forced-fallback radii.
-
-    ``radius=None`` (default) sizes the radius to the LEFT side's density
-    per contig — ``~4k / (intervals per base)`` — so candidate sets stay
-    O(k) regardless of how dense the data is; a fixed radius on dense data
-    would otherwise gather huge candidate sets (all-pairs in the limit).
-    The per-contig stats are one tiny aggregate (#contigs rows).
+    ``algorithm='radius'``: the 100 TB path — a chunked cogroup, exact by
+    construction (see :func:`_nearest_chunked`).  Each contig is cut into
+    fixed-width chunks (:func:`_auto_chunk_width`); a left row goes to every
+    chunk its span touches, a probe to every chunk its own span touches,
+    and each (contig, chunk) cell also receives two side summaries: the k
+    rows ending last among those ending in an earlier chunk, and the k rows
+    starting first among those starting in a later chunk.  The same group
+    function as ``'cogroup'`` answers every cell, and one merge per probe
+    keeps its first k.  Parallelism is #chunks (no per-contig skew
+    ceiling) and, unlike a candidate join, dense data does NOT cost one
+    row per overlapping pair.
     """
     _check_filter_op(filter_op)
     if k < 1:
         raise ValueError("k must be >= 1")
     if algorithm == "auto":
-        from ..session import NEAREST_ALGORITHM_KEY, NEAREST_RADIUS_KEY
+        from ..session import NEAREST_ALGORITHM_KEY
 
-        conf = left.sparkSession.conf
-        configured = conf.get(NEAREST_ALGORITHM_KEY, None)
-        r = conf.get(NEAREST_RADIUS_KEY, None)
-        if radius is None and not r and configured in (None, "", "auto"):
+        configured = left.sparkSession.conf.get(NEAREST_ALGORITHM_KEY, None)
+        if configured in (None, "", "auto"):
             out = _nearest_collect_left(
                 left, right, k, cols_left, cols_right, include_overlaps,
                 compute_distance, filter_op,
             )
             if out is not None:
                 return out
-        # otherwise the shuffle-parallel radius path (VERDICT r2: the
-        # cogroup default ships each contig as ONE Arrow group — a single
-        # task per contig does not scale)
-        algorithm = configured if configured and configured != "auto" else "radius"
-        if r:
-            radius = int(r)
+            # otherwise the shuffle-parallel chunked path (VERDICT r2: the
+            # cogroup ships each contig as ONE Arrow group — a single task
+            # per contig does not scale)
+            algorithm = "radius"
+        else:
+            algorithm = configured
     if algorithm not in ("cogroup", "radius"):
         raise ValueError(f"nearest algorithm must be 'cogroup' or 'radius', got {algorithm!r}")
-    if algorithm == "radius":
-        return _nearest_radius(
-            left, right, k, cols_left, cols_right, include_overlaps,
-            compute_distance, filter_op, radius,
-        )
 
+    left, lcols = _normalize(left, cols_left)
+    right, rcols = _normalize(right, cols_right)
+    shrink = 0 if filter_op == "weak" else 1
+    keyed = right.filter(F.col(rcols[0]).isNotNull())
+    if algorithm == "radius":
+        out = _nearest_chunked(left, keyed, lcols, rcols, k, shrink, include_overlaps)
+    else:
+        lid = left.withColumn("__lid", F.monotonically_increasing_id())
+        out = _nearest_cells(lid, keyed, lcols, rcols, k, shrink, include_overlaps)
+    # a probe with a NULL contig gets its no-neighbour row here, not from a
+    # cogroup: the cogroup compares keys with the left side's key ordering,
+    # which reads a non-nullable left contig as never NULL
+    lonely = right.filter(F.col(rcols[0]).isNull()).select(
+        *[F.lit(None).cast(f.dataType).alias(_LEFT + f.name) for f in left.schema.fields],
+        *[F.col(c).alias(_RIGHT + c) for c in right.columns],
+        F.lit(None).cast(T.LongType()).alias("distance"),
+    )
+    out = out.select(*lonely.columns).unionByName(lonely)
+    if not compute_distance:
+        out = out.drop("distance")
+    return _rawify_strict_distance(out, shrink, compute_distance)
+
+
+def _nearest_cells(
+    left: DataFrame,
+    right: DataFrame,
+    lcols: tuple[str, str, str],
+    rcols: tuple[str, str, str],
+    k: int,
+    shrink: int,
+    include_overlaps: bool,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """The one group function of the exchange :func:`nearest` paths: left
+    and right cogrouped on their contig plus ``keys`` (columns of both
+    frames, not output), each group's left rows indexed in (start, end,
+    ``__lid``) order — ``__lid`` is a left column, the input order — and its
+    probes answered by :func:`_nearest_probe`.  Output: the
+    :func:`_nearest_schema` of the other columns, with the (shrunk)
+    distance."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    left, (lc, ls, le) = _normalize(left, cols_left)
-    right, (rc, rs, re_) = _normalize(right, cols_right)
-    out_schema = _nearest_schema(left, right, compute_distance)
+    _, ls, le = lcols
+    lnames = [c for c in left.columns if c not in keys]
+    rnames = [c for c in right.columns if c not in keys]
+    out_schema = _nearest_schema(left.select(lnames), right.select(rnames), True)
     names = out_schema.fieldNames()
-    lnames = list(left.columns)
-    shrink = 0 if filter_op == "weak" else 1
 
     def probe_group(key, ltab, rtab):
-        # this group's own index, built as _collect_index builds the shared one
+        # this group's own index, built as _collect_index builds the shared
+        # one, with the input order as the last sort key
         ltab = ltab.filter(pc.and_(pc.is_valid(ltab.column(ls)), pc.is_valid(ltab.column(le))))
         starts, ends = ltab.column(ls).to_numpy(), ltab.column(le).to_numpy()
-        order = np.lexsort((ends, starts))  # stable: ties keep group order
-        ltab = ltab.take(order)
-        # a NULL key is in no probe group: NULL contigs match nothing
+        order = np.lexsort((ltab.column("__lid").to_numpy(), ends, starts))
+        # a NULL-contig left group gets no probes (see nearest): it matches nothing
         index = ({key[0].as_py(): (0, len(order))}, starts[order], ends[order], None)
         probes = pa.RecordBatch.from_arrays(
-            [c.combine_chunks() for c in rtab.columns], names=rtab.column_names
+            [rtab.column(c).combine_chunks() for c in rnames], names=rnames
         )
         (arrays,) = _nearest_probe(
-            index, [ltab.column(c) for c in lnames], [probes], (rc, rs, re_),
-            k, shrink, include_overlaps, compute_distance,
+            index, [ltab.column(c).take(order) for c in lnames], [probes], rcols,
+            k, shrink, include_overlaps, True,
         )
         return pa.Table.from_arrays(arrays, names=names)
 
-    out = left.groupBy(lc).cogroup(right.groupBy(rc)).applyInArrow(probe_group, out_schema)
-    return _rawify_strict_distance(out, shrink, compute_distance)
+    lg = left.groupBy(lcols[0], *keys)
+    return lg.cogroup(right.groupBy(rcols[0], *keys)).applyInArrow(probe_group, out_schema)
+
+
+def _nearest_chunked(
+    left: DataFrame,
+    right: DataFrame,
+    lcols: tuple[str, str, str],
+    rcols: tuple[str, str, str],
+    k: int,
+    shrink: int,
+    include_overlaps: bool,
+) -> DataFrame:
+    """The chunked path of :func:`nearest` (``algorithm='radius'``), exact
+    by construction.  With chunk width ``cw``, a left row goes to the
+    chunks ``floor(start/cw)..floor(end/cw)`` and a probe to the chunks its
+    own span covers, clamped to one chunk beyond its contig's left extent
+    (cells past it hold no left rows); a probe with a NULL coordinate or on
+    a contig absent from the left side goes to one cell, which answers it
+    with its no-neighbour row.  Every probe has a contig (see
+    :func:`nearest`).  Each (contig, chunk c) cell also gets two side
+    summaries:
+
+    * B_c: the k left rows first by (end desc, start, lid) among the rows
+      whose end chunk is < c — every one ends before any probe in c;
+    * A_c: the k left rows first by (start, end, lid) among the rows whose
+      start chunk is > c — every one starts after any probe in c.
+
+    A probe's overlapping rows share a chunk with it; its nearest rows
+    before it lie in its first cell or that cell's B_c, those after it in
+    its last cell or that cell's A_c.  Ranked by the same total order, a
+    row among a probe's global first k is also among the first k of any
+    cell holding it, so one merge per probe over its cells' answers —
+    duplicates dropped, first k kept by (distance, start, end, lid), a
+    no-neighbour row kept only when nothing else is — is the exact answer.
+
+    Both summaries are a per-(contig, chunk) ``row_number() <= k`` window
+    (planned as a partial ``WindowGroupLimit`` before its shuffle), then a
+    per-contig ``lag`` of k over those few rows: a row stops serving the
+    cells where k rows rank before it."""
+    lc, ls, le = lcols
+    rc, rs, re_ = rcols
+    cw = float(_auto_chunk_width(left, ls, le))
+
+    def chunk(c: Column) -> Column:
+        return F.floor(c / F.lit(cw))
+
+    lw = left.filter(F.col(lc).isNotNull() & F.col(ls).isNotNull() & F.col(le).isNotNull())
+    lw = lw.withColumns({
+        "__lid": F.monotonically_increasing_id(),
+        "__sc": chunk(F.col(ls)),
+        "__ec": chunk(F.col(le)),
+    })
+    lnames = [*left.columns, "__lid"]
+    cells = lw.select(*lnames, F.explode(F.sequence("__sc", "__ec")).alias("__chunk"))
+    # (chunk column, rank order, step from a row's own chunk to its cells)
+    for c, order, step in (
+        ("__ec", [F.col(le).desc(), F.col(ls), F.col("__lid")], 1),  # B
+        ("__sc", [F.col(ls), F.col(le), F.col("__lid")], -1),  # A
+    ):
+        top = lw.withColumn(
+            "__rk", F.row_number().over(Window.partitionBy(lc, c).orderBy(*order))
+        ).filter(F.col("__rk") <= k)
+        w = Window.partitionBy(lc).orderBy(*order)
+        # a row serves the cells from the one past its own chunk to the
+        # chunk of the row k ahead of it, or to one past the contig's extent
+        # when fewer than k rows rank before it
+        top = top.withColumns({
+            "__near": F.col(c) + step,
+            "__far": F.coalesce(F.lag(c, k).over(w), F.first(c).over(w) + step),
+        })
+        side = top.filter((F.col("__far") - F.col("__near")) * step >= 0).select(
+            *lnames,
+            F.explode(F.sequence("__near", "__far", F.lit(step).cast(T.LongType()))).alias("__chunk"),
+        )
+        cells = cells.unionByName(side)
+
+    ext = lw.groupBy(F.col(lc).alias("__xc")).agg(
+        F.min("__sc").alias("__lo"), F.max("__ec").alias("__hi")
+    )
+
+    def clamp(c: Column) -> Column:
+        return F.least(F.greatest(chunk(c), F.col("__lo") - 1), F.col("__hi") + 1)
+
+    # the probe id is set before the explode, so every cell of a probe has it
+    probes = right.join(F.broadcast(ext), F.col(rc) == F.col("__xc"), "left").withColumn(
+        "__pid", F.monotonically_increasing_id()
+    )
+    placed = F.col("__lo").isNotNull() & F.col(rs).isNotNull() & F.col(re_).isNotNull()
+    # a probe with a NULL coordinate or on a contig absent from the left side
+    # has no neighbour: any one cell answers it with its no-neighbour row
+    span = F.when(
+        placed, F.sequence(clamp(F.least(rs, re_)), clamp(F.greatest(rs, re_)))
+    ).otherwise(F.array(F.coalesce(chunk(F.least(rs, re_)), F.lit(0))))
+    pcells = probes.select(*right.columns, "__pid", F.explode(span).alias("__chunk"))
+
+    # pin the cogroup exchanges (r12): the (contig, chunk) shuffle carries
+    # sub-MB rows at small inputs, so AQE byte-coalescing folds it to ONE
+    # post-shuffle partition and the kernel runs serially; a user
+    # repartition on the cogroup keys satisfies its clustering requirement
+    # (no extra exchange) and is exempt from coalescing.
+    p = left.sparkSession.sparkContext.defaultParallelism
+    res = _nearest_cells(
+        cells.repartition(p, lc, "__chunk"), pcells.repartition(p, rc, "__chunk"),
+        lcols, rcols, k, shrink, include_overlaps, keys=("__chunk",),
+    )
+    lid = _LEFT + "__lid"
+    w = Window.partitionBy(_RIGHT + "__pid").orderBy(
+        F.col(lid).isNull(), "distance", _LEFT + ls, _LEFT + le, lid
+    )
+    # a pair met in two cells comes back twice with the same rank
+    res = res.withColumns({
+        "__rk": F.dense_rank().over(w),
+        "__rn": F.row_number().over(w),
+        "__prev": F.lag(lid).over(w),
+    })
+    return res.filter(
+        F.when(F.col(lid).isNull(), F.col("__rn") == 1).otherwise(
+            (F.col("__rk") <= k) & ~F.col("__prev").eqNullSafe(F.col(lid))
+        )
+    )
 
 
 def _rawify_strict_distance(out: DataFrame, shrink: int, compute_distance: bool) -> DataFrame:
@@ -2014,195 +2151,3 @@ def _nearest_collect_left(
 
     out = right.mapInArrow(probe, out_schema)
     return _rawify_strict_distance(out, shrink, compute_distance)
-
-
-def _nearest_radius(
-    left: DataFrame,
-    right: DataFrame,
-    k: int,
-    cols_left: Sequence[str] | None,
-    cols_right: Sequence[str] | None,
-    include_overlaps: bool,
-    compute_distance: bool,
-    filter_op: str,
-    radius: int | None,
-) -> DataFrame:
-    """Scale path for :func:`nearest` — see its docstring."""
-    if radius is not None and radius < 1:
-        raise ValueError("radius must be >= 1")
-    left, (lc, ls, le) = _normalize(left, cols_left)
-    right, (rc, rs, re_) = _normalize(right, cols_right)
-    shrink = 0 if filter_op == "weak" else 1
-
-    import numpy as np
-    import pyarrow as pa
-
-    rid = right.withColumn("__pid", F.monotonically_increasing_id())
-    if radius is None:
-        # density-derived per-contig radius: ~4k candidates expected per
-        # side of each probe.  One #contigs-row aggregate.
-        stats = left.groupBy(F.col(lc).alias("__sc")).agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(ls).alias("__lo"),
-            F.max(le).alias("__hi"),
-        )
-        stats = stats.select(
-            "__sc",
-            F.greatest(
-                F.lit(1),
-                F.ceil(
-                    (F.col("__hi") - F.col("__lo") + 1) / F.col("__n") * F.lit(4 * k)
-                ),
-            ).cast(T.LongType()).alias("__rad"),
-        )
-
-        def probe_radius() -> int:
-            mx = stats.agg(F.max("__rad")).collect()[0][0]
-            return int(mx) if mx is not None else 1
-
-        max_rad = _RADIUS_MEMO.get_or_probe(
-            lambda: (plan_key(left), lc, ls, le, k, shrink), probe_radius
-        )
-        padded = (
-            rid.join(F.broadcast(stats), F.col(rc) == F.col("__sc"), "left")
-            .drop("__sc")
-            .withColumn("__qs", F.col(rs) - F.col("__rad"))
-            .withColumn("__qe", F.col(re_) + F.col("__rad"))
-        )  # contigs absent from the left side get NULL pads → exact fallback
-    else:
-        max_rad = radius
-        padded = (
-            rid.withColumn("__rad", F.lit(radius).cast(T.LongType()))
-            .withColumn("__qs", F.col(rs) - F.lit(radius))
-            .withColumn("__qe", F.col(re_) + F.lit(radius))
-        )
-
-    # ── chunked cogroup: range-partition each contig into fixed-width
-    # chunks, replicate left rows into every chunk their ±radius margin
-    # touches, and run the nearest kernel (_nearest_k) per (contig, chunk)
-    # cell.  Unlike a candidate join, dense data costs binary searches per
-    # probe instead of one row per overlapping pair — and unlike
-    # the plain cogroup, parallelism is #chunks, not #contigs. ──
-    cw = min(max(20_000, 4 * max_rad), 50_000_000)
-    lid = left.withColumn("__lid", F.monotonically_increasing_id())
-    lch = lid.select(
-        F.col(lc).alias("__kc"), F.col(ls), F.col(le), "__lid",
-        F.explode(
-            F.sequence(
-                F.floor((F.col(ls) - F.lit(max_rad)) / F.lit(float(cw))).cast(T.LongType()),
-                F.floor((F.col(le) + F.lit(max_rad)) / F.lit(float(cw))).cast(T.LongType()),
-            )
-        ).alias("__chunk"),
-    )
-    # a NULL contig matches nothing: such probes go to the exact fallback
-    pch = padded.filter(F.col("__qs").isNotNull() & F.col(rc).isNotNull()).select(
-        F.col(rc).alias("__kc"), F.col(rs), F.col(re_), "__pid",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("__qs") / F.lit(float(cw))).cast(T.LongType()),
-                F.floor(F.col("__qe") / F.lit(float(cw))).cast(T.LongType()),
-            )
-        ).alias("__chunk"),
-    )
-
-    def kernel(ltab, rtab):
-        starts, ends, lids = (ltab.column(c).to_numpy() for c in (ls, le, "__lid"))
-        # ranked as the top-k window below ranks: (distance, start, end, lid)
-        order = np.lexsort((lids, ends, starts))
-        starts, ends, lids = starts[order], ends[order], lids[order]
-        qs, qe, pids = (rtab.column(c).to_numpy() for c in (rs, re_, "__pid"))
-        p, i, d = _nearest_k(_k1_index(starts, ends), qs + shrink, qe - shrink, k, include_overlaps)
-        return pa.table(
-            {"pid": pids[p], "lid": lids[i], "dist": d, "s": starts[i], "e": ends[i]}
-        )
-
-    # pin the cogroup exchanges (r12): the (contig, chunk) shuffle carries
-    # sub-MB rows at small inputs, so AQE byte-coalescing folds it to ONE
-    # post-shuffle partition and the kernel runs serially; a
-    # user repartition on the cogroup keys satisfies its clustering
-    # requirement (no extra exchange) and is exempt from coalescing.
-    _p = lch.sparkSession.sparkContext.defaultParallelism
-    res = (
-        lch.repartition(_p, "__kc", "__chunk")
-        .groupBy("__kc", "__chunk")
-        .cogroup(pch.repartition(_p, "__kc", "__chunk").groupBy("__kc", "__chunk"))
-        .applyInArrow(kernel, "pid long, lid long, dist long, s long, e long")
-    )
-    # a pair met in two chunks is emitted twice with identical values.
-    # Dedup AND the top-k window share ONE pid-partitioned exchange (r12):
-    # hash-partitioning by pid co-locates every duplicate tuple, so the
-    # dropDuplicates aggregate needs no exchange of its own, and its output
-    # keeps the pid partitioning the row_number window below requires —
-    # the former res.distinct() + window pair planned two exchanges.
-    res = res.repartition(_p, "pid").dropDuplicates()
-    # correctness rule: only candidates within the probe's radius are
-    # provably complete across chunks; farther results go to the fallback
-    prad = padded.select(F.col("__pid").alias("pid"), "__rad")
-    res = res.join(prad, "pid").filter(F.col("dist") <= F.col("__rad"))
-
-    def fb_key():
-        return (
-            plan_key(left), lc, ls, le, plan_key(right), rc, rs, re_,
-            k, include_overlaps, filter_op, radius, shrink,
-        )
-
-    # persist only when the bounded fallback probe below will actually run
-    # (memo miss) — on a memoized fb_empty=True replay the probe is
-    # skipped, the fallback branch is dead, and the only duplicate work
-    # the cache would save is the post-shuffle top-k window over the small
-    # result set (the expensive kernel sits above the distinct exchange,
-    # which IS reused).  The unconditional persist cost a CacheManager
-    # registration per build plus a cache write of every partition per run.
-    fb_known_empty = _NEAREST_FB_MEMO.peek(fb_key) is True
-    wk = Window.partitionBy("pid").orderBy("dist", "s", "e", "lid")
-    topk = res.withColumn("__rk", F.row_number().over(wk)).filter(F.col("__rk") <= k)
-    if not fb_known_empty:
-        topk = topk.persist()
-    counts = topk.groupBy("pid").agg(F.count(F.lit(1)).alias("__n"))
-    solved_pids = counts.filter(F.col("__n") >= k).select(F.col("pid").alias("__pid"))
-    winners = topk.join(
-        solved_pids, topk["pid"] == solved_pids["__pid"], "left_semi"
-    ).select(F.col("pid").alias("__pid"), F.col("lid").alias("__lid"),
-             F.col("dist").alias("__dist"))
-
-    out_cols = (
-        [F.col("__l_" + c).alias(_LEFT + c) for c in left.columns]
-        + [F.col(c).alias(_RIGHT + c) for c in right.columns]
-    )
-    if compute_distance:
-        out_cols.append(F.col("__dist").cast(T.LongType()).alias("distance"))
-    lpay = lid.select(
-        F.col("__lid"), *[F.col(c).alias("__l_" + c) for c in left.columns]
-    )
-    solved = winners.join(lpay, "__lid").join(rid, "__pid").select(*out_cols)
-
-    # fallback: probes with < k in-radius candidates (incl. zero) — exact.
-    # The kernel result is cached, so checking for an EMPTY fallback costs
-    # one bounded probe; when nothing fell through (the common dense case)
-    # the full-left fallback cogroup is skipped entirely — at scale that is
-    # a whole extra scan+sort of the left table.
-    import weakref
-
-    fb_probes = rid.join(solved_pids, "__pid", "left_anti").drop("__pid")
-    # the radius kernel emits shrunk-coordinate distances; the cogroup
-    # fallback already rawifies its own, so adjust only the solved side
-    solved = _rawify_strict_distance(solved, shrink, compute_distance)
-    if _NEAREST_FB_MEMO.get_or_probe(fb_key, lambda: fb_probes.limit(1).count() == 0):
-        out = solved
-    else:
-        fallback = nearest(
-            left, fb_probes, k=k, cols_left=(lc, ls, le), cols_right=(rc, rs, re_),
-            include_overlaps=include_overlaps, compute_distance=compute_distance,
-            filter_op=filter_op, algorithm="cogroup",
-        )
-        out = solved.unionByName(fallback)
-    if not fb_known_empty:
-        weakref.finalize(out, _unpersist_quietly, topk)
-    return out
-
-
-def _unpersist_quietly(df: DataFrame) -> None:
-    try:
-        df.unpersist(False)
-    except Exception:  # session already stopped
-        pass

@@ -25,10 +25,9 @@ INTERVAL_JOIN_ALGORITHM_KEY = "spark.bio.intervalJoin.algorithm"
 INTERVAL_JOIN_BIN_WIDTH_KEY = "spark.bio.intervalJoin.binWidth"
 #: Nearest-join strategy (the reference selects its nearest index through
 #: the same ``SET bio.interval_join_algorithm`` knob, ``README.md:456-469``).
-#: Values: ``auto | cogroup | radius``.
+#: Values: ``auto | cogroup | radius`` — ``radius`` names the exact chunked
+#: cogroup (the name predates it; no search radius is involved).
 NEAREST_ALGORITHM_KEY = "spark.bio.nearest.algorithm"
-#: Search radius for the ``radius`` nearest strategy.
-NEAREST_RADIUS_KEY = "spark.bio.nearest.radius"
 #: merge/cluster sweep strategy for ``algorithm='auto'``: window | chunked.
 SWEEP_ALGORITHM_KEY = "spark.bio.sweep.algorithm"
 

@@ -52,7 +52,7 @@ SHOW = [
 KEEP = re.compile(
     r"HashJoin|SortMergeJoin|BroadcastExchange|Exchange|Window|WholeStageCodegen"
     r"|Scan parquet|FlatMapCoGroupsInPandas|FlatMapCoGroupsInArrow|ArrowEvalPython"
-    r"|MapInPandas|MapInArrow"
+    r"|MapInPandas|MapInArrow|InMemoryTableScan|InMemoryRelation"
     r"|CartesianProduct|BroadcastNestedLoopJoin|HashAggregate|Generate"
 )
 

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import datafusion_bio_functions_spark as bio
+from datafusion_bio_functions_spark.operators import intervals as iv
 from datafusion_bio_functions_spark.plans import oracle as osql
 from tests.conftest import COLS, assert_frames_match
 
@@ -463,11 +464,12 @@ def test_cluster_chunked_equals_window(spark):
         bio.cluster(df, algorithm="quantum")
 
 
-def test_nearest_radius_equals_cogroup(spark):
-    """The radius (100 TB) nearest path — padded binned join + top-k window
-    + exact fallback — must reproduce the cogroup path for k=1/k=3,
-    weak/strict, with/without overlaps, including a radius small enough to
-    force the fallback for most probes."""
+def test_nearest_radius_equals_cogroup(spark, monkeypatch):
+    """The radius (100 TB) nearest path — a chunked cogroup with per-chunk
+    side summaries and one per-probe merge — must reproduce the cogroup
+    path for k=1/k=3, weak/strict, with/without overlaps, at the probed
+    chunk width and at one narrow enough to spread most probes over
+    several cells."""
     import random as _r
 
     rnd = _r.Random(23)
@@ -493,16 +495,17 @@ def test_nearest_radius_equals_cogroup(spark):
                 bio.nearest(l, r, k=k, filter_op=fo, include_overlaps=ov,
                             algorithm="cogroup")
             )
-            for rad in (100_000, 700):  # 700 forces fallback for sparse probes
-                got = canon(
-                    bio.nearest(l, r, k=k, filter_op=fo, include_overlaps=ov,
-                                algorithm="radius", radius=rad)
-                )
-                assert got == want, (k, fo, ov, rad)
+            for cw in (None, 700):  # None: the probed width
+                with monkeypatch.context() as m:
+                    if cw:
+                        m.setattr(iv, "_auto_chunk_width", lambda *a: cw)
+                    got = canon(
+                        bio.nearest(l, r, k=k, filter_op=fo, include_overlaps=ov,
+                                    algorithm="radius")
+                    )
+                assert got == want, (k, fo, ov, cw)
     with pytest.raises(ValueError):
         bio.nearest(l, r, algorithm="psychic")
-    with pytest.raises(ValueError):
-        bio.nearest(l, r, algorithm="radius", radius=0)
 
 
 def test_nearest_session_config(spark, reads, targets):
@@ -512,7 +515,6 @@ def test_nearest_session_config(spark, reads, targets):
     want = sorted(map(repr, bio.nearest(reads, targets).collect()))
     try:
         spark.conf.set("spark.bio.nearest.algorithm", "radius")
-        spark.conf.set("spark.bio.nearest.radius", "5000")
         got = sorted(map(repr, bio.nearest(reads, targets).collect()))
         assert got == want
         spark.conf.set("spark.bio.nearest.algorithm", "psychic")
@@ -520,7 +522,6 @@ def test_nearest_session_config(spark, reads, targets):
             bio.nearest(reads, targets)
     finally:
         spark.conf.unset("spark.bio.nearest.algorithm")
-        spark.conf.unset("spark.bio.nearest.radius")
 
 
 def test_complement_subtract_chunked_merge(spark, reads, targets, merge_input):
@@ -536,27 +537,28 @@ def test_complement_subtract_chunked_merge(spark, reads, targets, merge_input):
     )
 
 
-def test_partition_invariance_scale_paths(spark, merge_input, reads, targets):
+def test_partition_invariance_scale_paths(spark, merge_input, reads, targets, monkeypatch):
     """Partition-count invariance for the chunked/radius scale paths."""
 
     def canon(df):
         return sorted(map(repr, df.collect()))
 
+    monkeypatch.setattr(iv, "_auto_chunk_width", lambda *a: 4_000)
     base_cl = canon(bio.cluster(merge_input, algorithm="chunked", chunk_width=5_000))
-    base_nr = canon(bio.nearest(reads, targets, algorithm="radius", radius=4_000))
+    base_nr = canon(bio.nearest(reads, targets, algorithm="radius"))
     for n in (1, 4, 16):
         assert canon(
             bio.cluster(merge_input.repartition(n), algorithm="chunked", chunk_width=5_000)
         ) == base_cl
         assert canon(
             bio.nearest(reads.repartition(n), targets.repartition(max(1, n // 2)),
-                        algorithm="radius", radius=4_000)
+                        algorithm="radius")
         ) == base_nr
 
 
 def test_nearest_radius_auto_density(spark, reads, targets):
-    """radius=None sizes per-contig search radii from left-side density;
-    results equal the exact path, probes on left-absent contigs fall back."""
+    """The radius path at its probed chunk width equals the exact path;
+    a probe on a left-absent contig gets its NULL row."""
     r_extra = targets.unionByName(
         spark.createDataFrame([("chrUn", 5, 9)], targets.schema)
     )
@@ -624,9 +626,9 @@ def test_interval_join_non_inner_binned_equals_sql(spark, reads, targets, how):
         assert got.filter(F.col("right_contig").isNull()).count() == n_unmatched
 
 
-def test_nearest_radius_long_intervals_and_chunk_edges(spark):
+def test_nearest_radius_long_intervals_and_chunk_edges(spark, monkeypatch):
     """Chunked radius nearest with intervals far longer than the chunk
-    width, probes exactly on chunk boundaries, and a fixed radius — all
+    width, probes exactly on chunk boundaries, and fixed chunk widths — all
     must match the exact cogroup path."""
     lrows = [
         ("chr1", 1, 500_000, "span"),       # spans many 20k chunks
@@ -648,9 +650,12 @@ def test_nearest_radius_long_intervals_and_chunk_edges(spark):
 
     for k in (1, 2):
         want = canon(bio.nearest(l, r, k=k, algorithm="cogroup"))
-        for rad in (None, 1000, 10_000_000):
-            got = canon(bio.nearest(l, r, k=k, algorithm="radius", radius=rad))
-            assert got == want, (k, rad)
+        for cw in (None, 1000, 20_000):  # None: the probed width
+            with monkeypatch.context() as m:
+                if cw:
+                    m.setattr(iv, "_auto_chunk_width", lambda *a: cw)
+                got = canon(bio.nearest(l, r, k=k, algorithm="radius"))
+            assert got == want, (k, cw)
 
 
 def test_sweep_session_config(spark, merge_input):

@@ -1,8 +1,9 @@
 """The three ``nearest`` paths — the CollectLeft index ``algorithm='auto'``
-takes when the left side fits the broadcast bounds, the chunked radius path
-and the exact cogroup — against a brute force written here, plus the
-CollectLeft guard fallback, its plan shape and its memo entry.  All three
-paths share one kernel, so only the brute force is independent of it.
+takes when the left side fits the broadcast bounds, the chunked
+``algorithm='radius'`` path and the per-contig cogroup — against a brute
+force written here, plus the CollectLeft guard fallback, its plan shape and
+its memo entry, and the chunked path's build.  All three paths share one
+kernel, so only the brute force is independent of it.
 
 Inputs are single-file parquet: a file-backed frame carries a size estimate,
 so it passes Spark's broadcast rule (a frame built from a Python list has an
@@ -116,7 +117,9 @@ def frames(spark, tmp_path_factory, rows):
 @pytest.mark.parametrize("compute_distance", [True, False])
 @pytest.mark.parametrize("include_overlaps", [True, False])
 @pytest.mark.parametrize("filter_op", ["weak", "strict"])
-def test_collect_left_matches_exchange_paths(frames, rows, filter_op, include_overlaps, compute_distance):
+def test_collect_left_matches_exchange_paths(
+    frames, rows, monkeypatch, filter_op, include_overlaps, compute_distance
+):
     l, r = frames
     for k in (1, 3):
         kw = dict(k=k, filter_op=filter_op, include_overlaps=include_overlaps,
@@ -127,8 +130,97 @@ def test_collect_left_matches_exchange_paths(frames, rows, filter_op, include_ov
         assert _canon(got) == want, k
         assert _canon(bio.nearest(l, r, algorithm="cogroup", **kw)) == want, k
         assert _canon(bio.nearest(l, r, algorithm="radius", **kw)) == want, k
-        # a radius this small sends most probes to the exact fallback
-        assert _canon(bio.nearest(l, r, algorithm="radius", radius=20, **kw)) == want, k
+        # chunks this narrow spread most rows and probes over many cells
+        with monkeypatch.context() as m:
+            m.setattr(iv, "_auto_chunk_width", lambda *a: 20)
+            assert _canon(bio.nearest(l, r, algorithm="radius", **kw)) == want, k
+
+
+@pytest.fixture(scope="module")
+def chunk_frames(spark, tmp_path_factory):
+    """Small coordinates, so a chunk width of 1 to 100 cuts each contig into
+    ~10 to ~800 chunks."""
+    rnd = random.Random(5)
+    lrows = []
+    # chr1: two clusters with empty chunks between them
+    for lo in (20, 400):
+        for _ in range(10):
+            s = rnd.randrange(lo, lo + 60)
+            lrows.append(("chr1", s, s + rnd.randrange(0, 25), rnd.choice(["a", None]),
+                          rnd.randrange(50)))
+    # equal-end and equal-start ties, and an exact duplicate interval
+    lrows += [("chr1", 200, 230, "t1", 1), ("chr1", 210, 230, "t2", 2),
+              ("chr1", 210, 240, "t3", 3), ("chr1", 210, 230, "t4", 4)]
+    # chr2: a contig-long row among short ones, and a payload above 2^53
+    lrows += [("chr2", 0, 600, "long", 5), ("chr2", 310, 320, "big", BIG)]
+    lrows += [("chr2", s, s + 3, None, s) for s in (50, 52, 300, 590)]
+    lrows += [(None, 100, 200, "nc", 7), ("chr1", None, 300, "ns", 8), ("chr1", 300, None, "ne", 9)]
+    rrows = [
+        ("chr1", 1, 3), ("chr2", 0, 0),  # before every left row of the contig
+        ("chr1", 700, 710), ("chr2", 700, 800),  # after every left row
+        ("chr1", 10, 690), ("chr2", 100, 500),  # spanning many chunks
+        ("chr1", 150, 160), ("chr1", 300, 390),  # in the empty gap
+        ("chr1", 230, 230), ("chr1", 210, 210), ("chr1", 209, 209), ("chr1", 241, 250),
+        ("chr2", 305, 305),
+        ("chr9", 5, 10),  # contig absent from the left side
+        (None, 100, 200), ("chr1", None, 300), ("chr1", 300, None),
+    ]
+    for _ in range(25):
+        s = rnd.randrange(0, 700)
+        rrows.append((rnd.choice(["chr1", "chr2"]), s, s + rnd.randrange(0, 40)))
+    base = tmp_path_factory.mktemp("nearest_chunks")
+    return (
+        lrows, rrows,
+        _parquet(spark, base, "l", lrows, LSCHEMA), _parquet(spark, base, "r", rrows, RSCHEMA),
+    )
+
+
+@pytest.mark.parametrize("width", [1, 4, 25, 100])
+def test_radius_matches_brute_force_for_any_chunk_width(spark, chunk_frames, monkeypatch, width):
+    """The chunked path is exact whatever the chunk width: every k from 1 to
+    5, weak and strict, with and without overlaps, against the brute force.
+    The 20 answers of one width are collected as one union."""
+    from pyspark.sql import functions as F
+
+    lrows, rrows, l, r = chunk_frames
+    monkeypatch.setattr(iv, "_auto_chunk_width", lambda *a: width)
+    configs = [(k, fo, ov) for k in range(1, 6) for fo in ("weak", "strict") for ov in (True, False)]
+    outs = [
+        bio.nearest(l, r, k=k, filter_op=fo, include_overlaps=ov, algorithm="radius")
+        .withColumn("__cfg", F.lit(j))
+        for j, (k, fo, ov) in enumerate(configs)
+    ]
+    union = outs[0]
+    for o in outs[1:]:
+        union = union.unionByName(o)
+    got = {j: [] for j in range(len(configs))}
+    for row in union.collect():
+        got[row["__cfg"]].append(tuple(row)[:-1])
+    for j, (k, fo, ov) in enumerate(configs):
+        want = _brute(lrows, rrows, k, fo, ov, True)
+        assert sorted(got[j], key=repr) == want, (width, k, fo, ov)
+
+
+def test_radius_build_runs_one_job_and_plans_one_cogroup(spark, frames):
+    """With a cold memo, building the chunked path runs one Spark job, the
+    chunk-width probe (adaptive execution off, so one action is one job),
+    and plans one cogroup and no cached relation."""
+    l, r = frames
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    iv.clear_probe_caches()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("nearest-build", "nearest build")
+    try:
+        out = bio.nearest(l, r, algorithm="radius")
+        jobs = sc.statusTracker().getJobIdsForGroup("nearest-build")
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(jobs) <= 1, jobs
+    plan = _plan(out)
+    assert "InMemoryRelation" not in plan
+    assert plan.count("FlatMapCoGroupsInArrow") == 1
 
 
 PATHS = ["auto", "radius", "cogroup"]
@@ -168,6 +260,22 @@ def test_pin_strict_point_probe_same_first_row_for_every_k(spark, tmp_path, algo
         firsts.append(min((x.distance, x.left_pos_start) for x in got))
         assert [x.left_name for x in got] == ["next"]
     assert firsts[0] == firsts[1] == (0, 26)
+
+
+@pytest.mark.parametrize("algorithm", ["radius", "cogroup"])
+def test_pin_null_probe_contig_against_required_left_contig(spark, algorithm):
+    """A NULL-contig probe gets its no-neighbour row even when the left
+    contig column is non-nullable (a cogroup on a NULL key would compare it
+    as never NULL)."""
+    from pyspark.sql import types as T
+
+    req = T.StructType([T.StructField(c, t, False) for c, t in (
+        ("contig", T.StringType()), ("pos_start", T.LongType()), ("pos_end", T.LongType()))])
+    l = spark.createDataFrame([("a", 10, 20), ("b", 5, 6)], req)
+    r = spark.createDataFrame([(None, 1, 2), ("a", 30, 40), ("b", 1, 1)], RSCHEMA)
+    got = sorted((x.right_contig or "", x.left_pos_start, x.distance)
+                 for x in bio.nearest(l, r, algorithm=algorithm).collect())
+    assert got == [("", None, None), ("a", 10, 10), ("b", 5, 4)]
 
 
 def test_collect_left_ties_and_absent_contig(frames):
@@ -227,17 +335,17 @@ def test_over_guard_takes_radius_plan(frames, monkeypatch):
 
 
 def test_other_settings_keep_radius_plan(spark, frames):
-    """Explicit algorithms, a radius and the session knobs keep the
-    exchange-based plans."""
+    """Explicit algorithms and the session knob keep the exchange-based
+    plans."""
     l, r = frames
-    for kw in (dict(algorithm="radius"), dict(algorithm="cogroup"), dict(radius=5_000)):
+    for kw in (dict(algorithm="radius"), dict(algorithm="cogroup")):
         assert "MapInArrow" not in _plan(bio.nearest(l, r, **kw)), kw
-    for key, val in (("spark.bio.nearest.algorithm", "radius"), ("spark.bio.nearest.radius", "5000")):
-        spark.conf.set(key, val)
+    for val in ("radius", "cogroup"):
+        spark.conf.set("spark.bio.nearest.algorithm", val)
         try:
-            assert "MapInArrow" not in _plan(bio.nearest(l, r)), key
+            assert "MapInArrow" not in _plan(bio.nearest(l, r)), val
         finally:
-            spark.conf.unset(key)
+            spark.conf.unset("spark.bio.nearest.algorithm")
 
 
 def test_clear_probe_caches_drops_nearest_index(frames):

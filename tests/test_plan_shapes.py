@@ -45,6 +45,7 @@ def test_column_pruning_reaches_scan(pq):
         bio.overlap(l, r).select("left_contig", "right_pos_start"),
         bio.count_overlaps(l, r).select("contig", "count"),
         bio.coverage(l, r).select("contig", "coverage"),
+        bio.subtract(l, r).select("contig", "pos_start", "pos_end"),
     ):
         plan = _plan(out)
         # payload is never read from parquet: every ReadSchema omits it
@@ -117,13 +118,16 @@ def test_cluster_chunked_no_cartesian(pq):
     assert "HashJoin" in plan or "SortMergeJoin" in plan
 
 
-def test_nearest_radius_no_cartesian(pq):
+def test_nearest_radius_no_cartesian(pq, monkeypatch):
+    from datafusion_bio_functions_spark.operators import intervals as iv
+
     l, r = pq
-    plan = _plan(bio.nearest(l, r, algorithm="radius", radius=5000))
+    monkeypatch.setattr(iv, "_auto_chunk_width", lambda *a: 500)  # 20 chunks
+    plan = _plan(bio.nearest(l, r, algorithm="radius"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # the chunk cells and the exact fallback are cogrouped Arrow exchanges
-    assert "FlatMapCoGroupsInArrow" in plan
+    # the (contig, chunk) cells are one cogrouped Arrow exchange
+    assert plan.count("FlatMapCoGroupsInArrow") == 1
     assert "FlatMapCoGroupsInPandas" not in plan
 
 

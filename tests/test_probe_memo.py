@@ -23,17 +23,15 @@ def test_key_failure_probes_without_storing():
     assert memo.get_or_probe(bad_key, probe) == 1
     assert memo.get_or_probe(bad_key, probe) == 2  # no memo: probed again
     assert memo == {}
-    assert memo.peek(bad_key) is None
 
 
 def test_hit_skips_the_probe_and_bound_evicts_lru():
     memo = ProbeMemo()
     assert memo.get_or_probe(lambda: "a", lambda: 1, bound=2) == 1
     assert memo.get_or_probe(lambda: "a", lambda: 99, bound=2) == 1  # hit
-    assert memo.peek(lambda: "a") == 1
     memo.get_or_probe(lambda: "b", lambda: 2, bound=2)
     assert memo == {"a": 1, "b": 2}
-    # a hit makes "a" the most recently used entry (peek does not) ...
+    # a hit makes "a" the most recently used entry ...
     assert memo.get_or_probe(lambda: "a", lambda: 99, bound=2) == 1
     # ... so at the bound the oldest entry, "b", goes and "a" stays
     assert memo.get_or_probe(lambda: "c", lambda: 3, bound=2) == 3

@@ -204,7 +204,52 @@ def lookup_variants(
 
     Output: all VCF columns + selected cache columns (nullable) +
     ``matched`` boolean.
+
+    ``vcf`` is read twice (the probe, the unmatched-row restore), and the
+    two reads are matched on a ``monotonically_increasing_id`` row id:
+    every read must return the same rows in the same partitions and order.
+    A file scan does; a frame whose plan ends in a shuffle (a join, an
+    aggregate, a ``distinct``) may not, and should be written out or
+    checkpointed first.
     """
+    rows, hits, columns = _lookup(
+        vcf, cache, columns, match_mode, extended_probes, broadcast_vcf,
+        filter_op, allowed_failed, chrom_normalize,
+    )
+    # Python UDFs cannot sit in an outer-join ON clause: the probe is an
+    # INNER join, and the left join on the row id restores unmatched rows
+    joined = rows.join(hits, "__vid", "left")
+    return joined.select(
+        *vcf.columns, *columns,
+        F.coalesce(F.col("matched"), F.lit(False)).alias("matched"),
+    )
+
+
+def _lookup(
+    vcf: DataFrame,
+    cache: DataFrame,
+    columns: Sequence[str] | None = None,
+    match_mode: str = "exact",
+    extended_probes: bool = False,
+    broadcast_vcf: bool | None = None,
+    filter_op: str | None = None,
+    allowed_failed: int = 0,
+    chrom_normalize: bool | None = None,
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """The known-variant probe behind :func:`lookup_variants`.
+
+    Returns ``(rows, hits, columns)``.  ``rows`` is the VCF with a row id
+    ``__vid``, the VEP-normalized coordinates ``__vstart``/``__vend`` and
+    the VEP-minimized alt ``__vep_alt`` (column pruning drops whichever a
+    consumer does not read).  ``hits`` has one row per (VCF row, matching
+    cache record): ``__vid``, ``__vep_alt``, the projected cache
+    ``columns`` and ``matched``; a VCF row without a match has none.
+
+    Each consumer of ``rows`` scans ``vcf`` again, and the id is the row's
+    position in its input partition: the ids agree across consumers only
+    if every read of ``vcf`` returns the same rows in the same partitions
+    and order.  A file scan does; a frame whose plan ends in a shuffle
+    (a join, an aggregate, a ``distinct``) may not."""
     _check_contract(vcf, VCF_REQUIRED, "vcf")
     _check_contract(cache, CACHE_REQUIRED, "cache")
     if match_mode not in ("exact", "relaxed"):
@@ -231,12 +276,16 @@ def lookup_variants(
     if "allele_string" not in internal_cols:
         internal_cols.append("allele_string")
 
+    # ONE projection: the Arrow UDFs fuse into one ArrowEvalPython pass, and
+    # the nondeterministic id keeps the filters the optimizer infers from
+    # the join keys (isnotnull(__vstart)) above it, so no UDF runs twice
+    start = F.col("start").cast("long")
     v = vcf.select(
         "*",
-        vep_norm_start_udf(F.col("start").cast("long"), F.col("ref"), F.col("alt")).alias(
-            "__vstart"
-        ),
-        vep_norm_end_udf(F.col("start").cast("long"), F.col("ref"), F.col("alt")).alias("__vend"),
+        F.monotonically_increasing_id().alias("__vid"),
+        vep_norm_start_udf(start, F.col("ref"), F.col("alt")).alias("__vstart"),
+        vep_norm_end_udf(start, F.col("ref"), F.col("alt")).alias("__vend"),
+        _vep_alt_expr().alias("__vep_alt"),
     )
     c = cache.select(
         F.col("chrom").alias("__c_chrom"),
@@ -308,28 +357,26 @@ def lookup_variants(
             F.col("__c_end") == F.col("__vend")
         )
 
-    # Python UDFs cannot sit in an outer-join ON clause: probe with an INNER
-    # join (+ UDF post-filter, which Catalyst pushes under the join output),
-    # then restore unmatched VCF rows by left-joining hits back on a row id.
-    v = v.withColumn("__vid", F.monotonically_increasing_id())
     if broadcast_vcf is None:
         # the memoized bounded row probe: every annotate_vep build re-asks
         # it for the same VCF plan (measured r11: 0.16 s per unmemoized job)
         from . import intervals
 
         broadcast_vcf = intervals._fits_broadcast(vcf, VCF_BROADCAST_GUARD_ROWS)
+    # the allele UDF is a post-filter of the INNER probe join (Catalyst
+    # pushes it under the join output)
     probe = F.broadcast(v) if broadcast_vcf else v
     hits = (
         probe.join(c, chrom_eq & coord, "inner")
         .filter(allele_ok)
-        .select("__vid", *[F.col(f"__c_{x}").alias(x) for x in columns])
-        .withColumn("matched", F.lit(True))
+        .select(
+            "__vid",
+            "__vep_alt",
+            *[F.col(f"__c_{x}").alias(x) for x in columns],
+            F.lit(True).alias("matched"),
+        )
     )
-    joined = v.join(hits, "__vid", "left")
-    out_cols = [*vcf.columns] + list(columns) + [
-        F.coalesce(F.col("matched"), F.lit(False)).alias("matched")
-    ]
-    return joined.select(*out_cols)
+    return v, hits, columns
 
 
 #: Severity-ranked Sequence Ontology terms — single source of truth lives in
@@ -1097,7 +1144,15 @@ def annotate_vep(
 
     Output: VCF columns + ``CSQ`` (comma-joined per-transcript entries
     ``Allele|Consequence|IMPACT|SYMBOL|Gene|Feature|HGVSc|HGVSp``) +
-    ``most_severe_consequence`` + ``existing_variation``.
+    ``most_severe_consequence`` + ``existing_variation``; one row per
+    (VCF row, matching cache record), a VCF row without a match once.
+
+    ``vcf`` is read more than once (the cache lookup, the transcript
+    pairing, each context-feature arm), and the reads are matched on a
+    ``monotonically_increasing_id`` row id: every read must return the
+    same rows in the same partitions and order.  A file scan does; a frame
+    whose plan ends in a shuffle (a join, an aggregate, a ``distinct``)
+    may not, and should be written out or checkpointed first.
     """
     engine = resolve_engine(engine, transcripts)
     if engine == "codon":
@@ -1114,13 +1169,13 @@ def annotate_vep(
             # buffer-local transcript set before the engine runs
             # (apply_buffer_local_hgnc_propagation) — region-scoped here
             transcripts = propagate_gene_hgnc(transcripts)
-        looked = lookup_variants(
+        rows, hits, columns = _lookup(
             vcf, cache, match_mode=match_mode, extended_probes=extended_probes,
             allowed_failed=allowed_failed,
         )
         vep_csq_fields(csq_mode, csq_everything)  # validate early
         return _annotate_codon(
-            looked, vcf.columns, transcripts, exons, upstream_distance,
+            rows, hits, columns, vcf.columns, transcripts, exons, upstream_distance,
             downstream_distance, full_schema,
             regulatory=regulatory, motifs=motifs, structural=structural,
             mirnas=mirnas, translations=translations, sift=sift,
@@ -1156,10 +1211,11 @@ def annotate_vep(
         )
     if engine != "positional":
         raise ValueError(f"engine must be 'auto', 'codon' or 'positional', got {engine!r}")
-    looked = lookup_variants(
+    rows, hits, columns = _lookup(
         vcf, cache, match_mode=match_mode, extended_probes=extended_probes,
         allowed_failed=allowed_failed,
     )
+    vcf_cols = list(vcf.columns)
 
     if transcripts is not None:
         t = transcripts.select(
@@ -1196,7 +1252,7 @@ def annotate_vep(
             if _chrom_forms_differ(vcf, transcripts)
             else F.col("chrom") == F.col("__t_chrom")
         )
-        near = looked.join(
+        near = rows.select("__vid", *vcf_cols).join(
             F.broadcast(t),
             _t_chrom_eq & (inside | upstream | downstream),
             "left",
@@ -1213,14 +1269,24 @@ def annotate_vep(
             F.when(F.col("__t_chrom").isNull(), "intergenic_variant").otherwise(consequence),
         )
         near = near.withColumn("__rank", _so_rank_map()[F.col("consequence")])
-        grouped = near.groupBy(*[F.col(c) for c in looked.columns]).agg(
+        # one rollup per VCF row (keyed on its id, so identical VCF lines
+        # stay two rows), then one output row per matching cache record
+        per_variant = near.groupBy("__vid").agg(
+            F.first(F.struct(*vcf_cols)).alias("__vrow"),
             F.min_by("consequence", "__rank").alias("most_severe_consequence"),
             F.array_sort(F.collect_set("consequence")).alias("__all_csq"),
             F.array_sort(F.collect_set("__t_symbol")).alias("__symbols"),
             F.array_sort(F.collect_set("__t_gene")).alias("__genes"),
+        ).select("__vid", "__vrow.*", "most_severe_consequence", "__all_csq",
+                 "__symbols", "__genes")
+        hit_lists = hits.groupBy("__vid").agg(
+            F.collect_list(F.struct(*columns)).alias("__hits")
         )
+        grouped = _attach_hits(per_variant, hit_lists)
     else:
-        grouped = looked.withColumn(
+        grouped = rows.join(hits, "__vid", "left").withColumn(
+            "matched", F.coalesce(F.col("matched"), F.lit(False))
+        ).withColumn(
             "most_severe_consequence",
             F.when(F.col("matched"), "sequence_variant").otherwise(F.lit(None)),
         ).withColumn("__all_csq", F.array(F.col("most_severe_consequence"))).withColumn(
@@ -1240,7 +1306,24 @@ def annotate_vep(
             F.concat_ws("&", F.col("__genes")),
         ),
     )
-    return out.drop("__all_csq", "__symbols", "__genes")
+    return out.select(
+        *vcf_cols, *columns, "matched", "most_severe_consequence",
+        "existing_variation", "CSQ",
+    )
+
+
+def _attach_hits(per_variant: DataFrame, hit_lists: DataFrame) -> DataFrame:
+    """One row per (VCF row, matching cache record): ``per_variant`` (one
+    row per ``__vid``) joined on the id to the ``__hits`` list of structs
+    in ``hit_lists`` and exploded into the structs' fields + ``matched``.
+    A VCF row without a match keeps one row, with NULL fields and
+    ``matched`` false."""
+    return (
+        per_variant.join(hit_lists, "__vid", "left")
+        .withColumn("__hit", F.explode_outer("__hits"))
+        .select("*", "__hit.*", F.col("__hit").isNotNull().alias("matched"))
+        .drop("__hits", "__hit")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1289,7 +1372,9 @@ def _tx_meta_map(t: DataFrame) -> "F.Column":
 
 
 def _annotate_codon(
-    looked: DataFrame,
+    rows: DataFrame,
+    hits: DataFrame,
+    columns: Sequence[str],
     vcf_cols: Sequence[str],
     transcripts: DataFrame,
     exons: DataFrame | None,
@@ -1311,9 +1396,20 @@ def _annotate_codon(
     seqless_positions: str = "reference",
     reference_genome=None,
 ) -> DataFrame:
-    """Variant×transcript pairing (broadcast range join on chrom) + per-pair
-    classification through ``functions.consequence.classify`` in one
-    Arrow-batched pandas UDF, then per-variant CSQ/most-severe rollup."""
+    """The codon engine over :func:`_lookup`'s ``rows`` and ``hits``.
+
+    Every per-variant frame is keyed on the VCF row id ``__vid``:
+
+    * the VCF rows, spread on the id, pair with the transcripts (broadcast
+      range join on chrom) and each pair is classified through
+      ``functions.consequence.classify`` in one Arrow-batched pandas UDF;
+    * the context-feature arms add their entries per id;
+    * ONE rollup per id builds the CSQ entries and the most-severe
+      transcript, and carries the VCF row itself (without feature arms the
+      VCF is read by the pairing and by the lookup probe only);
+    * the colocated-cache aggregate groups ``hits`` per id and keeps each
+      hit's fields in a list, which the join to the rollup explodes into
+      one output row per (VCF row, matching cache record)."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1477,33 +1573,24 @@ def _annotate_codon(
     pad = max(upstream_distance, downstream_distance)
     pos = F.col("start").cast("long")
     vend = pos + F.greatest(F.length("ref") - 1, F.lit(0))
-    # classification depends only on the variant, not on which cache rows
-    # matched it — pair DISTINCT variants with transcripts so a variant
-    # with many colocated cache records costs the consequence engine once
-    # explicit repartition on the distinct keys, pinned at the configured
-    # shuffle parallelism: the deduped variants flow into the classify
-    # Arrow kernel, whose cost is per ROW, but AQE coalesces this exchange
-    # by BYTES — a sub-megabyte variant set collapsed to one task and ran
-    # the whole consequence engine serially (measured r11: 1.7 s on 1 task
-    # at sf0.1).  A user-specified partition count is exempt from AQE
-    # coalescing; the count is the session's shuffle parallelism (the same
-    # exchange a bare .distinct() would plan), so cluster configs behave
-    # identically at scale.
-    _np = int(looked.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    variants = (
-        looked.select(*vcf_cols)
-        .repartition(_np, *vcf_cols)
-        .distinct()
-        # the VEP-minimized alt is an Arrow-UDF round-trip: compute it ONCE
-        # per distinct variant here — the CSQ Allele slot (per-pair frame),
-        # the feature entries, and the intergenic entry all reference the
-        # column instead of re-instantiating the UDF expression
-        .withColumn("__vep_alt", _vep_alt_expr())
-    )
+    # classify straight from the VCF rows, one row per VCF line (a variant
+    # with many colocated cache records still costs the engine once).  The
+    # explicit repartition on the row id is pinned at the configured shuffle
+    # parallelism: the classify Arrow kernel's cost is per ROW, but AQE
+    # coalesces an exchange by BYTES — a sub-megabyte variant set collapsed
+    # to one task and ran the whole consequence engine serially (measured
+    # r11: 1.7 s on 1 task at sf0.1).  A user-specified partition count is
+    # exempt from AQE coalescing.  The pairing is the spread frame's only
+    # consumer: a second one would get its own, differently pruned copy of
+    # this exchange.
+    _np = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    variants = rows.select("__vid", "__vep_alt", *vcf_cols).repartition(_np, "__vid")
     # contig-form mismatch (chr1 vs 1) switches the pairing to normalized
     # keys — the reference strips 'chr' at every row-level comparison
     _vforms = (
-        vcf_chrom_forms if vcf_chrom_forms is not None else _chrom_forms(looked)
+        vcf_chrom_forms
+        if vcf_chrom_forms is not None
+        else _chrom_forms(rows.select("chrom"))
     )
     _t_chrom_eq = (
         _chrom_key(F.col("chrom")) == _chrom_key(F.col("__t_chrom"))
@@ -1580,7 +1667,7 @@ def _annotate_codon(
         if callable(reference_genome):
             _gen_fetch = reference_genome
         else:
-            _gen_bc = looked.sparkSession.sparkContext.broadcast(
+            _gen_bc = rows.sparkSession.sparkContext.broadcast(
                 dict(reference_genome)
             )
     # captured by value into the Arrow closure — a relative import inside
@@ -2018,7 +2105,7 @@ def _annotate_codon(
     # annotate_provider.rs:4430-4475 — the 74-field default layout,
     # VEP_CSQ_FIELDS).  Existing_variation (field 18) and the 33-field
     # Batch 3 suffix are per-VARIANT (colocated-cache aggregates) and are
-    # spliced in after the rollup joins back to the looked rows; the entry
+    # spliced in after the rollup joins the colocated aggregate; the entry
     # carries the two per-transcript spans around them.  concat_ws drops
     # NULL args (shifting fields), so every slot coalesces to ''. ──
     # ENSP = the transcript's translation stable id (reference writer reads
@@ -2251,13 +2338,15 @@ def _annotate_codon(
         .withColumn("__ftr", F.lit(0))
         .withColumn("__fid", F.col("__t_id"))
         .select(
-            *vcf_cols, "__vep_alt", "__e1", "__e2", "__best_term",
-            "__best_key", "__best_struct", "__is_tx", "__ftr", "__fid",
+            "__vid", F.struct(*vcf_cols).alias("__vrow"), "__vep_alt", "__e1",
+            "__e2", "__best_term", "__best_key", "__best_struct", "__is_tx",
+            "__ftr", "__fid",
         )
     )
 
-    # context-feature arms (reference regulatory/motif/structural context):
-    # schema per frame: *vcf_cols, __vep_alt, feature_id, feature_biotype,
+    # context-feature arms (reference regulatory/motif/structural context)
+    # read the VCF rows' variant columns only and key on the row id:
+    # schema per frame: *_vkeys, feature_id, feature_biotype,
     # feature_terms (rank-sorted array — one CSQ ENTRY may carry several
     # '&'-joined terms, e.g. regulatory_region_ablation&regulatory_region_
     # variant), __ftype (the reference FeatureType label)
@@ -2286,7 +2375,10 @@ def _annotate_codon(
             lambda x: F.substring_index(x, "|", -1),
         )
 
-    _vkeys = [*vcf_cols, "__vep_alt"]
+    # the id plus what a feature entry renders (Allele slot, VARIANT_CLASS)
+    # and the sv_tx arm's contig gate; feature frames JOIN on the id only
+    _vkeys = ["__vid", "chrom", "ref", "alt", "__vep_alt"]
+    fvars = rows.select(*_vkeys, "start", "end")
     # structural-variant term sets split by feature family (reference
     # append_*_terms: reg-kind SV terms merge INTO the regulatory entries,
     # TFBS-kind into the single motif entry, transcript/generic-kind fuse
@@ -2294,7 +2386,7 @@ def _annotate_codon(
     sv_reg = sv_tfbs = sv_tx = None
     if structural is not None:
         st = structural_terms(
-            variants, structural,
+            fvars, structural,
             chrom_normalize=bool(
                 len(_vforms | _chrom_forms(structural)) > 1
             ),
@@ -2318,7 +2410,7 @@ def _annotate_codon(
     if regulatory is not None or motifs is not None or sv_reg is not None:
         if regulatory is not None or motifs is not None:
             rf = regulatory_features(
-                variants, regulatory, motifs,
+                fvars, regulatory, motifs,
                 chrom_normalize=bool(
                     len(
                         _vforms
@@ -2345,7 +2437,9 @@ def _annotate_codon(
             else None
         )
         if reg_g is not None and sv_reg is not None:
-            reg_g = reg_g.join(F.broadcast(sv_reg), _vkeys, "left").withColumn(
+            reg_g = reg_g.join(
+                F.broadcast(sv_reg.select("__vid", "__sv_terms")), "__vid", "left"
+            ).withColumn(
                 "feature_terms",
                 _rank_sort_arr(
                     F.concat(
@@ -2366,9 +2460,7 @@ def _annotate_codon(
             # standalone id-less RegulatoryFeature entry (reference
             # append_regulatory_terms' !matched_regulatory arm)
             standalone = (
-                sv_reg.join(
-                    reg_g.select(*_vkeys).distinct(), _vkeys, "left_anti"
-                )
+                sv_reg.join(reg_g.select("__vid"), "__vid", "left_anti")
                 if reg_g is not None
                 else sv_reg
             )
@@ -2395,7 +2487,19 @@ def _annotate_codon(
             else None
         )
         if mot_hit is not None and sv_tfbs is not None:
-            mot_all = mot_hit.join(F.broadcast(sv_tfbs), _vkeys, "full")
+            # a full join of the two on the id, NULL-safe on the carried
+            # columns: one group per variant over both frames' rows
+            mot_all = (
+                mot_hit.withColumn("__sv_terms", F.lit(None).cast("array<string>"))
+                .unionByName(
+                    sv_tfbs.withColumn("__mhit", F.lit(None).cast("boolean"))
+                )
+                .groupBy(*_vkeys)
+                .agg(
+                    F.max("__mhit").alias("__mhit"),
+                    F.first("__sv_terms", ignorenulls=True).alias("__sv_terms"),
+                )
+            )
         elif mot_hit is not None:
             mot_all = mot_hit.withColumn(
                 "__sv_terms", F.lit(None).cast("array<string>")
@@ -2484,7 +2588,7 @@ def _annotate_codon(
             == "-"
         )
         feat_frames.append(
-            variants.join(
+            fvars.join(
                 F.broadcast(mi),
                 (
                     _chrom_key(F.col("chrom")) == _chrom_key(F.col("__fc"))
@@ -2495,10 +2599,10 @@ def _annotate_codon(
                     (vpos <= F.col("__fe")) & (vend_ >= F.col("__fs"))
                 ),
             )
-            .groupBy(*vcf_cols, "__vep_alt")
+            .groupBy(*_vkeys)
             .agg(F.count(F.lit(1)).alias("__n"))
             .select(
-                *vcf_cols, "__vep_alt",
+                *_vkeys,
                 F.lit(None).cast("string").alias("feature_id"),
                 F.lit(None).cast("string").alias("feature_biotype"),
                 F.array(F.lit("mature_miRNA_variant")).alias("feature_terms"),
@@ -2586,9 +2690,11 @@ def _annotate_codon(
             .when(F.col("__ftype") == "MotifFeature", 2)
             .otherwise(3)
         )
+        # feature rows carry no VCF row (NULL __vrow): the rollup takes it
+        # from the transcript arm, which has a row for every VCF row
         pre = pre.unionByName(
             feats.select(
-                *vcf_cols,
+                "__vid",
                 f_p1.alias("__e1"),
                 f_p2.alias("__e2"),
                 f_best_term.alias("__best_term"),
@@ -2600,10 +2706,18 @@ def _annotate_codon(
                 f_rank.alias("__ftr"),
                 F.col("feature_id").alias("__fid"),
                 F.col("__vep_alt"),
-            )
+            ),
+            allowMissingColumns=True,
         )
 
-    rolled = pre.groupBy(*[F.col(c) for c in vcf_cols]).agg(
+    # THE per-variant rollup: one group per VCF row id.  It re-shuffles the
+    # classified pairs on __vid although the pairing was spread on the id:
+    # ArrowEvalPython reports no output partitioning.
+    rolled = pre.groupBy("__vid").agg(
+        # the VCF row: every row id has a transcript-arm row (the pairing
+        # is a left join), and only feature rows carry a NULL __vrow
+        F.first("__vrow", ignorenulls=True).alias("__vrow"),
+        F.first("__vep_alt").alias("__vep_alt"),
         F.substring_index(F.min("__best_term"), "|", -1).alias("__ms"),
         # CSQ concat order: grouped by feature type (Transcript <
         # RegulatoryFeature < MotifFeature < None — reference FeatureType::
@@ -2611,8 +2725,8 @@ def _annotate_codon(
         # FEATURE ID within each group (reference transcript_consequences_
         # sort_by_feature_type_then_id; pinned e2e by test_csq_entries_
         # sorted_by_feature_id_within_feature_type).  Entries are (prefix,
-        # suffix) spans; the per-variant Existing_variation and Batch-3
-        # fields splice in after the join back to the looked rows
+        # suffix) spans; the colocated Existing_variation and Batch-3
+        # fields splice in after the join to the colocated aggregate
         F.filter(
             F.array_sort(
                 F.collect_list(
@@ -2632,7 +2746,9 @@ def _annotate_codon(
         # high-value subset)
         F.min_by("__best_struct", "__best_key").alias("__best"),
         F.max(F.when(F.col("__is_tx"), 1).otherwise(0)).alias("__has_tx"),
-        F.first("__vep_alt").alias("__ig_alt"),
+    ).select(
+        "__vid", "__vrow.*", "__vep_alt", "__ms", "__entries", "__best",
+        "__has_tx",
     )
     def _sql_ig_p1(alt: str) -> str:
         return (
@@ -2666,23 +2782,22 @@ def _annotate_codon(
                         F.struct(
                             F.lit(3).alias("r"),
                             F.lit("").alias("fid"),
-                            F.expr(_sql_ig_p1("__ig_alt")).alias("e1"),
+                            F.expr(_sql_ig_p1("__vep_alt")).alias("e1"),
                             F.expr(ig_p2_sql).alias("e2"),
                         )
                     ),
                 ),
             ).otherwise(F.col("__entries")),
         )
-    # re-attach the per-variant rollup to every looked row (one variant may
-    # carry several colocated cache matches)
-    looked_cols = list(looked.columns)
+    # the output row: the VCF row, one matching cache record's columns
+    looked_cols = [*vcf_cols, *columns, "matched"]
     # per-variant CSQ field sources: Existing_variation / CLIN_SIG are the
     # '&'-joined colocated-cache aggregates (reference ColocatedVariantFields,
     # annotate_provider.rs:3990-4060; '&' join order here is sorted for
     # determinism), frequency fields the per-variant max of each cache
     # column rendered as strings
     vf = vep_flags if vep_flags is not None else VepFlags()
-    _fp = [(o, c) for o, c in VEP_FREQUENCY_COLUMNS if c in looked.columns]
+    _fp = [(o, c) for o, c in VEP_FREQUENCY_COLUMNS if c in columns]
     # flag gating (reference should_process, annotate_provider.rs:1738):
     # a frequency column is even EXTRACTED only when its flag group or
     # max_af wants it, and never when check_existing is off — the whole
@@ -2704,9 +2819,8 @@ def _annotate_codon(
     # a display STRING (__afs: the raw cache slice, native-type rendering
     # for numeric columns) plus a numeric twin (__afn) so MAX_AF compares
     # numerically while CSQ renders the raw value. ──
-    _ltypes = dict(looked.dtypes)
+    _ltypes = dict(hits.dtypes)
     _str_af = {c for _, c in _fp if _ltypes.get(c) == "string"}
-    looked_af = looked.withColumn("__vep_alt", _vep_alt_expr())
     _af_cols = []
     for o, c in _fp:
         if c in _str_af:
@@ -2727,7 +2841,7 @@ def _annotate_codon(
                 F.filter(entries, lambda s: s["a"] == F.col("__vep_alt")),
                 F.lit(1),
             )["f"]
-            if c == "AF" and "allele_string" in looked.columns:
+            if c == "AF" and "allele_string" in columns:
                 ex = F.split(F.col("allele_string"), "/")
                 keys = F.transform(entries, lambda s: s["a"])
                 missing = F.filter(
@@ -2753,15 +2867,14 @@ def _annotate_codon(
             vals = F.col(c).cast("string")
             valn = F.col(c).cast("double")
         _af_cols += [vals.alias(f"__afs_{o}"), valn.alias(f"__afn_{o}")]
-    if _af_cols:
-        looked_af = looked_af.select("*", *_af_cols)
+    hits_af = hits.select("*", *_af_cols)
     va_aggs = [
         F.concat_ws(
             "&", F.array_sort(F.collect_set(F.col("variation_name")))
         ).alias("__csq_ev"),
         (
             F.concat_ws("&", F.array_sort(F.collect_set(F.col("clin_sig"))))
-            if "clin_sig" in looked.columns
+            if "clin_sig" in columns
             else F.lit("")
         ).alias("__csq_clin"),
         *[
@@ -2774,11 +2887,15 @@ def _annotate_codon(
             for o, _ in _fp
         ],
     ]
-    va = looked_af.groupBy(*[F.col(c) for c in vcf_cols]).agg(*va_aggs)
-    # rolled and va are BOTH variant-cardinality aggregates on the same
-    # keys: pre-join them, then ONE join against the (largest) looked frame
-    per_variant = rolled.join(va, list(vcf_cols), "full")
-    grouped = looked_af.join(per_variant, list(vcf_cols), "left")
+    # the colocated aggregate groups the hits by row id and keeps each hit's
+    # own fields (the per-row cache columns and AF values the output reads)
+    # in the list _attach_hits explodes: one output row per (VCF row,
+    # matching cache record), a row without a match once
+    hit_fields = [*columns, *[f"__af{k}_{o}" for o, _ in _fp for k in "sn"]]
+    va = hits_af.groupBy("__vid").agg(
+        *va_aggs, F.collect_list(F.struct(*hit_fields)).alias("__hits")
+    )
+    grouped = _attach_hits(rolled, va)
     af_by_cache = {c: F.col(f"__csq_af_{o}") for o, c in _fp}
     af_num = {c: F.col(f"__csq_afn_{o}") for o, c in _fp}
     # per-slot CSQ rendering (reference AF_COLUMNS table): the global AF

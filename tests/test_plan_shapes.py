@@ -195,3 +195,68 @@ def test_line_dedup_single_generate(spark):
     plan = _plan(line_dedup(docs))
     assert plan.count("Generate") == 1, plan
     assert "CartesianProduct" not in plan
+
+
+def test_annotate_vep_plans_one_lookup_and_one_rollup(spark, tmp_path_factory):
+    """The codon annotate_vep over a VCF text file, a variation cache,
+    transcripts and exons (the inputs of the benchmark's vep step) reads
+    the VCF twice (the lookup probe and the classify pairing) and the cache
+    once, runs four Arrow UDF nodes (normalized coordinates, allele match,
+    minimized alt, classify) and keys every per-variant shuffle and join on
+    the row id, never on the VCF columns."""
+    import re
+
+    from datafusion_bio_functions_spark.operators.vep import annotate_vep
+    from datafusion_bio_functions_spark.sources.readers import read_vcf
+
+    base = tmp_path_factory.mktemp("vep_plan")
+    (base / "calls.vcf").write_text(
+        "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+        + "".join(
+            f"1\t{100 + 37 * i}\t.\t{'AC'[i % 2]}\t{'GTA'[i % 3]}\t50\tPASS\t.\n"
+            for i in range(60)
+        )
+    )
+    spark.createDataFrame(
+        [("1", 100 + 74 * i, 100 + 74 * i, f"rs{i}", "A/G", None) for i in range(30)],
+        "chrom string, start long, end long, variation_name string, "
+        "allele_string string, clin_sig string",
+    ).write.parquet(str(base / "cache"))
+    spark.createDataFrame(
+        [(f"T{i}", "1", 200 * i, 200 * i + 150, 1 - 2 * (i % 2), "protein_coding",
+          f"G{i}", f"S{i}") for i in range(15)],
+        "transcript_id string, chrom string, start long, end long, strand int, "
+        "biotype string, gene_stable_id string, gene_symbol string",
+    ).write.parquet(str(base / "tx"))
+    spark.createDataFrame(
+        [(f"T{i}", 200 * i, 200 * i + 150) for i in range(15)],
+        "transcript_id string, start long, end long",
+    ).write.parquet(str(base / "exons"))
+
+    out = annotate_vep(
+        read_vcf(spark, str(base / "calls.vcf")),
+        spark.read.parquet(str(base / "cache")),
+        transcripts=spark.read.parquet(str(base / "tx")),
+        exons=spark.read.parquet(str(base / "exons")),
+    )
+    plan = _plan(out)
+    assert plan.count("FileScan text") <= 2, plan
+    cache_scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan parquet" in ln and "variation_name" in ln
+    ]
+    assert len(cache_scans) == 1, plan
+    assert plan.count("ArrowEvalPython") <= 4, plan
+    assert plan.count("Exchange hashpartitioning") <= 4, plan
+    # the classify input keeps its explicit spread over the shuffle
+    # parallelism, on the row id
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert re.search(
+        rf"Exchange hashpartitioning\(__vid#\d+L, {n}\), REPARTITION_BY_NUM", plan
+    ), plan
+    # no shuffle or join keyed on the passthrough VCF columns
+    for ln in plan.splitlines():
+        if "Exchange hashpartitioning" in ln or re.search(r"Join \[", ln):
+            keys = ln.split("Exchange hashpartitioning")[-1].split("Join ")[-1]
+            keys = keys.split("]")[0] if "Join " in ln else keys.split(")")[0]
+            assert not re.search(r"\b(qual|info|filter|id)#", keys), ln

@@ -2120,3 +2120,100 @@ def test_option_flags_string_boolean_coercion():
     assert TranscriptSelectionFlags.from_options({"refseq": "no"}).source_mode == "ensembl"
     with _pytest.raises(ValueError, match="boolean"):
         HgvsFlags.from_options({"shift_hgvs": "maybe"})
+
+
+# ---------------------------------------------------------------------------
+# per-row identity: the rollups key on a row id, not on the VCF columns
+# ---------------------------------------------------------------------------
+
+_ID_TX = [
+    ("ENST1", "1", 90, 150, 1, "protein_coding", "ENSG1", "GENE1"),
+    ("ENST2", "1", 390, 450, -1, "lncRNA", "ENSG2", "GENE2"),
+    ("ENST3", "1", 2000, 2500, 1, "protein_coding", "ENSG3", "GENE3"),
+]
+_ID_TX_COLS = [
+    "transcript_id", "chrom", "start", "end", "strand", "biotype",
+    "gene_stable_id", "gene_symbol",
+]
+_CSQ_COLS = [
+    "most_severe_consequence", "existing_variation", "CSQ", "impact",
+    "gene_symbol", "feature", "consequence_terms", "matched",
+]
+
+
+def test_codon_consequences_ignore_null_passthrough_columns(spark, cache):
+    """A NULL in a passthrough VCF column (a parquet VCF's missing qual or
+    id) must not change any consequence: the codon rollup used to join back
+    on every VCF column, where NULL never equals NULL, and turned each such
+    row into intergenic_variant."""
+    rows = [
+        ("1", 100, 100, "rs1x", "A", "T", 50.0),
+        ("1", 200, 201, "rs2x", "AT", "A", 40.0),
+        ("1", 300, 300, "rs3x", "G", "C", 30.0),
+        ("1", 400, 400, "rs4x", "A", "G", 20.0),
+        ("2", 100, 100, "rs5x", "A", "T", 10.0),
+    ]
+    schema = "chrom string, start long, end long, id string, ref string, alt string, qual double"
+    full = spark.createDataFrame(rows, schema)
+    holed = spark.createDataFrame(
+        [(c, s, e, None, r, a, None) for c, s, e, _, r, a, _ in rows], schema
+    )
+    tx = spark.createDataFrame(_ID_TX, _ID_TX_COLS)
+
+    def consequences(vcf):
+        out = annotate_vep(vcf, cache, transcripts=tx, engine="codon")
+        return sorted(
+            (r["chrom"], r["start"], *[str(r[c]) for c in _CSQ_COLS])
+            for r in out.collect()
+        )
+
+    got, want = consequences(holed), consequences(full)
+    assert len(got) == len(rows)
+    assert got == want
+    assert {g[2] for g in got} != {"intergenic_variant"}
+
+
+def test_codon_annotate_keeps_map_typed_vcf_column(spark, cache, tmp_path):
+    """read_vcf(samples=True) carries a map<string,string> ``genotypes``
+    column; the codon engine passes it through instead of raising on a set
+    operation over the VCF columns (map columns cannot be compared)."""
+    from datafusion_bio_functions_spark.sources.readers import read_vcf
+
+    src = tmp_path / "samples.vcf"
+    src.write_text(
+        "##fileformat=VCFv4.2\n"
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\n"
+        "1\t100\t.\tA\tT\t50\tPASS\t.\tGT\t0/1\t1/1\n"
+        "1\t400\t.\tA\tG\t50\tPASS\t.\tGT\t0/0\t0/1\n"
+    )
+    vcf = read_vcf(spark, str(src), samples=True)
+    assert dict(vcf.dtypes)["genotypes"].startswith("map")
+    tx = spark.createDataFrame(_ID_TX, _ID_TX_COLS)
+    out = {r["start"]: r for r in annotate_vep(vcf, cache, transcripts=tx).collect()}
+    assert set(out) == {100, 400}
+    assert out[100]["genotypes"] == {"S1": "0/1", "S2": "1/1"}
+    assert out[100]["existing_variation"] == "rs1"
+    assert out[100]["most_severe_consequence"] == "coding_transcript_variant"
+    assert out[400]["most_severe_consequence"] == "non_coding_transcript_exon_variant"
+
+
+@pytest.mark.parametrize("engine", ["positional", "codon"])
+def test_duplicate_vcf_line_keeps_one_row_per_input_row(spark, cache, engine):
+    """Two identical VCF lines are two input rows and give two output rows
+    on both engines (the positional rollup used to group on the VCF
+    columns and collapse them)."""
+    vcf = spark.createDataFrame(
+        [
+            ("1", 100, 100, "A", "T"),
+            ("1", 100, 100, "A", "T"),
+            ("1", 400, 400, "A", "G"),
+        ],
+        VCF_COLS,
+    )
+    tx = spark.createDataFrame(_ID_TX, _ID_TX_COLS)
+    rows = annotate_vep(vcf, cache, transcripts=tx, engine=engine).collect()
+    assert sorted(r["start"] for r in rows) == [100, 100, 400]
+    dup = [r for r in rows if r["start"] == 100]
+    assert all(r["existing_variation"] == "rs1" for r in dup)
+    assert dup[0]["CSQ"] == dup[1]["CSQ"]
+    assert dup[0]["most_severe_consequence"] == "coding_transcript_variant"

@@ -4199,19 +4199,6 @@ def format_appris(raw: str) -> str:
     return raw.replace("principal", "P").replace("alternative", "A")
 
 
-def format_appris_col(col):
-    """Column-side twin of :func:`format_appris` — kept adjacent so the two
-    renderings cannot drift.  NOTE the reference uses ``str::replace`` which
-    substitutes ALL occurrences, not just a prefix; both twins mirror that."""
-    from pyspark.sql import functions as F
-
-    return F.replace(
-        F.replace(col, F.lit("principal"), F.lit("P")),
-        F.lit("alternative"),
-        F.lit("A"),
-    )
-
-
 def format_hgvsp_output(
     raw_hgvsp: str,
     remove_hgvsp_version: bool = False,

@@ -217,28 +217,6 @@ def _norm_text(col: Column | str) -> Column:
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
 
 
-def _shingles_of(norm: Column, k: int) -> Column:
-    """Distinct xxhash64 of k-char shingles.  ``norm`` MUST be a plain
-    column reference (materialize the normalization first!) — any expression
-    placed here is re-evaluated once per character by the lambda."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.xxhash64(norm.substr(i, F.lit(k)))))
-
-
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """Distinct xxhash64 values of the k-char shingles of the normalized
-    text.  Prefer ``minhash_signature`` which materializes the normalized
-    text first; this convenience Column re-normalizes per shingle."""
-    return _shingles_of(_norm_text(col), k)
-
-
-def _perm_lambda(a: int, b: int):
-    """Single-arg lambda factory: PySpark binds higher-order-function lambda
-    variables by the Python lambda's arity, so coefficients must be closed
-    over, never default args."""
-    return lambda h: F.pmod(F.lit(a) * F.pmod(h, F.lit(_MERSENNE)) + F.lit(b), F.lit(_MERSENNE))
-
-
 def _perm_coeffs(num_perm: int, seed: int) -> list[tuple[int, int]]:
     rnd = random.Random(seed)
     return [(rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE)) for _ in range(num_perm)]
@@ -250,7 +228,6 @@ def minhash_signature(
     num_perm: int = 64,
     shingle_k: int = 5,
     seed: int = 42,
-    method: str = "arrow",
     gram: str = "char",
 ) -> DataFrame:
     """Append ``shingles`` (array<long>, distinct gram hashes) and
@@ -264,31 +241,13 @@ def minhash_signature(
     prefix sums (base is odd → invertible mod 2^64, so a segment hash is
     ``(csum[e] - csum[s-1]) * base^-s``) — no per-token Python loop.
 
-    ``method='arrow'`` (default): shingling + signature in ONE vectorized
-    numpy pandas UDF.  Catalyst higher-order functions (``transform`` /
-    ``aggregate``) are *interpreted*, not codegen'd — evaluating
-    num_perm × n_shingles lambda calls per document row-at-a-time is ~20×
-    slower than the Arrow batch path at sf0.1 (48 s → ~2 s).
-    ``method='sql'``: the all-JVM expression formulation (kept as the
-    dependency-free oracle; xxhash64-based shingle values, so shingle VALUES
-    differ between methods while all set relations agree)."""
+    Shingling + signature run in ONE vectorized numpy pandas UDF.  Catalyst
+    higher-order functions (``transform`` / ``aggregate``) are
+    *interpreted*, not codegen'd — evaluating num_perm × n_shingles lambda
+    calls per document row-at-a-time is ~20× slower than the Arrow batch
+    path at sf0.1 (48 s → ~2 s)."""
     if gram not in ("char", "word"):
         raise ValueError(f"gram must be 'char' or 'word', got {gram!r}")
-    if method == "sql":
-        if gram != "char":
-            raise ValueError("method='sql' supports gram='char' only")
-        out = (
-            df.withColumn("__norm", _norm_text(text_col))
-            .withColumn("shingles", _shingles_of(F.col("__norm"), shingle_k))
-            .drop("__norm")
-        )
-        coeffs = _perm_coeffs(num_perm, seed)
-        sig = F.array(
-            *[F.array_min(F.transform(F.col("shingles"), _perm_lambda(a, b))) for a, b in coeffs]
-        )
-        return out.withColumn("signature", sig)
-    if method != "arrow":
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
 
     import numpy as np
     import pandas as pd
@@ -773,7 +732,7 @@ def simhash64(col: Column | str, hash_method: str = "xxhash64") -> Column:
 
     ``hash_method='xxhash64'`` (fastest) or ``'md5'`` (engine-neutral token
     hash reproducible by a DuckDB/ANSI-SQL oracle).  Interpreted expression
-    tree — prefer ``simhash_dedup(method='arrow')`` for bulk scoring."""
+    tree — :func:`simhash_dedup` scores in bulk with an Arrow kernel."""
     if hash_method not in ("xxhash64", "md5"):
         raise ValueError(f"hash_method must be 'xxhash64' or 'md5', got {hash_method!r}")
     c = F.col(col) if isinstance(col, str) else col
@@ -848,8 +807,6 @@ def simhash_dedup(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     chunks: int | None = None,
-    method: str = "arrow",
-    hash_method: str = "md5",
     collapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: pairs agreeing on ≥1 of ``chunks`` equal
@@ -861,9 +818,8 @@ def simhash_dedup(
     recall-complete; passing ``chunks <= max_hamming`` explicitly trades
     recall for a cheaper join.
 
-    ``method='arrow'`` (default, implies md5 token hashes): vectorized
-    signature computation; ``method='sql'``: all-JVM expression tree with
-    ``hash_method`` 'md5' (oracle-reproducible) or 'xxhash64' (fastest).
+    Signatures come from a vectorized Arrow kernel over md5 token hashes,
+    bit-identical to ``simhash64(hash_method='md5')`` (oracle-reproducible).
 
     ``collapse_exact``: identical texts are scored once and pairs
     expanded afterwards — lossless (identical text ⇒ identical simhash ⇒
@@ -874,14 +830,7 @@ def simhash_dedup(
     if 64 % chunks:
         raise ValueError(f"chunks must divide 64, got {chunks}")
     width = 64 // chunks
-    if method == "arrow":
-        if hash_method != "md5":
-            raise ValueError("method='arrow' computes md5 token hashes only")
-        sim = _simhash64_arrow_udf()(F.col(text_col))
-    elif method == "sql":
-        sim = simhash64(text_col, hash_method=hash_method)
-    else:
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
+    sim = _simhash64_arrow_udf()(F.col(text_col))
     # same null-text sentinel as minhash_dedup: null≡null, never null≡""
     df = df.withColumn(
         text_col, F.coalesce(F.col(text_col), F.lit(_NULL_TEXT_SENTINEL))
@@ -951,52 +900,14 @@ def ngram_jaccard_dedup(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
-    method: str = "arrow",
 ) -> DataFrame:
     """Word n-gram Jaccard near-dup pairs, LSH-accelerated: same band join +
-    exact verification as :func:`minhash_dedup`, shingling on word n-grams.
-    Output: (id_a, id_b, jaccard).
-
-    ``method='arrow'`` (default): the vectorized word-gram signature engine.
-    ``method='sql'``: all-JVM expression formulation (xxhash64 gram values —
-    set relations, and therefore jaccard values, agree between methods)."""
-    if method == "arrow":
-        return minhash_dedup(
-            df, text_col, id_col, threshold, num_perm, bands,
-            shingle_k=n, seed=seed, output="pairs", gram="word",
-        )
-    if method != "sql":
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
-    # materialize the token array: expressions inside the transform lambda
-    # are re-evaluated per n-gram
-    with_toks = _ensure_parallelism(df).withColumn(
-        "__toks", F.split(_norm_text(text_col), " ")
-    )
-    toks = F.col("__toks")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    grams = F.array_distinct(
-        F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))))
-    )
-    with_sh = with_toks.withColumn("shingles", grams).drop("__toks")
-    coeffs = _perm_coeffs(num_perm, seed)
-    sig = F.array(
-        *[F.array_min(F.transform(F.col("shingles"), _perm_lambda(a, b))) for a, b in coeffs]
-    )
-    sigs = with_sh.withColumn("signature", sig)
-    cand = minhash_lsh_candidates(sigs, id_col, num_perm, bands)
-    shingle_side = sigs.select(F.col(id_col), F.col("shingles"))
-    return (
-        cand.join(
-            shingle_side.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("shingles_a")),
-            "id_a",
-        )
-        .join(
-            shingle_side.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("shingles_b")),
-            "id_b",
-        )
-        .withColumn("jaccard", jaccard(F.col("shingles_a"), F.col("shingles_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    exact verification as :func:`minhash_dedup`, shingling on word n-grams
+    with the vectorized word-gram signature engine.  Output: (id_a, id_b,
+    jaccard)."""
+    return minhash_dedup(
+        df, text_col, id_col, threshold, num_perm, bands,
+        shingle_k=n, seed=seed, output="pairs", gram="word",
     )
 
 

@@ -46,8 +46,7 @@ Scale notes (local[32] tests, 1000-executor target):
   per-contig hotspot, survives 100 TB.  ``sql`` emits the plain range-join
   condition (Catalyst picks SMJ/BHJ on the contig equi-key); correct always,
   quadratic per contig in the worst case — it is also the DuckDB-oracle
-  formulation.  ``broadcast`` forces a broadcast of the build (left) side,
-  mirroring the reference's CollectLeft mode (``interval_join.rs:394-413``).
+  formulation.
 * Sweep operators use ``Window.partitionBy(contig)`` which shuffles once on
   contig and streams (running-max frame) — the same data movement as the
   reference's per-contig grouped collectors (``grouped_stream.rs:24-124``)
@@ -181,20 +180,30 @@ def _coverage_len(ls: str, le: str, rs: str, re_: str, filter_op: str) -> Column
 _BIN_WIDTH_MEMO = ProbeMemo()
 
 
+def _quantile(col, q: float):
+    """The ``q`` quantile of an Arrow column's non-NULL values (the lower
+    of two neighbours, so always a value of the column), or None."""
+    import pyarrow.compute as pc
+
+    return pc.quantile(col, q=q, interpolation="lower")[0].as_py()
+
+
 def _auto_bin_width(l: DataFrame, ls: str, le: str, r: DataFrame, rs: str, re_: str) -> int:
     """Derive the genome-bin width from a bounded interval-width sample:
     next power of two >= 2 * p95(width), clamped to [128, 2^20].  The
-    ``limit`` keeps the stats job O(100k rows) regardless of table size;
-    the per-session memo (semantic plan hash) keeps repeated joins over
-    the same frames from re-running the stats job."""
+    sample is the first 100k widths of each side; a one-partition
+    ``coalesce`` under each ``limit`` spares it the ``Exchange
+    SinglePartition`` that adaptive execution runs as a job of its own, so
+    the probe is one job over O(100k rows) regardless of table size.  The
+    per-session memo (semantic plan hash) keeps repeated joins over the
+    same frames from re-running it."""
 
     def probe() -> int:
-        samp = (
-            l.select((F.col(le) - F.col(ls)).alias("w")).limit(100_000)
-            .unionByName(r.select((F.col(re_) - F.col(rs)).alias("w")).limit(100_000))
-        )
-        row = samp.agg(F.expr("percentile_approx(w, 0.95)").alias("p")).collect()[0]
-        p95 = int(row["p"] or 0)
+        def widths(df: DataFrame, s: str, e: str) -> DataFrame:
+            return df.select((F.col(e) - F.col(s)).alias("w")).coalesce(1).limit(100_000)
+
+        samp = widths(l, ls, le).unionByName(widths(r, rs, re_)).toArrow()
+        p95 = int(_quantile(samp.column("w"), 0.95) or 0)
         return max(128, min(1 << max(2 * p95 - 1, 1).bit_length(), 1 << 20))
 
     return _BIN_WIDTH_MEMO.get_or_probe(
@@ -260,7 +269,6 @@ def interval_join(
     multiplies replication.  The session conf key still overrides.
       * ``sql`` — emit the raw range-join condition and let Catalyst plan it
         (SMJ/BHJ keyed on contig + range post-filter).
-      * ``broadcast`` — broadcast the left side (reference CollectLeft).
 
     On every path a row with a NULL contig, start or end matches nothing,
     and every other column comes back exactly as it went in.
@@ -274,25 +282,24 @@ def interval_join(
         from ..session import INTERVAL_JOIN_ALGORITHM_KEY, INTERVAL_JOIN_BIN_WIDTH_KEY
 
         conf = left.sparkSession.conf
-        configured = conf.get(INTERVAL_JOIN_ALGORITHM_KEY, None)
+        configured = (conf.get(INTERVAL_JOIN_ALGORITHM_KEY, None) or "auto").lower()
         bw = conf.get(INTERVAL_JOIN_BIN_WIDTH_KEY, None)
-        if how == "inner" and bin_width is None and not bw and configured in (None, "", "auto"):
+        if how == "inner" and bin_width is None and not bw and configured == "auto":
             out = _overlap_collect_left(
                 left, right, (lc0, ls0, le0), (rc0, rs0, re0), filter_op, long_interval_factor
             )
             if out is not None:
                 return out
-        if configured and configured.lower() in ("nearest", "coitreesnearest"):
+        if configured in ("nearest", "coitreesnearest"):
             # the nearest-join knob changes the semantics of *SQL range
             # joins* only (see plans/range_join.py); for the overlap
             # operator itself it is just an index choice in the reference
             # (interval_join.rs:745-901) — keep the default strategy
             configured = "binned"
-        if configured and configured != "auto":
-            if configured not in ("binned", "sql", "broadcast"):
+        if configured != "auto":
+            if configured not in ("binned", "sql"):
                 raise ValueError(
-                    f"{INTERVAL_JOIN_ALGORITHM_KEY} must be auto|binned|sql|broadcast,"
-                    f" got {configured!r}"
+                    f"{INTERVAL_JOIN_ALGORITHM_KEY} must be auto|binned|sql, got {configured!r}"
                 )
             algorithm = configured
         else:
@@ -306,9 +313,8 @@ def interval_join(
     rc, rs, re_ = _RIGHT + rc0, _RIGHT + rs0, _RIGHT + re0
     cond = _overlap_cond(lc, ls, le, rc, rs, re_, filter_op)
 
-    if algorithm in ("sql", "broadcast"):
-        lj = F.broadcast(l) if algorithm == "broadcast" else l
-        return lj.join(r, cond, how)  # semi/anti keep only the left_* columns
+    if algorithm == "sql":
+        return l.join(r, cond, how)  # semi/anti keep only the left_* columns
 
     if algorithm != "binned":
         raise ValueError(f"unknown interval join algorithm {algorithm!r}")
@@ -975,15 +981,16 @@ def _auto_chunk_width(df: DataFrame, s: str, e: str) -> int:
     [1024, 10_000_000].  A fixed 10 Mb default is right for real genomes
     (~25 buckets per chromosome) but collapses to one bucket per contig on
     narrow coordinate spaces, serializing the sweep; sizing from a bounded
-    sample keeps ~4 buckets per core regardless of the space.  Memoized per
-    semantic plan so repeated sweeps skip the stats job."""
+    sample keeps ~4 buckets per core regardless of the space.  The sample,
+    the first 200k (start, end) rows, is collected in one Spark job (a
+    top-level ``limit`` plans no exchange) and summarized on the driver.
+    Memoized per semantic plan so repeated sweeps skip the job."""
 
     def probe() -> int:
-        samp = df.select(F.col(s).alias("a"), F.col(e).alias("b")).limit(200_000)
-        row = samp.agg(
-            F.min("a").alias("lo"), F.expr("percentile_approx(b, 0.99)").alias("hi")
-        ).collect()[0]
-        lo, hi = row["lo"], row["hi"]
+        import pyarrow.compute as pc
+
+        samp = df.select(F.col(s).alias("a"), F.col(e).alias("b")).limit(200_000).toArrow()
+        lo, hi = pc.min(samp.column("a")).as_py(), _quantile(samp.column("b"), 0.99)
         if lo is None or hi is None:
             return 10_000_000
         par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
@@ -1011,8 +1018,8 @@ def _resolve_sweep_algorithm(df: DataFrame, algorithm: str) -> str:
         return algorithm
     from ..session import SWEEP_ALGORITHM_KEY
 
-    configured = df.sparkSession.conf.get(SWEEP_ALGORITHM_KEY, None)
-    if configured and configured != "auto":
+    configured = (df.sparkSession.conf.get(SWEEP_ALGORITHM_KEY, None) or "auto").lower()
+    if configured != "auto":
         if configured not in ("window", "chunked"):
             raise ValueError(
                 f"{SWEEP_ALGORITHM_KEY} must be auto|window|chunked, got {configured!r}"
@@ -1393,8 +1400,6 @@ def complement(
     view_cols: Sequence[str] | None = None,
     min_dist: int = 0,
     filter_op: str = "weak",
-    merge_algorithm: str = "auto",
-    chunk_width: int | None = None,
 ) -> DataFrame:
     """Per-contig gaps not covered by any interval, bounded by an optional
     chromsizes ``view`` table (reference ``complement.rs:27-478``).  Without a
@@ -1402,14 +1407,14 @@ def complement(
     (``complement.rs:398-400``); contigs present only in the view are emitted
     whole (``complement.rs:429-446``).  Output: ``contig, pos_start, pos_end``.
 
-    ``merge_algorithm='chunked'`` routes the dominant merge step through the
-    shuffle-parallel chunked path; the gap window itself runs over merged
-    islands (rows bounded by genome size / min_dist, not input size).
+    The dominant step is :func:`merge`, whose ``auto`` takes the
+    shuffle-parallel chunked sweep above ``SWEEP_WINDOW_MAX_ROWS``; the gap
+    window itself runs over merged islands (rows bounded by genome size /
+    min_dist, not input size).
     """
     _check_filter_op(filter_op)
     df, (c, s, e) = _normalize(df, cols)
-    m = merge(df, min_dist=min_dist, cols=(c, s, e), filter_op=filter_op,
-              algorithm=merge_algorithm, chunk_width=chunk_width)
+    m = merge(df, min_dist=min_dist, cols=(c, s, e), filter_op=filter_op)
     # m is consumed by 2-3 branches below (before/tail gaps + the view-only
     # probe): without a barrier each union branch re-ran the input-sized
     # sort+window of the merge (measured r11: 15.9 s of task time in the
@@ -1565,8 +1570,6 @@ def subtract(
     cols_right: Sequence[str] | None = None,
     filter_op: str = "weak",
     algorithm: str = "auto",
-    merge_algorithm: str = "auto",
-    chunk_width: int | None = None,
 ) -> DataFrame:
     """Base-pair set difference: every left interval is fragmented at the
     boundaries of (pre-merged) overlapping right intervals; extra left columns
@@ -1581,9 +1584,8 @@ def subtract(
     all.  Size-guarded: a right side above ``BROADCAST_GUARD_ROWS`` falls
     back to ``'join'`` — merge(right) → left-outer interval join →
     per-left-row window walk over the (disjoint, sorted) overlaps emitting
-    the gaps in one explode pass.
-    ``merge_algorithm='chunked'`` makes the right-side pre-merge
-    shuffle-parallel for huge right tables.  Either way a right row with a
+    the gaps in one explode pass; its right-side pre-merge is :func:`merge`,
+    chunked for huge right tables.  Either way a right row with a
     NULL contig, start or end removes nothing, a left row with a NULL start
     or end emits no fragment (a NULL-contig one is kept whole) and every
     other column comes back exactly as it went in.
@@ -1600,8 +1602,7 @@ def subtract(
 
     # NULL rows match nothing: drop them before merge's sweep, where a NULL
     # start would swallow its neighbours into one island
-    m = merge(right.select(rc, rs, re_).na.drop(), cols=(rc, rs, re_), filter_op=filter_op,
-              algorithm=merge_algorithm, chunk_width=chunk_width).select(
+    m = merge(right.select(rc, rs, re_).na.drop(), cols=(rc, rs, re_), filter_op=filter_op).select(
         F.col("contig").alias("__mc"), F.col("pos_start").alias("__ms"), F.col("pos_end").alias("__me")
     )
     lw = left.withColumn("__lid", F.monotonically_increasing_id())
@@ -1708,18 +1709,15 @@ def nearest(
     (``nearest.rs:29-547``), with no exchange.  Otherwise it takes
     ``'radius'``.
 
-    ``algorithm='cogroup'``: one cogrouped Arrow group per contig, indexed
-    and probed like the CollectLeft path.  Skewed contigs serialize.
-
     ``algorithm='radius'``: the 100 TB path — a chunked cogroup, exact by
     construction (see :func:`_nearest_chunked`).  Each contig is cut into
     fixed-width chunks (:func:`_auto_chunk_width`); a left row goes to every
     chunk its span touches, a probe to every chunk its own span touches,
     and each (contig, chunk) cell also receives two side summaries: the k
     rows ending last among those ending in an earlier chunk, and the k rows
-    starting first among those starting in a later chunk.  The same group
-    function as ``'cogroup'`` answers every cell, and one merge per probe
-    keeps its first k.  Parallelism is #chunks (no per-contig skew
+    starting first among those starting in a later chunk.  One group
+    function (:func:`_nearest_cells`) answers every cell, and one merge per
+    probe keeps its first k.  Parallelism is #chunks (no per-contig skew
     ceiling) and, unlike a candidate join, dense data does NOT cost one
     row per overlapping pair.
     """
@@ -1729,32 +1727,24 @@ def nearest(
     if algorithm == "auto":
         from ..session import NEAREST_ALGORITHM_KEY
 
-        configured = left.sparkSession.conf.get(NEAREST_ALGORITHM_KEY, None)
-        if configured in (None, "", "auto"):
+        algorithm = (left.sparkSession.conf.get(NEAREST_ALGORITHM_KEY, None) or "auto").lower()
+        if algorithm == "auto":
             out = _nearest_collect_left(
                 left, right, k, cols_left, cols_right, include_overlaps,
                 compute_distance, filter_op,
             )
             if out is not None:
                 return out
-            # otherwise the shuffle-parallel chunked path (VERDICT r2: the
-            # cogroup ships each contig as ONE Arrow group — a single task
-            # per contig does not scale)
+            # otherwise the shuffle-parallel chunked path
             algorithm = "radius"
-        else:
-            algorithm = configured
-    if algorithm not in ("cogroup", "radius"):
-        raise ValueError(f"nearest algorithm must be 'cogroup' or 'radius', got {algorithm!r}")
+    if algorithm != "radius":
+        raise ValueError(f"nearest algorithm must be 'auto' or 'radius', got {algorithm!r}")
 
     left, lcols = _normalize(left, cols_left)
     right, rcols = _normalize(right, cols_right)
     shrink = 0 if filter_op == "weak" else 1
     keyed = right.filter(F.col(rcols[0]).isNotNull())
-    if algorithm == "radius":
-        out = _nearest_chunked(left, keyed, lcols, rcols, k, shrink, include_overlaps)
-    else:
-        lid = left.withColumn("__lid", F.monotonically_increasing_id())
-        out = _nearest_cells(lid, keyed, lcols, rcols, k, shrink, include_overlaps)
+    out = _nearest_chunked(left, keyed, lcols, rcols, k, shrink, include_overlaps)
     # a probe with a NULL contig gets its no-neighbour row here, not from a
     # cogroup: the cogroup compares keys with the left side's key ordering,
     # which reads a non-nullable left contig as never NULL
@@ -1777,11 +1767,10 @@ def _nearest_cells(
     k: int,
     shrink: int,
     include_overlaps: bool,
-    keys: Sequence[str] = (),
 ) -> DataFrame:
-    """The one group function of the exchange :func:`nearest` paths: left
-    and right cogrouped on their contig plus ``keys`` (columns of both
-    frames, not output), each group's left rows indexed in (start, end,
+    """The group function of :func:`_nearest_chunked`: left and right
+    cogrouped on (contig, ``__chunk``) — ``__chunk`` a column of both
+    frames, not output — each cell's left rows indexed in (start, end,
     ``__lid``) order — ``__lid`` is a left column, the input order — and its
     probes answered by :func:`_nearest_probe`.  Output: the
     :func:`_nearest_schema` of the other columns, with the (shrunk)
@@ -1791,8 +1780,8 @@ def _nearest_cells(
     import pyarrow.compute as pc
 
     _, ls, le = lcols
-    lnames = [c for c in left.columns if c not in keys]
-    rnames = [c for c in right.columns if c not in keys]
+    lnames = [c for c in left.columns if c != "__chunk"]
+    rnames = [c for c in right.columns if c != "__chunk"]
     out_schema = _nearest_schema(left.select(lnames), right.select(rnames), True)
     names = out_schema.fieldNames()
 
@@ -1813,8 +1802,8 @@ def _nearest_cells(
         )
         return pa.Table.from_arrays(arrays, names=names)
 
-    lg = left.groupBy(lcols[0], *keys)
-    return lg.cogroup(right.groupBy(rcols[0], *keys)).applyInArrow(probe_group, out_schema)
+    lg = left.groupBy(lcols[0], "__chunk")
+    return lg.cogroup(right.groupBy(rcols[0], "__chunk")).applyInArrow(probe_group, out_schema)
 
 
 def _nearest_chunked(
@@ -1917,7 +1906,7 @@ def _nearest_chunked(
     p = left.sparkSession.sparkContext.defaultParallelism
     res = _nearest_cells(
         cells.repartition(p, lc, "__chunk"), pcells.repartition(p, rc, "__chunk"),
-        lcols, rcols, k, shrink, include_overlaps, keys=("__chunk",),
+        lcols, rcols, k, shrink, include_overlaps,
     )
     lid = _LEFT + "__lid"
     w = Window.partitionBy(_RIGHT + "__pid").orderBy(
@@ -2078,7 +2067,7 @@ def _nearest_probe(
     index, lcols, batches, rcols: tuple[str, str, str], k: int, shrink: int,
     include_overlaps: bool, compute_distance: bool,
 ):
-    """The probe loop of the CollectLeft and cogroup nearest paths: per
+    """The probe loop of the CollectLeft and chunked nearest paths: per
     probe batch, the output columns of :func:`_nearest_schema` (before the
     strict distance fix-up).  ``index`` is a :func:`_collect_index` value,
     ``lcols`` the left columns as Arrow arrays in that index's order.  One

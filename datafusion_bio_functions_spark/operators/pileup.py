@@ -351,12 +351,7 @@ def _probe_alignments(df: DataFrame, simple, contig_col: str) -> tuple[bool, boo
 
 def _alignment_probe(df: DataFrame, simple, contig_col: str) -> tuple[bool, bool, int]:
     conf = df.sparkSession.conf
-    limit = int(
-        conf.get(
-            "spark.bio.depth.groupedMaxSegments",
-            conf.get("spark.bio.depth.groupedMaxRows", str(GROUPED_MAX_ROWS)),
-        )
-    )
+    limit = int(conf.get("spark.bio.depth.groupedMaxSegments", str(GROUPED_MAX_ROWS)))
     probe_cols = [
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(contig_col).alias("n_contigs"),

@@ -161,7 +161,6 @@ def lookup_variants(
     columns: Sequence[str] | None = None,
     match_mode: str = "exact",
     extended_probes: bool = False,
-    broadcast_vcf: bool | None = None,
     filter_op: str | None = None,
     allowed_failed: int = 0,
     chrom_normalize: bool | None = None,
@@ -193,9 +192,8 @@ def lookup_variants(
       co-located-but-different variant yields NULL cache columns;
     * ``columns`` projects cache annotation columns (default: all except
       ``source_*``).
-    * ``broadcast_vcf=None`` (default) broadcasts the VCF side only when a
-      bounded ``limit(guard+1)`` probe proves it is at or under
-      ``VCF_BROADCAST_GUARD_ROWS``; pass True/False to force.
+    * the VCF side is broadcast when a bounded ``limit(guard+1)`` probe
+      proves it is at or under ``VCF_BROADCAST_GUARD_ROWS``.
     * ``filter_op=None`` derives the overlap semantics from the two
       frames' ``bio.coordinate_system_zero_based`` column metadata like the
       reference's ``CoordinateNormalizer`` (``coordinate.rs:49-59``): weak
@@ -213,7 +211,7 @@ def lookup_variants(
     checkpointed first.
     """
     rows, hits, columns = _lookup(
-        vcf, cache, columns, match_mode, extended_probes, broadcast_vcf,
+        vcf, cache, columns, match_mode, extended_probes,
         filter_op, allowed_failed, chrom_normalize,
     )
     # Python UDFs cannot sit in an outer-join ON clause: the probe is an
@@ -231,7 +229,6 @@ def _lookup(
     columns: Sequence[str] | None = None,
     match_mode: str = "exact",
     extended_probes: bool = False,
-    broadcast_vcf: bool | None = None,
     filter_op: str | None = None,
     allowed_failed: int = 0,
     chrom_normalize: bool | None = None,
@@ -357,15 +354,14 @@ def _lookup(
             F.col("__c_end") == F.col("__vend")
         )
 
-    if broadcast_vcf is None:
-        # the memoized bounded row probe: every annotate_vep build re-asks
-        # it for the same VCF plan (measured r11: 0.16 s per unmemoized job)
-        from . import intervals
+    # the memoized bounded row probe: every annotate_vep build re-asks it
+    # for the same VCF plan (measured r11: 0.16 s per unmemoized job)
+    from . import intervals
 
-        broadcast_vcf = intervals._fits_broadcast(vcf, VCF_BROADCAST_GUARD_ROWS)
+    fits = intervals._fits_broadcast(vcf, VCF_BROADCAST_GUARD_ROWS)
     # the allele UDF is a post-filter of the INNER probe join (Catalyst
     # pushes it under the join output)
-    probe = F.broadcast(v) if broadcast_vcf else v
+    probe = F.broadcast(v) if fits else v
     hits = (
         probe.join(c, chrom_eq & coord, "inner")
         .filter(allele_ok)
@@ -1344,7 +1340,7 @@ def _tx_meta_map(t: DataFrame) -> "F.Column":
                 # reference format_appris: principalN -> PN, alternativeN
                 # -> AN, else passthrough (all-occurrence replace, like the
                 # reference's str::replace — the SQL twin of
-                # functions.consequence.format_appris_col)
+                # functions.consequence.format_appris)
                 v = f"replace(replace({v}, 'principal', 'P'), 'alternative', 'A')"
             entries.append((out_name, v))
     if "cds_start_nf" in t.columns or "cds_end_nf" in t.columns:

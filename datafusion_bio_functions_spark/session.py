@@ -19,16 +19,19 @@ import os
 from pyspark.sql import SparkSession
 
 #: Config key mirroring the reference's ``SET bio.interval_join_algorithm``
-#: (session_context.rs:48-70).  Values: ``auto | binned | sql | broadcast``.
+#: (session_context.rs:48-70).  Values, in any case: ``auto | binned | sql``,
+#: and ``nearest | coitreesnearest``, which turns ``bio_sql`` range joins
+#: into nearest joins and leaves the overlap operator on ``binned``.
 INTERVAL_JOIN_ALGORITHM_KEY = "spark.bio.intervalJoin.algorithm"
 #: Genome-bin width used by the binned interval-join strategy.
 INTERVAL_JOIN_BIN_WIDTH_KEY = "spark.bio.intervalJoin.binWidth"
 #: Nearest-join strategy (the reference selects its nearest index through
 #: the same ``SET bio.interval_join_algorithm`` knob, ``README.md:456-469``).
-#: Values: ``auto | cogroup | radius`` — ``radius`` names the exact chunked
-#: cogroup (the name predates it; no search radius is involved).
+#: Values, in any case: ``auto | radius`` — ``radius`` names the exact
+#: chunked cogroup (the name predates it; no search radius is involved).
 NEAREST_ALGORITHM_KEY = "spark.bio.nearest.algorithm"
-#: merge/cluster sweep strategy for ``algorithm='auto'``: window | chunked.
+#: merge/cluster sweep strategy for ``algorithm='auto'``, in any case:
+#: ``auto | window | chunked``.
 SWEEP_ALGORITHM_KEY = "spark.bio.sweep.algorithm"
 
 

@@ -89,7 +89,7 @@ def _join_family_ladder(spark, sf_dir, name):
 
     reads, targets = _span_scaled_views(spark, sf_dir)
     if name == "overlap_binned_span":
-        return bio.overlap(reads, targets)
+        return bio.overlap(reads, targets, algorithm="binned")
     if name == "count_overlaps_span":
         return bio.count_overlaps(reads, targets, algorithm="join")
     return bio.nearest(reads, targets, k=1, algorithm="radius")

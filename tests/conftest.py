@@ -105,3 +105,31 @@ def assert_frames_match(spark_df, duck_rel, sort_cols=None):
     got = got.sort_values(cols, kind="mergesort").reset_index(drop=True)
     want = want.sort_values(cols, kind="mergesort").reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def nearest_brute(lrows, rrows, k, filter_op, include_overlaps, compute_distance) -> list:
+    """``nearest`` rows by definition, for (contig, start, end, ...) left
+    rows and (contig, start, end) probes: per probe, every same-contig left row at
+    distance ``max(ls - qe, qs - le, 0)`` on the shrunk probe, ranked by
+    (distance, start, end, input order); no overlap candidates for a strict
+    point probe; NULL coordinates never match."""
+    shrink = 1 if filter_op == "strict" else 0
+    out = []
+    for c, s, e in rrows:
+        ranked = []
+        if None not in (c, s, e):
+            qs, qe = s + shrink, e - shrink
+            for j, row in enumerate(lrows):
+                lc, ls, le = row[:3]
+                if lc != c or ls is None or le is None:
+                    continue
+                d = max(ls - qe, qs - le, 0)
+                if d == 0 and not (include_overlaps and qs <= qe + 1):
+                    continue
+                ranked.append((d, ls, le, j))
+        ranked.sort()
+        for d, *_, j in ranked[:k] or [(None, None)]:
+            left = lrows[j] if d is not None else (None,) * len(lrows[0])
+            dist = (None if d is None else max(d - shrink, 0),) if compute_distance else ()
+            out.append(tuple(left) + (c, s, e) + dist)
+    return sorted(out, key=repr)

@@ -4,7 +4,7 @@ Ports the shape of the reference's integration suite
 (``bio-function-ranges/tests/integration_test.rs``): happy paths, strict vs
 weak boundary semantics, point-interval containment, empty inputs, one-sided
 contigs, extra-column preservation, partition-count invariance, and
-algorithm interchangeability (binned / sql / broadcast).
+algorithm interchangeability (binned / sql).
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 import datafusion_bio_functions_spark as bio
 from datafusion_bio_functions_spark.operators import intervals as iv
 from datafusion_bio_functions_spark.plans import oracle as osql
-from tests.conftest import COLS, assert_frames_match
+from tests.conftest import COLS, READS, TARGETS, assert_frames_match, nearest_brute
 
 #: a long above 2^53: float64 (pandas' nullable-long form) cannot hold it
 BIG = 2**53 + 1
@@ -28,7 +28,7 @@ def _canon(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
-@pytest.mark.parametrize("algorithm", ["binned", "sql", "broadcast"])
+@pytest.mark.parametrize("algorithm", ["binned", "sql"])
 @pytest.mark.parametrize("filter_op", ["weak", "strict"])
 def test_overlap_join_matches_oracle(spark, reads, targets, oracle, algorithm, filter_op):
     got = bio.overlap(reads, targets, filter_op=filter_op, algorithm=algorithm)
@@ -93,31 +93,46 @@ def test_coverage_matches_oracle(spark, reads, targets, oracle, algorithm):
     assert_frames_match(got, want)
 
 
-def test_auto_bin_width_memoized_one_job(spark, reads, targets, monkeypatch):
+def test_auto_bin_width_memoized_one_job(spark, reads, targets):
     """Plan-shapes guarantee (VERDICT r3 #6): constructing the same overlap
     join twice runs the bin-width stats job AT MOST once — the semantic-plan
-    memo answers the second construction without any driver job."""
-    from datafusion_bio_functions_spark.operators import intervals as iv
-
+    memo answers the second construction without any Spark job."""
     iv._BIN_WIDTH_MEMO.clear()
-    calls = {"n": 0}
-    orig = pd.DataFrame  # noqa: F841 — keep pandas import used
+    first = _jobs(spark, "bw-memo-1", lambda: bio.overlap(reads, targets))  # no action
+    second = _jobs(spark, "bw-memo-2", lambda: bio.overlap(reads, targets))
+    assert len(first) <= 1, f"construction ran driver jobs {first}"
+    assert second == [], "second construction must hit the bin-width memo"
 
-    from pyspark.sql import DataFrame as SparkDF
 
-    real_collect = SparkDF.collect
+def _jobs(spark, group: str, build) -> list:
+    """The ids of the Spark jobs ``build()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
-    def counting_collect(self):
-        calls["n"] += 1
-        return real_collect(self)
 
-    monkeypatch.setattr(SparkDF, "collect", counting_collect)
-    bio.overlap(reads, targets)  # construction only — no action
-    first = calls["n"]
-    bio.overlap(reads, targets)
-    second = calls["n"] - first
-    assert first <= 1, f"construction ran {first} driver jobs"
-    assert second == 0, "second construction must hit the bin-width memo"
+def test_width_probes_run_one_job(spark):
+    """A cold chunk-width or bin-width probe is one Spark job under adaptive
+    execution, on a several-partition input too: the sample ``limit`` plans
+    no ``Exchange SinglePartition`` (AQE would run it as a job of its
+    own)."""
+    df = spark.range(0, 10_000, 1, 4).selectExpr("id AS s", "id + id % 7 AS e")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        iv.clear_probe_caches()
+        assert len(_jobs(spark, "cw", lambda: iv._auto_chunk_width(df, "s", "e"))) == 1
+        assert len(_jobs(spark, "bw", lambda: iv._auto_bin_width(df, "s", "e", df, "s", "e"))) == 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    # the clamps: span 10k over 4 buckets per core floors at 1024; widths of
+    # at most 6 floor at 128
+    assert iv._auto_chunk_width(df, "s", "e") == 1024
+    assert iv._auto_bin_width(df, "s", "e", df, "s", "e") == 128
 
 
 @pytest.mark.parametrize("filter_op", ["weak", "strict"])
@@ -464,12 +479,12 @@ def test_cluster_chunked_equals_window(spark):
         bio.cluster(df, algorithm="quantum")
 
 
-def test_nearest_radius_equals_cogroup(spark, monkeypatch):
+def test_nearest_radius_equals_brute_force(spark, monkeypatch):
     """The radius (100 TB) nearest path — a chunked cogroup with per-chunk
-    side summaries and one per-probe merge — must reproduce the cogroup
-    path for k=1/k=3, weak/strict, with/without overlaps, at the probed
-    chunk width and at one narrow enough to spread most probes over
-    several cells."""
+    side summaries and one per-probe merge — must reproduce the brute force
+    for k=1/k=3, weak/strict, with/without overlaps, at the probed chunk
+    width and at one narrow enough to spread most probes over several
+    cells."""
     import random as _r
 
     rnd = _r.Random(23)
@@ -491,10 +506,7 @@ def test_nearest_radius_equals_cogroup(spark, monkeypatch):
 
     for k in (1, 3):
         for fo, ov in (("weak", True), ("strict", True), ("weak", False)):
-            want = canon(
-                bio.nearest(l, r, k=k, filter_op=fo, include_overlaps=ov,
-                            algorithm="cogroup")
-            )
+            want = nearest_brute(lrows, rrows, k, fo, ov, True)
             for cw in (None, 700):  # None: the probed width
                 with monkeypatch.context() as m:
                     if cw:
@@ -504,37 +516,64 @@ def test_nearest_radius_equals_cogroup(spark, monkeypatch):
                                     algorithm="radius")
                     )
                 assert got == want, (k, fo, ov, cw)
-    with pytest.raises(ValueError):
-        bio.nearest(l, r, algorithm="psychic")
+    for bad in ("psychic", "cogroup"):
+        with pytest.raises(ValueError):
+            bio.nearest(l, r, algorithm=bad)
+
+
+def test_interval_join_session_config(spark, reads, targets):
+    """`spark.bio.intervalJoin.algorithm` picks the overlap join's strategy,
+    its value read in any case; a value naming no strategy raises, as does
+    an unknown ``algorithm`` argument."""
+    want = _canon(bio.overlap(reads, targets, algorithm="sql"))
+    try:
+        for val in ("binned", "Binned", "SQL", "AUTO", "CoitreesNearest"):
+            spark.conf.set("spark.bio.intervalJoin.algorithm", val)
+            assert _canon(bio.overlap(reads, targets)) == want, val
+        for bad in ("banana", "broadcast"):
+            spark.conf.set("spark.bio.intervalJoin.algorithm", bad)
+            with pytest.raises(ValueError, match="intervalJoin"):
+                bio.overlap(reads, targets)
+    finally:
+        spark.conf.unset("spark.bio.intervalJoin.algorithm")
+    for bad in ("banana", "broadcast"):
+        with pytest.raises(ValueError, match="algorithm"):
+            bio.overlap(reads, targets, algorithm=bad)
 
 
 def test_nearest_session_config(spark, reads, targets):
     """`spark.bio.nearest.algorithm` mirrors the reference's session-level
     algorithm selection (CoitreesNearest via SET bio.interval_join_algorithm,
-    README.md:456-469)."""
+    README.md:456-469); its value is read in any case."""
     want = sorted(map(repr, bio.nearest(reads, targets).collect()))
     try:
-        spark.conf.set("spark.bio.nearest.algorithm", "radius")
-        got = sorted(map(repr, bio.nearest(reads, targets).collect()))
-        assert got == want
-        spark.conf.set("spark.bio.nearest.algorithm", "psychic")
-        with pytest.raises(ValueError, match="algorithm"):
-            bio.nearest(reads, targets)
+        for val in ("radius", "Radius", "AUTO"):
+            spark.conf.set("spark.bio.nearest.algorithm", val)
+            got = sorted(map(repr, bio.nearest(reads, targets).collect()))
+            assert got == want, val
+        for bad in ("psychic", "cogroup"):
+            spark.conf.set("spark.bio.nearest.algorithm", bad)
+            with pytest.raises(ValueError, match="algorithm"):
+                bio.nearest(reads, targets)
     finally:
         spark.conf.unset("spark.bio.nearest.algorithm")
 
 
-def test_complement_subtract_chunked_merge(spark, reads, targets, merge_input):
-    """merge_algorithm='chunked' must not change complement/subtract results."""
+def test_complement_subtract_chunked_merge(spark, reads, targets, merge_input, monkeypatch):
+    """The chunked merge under complement and subtract (forced through
+    `spark.bio.sweep.algorithm`) must not change their results."""
     def canon(df):
         return sorted(map(repr, df.collect()))
 
-    assert canon(bio.complement(merge_input, merge_algorithm="chunked", chunk_width=10_000)) == canon(
-        bio.complement(merge_input)
-    )
-    assert canon(bio.subtract(reads, targets, merge_algorithm="chunked", chunk_width=10_000)) == canon(
-        bio.subtract(reads, targets)
-    )
+    want_c = canon(bio.complement(merge_input))
+    want_s = canon(bio.subtract(reads, targets, algorithm="join"))
+    monkeypatch.setattr(iv, "_auto_chunk_width", lambda *a: 10_000)
+    try:
+        spark.conf.set("spark.bio.sweep.algorithm", "chunked")
+        assert canon(bio.complement(merge_input)) == want_c
+        assert canon(bio.subtract(reads, targets, algorithm="join")) == want_s
+    finally:
+        spark.conf.unset("spark.bio.sweep.algorithm")
 
 
 def test_partition_invariance_scale_paths(spark, merge_input, reads, targets, monkeypatch):
@@ -557,17 +596,16 @@ def test_partition_invariance_scale_paths(spark, merge_input, reads, targets, mo
 
 
 def test_nearest_radius_auto_density(spark, reads, targets):
-    """The radius path at its probed chunk width equals the exact path;
+    """The radius path at its probed chunk width equals the brute force;
     a probe on a left-absent contig gets its NULL row."""
     r_extra = targets.unionByName(
         spark.createDataFrame([("chrUn", 5, 9)], targets.schema)
     )
-    want = sorted(map(repr, bio.nearest(reads, r_extra, algorithm="cogroup").collect()))
-    got = sorted(map(repr, bio.nearest(reads, r_extra, algorithm="radius").collect()))
-    assert got == want
+    want = nearest_brute(READS, TARGETS + [("chrUn", 5, 9)], 1, "weak", True, True)
+    assert _canon(bio.nearest(reads, r_extra, algorithm="radius")) == want
     # 'auto' on list-built frames (no size estimate, so no CollectLeft
     # index) resolves to the shuffle-parallel radius path
-    assert sorted(map(repr, bio.nearest(reads, r_extra).collect())) == want
+    assert _canon(bio.nearest(reads, r_extra)) == want
 
 
 def test_broadcast_guard_falls_back_to_join(spark, reads, targets, monkeypatch):
@@ -629,7 +667,7 @@ def test_interval_join_non_inner_binned_equals_sql(spark, reads, targets, how):
 def test_nearest_radius_long_intervals_and_chunk_edges(spark, monkeypatch):
     """Chunked radius nearest with intervals far longer than the chunk
     width, probes exactly on chunk boundaries, and fixed chunk widths — all
-    must match the exact cogroup path."""
+    must match the brute force."""
     lrows = [
         ("chr1", 1, 500_000, "span"),       # spans many 20k chunks
         ("chr1", 39_990, 40_010, "edge"),   # straddles a boundary
@@ -645,31 +683,30 @@ def test_nearest_radius_long_intervals_and_chunk_edges(spark, monkeypatch):
     l = spark.createDataFrame(lrows, "contig string, pos_start long, pos_end long, name string")
     r = spark.createDataFrame(rrows, "contig string, pos_start long, pos_end long")
 
-    def canon(df):
-        return sorted(map(repr, df.collect()))
-
     for k in (1, 2):
-        want = canon(bio.nearest(l, r, k=k, algorithm="cogroup"))
+        want = nearest_brute(lrows, rrows, k, "weak", True, True)
         for cw in (None, 1000, 20_000):  # None: the probed width
             with monkeypatch.context() as m:
                 if cw:
                     m.setattr(iv, "_auto_chunk_width", lambda *a: cw)
-                got = canon(bio.nearest(l, r, k=k, algorithm="radius"))
+                got = _canon(bio.nearest(l, r, k=k, algorithm="radius"))
             assert got == want, (k, cw)
 
 
 def test_sweep_session_config(spark, merge_input):
     """`spark.bio.sweep.algorithm` flips merge/cluster 'auto' to the
-    chunked 100 TB path; results are identical; bad values raise."""
+    chunked 100 TB path, in any case; results are identical; bad values
+    raise."""
     def canon(df):
         return sorted(map(repr, df.collect()))
 
     want_m = canon(bio.merge(merge_input))
     want_c = canon(bio.cluster(merge_input))
     try:
-        spark.conf.set("spark.bio.sweep.algorithm", "chunked")
-        assert canon(bio.merge(merge_input)) == want_m
-        assert canon(bio.cluster(merge_input)) == want_c
+        for val in ("chunked", "Chunked", "WINDOW"):
+            spark.conf.set("spark.bio.sweep.algorithm", val)
+            assert canon(bio.merge(merge_input)) == want_m, val
+            assert canon(bio.cluster(merge_input)) == want_c, val
         spark.conf.set("spark.bio.sweep.algorithm", "quantum")
         with pytest.raises(ValueError, match="sweep"):
             bio.merge(merge_input)
@@ -710,22 +747,22 @@ def test_custom_column_name_matching_mode_token(spark):
     assert got == [("chr1", 1, 10, 1), ("chr1", 40, 50, 1)]
 
 
-def test_nearest_index_battery_replay(spark):
+def test_nearest_index_battery_replay(spark, tmp_path):
     """nearest_index.rs in-module battery, replayed through the operator:
     overlaps rank first then nearest fills (distance tie broken toward the
     smaller start — nearest_k_includes_overlaps_then_fills_nearest), and
     include_overlaps=False excludes the overlap entirely
-    (nearest_k_non_overlap_excludes_overlapping_candidates)."""
+    (nearest_k_non_overlap_excludes_overlapping_candidates).  Parquet
+    inputs, so ``auto`` takes the CollectLeft index."""
     import datafusion_bio_functions_spark as bio
 
-    probe = spark.createDataFrame(
-        [("c", 35, 35)], "contig string, pos_start long, pos_end long"
-    )
-    cands = spark.createDataFrame(
-        [("c", 10, 20), ("c", 30, 40), ("c", 50, 60)],
-        "contig string, pos_start long, pos_end long",
-    )
-    for algo in ("radius", "cogroup"):
+    spark.createDataFrame([("c", 35, 35)], COLS).write.parquet(str(tmp_path / "p"))
+    spark.createDataFrame(
+        [("c", 10, 20), ("c", 30, 40), ("c", 50, 60)], COLS
+    ).coalesce(1).write.parquet(str(tmp_path / "c"))
+    probe = spark.read.parquet(str(tmp_path / "p"))
+    cands = spark.read.parquet(str(tmp_path / "c"))
+    for algo in ("auto", "radius"):
         got = sorted(
             (r.distance, r.left_pos_start)
             for r in bio.nearest(cands, probe, k=2, algorithm=algo).collect()

@@ -1,9 +1,9 @@
-"""The three ``nearest`` paths — the CollectLeft index ``algorithm='auto'``
-takes when the left side fits the broadcast bounds, the chunked
-``algorithm='radius'`` path and the per-contig cogroup — against a brute
-force written here, plus the CollectLeft guard fallback, its plan shape and
-its memo entry, and the chunked path's build.  All three paths share one
-kernel, so only the brute force is independent of it.
+"""The two ``nearest`` paths — the CollectLeft index ``algorithm='auto'``
+takes when the left side fits the broadcast bounds, and the chunked
+``algorithm='radius'`` path — against a brute force
+(:func:`tests.conftest.nearest_brute`), plus the CollectLeft guard fallback,
+its plan shape and its memo entry, and the chunked path's build.  Both
+paths share one kernel, so only the brute force is independent of it.
 
 Inputs are single-file parquet: a file-backed frame carries a size estimate,
 so it passes Spark's broadcast rule (a frame built from a Python list has an
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 
 import datafusion_bio_functions_spark as bio
 from datafusion_bio_functions_spark.operators import intervals as iv
+from tests.conftest import nearest_brute as _brute
 
 LSCHEMA = "contig string, pos_start long, pos_end long, name string, score long"
 RSCHEMA = "contig string, pos_start long, pos_end long"
@@ -37,33 +38,6 @@ def _plan(df: DataFrame) -> str:
 
 def _canon(df: DataFrame) -> list:
     return sorted((tuple(r) for r in df.collect()), key=repr)
-
-
-def _brute(lrows, rrows, k, filter_op, include_overlaps, compute_distance) -> list:
-    """nearest by definition: per probe, every same-contig left row at
-    distance ``max(ls - qe, qs - le, 0)`` on the shrunk probe, ranked by
-    (distance, start, end, input order); no overlap candidates for a strict
-    point probe; NULL coordinates never match."""
-    shrink = 1 if filter_op == "strict" else 0
-    out = []
-    for c, s, e in rrows:
-        ranked = []
-        if None not in (c, s, e):
-            qs, qe = s + shrink, e - shrink
-            for j, row in enumerate(lrows):
-                lc, ls, le = row[:3]
-                if lc != c or ls is None or le is None:
-                    continue
-                d = max(ls - qe, qs - le, 0)
-                if d == 0 and not (include_overlaps and qs <= qe + 1):
-                    continue
-                ranked.append((d, ls, le, j))
-        ranked.sort()
-        for d, *_, j in ranked[:k] or [(None, None)]:
-            left = lrows[j] if d is not None else (None,) * len(lrows[0])
-            dist = (None if d is None else max(d - shrink, 0),) if compute_distance else ()
-            out.append(tuple(left) + (c, s, e) + dist)
-    return sorted(out, key=repr)
 
 
 @pytest.fixture(scope="module")
@@ -128,7 +102,6 @@ def test_collect_left_matches_exchange_paths(
         got = bio.nearest(l, r, **kw)
         assert "MapInArrow" in _plan(got), k  # the default took the CollectLeft path
         assert _canon(got) == want, k
-        assert _canon(bio.nearest(l, r, algorithm="cogroup", **kw)) == want, k
         assert _canon(bio.nearest(l, r, algorithm="radius", **kw)) == want, k
         # chunks this narrow spread most rows and probes over many cells
         with monkeypatch.context() as m:
@@ -203,27 +176,23 @@ def test_radius_matches_brute_force_for_any_chunk_width(spark, chunk_frames, mon
 
 def test_radius_build_runs_one_job_and_plans_one_cogroup(spark, frames):
     """With a cold memo, building the chunked path runs one Spark job, the
-    chunk-width probe (adaptive execution off, so one action is one job),
-    and plans one cogroup and no cached relation."""
+    chunk-width probe, and plans one cogroup and no cached relation."""
     l, r = frames
     sc = spark.sparkContext
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     iv.clear_probe_caches()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup("nearest-build", "nearest build")
     try:
         out = bio.nearest(l, r, algorithm="radius")
         jobs = sc.statusTracker().getJobIdsForGroup("nearest-build")
     finally:
         sc._jsc.clearJobGroup()
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert len(jobs) <= 1, jobs
+    assert len(jobs) == 1, jobs
     plan = _plan(out)
     assert "InMemoryRelation" not in plan
     assert plan.count("FlatMapCoGroupsInArrow") == 1
 
 
-PATHS = ["auto", "radius", "cogroup"]
+PATHS = ["auto", "radius"]
 
 
 def _pin(spark, tmp_path, lrows, rrows, **kw) -> list:
@@ -262,11 +231,11 @@ def test_pin_strict_point_probe_same_first_row_for_every_k(spark, tmp_path, algo
     assert firsts[0] == firsts[1] == (0, 26)
 
 
-@pytest.mark.parametrize("algorithm", ["radius", "cogroup"])
+@pytest.mark.parametrize("algorithm", ["radius"])
 def test_pin_null_probe_contig_against_required_left_contig(spark, algorithm):
     """A NULL-contig probe gets its no-neighbour row even when the left
-    contig column is non-nullable (a cogroup on a NULL key would compare it
-    as never NULL)."""
+    contig column is non-nullable (the chunked path's cogroup on a NULL key
+    would compare it as never NULL)."""
     from pyspark.sql import types as T
 
     req = T.StructType([T.StructField(c, t, False) for c, t in (
@@ -335,12 +304,11 @@ def test_over_guard_takes_radius_plan(frames, monkeypatch):
 
 
 def test_other_settings_keep_radius_plan(spark, frames):
-    """Explicit algorithms and the session knob keep the exchange-based
-    plans."""
+    """The explicit algorithm and the session knob, in any case, keep the
+    exchange-based plan."""
     l, r = frames
-    for kw in (dict(algorithm="radius"), dict(algorithm="cogroup")):
-        assert "MapInArrow" not in _plan(bio.nearest(l, r, **kw)), kw
-    for val in ("radius", "cogroup"):
+    assert "MapInArrow" not in _plan(bio.nearest(l, r, algorithm="radius"))
+    for val in ("radius", "Radius"):
         spark.conf.set("spark.bio.nearest.algorithm", val)
         try:
             assert "MapInArrow" not in _plan(bio.nearest(l, r)), val

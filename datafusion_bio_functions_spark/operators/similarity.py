@@ -4,10 +4,11 @@
   JVM-side ``zip_with``/``aggregate`` dot product (double precision, strict
   left-to-right summation so the DuckDB oracle reproduces values exactly)
   + window rank.  The baseline and the oracle path.
-* ``lsh_cosine_topk``  — random-hyperplane LSH: sign-bit bucket join with
-  multiprobe (Hamming-1 neighbors), exact rerank within buckets.  The scale
-  path: corpus shuffles once on bucket id, queries probe only matching
-  buckets.
+* ``lsh_cosine_topk``  — random-hyperplane LSH: sign-bit buckets with
+  multiprobe (Hamming-1 neighbors), exact rerank of the candidates.  A
+  query side within the broadcast bounds becomes a broadcast probe index
+  that the corpus streams past in one pass; a larger one cogroups with the
+  corpus on (table, bucket).
 * ``cosine_near_dup_pairs`` — embedding near-duplicate pairs above a cosine
   threshold (LSH-bucketed self-join).
 """
@@ -20,6 +21,7 @@ import random
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -238,6 +240,222 @@ def _bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
+def _lsh_planes(dim: int, n_planes: int, n_tables: int, seed: int) -> np.ndarray:
+    """The (n_tables * n_planes, dim) hyperplane matrix, table-major: row
+    ``t * n_planes + i`` is plane ``i`` of table ``t``."""
+    return np.array(
+        [p for t in range(n_tables) for p in _hyperplanes(dim, n_planes, seed + 1000 * t)],
+        dtype=np.float64,
+    )
+
+
+def _lsh_bucket_ids(x: np.ndarray, mat: np.ndarray, n_tables: int) -> np.ndarray:
+    """(n, n_tables) int64 sign-bit bucket ids of the rows of ``x`` against
+    the ``_lsh_planes`` matrix ``mat``.  The plane dots use the same strict
+    left-to-right summation as ``_bucket_expr``, so every sign decision (and
+    therefore every bucket id) is identical to the JVM expression path —
+    only ~dim column sweeps per slab instead of an interpreted expression
+    per (row, plane).  Raises ValueError when the vectors are not ``dim``
+    long: fewer coordinates cannot be hashed, more would be ignored."""
+    n, d = x.shape
+    tp, dim = mat.shape
+    n_planes = tp // n_tables
+    ids = np.zeros((n, n_tables), dtype=np.int64)
+    if n == 0:
+        return ids
+    if d != dim:
+        raise ValueError(f"lsh_cosine_topk: the vectors have length {d}, but dim={dim}")
+    # j-major accumulation: acc[row, p] receives x[row, j] * mat[p, j]
+    # in the SAME left-to-right j order as the per-plane loop (one
+    # float64 multiply + add per (row, plane, j), identical IEEE
+    # sequence per accumulator — sign-exact vs the JVM expression),
+    # but with n_tables*n_planes fewer interpreter rounds
+    slab = _KERNEL_SLAB
+    acc = _pooled("bk_acc", slab * tp)
+    tmp = _pooled("bk_tmp", slab * tp)
+    for i0 in range(0, n, slab):
+        xs = x[i0 : i0 + slab]
+        m = xs.shape[0]
+        a = acc[: m * tp].reshape(m, tp)
+        t_ = tmp[: m * tp].reshape(m, tp)
+        a[:] = 0.0
+        for j in range(d):  # strict order — sign-exact
+            np.multiply(xs[:, j : j + 1], mat[:, j], out=t_, dtype=np.float64)
+            a += t_
+        bits = a > 0
+        out = ids[i0 : i0 + m]
+        for t in range(n_tables):
+            for i in range(n_planes):
+                out[:, t] |= bits[:, t * n_planes + i].astype(np.int64) << i
+    return ids
+
+
+def _column_norms(xt: np.ndarray) -> np.ndarray:
+    """Euclidean norms of the columns of the (dim, n) matrix ``xt``: one
+    ascending-coordinate float64 sweep, the per-element operation order of
+    ``_ivf_list_search_kernel`` and ``_pair_cosine_kernel``."""
+    acc = np.zeros(xt.shape[1], dtype=np.float64)
+    for row in xt:
+        acc += row * row
+    return np.sqrt(acc)
+
+
+#: memoized broadcast LSH query indexes, keyed (plan+files, row guard,
+#: hashing parameters); small bound, since an entry holds up to
+#: ``BROADCAST_GUARD_ROWS`` query vectors
+_LSH_INDEX_MEMO = ProbeMemo()
+
+#: candidate (query, corpus) pairs one step of the broadcast LSH search
+#: scores at once: a worker's scratch stays ~1 MB per array however many
+#: queries probe a bucket and however full the bucket is
+_LSH_PAIR_BUDGET = 1 << 17
+
+
+def _id_values(ids: "pa.Array") -> np.ndarray:
+    """The ids as compared for the self-match filter: integers widened to
+    int64, so a query and a corpus id column of different integer widths
+    compare by value, as Spark's ``!=`` does."""
+    if pa.types.is_integer(ids.type):
+        ids = pc.cast(ids, pa.int64())
+    return ids.to_numpy(zero_copy_only=False)
+
+
+def _lsh_query_index(q0: DataFrame, mat: np.ndarray, n_tables: int, flips: np.ndarray, key):
+    """The broadcast LSH query index of ``q0`` = (query_id, __qv), or None
+    when ``q0`` is over a broadcast bound.  Spark's own broadcast rule
+    gates first (the size estimate within ``autoBroadcastJoinThreshold``,
+    no job); then one ``limit(BROADCAST_GUARD_ROWS + 1)`` collect both
+    decides and collects — row order is irrelevant, every query is
+    answered alone.  The index is ``(ids, distinct ids, id codes, Q^T,
+    norms, keys, rows)``: the non-NULL query ids, their distinct values
+    and each one's position among those (the self-match key), the (dim, n)
+    float64 query matrix and its norms, and per table the sorted probe
+    buckets (``b0 ^ flip`` for each of ``flips``) with the query row of
+    each.  Memoized per (plan+files, guard, ``key``)."""
+    from . import intervals
+
+    if q0.isStreaming:
+        return None
+    conf = q0.sparkSession._jsparkSession.sessionState().conf()
+    if not 0 <= intervals._plan_bytes(q0) <= conf.autoBroadcastJoinThreshold():
+        return None
+
+    guard = intervals.BROADCAST_GUARD_ROWS
+
+    def build():
+        tbl = q0.limit(guard + 1).toArrow()
+        if tbl.num_rows > guard:
+            return None
+        tbl = tbl.filter(pc.is_valid(tbl.column("query_id")))  # NULL ids match nothing
+        qid = tbl.column("query_id").combine_chunks()
+        x = np.asarray(_list_matrix(tbl.column("__qv")), dtype=np.float64)
+        b = _lsh_bucket_ids(x, mat, n_tables)  # raises on a dim mismatch
+        codes, distinct = pd.factorize(_id_values(qid), use_na_sentinel=False)
+        qt = np.ascontiguousarray(x.T)
+        probes = (b[:, :, None] ^ flips).transpose(1, 0, 2).reshape(n_tables, -1)
+        order = np.argsort(probes, axis=1, kind="stable")
+        keys = np.take_along_axis(probes, order, axis=1)
+        rows = order // len(flips)  # flat position qrow * len(flips) + flip
+        index = (qid, distinct, codes, qt, _column_norms(qt), keys, rows)
+        return q0.sparkSession.sparkContext.broadcast(index)
+
+    return _LSH_INDEX_MEMO.get_or_probe(lambda: (plan_key(q0), guard, key), build, bound=4)
+
+
+def _lsh_search_kernel(bidx, mat: np.ndarray, n_tables: int, k: int):
+    """``mapInArrow`` body of the broadcast LSH path: each corpus slab of
+    (neighbor_id, __cv) rows is hashed with ``_lsh_bucket_ids``, its
+    candidate (query, corpus) pairs are found by a per-table searchsorted
+    into the index's probe buckets, and each query's slab-local top-``k``
+    rows (query_id, neighbor_id, __sim) are yielded.
+
+    Candidates are walked in steps of at most ``_LSH_PAIR_BUDGET`` pairs,
+    each deduplicated across tables, stripped of self matches and scored
+    on its own — never a dense queries × corpus product.  Similarities are
+    the float64 ascending-coordinate sweeps of ``_ivf_list_search_kernel``
+    (bit-identical to it and to the JVM expression); selection is its
+    order too: NaN greatest, then descending similarity, then ascending
+    id, over each query's best pair per corpus id.  No id ranks higher in
+    a step than over the query's whole candidate set, so a step's local
+    top-k holds every global top-k row whose best pair it scores, and the
+    caller's per-(query_id, neighbor_id) ``max`` merges what two steps
+    (or two query rows with one id) both emit."""
+    kk = max(k, 1)
+
+    def search(batches):
+        qid, distinct, qcode, qt, qnorm, keys, rows = bidx.value
+        nq = qt.shape[1]
+        if nq == 0:
+            return
+        flat_rows = rows.ravel()
+        table_base = np.arange(n_tables, dtype=np.int64) * keys.shape[1]
+        id_index = pd.Index(distinct)  # hashed once per task, not per slab
+        for batch in batches:
+            nid_all = batch.column(0)
+            c_all = _list_matrix(batch.column(1))
+            for s0 in range(0, batch.num_rows, _KERNEL_SLAB):
+                x = c_all[s0 : s0 + _KERNEL_SLAB]
+                m = x.shape[0]
+                nid = nid_all.slice(s0, m)
+                b = _lsh_bucket_ids(x, mat, n_tables)
+                lo = np.empty((m, n_tables), dtype=np.int64)
+                cnt = np.empty((m, n_tables), dtype=np.int64)
+                for t in range(n_tables):
+                    lo[:, t] = np.searchsorted(keys[t], b[:, t], "left")
+                    cnt[:, t] = np.searchsorted(keys[t], b[:, t], "right") - lo[:, t]
+                # one segment per (corpus row, table): its run of probing
+                # query rows in the flattened per-table index
+                seg_start = (lo + table_base).ravel()
+                seg_end = np.cumsum(cnt.ravel())
+                total = int(seg_end[-1])
+                if total == 0:
+                    continue
+                seg_first = seg_end - cnt.ravel()
+                ct = np.empty((x.shape[1], m), dtype=np.float64)
+                np.copyto(ct, x.T)  # exact float32 -> float64 upcast
+                cnorm = _column_norms(ct)
+                nvals = _id_values(nid)
+                ccode = id_index.get_indexer(nvals)  # -1: not a query id
+                if pa.types.is_integer(nid.type):
+                    corder = nvals
+                else:
+                    corder = pc.rank(nid, tiebreaker="dense").to_numpy(zero_copy_only=False)
+                for p0 in range(0, total, _LSH_PAIR_BUDGET):
+                    p = np.arange(p0, min(p0 + _LSH_PAIR_BUDGET, total), dtype=np.int64)
+                    seg = np.searchsorted(seg_end, p, "right")
+                    qrow = flat_rows[seg_start[seg] + p - seg_first[seg]]
+                    crow, qrow = np.divmod(np.unique(seg // n_tables * nq + qrow), nq)
+                    keep = qcode[qrow] != ccode[crow]
+                    crow, qrow = crow[keep], qrow[keep]
+                    if len(crow) == 0:
+                        continue
+                    acc = np.zeros(len(crow), dtype=np.float64)
+                    for j in range(ct.shape[0]):  # strict left-to-right sums
+                        acc += qt[j].take(qrow) * ct[j].take(crow)
+                    sims = acc / (qnorm[qrow] * cnorm[crow])
+                    desc = -np.where(np.isnan(sims), np.inf, sims)  # NaN first
+                    cid = corder[crow]
+                    # each query's best pair per corpus id, then its top k
+                    best = np.lexsort((desc, cid, qrow))
+                    new_id = np.ones(len(best), dtype=bool)
+                    new_id[1:] = (np.diff(qrow[best]) != 0) | (np.diff(cid[best]) != 0)
+                    best = best[new_id]
+                    order = best[np.lexsort((cid[best], desc[best], qrow[best]))]
+                    qs = qrow[order]
+                    rank = np.arange(len(qs)) - np.searchsorted(qs, qs, "left")
+                    sel = order[rank < kk]
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            qid.take(pa.array(qrow[sel])),
+                            nid.take(pa.array(crow[sel])),
+                            pa.array(sims[sel], type=pa.float64()),
+                        ],
+                        names=["query_id", "neighbor_id", "__sim"],
+                    )
+
+    return search
+
+
 def lsh_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -253,124 +471,70 @@ def lsh_cosine_topk(
     corpus_vec: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: ``n_tables`` independent random-hyperplane tables
-    of ``n_planes`` sign bits each; equi-join on (table, bucket) — queries
-    additionally probe all Hamming-1 buckets per table when ``multiprobe`` —
-    then exact cosine rerank over the unioned candidates: a per-(table,
-    bucket) GEMM search inside a cogrouped Arrow task, candidates deduped
-    on their bit-identical similarity afterwards.  The tests hold the
-    candidate-pair join formulation, which produces identical rows.
+    of ``n_planes`` sign bits each; a corpus vector is a candidate of a
+    query when they share a (table, bucket) — queries additionally probe
+    all Hamming-1 buckets per table when ``multiprobe`` — then exact cosine
+    rerank over the unioned candidates.  The tests hold the candidate-pair
+    join formulation, which produces identical rows.
 
     Recall ≈ 1-(1-p^k)^L for per-plane agreement p = 1-θ/π; tune
     (n_planes, n_tables) to the similarity regime.  The exact
-    ``cosine_topk`` is the oracle.  At scale: the corpus is written
-    ``n_tables`` times (bounded, explicit), shuffled once on the
-    (table, bucket) key; each query probes ``n_tables * (1 + n_planes)``
-    buckets instead of scanning the corpus.
+    ``cosine_topk`` is the oracle.
+
+    At scale: a query side within the broadcast bounds (its size estimate
+    within ``spark.sql.autoBroadcastJoinThreshold``, its row count within
+    ``BROADCAST_GUARD_ROWS``) is collected once into a broadcast probe
+    index and the corpus streams past it in one ``mapInArrow`` — no
+    corpus replication, one shuffle (on ``query_id``, for the merge and
+    the rank), and a worker's memory bounded by a fixed pair budget
+    however hot a bucket runs.  A larger query side takes the cogroup
+    path: the corpus is written ``n_tables`` times (bounded, explicit),
+    shuffled once on the (table, bucket) key, and each probed bucket is
+    reranked in one Arrow task.  Both paths give the same rows when the
+    corpus ids are unique.  A corpus id carried by several vectors scores
+    its most similar one.  Vectors whose length is not ``dim`` raise
+    ValueError.
     """
     from pyspark.sql import types as T
 
-    tables = [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
-
-    def _buckets_kernel():
-        """Per-table sign-bit bucket ids, Arrow-native.  The plane dots
-        use the same strict left-to-right summation as ``_bucket_expr``, so
-        every sign decision (and therefore every bucket id) is identical to
-        the JVM expression path — only ~dim column sweeps per batch instead
-        of an interpreted expression per (row, plane)."""
-        mat = np.array([p for planes in tables for p in planes], dtype=np.float64)
-
-        @F.arrow_udf(T.ArrayType(T.LongType()))
-        def buckets(v: pa.Array) -> pa.Array:
-            x = _list_matrix(v)
-            n, d = x.shape
-            if n == 0:
-                return pa.array([], type=pa.list_(pa.int64()))
-            # j-major accumulation: acc[row, p] receives x[row, j] * mat[p, j]
-            # in the SAME left-to-right j order as the per-plane loop (one
-            # float64 multiply + add per (row, plane, j), identical IEEE
-            # sequence per accumulator — sign-exact vs the JVM expression),
-            # but with n_tables*n_planes fewer interpreter rounds
-            tp = n_tables * n_planes
-            slab = _KERNEL_SLAB
-            ids = np.zeros((n, n_tables), dtype=np.int64)
-            acc = _pooled("bk_acc", slab * tp)
-            tmp = _pooled("bk_tmp", slab * tp)
-            for i0 in range(0, n, slab):
-                xs = x[i0 : i0 + slab]
-                m = xs.shape[0]
-                a = acc[: m * tp].reshape(m, tp)
-                t_ = tmp[: m * tp].reshape(m, tp)
-                a[:] = 0.0
-                for j in range(d):  # strict order — sign-exact
-                    np.multiply(xs[:, j : j + 1], mat[:, j], out=t_, dtype=np.float64)
-                    a += t_
-                bits = a > 0
-                out = ids[i0 : i0 + m]
-                for t in range(n_tables):
-                    for i in range(n_planes):
-                        out[:, t] |= bits[:, t * n_planes + i].astype(np.int64) << i
-            return _int_matrix_to_lists(ids)
-
-        return buckets
+    mat = _lsh_planes(dim, n_planes, n_tables, seed)
+    flips = np.array([0] + ([1 << i for i in range(n_planes)] if multiprobe else []))
 
     c0 = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("__cv")
     ).filter(F.col("__cv").isNotNull())
-    c = c0.select(
-        "neighbor_id",
-        "__cv",
-        F.posexplode(_buckets_kernel()(F.col("__cv"))).alias("table", "bucket"),
-    )
     q0 = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
     ).filter(F.col("__qv").isNotNull())
-    qb = q0.select(
-        "query_id", "__qv", F.posexplode(_buckets_kernel()(F.col("__qv"))).alias("table", "__b0")
-    )
-    probes = [F.col("__b0")]
-    if multiprobe:
-        probes.extend(F.col("__b0").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes))
-    qp = qb.select(
-        "query_id", "__qv", "table", F.explode(F.array(*probes)).alias("bucket")
-    )
-    # r12: cogrouped per-(table, bucket) GEMM rerank — the ivf_cosine_topk
-    # recipe (guide §8/§4) applied to the LSH bucket join.  One Arrow task
-    # per probed bucket computes every probing query's similarities
-    # against the bucket's corpus slice plus a bucket-local top-k; a
-    # candidate seen in several tables/probes is deduped AFTER the kernel
-    # on its (bit-identical) similarity.  vs the join formulation: each
-    # corpus vector crosses the Python boundary once per (table, bucket)
-    # membership (n_tables replicas, bounded and explicit) instead of
-    # once per matching candidate pair, and each query vector once per
-    # probe instead of once per surviving candidate — at 100 TB the
-    # candidate-pair attach joins were the dominant payload shuffle.
-    # Correctness: the kernel's local top-k provably contains every
-    # global top-k row (a bucket's candidate set is a subset of the
-    # query's candidate union, so global winners rank at least as high
-    # locally); similarities are bit-identical float64 column sweeps
-    # (same contract as _pair_cosine_kernel, pinned by the cogroup≡join
-    # differential test), so the min() dedup is exact.  The explicit
-    # repartitions pin the cogroup exchanges (user repartitions are
-    # exempt from AQE byte-coalescing, which folded this sub-MB shuffle
-    # to one serial task at bench scale) and satisfy the cogroup's
-    # clustering requirement, so no extra exchange is added.
-    p = queries.sparkSession.sparkContext.defaultParallelism
-    qk = qp.repartition(p, "table", "bucket")
-    ck = c.repartition(p, "table", "bucket")
+    qtype, ctype = q0.schema["query_id"].dataType, c0.schema["neighbor_id"].dataType
     out_schema = T.StructType(
         [
-            T.StructField("query_id", qp.schema["query_id"].dataType, True),
-            T.StructField("neighbor_id", c.schema["neighbor_id"].dataType, True),
+            T.StructField("query_id", qtype, True),
+            T.StructField("neighbor_id", ctype, True),
             T.StructField("__sim", T.DoubleType(), True),
         ]
     )
-    sim = (
-        qk.groupBy("table", "bucket")
-        .cogroup(ck.groupBy("table", "bucket"))
-        .applyInArrow(_ivf_list_search_kernel(k), schema=out_schema)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.min("__sim").alias("__sim"))
-    )
+    bidx = None
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    if qtype == ctype or (isinstance(qtype, integral) and isinstance(ctype, integral)):
+        bidx = _lsh_query_index(
+            q0, mat, n_tables, flips, (dim, n_planes, n_tables, multiprobe, seed)
+        )
+    if bidx is not None:
+        # the query_id partitioning serves both the merge below and the
+        # window: one Exchange (each slab emits a pair at most once, so a
+        # map-side partial merge would save nothing)
+        sim = (
+            c0.filter(F.col("neighbor_id").isNotNull())
+            .mapInArrow(_lsh_search_kernel(bidx, mat, n_tables, k), out_schema)
+            .repartition("query_id")
+        )
+    else:
+        sim = _lsh_cogroup(q0, c0, mat, n_tables, n_planes, multiprobe, k, out_schema)
+    # a neighbor found through several tables (or steps) scores the same
+    # bit-identical similarity each time; an id carried by several vectors
+    # scores its best one
+    sim = sim.groupBy("query_id", "neighbor_id").agg(F.max("__sim").alias("__sim"))
     w = Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("neighbor_id"))
     return (
         sim.withColumn("rank", F.row_number().over(w))
@@ -381,6 +545,58 @@ def lsh_cosine_topk(
             F.col("__sim").alias("cosine_sim"),
             F.col("rank").cast("long").alias("rank"),
         )
+    )
+
+
+def _lsh_cogroup(q0, c0, mat, n_tables, n_planes, multiprobe, k, out_schema) -> DataFrame:
+    """The over-guard LSH candidate search: (query_id, neighbor_id, __sim)
+    rows from a cogroup on (table, bucket)."""
+    from pyspark.sql import types as T
+
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def buckets(v: pa.Array) -> pa.Array:
+        return _int_matrix_to_lists(_lsh_bucket_ids(_list_matrix(v), mat, n_tables))
+
+    c = c0.select(
+        "neighbor_id", "__cv", F.posexplode(buckets(F.col("__cv"))).alias("table", "bucket")
+    )
+    qb = q0.select(
+        "query_id", "__qv", F.posexplode(buckets(F.col("__qv"))).alias("table", "__b0")
+    )
+    probes = [F.col("__b0")]
+    if multiprobe:
+        probes.extend(F.col("__b0").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes))
+    qp = qb.select(
+        "query_id", "__qv", "table", F.explode(F.array(*probes)).alias("bucket")
+    )
+    # r12: cogrouped per-(table, bucket) GEMM rerank — the ivf_cosine_topk
+    # recipe (guide §8/§4) applied to the LSH bucket join, for query sides
+    # too large to broadcast.  One Arrow task per probed bucket computes
+    # every probing query's similarities against the bucket's corpus slice
+    # plus a bucket-local top-k; a candidate seen in several tables/probes
+    # is merged AFTER the kernel on its (bit-identical) similarity.  Each
+    # corpus vector crosses the Python boundary once per (table, bucket)
+    # membership (n_tables replicas, bounded and explicit), and a whole
+    # bucket plus its probing queries sits in one worker's memory: a hot
+    # bucket is this path's memory risk.  Correctness: with unique corpus
+    # ids the kernel's local top-k provably contains every global top-k
+    # row (a bucket's candidate set is a subset of the query's candidate
+    # union, so global winners rank at least as high locally; two rows of
+    # one id in a bucket would take two of its k slots); similarities are
+    # bit-identical float64 column sweeps (same contract as
+    # _pair_cosine_kernel, pinned by the cogroup≡join differential test),
+    # so the max() merge is exact.
+    # The explicit repartitions pin the cogroup exchanges (user
+    # repartitions are exempt from AQE byte-coalescing, which folded this
+    # sub-MB shuffle to one serial task at bench scale) and satisfy the
+    # cogroup's clustering requirement, so no extra exchange is added.
+    p = q0.sparkSession.sparkContext.defaultParallelism
+    qk = qp.repartition(p, "table", "bucket")
+    ck = c.repartition(p, "table", "bucket")
+    return (
+        qk.groupBy("table", "bucket")
+        .cogroup(ck.groupBy("table", "bucket"))
+        .applyInArrow(_ivf_list_search_kernel(k), schema=out_schema)
     )
 
 

@@ -107,6 +107,17 @@ def assert_frames_match(spark_df, duck_rel, sort_cols=None):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
+def spark_jobs(spark, group: str, build) -> list:
+    """The ids of the Spark jobs ``build()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def nearest_brute(lrows, rrows, k, filter_op, include_overlaps, compute_distance) -> list:
     """``nearest`` rows by definition, for (contig, start, end, ...) left
     rows and (contig, start, end) probes: per probe, every same-contig left row at

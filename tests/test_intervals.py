@@ -16,7 +16,14 @@ from pyspark.sql import functions as F
 import datafusion_bio_functions_spark as bio
 from datafusion_bio_functions_spark.operators import intervals as iv
 from datafusion_bio_functions_spark.plans import oracle as osql
-from tests.conftest import COLS, READS, TARGETS, assert_frames_match, nearest_brute
+from tests.conftest import (
+    COLS,
+    READS,
+    TARGETS,
+    assert_frames_match,
+    nearest_brute,
+    spark_jobs,
+)
 
 #: a long above 2^53: float64 (pandas' nullable-long form) cannot hold it
 BIG = 2**53 + 1
@@ -98,21 +105,10 @@ def test_auto_bin_width_memoized_one_job(spark, reads, targets):
     join twice runs the bin-width stats job AT MOST once — the semantic-plan
     memo answers the second construction without any Spark job."""
     iv._BIN_WIDTH_MEMO.clear()
-    first = _jobs(spark, "bw-memo-1", lambda: bio.overlap(reads, targets))  # no action
-    second = _jobs(spark, "bw-memo-2", lambda: bio.overlap(reads, targets))
+    first = spark_jobs(spark, "bw-memo-1", lambda: bio.overlap(reads, targets))  # no action
+    second = spark_jobs(spark, "bw-memo-2", lambda: bio.overlap(reads, targets))
     assert len(first) <= 1, f"construction ran driver jobs {first}"
     assert second == [], "second construction must hit the bin-width memo"
-
-
-def _jobs(spark, group: str, build) -> list:
-    """The ids of the Spark jobs ``build()`` runs."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc._jsc.clearJobGroup()
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_width_probes_run_one_job(spark):
@@ -125,8 +121,8 @@ def test_width_probes_run_one_job(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try:
         iv.clear_probe_caches()
-        assert len(_jobs(spark, "cw", lambda: iv._auto_chunk_width(df, "s", "e"))) == 1
-        assert len(_jobs(spark, "bw", lambda: iv._auto_bin_width(df, "s", "e", df, "s", "e"))) == 1
+        assert len(spark_jobs(spark, "cw", lambda: iv._auto_chunk_width(df, "s", "e"))) == 1
+        assert len(spark_jobs(spark, "bw", lambda: iv._auto_bin_width(df, "s", "e", df, "s", "e"))) == 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     # the clamps: span 10k over 4 buckets per core floors at 1024; widths of

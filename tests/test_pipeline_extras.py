@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_bio_functions_spark.functions.text import bpe_token_count
@@ -216,24 +217,16 @@ def test_ivf_list_split_equals_unsplit(spark):
     assert split_rows == base_rows
 
 
-def test_lsh_cogroup_rerank_equals_join_formulation(spark):
-    """The r12 cogrouped per-(table, bucket) GEMM rerank must be
-    ROW-IDENTICAL (including bit-exact sims) to the candidate-join
-    formulation on adversarial data: exact duplicate vectors (sim ties
-    broken by id), zero vectors (NaN sims, Spark-greatest), and candidates
-    reachable through several tables/probes (the cross-cell dedup path)."""
+_LSH_CASES = [
+    "base", "string_ids", "nulls", "dup_corpus_id", "no_multiprobe",
+    "k_over_candidates", "empty_queries", "float64",
+]
+
+
+def _lsh_case_frames(spark, case):
+    """(queries, corpus, lsh params, zero-vector query ids) of one case of
+    the LSH differential test."""
     import random as _rnd
-    import warnings
-
-    import pyspark.sql.functions as SF
-    from pyspark.sql import Window as W
-
-    from datafusion_bio_functions_spark.operators.similarity import (
-        _bucket_expr,
-        _hyperplanes,
-        _pair_cosine_kernel,
-        lsh_cosine_topk,
-    )
 
     rnd = _rnd.Random(42)
     rows = []
@@ -244,68 +237,218 @@ def test_lsh_cogroup_rerank_equals_join_formulation(spark):
             rows.append((i + 1000, list(base)))  # exact duplicate: tie
     rows.append((5000, [0.0] * 8))  # zero vector: NaN sims
     rows.append((5001, [0.0] * 8))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter((SF.col("vec_id") % 10 == 0) | (SF.col("vec_id") >= 5000))
+    if case == "nulls":
+        rows += [(None, [rnd.gauss(0, 1) for _ in range(8)]), (5002, None)]
+    if case == "dup_corpus_id":
+        # id 3 (never a query) with a second, different vector
+        rows.append((3, [rnd.gauss(0, 1) for _ in range(8)]))
+    elem = "double" if case == "float64" else "float"
+    df = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
+    is_query = (F.col("vec_id") % 10 == 0) | (F.col("vec_id") >= 5000) | F.col("vec_id").isNull()
+    if case == "nulls":
+        is_query = is_query | F.col("embedding").isNull()
+    if case == "empty_queries":
+        is_query = F.lit(False)
+    q = df.filter(is_query)
+    zero_ids = {5000, 5001}
+    if case == "string_ids":
+        # string order ("10" < "9") differs from numeric order
+        q, df = (f.withColumn("vec_id", F.col("vec_id").cast("string")) for f in (q, df))
+        zero_ids = {"5000", "5001"}
     # small n_planes + several tables + multiprobe maximizes candidates
-    # seen through MULTIPLE cells — the dedup the cogroup must reproduce
-    common = dict(k=4, dim=8, n_planes=3, n_tables=3, multiprobe=True, seed=5)
+    # seen through MULTIPLE cells — the dedup both paths must reproduce
+    params = dict(k=4, dim=8, n_planes=3, n_tables=3, multiprobe=True, seed=5)
+    if case == "no_multiprobe":
+        params["multiprobe"] = False
+    if case == "k_over_candidates":
+        params["k"] = 500
+    return q, df, params, zero_ids
 
-    def join_formulation():
-        # sign-bit buckets from the JVM expression (the bucket kernel is
-        # sign-exact against it), every (query, candidate) pair sharing a
-        # probed (table, bucket) deduped on ids, then one pair cosine each
-        n_planes, seed = common["n_planes"], common["seed"]
-        tables = [
-            _hyperplanes(common["dim"], n_planes, seed + 1000 * t)
-            for t in range(common["n_tables"])
-        ]
 
-        def buckets(vec):
-            return SF.posexplode(SF.array(*[_bucket_expr(SF.col(vec), p) for p in tables]))
+def _lsh_join_formulation(queries, corpus, k, dim, n_planes, n_tables, multiprobe, seed):
+    """The candidate-pair join formulation of ``lsh_cosine_topk``: sign-bit
+    buckets from the JVM expression (the bucket kernel is sign-exact
+    against it), every (query row, corpus row) pair sharing a probed
+    (table, bucket) once, one pair cosine each, the greatest similarity
+    per (query_id, neighbor_id), then the rank window."""
+    import pyspark.sql.functions as SF
+    from pyspark.sql import Window as W
 
-        c0 = df.select(SF.col("vec_id").alias("neighbor_id"), SF.col("embedding").alias("__cv"))
-        c = c0.select("neighbor_id", buckets("__cv").alias("table", "bucket"))
-        q0 = q.select(SF.col("vec_id").alias("query_id"), SF.col("embedding").alias("__qv"))
-        qb = q0.select("query_id", buckets("__qv").alias("table", "__b0"))
-        probes = [SF.col("__b0")] + [
-            SF.col("__b0").bitwiseXOR(SF.lit(1 << i)) for i in range(n_planes)
-        ]
-        qp = qb.select("query_id", "table", SF.explode(SF.array(*probes)).alias("bucket"))
-        cand_ids = (
-            qp.join(c, ["table", "bucket"])
-            .filter(SF.col("query_id") != SF.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
+    from datafusion_bio_functions_spark.operators.similarity import (
+        _bucket_expr,
+        _hyperplanes,
+        _pair_cosine_kernel,
+    )
+
+    tables = [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
+
+    def buckets(vec):
+        return SF.posexplode(SF.array(*[_bucket_expr(SF.col(vec), p) for p in tables]))
+
+    c0 = corpus.select(
+        SF.col("vec_id").alias("neighbor_id"), SF.col("embedding").alias("__cv"),
+        SF.monotonically_increasing_id().alias("__crow"),
+    ).filter(SF.col("__cv").isNotNull())
+    c = c0.select("neighbor_id", "__cv", "__crow", buckets("__cv").alias("table", "bucket"))
+    q0 = queries.select(
+        SF.col("vec_id").alias("query_id"), SF.col("embedding").alias("__qv"),
+        SF.monotonically_increasing_id().alias("__qrow"),
+    ).filter(SF.col("__qv").isNotNull())
+    qb = q0.select("query_id", "__qv", "__qrow", buckets("__qv").alias("table", "__b0"))
+    probes = [SF.col("__b0")]
+    if multiprobe:
+        probes += [SF.col("__b0").bitwiseXOR(SF.lit(1 << i)) for i in range(n_planes)]
+    qp = qb.select(
+        "query_id", "__qv", "__qrow", "table", SF.explode(SF.array(*probes)).alias("bucket")
+    )
+    sim = (
+        qp.join(c, ["table", "bucket"])
+        .filter(SF.col("query_id") != SF.col("neighbor_id"))
+        .dropDuplicates(["__qrow", "__crow"])
+        .withColumn("__sim", _pair_cosine_kernel()(SF.col("__qv"), SF.col("__cv")))
+        .groupBy("query_id", "neighbor_id")
+        .agg(SF.max("__sim").alias("__sim"))
+    )
+    w = W.partitionBy("query_id").orderBy(SF.desc("__sim"), SF.asc("neighbor_id"))
+    return (
+        sim.withColumn("rank", SF.row_number().over(w))
+        .filter(SF.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id",
+            SF.col("__sim").alias("cosine_sim"),
+            SF.col("rank").cast("long").alias("rank"),
         )
-        sim = (
-            cand_ids.join(q0, "query_id")
-            .join(c0, "neighbor_id")
-            .withColumn("__sim", _pair_cosine_kernel()(SF.col("__qv"), SF.col("__cv")))
-        )
-        w = W.partitionBy("query_id").orderBy(SF.desc("__sim"), SF.asc("neighbor_id"))
-        return (
-            sim.withColumn("rank", SF.row_number().over(w))
-            .filter(SF.col("rank") <= common["k"])
-            .select(
-                "query_id", "neighbor_id",
-                SF.col("__sim").alias("cosine_sim"),
-                SF.col("rank").cast("long").alias("rank"),
-            )
+    )
+
+
+@pytest.mark.parametrize("case", _LSH_CASES)
+@pytest.mark.parametrize("path", ["broadcast", "cogroup"])
+def test_lsh_cogroup_rerank_equals_join_formulation(spark, tmp_path, monkeypatch, path, case):
+    """Both candidate searches of ``lsh_cosine_topk`` — the broadcast query
+    index (a query frame under the broadcast bounds: written to parquet,
+    so its size is known) and the (table, bucket) cogroup (the row guard
+    set below every frame) — must be ROW-IDENTICAL, bit-exact sims
+    included, to the candidate-join formulation on adversarial data:
+    exact duplicate vectors (sim ties broken by id), zero vectors (NaN
+    sims, Spark-greatest), candidates reachable through several
+    tables/probes (the cross-cell dedup), string ids, NULL ids and
+    vectors, a corpus id carried by two vectors, no multiprobe, k above
+    the candidate count, no queries and double vectors."""
+    import warnings
+
+    from datafusion_bio_functions_spark import clear_probe_caches
+    from datafusion_bio_functions_spark.operators import intervals
+    from datafusion_bio_functions_spark.operators.similarity import lsh_cosine_topk
+
+    q, df, params, zero_ids = _lsh_case_frames(spark, case)
+    df.write.parquet(str(tmp_path / "corpus"))
+    q.write.parquet(str(tmp_path / "queries"))
+    df = spark.read.parquet(str(tmp_path / "corpus"))
+    q = spark.read.parquet(str(tmp_path / "queries"))
+    clear_probe_caches()
+    if path == "cogroup":
+        monkeypatch.setattr(intervals, "BROADCAST_GUARD_ROWS", -1)  # even 0 rows is over
+    out = lsh_cosine_topk(q, df, **params)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("FlatMapCoGroupsInArrow" in plan) == (path == "cogroup"), plan
+
+    def rows(frame):
+        return sorted(
+            (r.query_id, r.rank, r.neighbor_id, repr(r.cosine_sim)) for r in frame.collect()
         )
 
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")  # zero-vector 0/0 RuntimeWarnings
-        expected = sorted(
-            (r.query_id, r.rank, r.neighbor_id, repr(r.cosine_sim))
-            for r in join_formulation().collect()
-        )
-        got = sorted(
-            (r.query_id, r.rank, r.neighbor_id, repr(r.cosine_sim))
-            for r in lsh_cosine_topk(q, df, **common).collect()
-        )
+        expected = rows(_lsh_join_formulation(q, df, **params))
+        got = rows(out)
     assert got == expected
-    nan_rows = [t for t in got if t[0] >= 5000]
-    assert nan_rows and all(t[3] == "nan" for t in nan_rows)
+    if case == "empty_queries":
+        assert got == []
+        return
+    # zero-vector queries DID produce rows, all NaN (ranked first)
+    zero_rows = [t for t in got if t[0] in zero_ids]
+    assert zero_rows and all(t[3] == "nan" for t in zero_rows)
+
+
+def _parquet(spark, frame, path):
+    frame.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_lsh_hot_bucket_streams_in_slabs(spark, tmp_path, monkeypatch):
+    """A corpus where more than half of the vectors share one bucket in
+    every table: the broadcast path streams it in slabs of 16 rows and
+    pair steps far smaller than the hot bucket's candidates, plans no
+    cogroup, and gives the cogroup path's rows."""
+    import random as _rnd
+
+    import numpy as np
+
+    from datafusion_bio_functions_spark import clear_probe_caches
+    from datafusion_bio_functions_spark.operators import intervals
+    from datafusion_bio_functions_spark.operators import similarity as sim
+
+    rnd = _rnd.Random(11)
+    hot = [rnd.gauss(0, 1) for _ in range(8)]
+    rows = [(i, [h + rnd.gauss(0, 1e-3) for h in hot]) for i in range(100)]
+    rows += [(100 + i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(60)]
+    params = dict(k=5, dim=8, n_planes=3, n_tables=4, seed=9)
+    x = np.array([v for _, v in rows], dtype=np.float32).astype(np.float64)
+    buckets = sim._lsh_bucket_ids(x, sim._lsh_planes(8, 3, 4, 9), 4)
+    assert np.unique(buckets, axis=0, return_counts=True)[1].max() * 2 > len(rows)
+
+    df = _parquet(spark, spark.createDataFrame(rows, "vec_id long, embedding array<float>"),
+                  str(tmp_path / "corpus"))
+    q = df.filter(F.col("vec_id") % 4 == 0)
+
+    def topk():
+        return sorted(
+            (r.query_id, r.rank, r.neighbor_id, repr(r.cosine_sim))
+            for r in sim.lsh_cosine_topk(q, df, **params).collect()
+        )
+
+    clear_probe_caches()
+    monkeypatch.setattr(sim, "_KERNEL_SLAB", 16)
+    monkeypatch.setattr(sim, "_LSH_PAIR_BUDGET", 50)
+    plan = sim.lsh_cosine_topk(q, df, **params)._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" not in plan, plan
+    streamed = topk()
+    monkeypatch.setattr(intervals, "BROADCAST_GUARD_ROWS", -1)
+    assert streamed == topk()
+    assert len(streamed) == len(q.collect()) * params["k"]
+
+
+@pytest.mark.parametrize("dim", [4, 16])
+@pytest.mark.parametrize("side", ["queries", "corpus", "cogroup"])
+def test_lsh_dim_must_match_vector_length(spark, tmp_path, monkeypatch, side, dim):
+    """``dim`` shorter or longer than the 8-long vectors raises ValueError
+    naming both lengths: on the driver from the collected query matrix, in
+    the broadcast kernel for corpus rows, and in the cogroup path's bucket
+    UDF — never an IndexError, never hashing with part of each plane."""
+    from datafusion_bio_functions_spark import clear_probe_caches
+    from datafusion_bio_functions_spark.operators import intervals
+    from datafusion_bio_functions_spark.operators.similarity import lsh_cosine_topk
+
+    def vectors(name, n):
+        frame = spark.createDataFrame(
+            [(i, [float(i + j) for j in range(n)]) for i in range(20)],
+            "vec_id long, embedding array<float>",
+        )
+        return _parquet(spark, frame, str(tmp_path / name))
+
+    corpus = vectors("corpus", 8)
+    queries = vectors("queries", dim if side == "corpus" else 8)
+    clear_probe_caches()
+    msg = f"vectors have length 8, but dim={dim}"
+    if side == "queries":
+        with pytest.raises(ValueError, match=msg):
+            lsh_cosine_topk(queries, corpus, dim=dim)
+        return
+    if side == "cogroup":
+        monkeypatch.setattr(intervals, "BROADCAST_GUARD_ROWS", -1)
+    out = lsh_cosine_topk(queries, corpus, dim=dim)
+    with pytest.raises(Exception, match=msg):
+        out.collect()
 
 
 def test_ivf_cosine_topk_recall(spark):

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import datafusion_bio_functions_spark as bio
+from tests.conftest import spark_jobs
 
 
 def _plan(df) -> str:
@@ -260,3 +261,58 @@ def test_annotate_vep_plans_one_lookup_and_one_rollup(spark, tmp_path_factory):
             keys = ln.split("Exchange hashpartitioning")[-1].split("Join ")[-1]
             keys = keys.split("]")[0] if "Join " in ln else keys.split(")")[0]
             assert not re.search(r"\b(qual|info|filter|id)#", keys), ln
+
+
+@pytest.fixture(scope="module")
+def vectors(spark, tmp_path_factory):
+    """A one-file parquet corpus of 300 8-d vectors and its first 40 rows
+    as the query frame (under the broadcast bounds: the size is known)."""
+    import random
+
+    rnd = random.Random(3)
+    path = str(tmp_path_factory.mktemp("lsh") / "v")
+    spark.createDataFrame(
+        [(i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(300)],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    return corpus.filter(F.col("vec_id") < 40), corpus
+
+
+def test_lsh_broadcast_plan_streams_the_corpus(vectors, monkeypatch):
+    """Under the broadcast bounds lsh_cosine_topk is one Arrow map of the
+    corpus against the broadcast query index: no cogroup, no per-table
+    replication of the corpus, one shuffle (query_id) for the merge and
+    the window.  An over-guard query frame keeps the (table, bucket)
+    cogroup."""
+    from datafusion_bio_functions_spark.operators import intervals
+    from datafusion_bio_functions_spark.operators.similarity import lsh_cosine_topk
+
+    q, corpus = vectors
+    bio.clear_probe_caches()
+    plan = _plan(lsh_cosine_topk(q, corpus, k=5, dim=8))
+    assert "FlatMapCoGroupsInArrow" not in plan, plan
+    assert plan.count("MapInArrow") == 1 and "ArrowEvalPython" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") <= 2, plan
+    assert "posexplode" not in plan and "Generate" not in plan, plan
+
+    monkeypatch.setattr(intervals, "BROADCAST_GUARD_ROWS", 10)
+    over = _plan(lsh_cosine_topk(q, corpus, k=5, dim=8))
+    assert over.count("FlatMapCoGroupsInArrow") == 1, over
+    assert over.count("ArrowEvalPython") == 2 and "posexplode" in over, over
+
+
+def test_lsh_query_index_is_one_job_then_memoized(spark, vectors):
+    """The first build on a one-file query frame runs one job (the
+    bounded collect decides and collects at once); a second build runs
+    none, and clear_probe_caches() empties the index memo."""
+    from datafusion_bio_functions_spark.operators import similarity
+    from datafusion_bio_functions_spark.operators.similarity import lsh_cosine_topk
+
+    q, corpus = vectors
+    bio.clear_probe_caches()
+    assert len(spark_jobs(spark, "lsh1", lambda: lsh_cosine_topk(q, corpus, dim=8))) == 1
+    assert len(spark_jobs(spark, "lsh2", lambda: lsh_cosine_topk(q, corpus, dim=8))) == 0
+    assert len(similarity._LSH_INDEX_MEMO) == 1
+    bio.clear_probe_caches()
+    assert len(similarity._LSH_INDEX_MEMO) == 0

@@ -490,10 +490,9 @@ def lsh_cosine_topk(
     however hot a bucket runs.  A larger query side takes the cogroup
     path: the corpus is written ``n_tables`` times (bounded, explicit),
     shuffled once on the (table, bucket) key, and each probed bucket is
-    reranked in one Arrow task.  Both paths give the same rows when the
-    corpus ids are unique.  A corpus id carried by several vectors scores
-    its most similar one.  Vectors whose length is not ``dim`` raise
-    ValueError.
+    reranked in one Arrow task.  Both paths give the same rows.  A corpus
+    id carried by several vectors scores its most similar one.  Vectors
+    whose length is not ``dim`` raise ValueError.
     """
     from pyspark.sql import types as T
 
@@ -578,11 +577,12 @@ def _lsh_cogroup(q0, c0, mat, n_tables, n_planes, multiprobe, k, out_schema) -> 
     # corpus vector crosses the Python boundary once per (table, bucket)
     # membership (n_tables replicas, bounded and explicit), and a whole
     # bucket plus its probing queries sits in one worker's memory: a hot
-    # bucket is this path's memory risk.  Correctness: with unique corpus
-    # ids the kernel's local top-k provably contains every global top-k
-    # row (a bucket's candidate set is a subset of the query's candidate
-    # union, so global winners rank at least as high locally; two rows of
-    # one id in a bucket would take two of its k slots); similarities are
+    # bucket is this path's memory risk.  Correctness: the kernel's local
+    # top-k provably contains every global top-k row (a bucket's candidate
+    # set is a subset of the query's candidate union, so global winners
+    # rank at least as high locally; an id with several rows in a bucket
+    # competes with its best one only, so its copies take one of the k
+    # slots, as they end as one row after the merge); similarities are
     # bit-identical float64 column sweeps (same contract as
     # _pair_cosine_kernel, pinned by the cogroup≡join differential test),
     # so the max() merge is exact.
@@ -596,7 +596,7 @@ def _lsh_cogroup(q0, c0, mat, n_tables, n_planes, multiprobe, k, out_schema) -> 
     return (
         qk.groupBy("table", "bucket")
         .cogroup(ck.groupBy("table", "bucket"))
-        .applyInArrow(_ivf_list_search_kernel(k), schema=out_schema)
+        .applyInArrow(_ivf_list_search_kernel(k, best_per_id=True), schema=out_schema)
     )
 
 
@@ -918,11 +918,25 @@ def _centroid_assign_kernel(cent: "np.ndarray", n: int):
     return assign
 
 
-def _ivf_list_search_kernel(k: int):
+def _best_row_per_id(key: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Mask of one row per id code: the row of greatest ``key`` (the first
+    such row on ties, whose similarity equals the others')."""
+    order = np.lexsort((-key, codes))
+    first = np.unique(codes[order], return_index=True)[1]
+    mask = np.zeros(len(key), dtype=bool)
+    mask[order[first]] = True
+    return mask
+
+
+def _ivf_list_search_kernel(k: int, best_per_id: bool = False):
     """Cogrouped per-cell search: (queries slice, corpus slice) →
     cell-local top-``k`` (query_id, neighbor_id, __sim) rows.  Shared by
     ``ivf_cosine_topk`` (cell = inverted list) and ``lsh_cosine_topk``
-    (cell = (table, bucket)).
+    (cell = (table, bucket)).  With ``best_per_id`` (the LSH path, whose
+    merge keeps one row per (query_id, neighbor_id)) a corpus id carried
+    by several rows of a cell competes with its most similar row only, so
+    its copies cannot take several of the k slots; ``ivf_cosine_topk``
+    keeps each copy as its own row.
 
     Bit-exactness contract (the similarity feeds a value oracle): all
     dot/norm folds run as float64 column sweeps in ascending column
@@ -961,6 +975,12 @@ def _ivf_list_search_kernel(k: int):
             # only lands on rows nid_valid already masks out); non-integer
             # ids fall back to the per-query pyarrow compare below
             nid_np = None
+            # per-cell id codes when some id has several rows (NULL: -1)
+            id_codes = None
+            if best_per_id:
+                enc = pc.dictionary_encode(nid_arr)
+                if len(enc.dictionary) < len(nid_arr) - nid_arr.null_count:
+                    id_codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
             if pa.types.is_integer(nid_arr.type):
                 nid_np = np.asarray(
                     nid_arr.fill_null(0).to_numpy(zero_copy_only=False),
@@ -1020,6 +1040,8 @@ def _ivf_list_search_kernel(k: int):
                         # lexsort((nid, -key)) realizes the exact
                         # (desc sim NaN-greatest, asc id) order
                         valid = nid_valid & (nid_np != int(qid_py[i]))
+                        if id_codes is not None:
+                            valid &= _best_row_per_id(key1, id_codes)
                         nv = int(np.count_nonzero(valid))
                         if nv == 0:
                             continue
@@ -1040,6 +1062,8 @@ def _ivf_list_search_kernel(k: int):
                         pc.is_valid(nid_arr), pc.not_equal(nid_arr, qids[i])
                     ).to_numpy(zero_copy_only=False)
                     valid = np.asarray(valid, dtype=object) == True  # noqa: E712
+                    if id_codes is not None:
+                        valid &= _best_row_per_id(key1, id_codes)
                     vidx = np.nonzero(valid)[0]
                     if len(vidx) == 0:
                         continue

@@ -200,6 +200,23 @@ def get_or_create_session(
         # Dropping the ID from the class name makes generated source
         # deterministic: 2 recompiles/run.  Debug-naming nicety only.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # Deterministic sources only pay off if the compiled classes are
+        # still cached on the next run.  Spark's codegen cache is a Guava LRU
+        # of 100 entries (split into 4 segments of ~25, each evicting on its
+        # own), and one perfbench `kernels` pass generates ~127 distinct
+        # classes (depth 26, annotate_vep 70, exact_dedup 15, lsh 16), so
+        # every pass evicted what the next one needed and recompiled them
+        # all, plus the class loading and C2 JIT of Janino itself.  Working
+        # set measured with CodegenMetrics on a never-evicting cache:
+        # `kernels` 135 distinct classes, `ranges` 15, one bench.py sweep
+        # at sf0.01 682 (2 more on a second sweep); 2000 leaves headroom for
+        # all three in one JVM.  Measured on 4 vCPUs: compiles per warm
+        # `kernels` pass 127 -> 2 (0.95 s -> 11 ms of compile time; the 2
+        # are depth's alignment probe), perfbench `kernels` cpu_s_per_pass
+        # median 20.5 -> 17.6 s over 10 interleaved pairs, driver Metaspace
+        # after a run 161.4 -> 159.7 MB.  Static conf: it only takes effect
+        # at launch.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # single-JVM local mode: UI/event bookkeeping across hundreds of tiny
         # jobs otherwise accumulates into multi-second driver GC pauses
         .config("spark.ui.enabled", "false")

@@ -10,6 +10,11 @@ For each requested query it reports, from a session with event logging on:
   task_time_s — summed executor run time across run2 stages
   py_time_s  — summed JVM->Python (executorRunTime of stages with Python
                eval, approximate)
+  run1/run2 compiles, compile ms — generated classes Spark compiled during
+              build+plan+run1 and during build2+run2, and their compile
+              time (CodegenMetrics count, CodeGenerator.compileTime); a
+              warm run2 should compile nothing, so run2 compiles > 0 shows
+              a codegen cache miss
 plus a per-stage table for run2 (stage name @ callsite, tasks, runtime).
 
 Usage: PYTHONPATH=. python scripts/profile_queries.py annotate_vep cluster_chunked ...
@@ -49,6 +54,14 @@ def _read_events(app_dir: str) -> list[dict]:
     return evs
 
 
+def _codegen(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) so far in this JVM."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
+
+
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -81,6 +94,7 @@ def main() -> None:
         sc = spark.sparkContext
         sc.setJobDescription(f"profile:{name}")
 
+        cg0 = _codegen(spark)
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
         t_build = time.perf_counter() - t0
@@ -92,6 +106,7 @@ def main() -> None:
         t0 = time.perf_counter()
         df.write.mode("overwrite").format("noop").save()
         run1 = time.perf_counter() - t0
+        cg1 = _codegen(spark)
 
         # mark run2 window via job group
         sc.setJobGroup(f"run2-{name}", f"profile-run2:{name}")
@@ -101,6 +116,7 @@ def main() -> None:
         t0 = time.perf_counter()
         df2.write.mode("overwrite").format("noop").save()
         run2 = time.perf_counter() - t0
+        cg2 = _codegen(spark)
         sc.setJobGroup("idle", "idle")
         results[name] = dict(
             build_s=round(t_build, 3),
@@ -108,6 +124,10 @@ def main() -> None:
             run1_s=round(run1, 3),
             build2_s=round(t_build2, 3),
             run2_s=round(run2, 3),
+            run1_compiles=cg1[0] - cg0[0],
+            run1_compile_ms=round(cg1[1] - cg0[1], 1),
+            run2_compiles=cg2[0] - cg1[0],
+            run2_compile_ms=round(cg2[1] - cg1[1], 1),
         )
         try:
             spark.sparkContext._jvm.System.gc()
@@ -176,6 +196,8 @@ def main() -> None:
         r = results[name]
         print(f"\n=== {name}: build={r['build_s']} plan={r['plan_s']} "
               f"run1={r['run1_s']} build2={r['build2_s']} run2={r['run2_s']}")
+        print(f"    compiles: run1 {r['run1_compiles']} ({r['run1_compile_ms']} ms), "
+              f"run2 {r['run2_compiles']} ({r['run2_compile_ms']} ms)")
         jids = [j for j, g in job_group.items() if g == f"run2-{name}"]
         sids = sorted({s for j in jids for s in job_stages.get(j, [])})
         done = [s for s in sids if s in stage_info]

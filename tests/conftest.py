@@ -118,6 +118,12 @@ def spark_jobs(spark, group: str, build) -> list:
     return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def codegen_compiles(spark) -> int:
+    """How many generated classes the JVM has compiled so far (Spark's
+    ``CodegenMetrics``); a codegen cache hit compiles nothing."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def nearest_brute(lrows, rrows, k, filter_op, include_overlaps, compute_distance) -> list:
     """``nearest`` rows by definition, for (contig, start, end, ...) left
     rows and (contig, start, end) probes: per probe, every same-contig left row at

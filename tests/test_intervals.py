@@ -21,6 +21,7 @@ from tests.conftest import (
     READS,
     TARGETS,
     assert_frames_match,
+    codegen_compiles,
     nearest_brute,
     spark_jobs,
 )
@@ -129,6 +130,27 @@ def test_width_probes_run_one_job(spark):
     # at most 6 floor at 128
     assert iv._auto_chunk_width(df, "s", "e") == 1024
     assert iv._auto_bin_width(df, "s", "e", df, "s", "e") == 128
+
+
+def test_fits_broadcast_one_job_and_no_recompile(spark, tmp_path):
+    """A cold broadcast-fit probe is one Spark job under adaptive execution,
+    and a cold probe of another file of the same shape compiles no code:
+    the probe's generated classes come back from the codegen cache."""
+    paths = [str(tmp_path / name) for name in ("a", "b")]
+    for p in paths:
+        spark.range(0, 5000, 1, 4).selectExpr("'chr1' AS contig", "id AS s").write.parquet(p)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        iv.clear_probe_caches()
+        first = spark.read.parquet(paths[0])
+        assert len(spark_jobs(spark, "fits", lambda: iv._fits_broadcast(first, 5000))) == 1
+        before = codegen_compiles(spark)
+        assert iv._fits_broadcast(spark.read.parquet(paths[1]), 5000)
+        assert codegen_compiles(spark) == before
+        assert not iv._fits_broadcast(first, 4999)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 @pytest.mark.parametrize("filter_op", ["weak", "strict"])

@@ -418,6 +418,47 @@ def test_lsh_hot_bucket_streams_in_slabs(spark, tmp_path, monkeypatch):
     assert len(streamed) == len(q.collect()) * params["k"]
 
 
+def test_lsh_cogroup_duplicate_corpus_id_takes_one_slot(spark, tmp_path, monkeypatch):
+    """A corpus id stored twice in the query's (table, bucket) cell takes
+    one of the k slots on the cogroup path, as on the broadcast path: with
+    one table, 3 planes and k=2, the two copies of id 1 must not push the
+    true second neighbour, id 2, out of the cell's local top-k."""
+    import random as _rnd
+
+    import numpy as np
+
+    from datafusion_bio_functions_spark import clear_probe_caches
+    from datafusion_bio_functions_spark.operators import intervals
+    from datafusion_bio_functions_spark.operators import similarity as sim
+
+    rnd = _rnd.Random(3)
+    v = [rnd.gauss(0, 1) for _ in range(8)]
+    twin = [x + rnd.gauss(0, 0.01) for x in v]
+    rows = [(1, twin), (1, list(twin)), (2, [x + rnd.gauss(0, 0.05) for x in v])]
+    rows += [(10 + i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(40)]
+    params = dict(k=2, dim=8, n_planes=3, n_tables=1, seed=5)
+    x = np.array([v] + [r[1] for r in rows[:3]], dtype=np.float32).astype(np.float64)
+    assert len(np.unique(sim._lsh_bucket_ids(x, sim._lsh_planes(8, 3, 1, 5), 1))) == 1
+
+    schema = "vec_id long, embedding array<float>"
+    df = _parquet(spark, spark.createDataFrame(rows, schema), str(tmp_path / "corpus"))
+    q = _parquet(spark, spark.createDataFrame([(0, v)], schema), str(tmp_path / "queries"))
+
+    def topk():
+        return [
+            (r.query_id, r.rank, r.neighbor_id, repr(r.cosine_sim))
+            for r in sim.lsh_cosine_topk(q, df, **params).orderBy("rank").collect()
+        ]
+
+    clear_probe_caches()
+    broadcast = topk()
+    assert [t[2] for t in broadcast] == [1, 2]
+    monkeypatch.setattr(intervals, "BROADCAST_GUARD_ROWS", -1)
+    plan = sim.lsh_cosine_topk(q, df, **params)._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in plan, plan
+    assert topk() == broadcast
+
+
 @pytest.mark.parametrize("dim", [4, 16])
 @pytest.mark.parametrize("side", ["queries", "corpus", "cogroup"])
 def test_lsh_dim_must_match_vector_length(spark, tmp_path, monkeypatch, side, dim):
